@@ -20,6 +20,7 @@ empty result.
 
 from __future__ import annotations
 
+import contextlib
 import re
 
 from pyspark.errors import AnalysisException
@@ -68,16 +69,13 @@ class ClickHouseSparkEngine:
         # examples/10_large_scale.rs:253-276)
         self.write_concurrency = 4
         self.write_batch_rows = 65536
-        # federated-write data plane (r12): 'spool' = the driver-funnel
-        # streamed append (parity with the reference's single-client
-        # sink, src/sink.rs:102-211); 'executor' = per-partition Arrow
-        # appends straight from executors to the remote's ingest server
-        # (requires remote.start_ingest_server()) — N parallel pipes
-        # instead of one, with per-partition transactional atomicity;
-        # 'direct' (r13) = trigger-bounded driver-funnel Arrow collect;
-        # 'executor_direct' (r14) = per-partition wire transactions
-        # with per-partition exactly-once markers (see append_remote /
-        # append_remote_exactly_once)
+        # federated-write data plane, one of three (see append_remote;
+        # _write_plane is the one rule that picks it): 'spool' = the
+        # driver-funnel streamed append (parity with the reference's
+        # single-client sink, src/sink.rs:102-211); 'direct' = trigger-
+        # bounded driver-funnel Arrow collect; 'executor_direct' =
+        # per-partition wire transactions straight from executors to
+        # the remote's ingest server (remote.start_ingest_server())
         self.write_mode = "spool"
         self.last_write_plane_demoted = False
         # test-only fault injection for the executor_direct plane's
@@ -480,22 +478,54 @@ class ClickHouseSparkEngine:
             return self.spark.createDataFrame(self._remote.execute(shipped))
         return self.spark.read.parquet(path)
 
-    def _stream_insert_local(self, bare: str, src_df,
-                             cols: str = "") -> int:
-        """Append a locally-evaluated INSERT/CTAS source into a
-        writable remote table WITHOUT ever materializing it on the
-        driver — the write-direction twin of
-        :meth:`_spool_remote_stream`. The source DataFrame writes to a
-        parquet spool DISTRIBUTED (executors write their partitions;
-        the driver holds no rows), then the spool streams back as
-        Arrow RecordBatches through ``write_concurrency`` pooled
-        writers (:meth:`RemoteEngine.insert_arrow_batches` — the
-        reference sink's ``buffer_unordered(write_concurrency)``
-        streaming append, src/sink.rs:129-211). At most
-        ``write_concurrency`` 64k-row batches exist in driver memory
-        at any instant, so a 100 TB ``INSERT INTO remote.t
-        SELECT ...`` with an unshippable source is bounded by batch
-        size, not source size."""
+    # write plane -> its last_remote_insert label
+    _APPEND_LABELS = {"spool": "arrow-stream", "direct": "direct-arrow",
+                      "executor_direct": "executor-direct"}
+
+    def _write_plane(self, allow_direct: bool) -> str:
+        """The one write-plane policy every remote append goes through
+        (``append_remote``, ``append_remote_exactly_once``, the CTAS
+        local-eval path). ``write_mode`` must name one of the three
+        planes; anything else raises before a row moves. 'direct'
+        collects the whole source on the driver, so an unbounded
+        source (``allow_direct=False``: the SQL front door) demotes it
+        to 'executor_direct' — or to 'spool' when no ingest server is
+        attached, which is also where 'executor_direct' itself falls
+        back. ``last_write_plane_demoted`` records a demotion."""
+        mode = self.write_mode
+        if mode not in self._APPEND_LABELS:
+            raise ValueError(
+                f"write_mode must be 'spool', 'direct' or "
+                f"'executor_direct', got {mode!r}")
+        self.last_write_plane_demoted = mode == "direct" and not allow_direct
+        if self.last_write_plane_demoted:
+            mode = "executor_direct"
+        if mode == "executor_direct" and self._remote.ingest_address is None:
+            return "spool"
+        return mode
+
+    @contextlib.contextmanager
+    def _plane_batches(self, plane: str, src_df):
+        """The source side of the driver-drained planes: an iterator of
+        ``write_batch_rows`` Arrow RecordBatches for the remote drain
+        (pooled ``insert_arrow_batches`` or atomic
+        ``ingest_transaction``).
+
+        'direct' collects the source as ONE Arrow table — a trigger-
+        bounded micro-batch skips the parquet round trip. 'spool'
+        writes the source to a parquet spool DISTRIBUTED (executors
+        write their partitions; the driver holds no rows) and streams
+        it back, so at most the drain's in-flight batches exist in
+        driver memory and a 100 TB ``INSERT INTO remote.t SELECT ...``
+        is bounded by batch size, not source size — the write-direction
+        twin of :meth:`_spool_remote_stream`. A zero-partition source
+        yields an empty iterator, which still runs the drain's
+        writability check (an empty INSERT into a read-only view raises
+        like a non-empty one)."""
+        if plane == "direct":
+            yield iter(src_df.toArrow().to_batches(
+                max_chunksize=self.write_batch_rows))
+            return
         import os
         import shutil
         import uuid
@@ -509,112 +539,23 @@ class ClickHouseSparkEngine:
             files = sorted(
                 os.path.join(path, f) for f in os.listdir(path)
                 if f.endswith(".parquet") and not f.startswith("."))
-            if not files:
-                # zero-partition empty source: still run the target
-                # writability check (r12 advice — an empty INSERT into
-                # a read-only view must raise exactly like the
-                # non-empty path, not silently succeed with count 0);
-                # an empty iterator appends nothing and returns 0
-                return self._remote.insert_arrow_batches(
-                    bare, iter(()), cols,
-                    write_concurrency=self.write_concurrency)
-            batches = pads.dataset(files, format="parquet").to_batches(
-                batch_size=self.write_batch_rows)
-            return self._remote.insert_arrow_batches(
-                bare, batches, cols,
-                write_concurrency=self.write_concurrency)
+            yield (pads.dataset(files, format="parquet").to_batches(
+                batch_size=self.write_batch_rows) if files else iter(()))
         finally:
             shutil.rmtree(path, ignore_errors=True)
 
-    def _stream_insert_executors(self, bare: str, src_df,
-                                 cols: str = "") -> int:
-        """EXECUTOR-PARALLEL federated append (r12 — the scale
-        extension of :meth:`_stream_insert_local`, whose wire is
-        driver-serialized in exact parity with the reference's
-        single-client sink, src/sink.rs:102-211): each source
-        partition opens its own connection to the remote's Arrow
-        ingest server and streams its RecordBatches directly —
-        executor → remote, no spool, no driver funnel — then yields
-        the server-acknowledged row count. N partitions = N parallel
-        pipes, bounded by the remote's cursor pool. Each partition's
-        batches append inside ONE remote transaction, so a Spark task
-        RETRY re-streams atomically instead of duplicating a partial
-        prefix (a stronger contract than the spool path's append-only
-        batches). The count is the sum of server acks — exactness is
-        asserted server-side, not inferred."""
-        host, port = self._remote.ingest_address
-        token = self._remote.ingest_token
-        # fail fast driver-side before launching a distributed job
-        # (same writability contract as the spool path)
-        self._remote.insert_arrow_batches(
-            bare, iter(()), cols, write_concurrency=1)
-        # the remote append is POSITIONAL (INSERT ... SELECT * FROM
-        # the registered batch), so source column names are free —
-        # normalize them, because mapInArrow resolves columns by
-        # unescaped name and an auto-generated alias containing a dot
-        # (e.g. a bare TIMESTAMP '...58.123456' literal) breaks it
-        src_df = src_df.toDF(*[f"_c{i}"
-                               for i in range(len(src_df.columns))])
-        batch_rows = self.write_batch_rows
-
-        def write_partition(batches):
-            import json
-            import socket
-            from itertools import chain
-
-            import pyarrow as pa
-
-            it = iter(batches)
-            try:
-                first = next(it)
-            except StopIteration:   # empty partition: nothing to send
-                yield pa.record_batch(
-                    [pa.array([0], type=pa.int64())], names=["n"])
-                return
-            with socket.create_connection((host, port)) as s:
-                f = s.makefile("rwb")
-                req = {"table": bare, "columns": cols}
-                if token is not None:  # server-enforced shared secret
-                    req["token"] = token
-                hdr = json.dumps(req).encode()
-                f.write(len(hdr).to_bytes(4, "big"))
-                f.write(hdr)
-                writer = pa.ipc.new_stream(f, first.schema)
-                # coalesce Spark's small (~10k-row) Arrow batches up to
-                # write_batch_rows before sending: each received batch
-                # costs the server one register+INSERT round trip, so
-                # batch size is the same throughput lever as on the
-                # spool path (r11 matrix: 16k→256k rows = 2.3× there)
-                buf, nbuf = [], 0
-
-                def flush_buf():
-                    tbl = pa.Table.from_batches(buf).combine_chunks()
-                    writer.write_table(tbl)
-
-                for b in chain([first], it):
-                    buf.append(b)
-                    nbuf += b.num_rows
-                    if nbuf >= batch_rows:
-                        flush_buf()
-                        buf, nbuf = [], 0
-                if buf:
-                    flush_buf()
-                writer.close()
-                f.flush()
-                status = f.read(1)
-                if status == b"\x00":
-                    n = int.from_bytes(f.read(8), "big")
-                else:
-                    ln = int.from_bytes(f.read(4), "big")
-                    raise RuntimeError("remote ingest failed: "
-                                       + f.read(ln).decode())
-            yield pa.record_batch(
-                [pa.array([n], type=pa.int64())], names=["n"])
-
-        from pyspark.sql import functions as F
-        counts = src_df.mapInArrow(write_partition, schema="n bigint")
-        total = counts.agg(F.sum("n").alias("t")).collect()[0]["t"]
-        return int(total or 0)
+    def _append(self, plane: str, bare: str, src_df, cols: str = "") -> int:
+        """Append ``src_df`` into remote table ``bare`` on ``plane`` (as
+        chosen by :meth:`_write_plane`); returns the appended rows."""
+        if plane == "executor_direct":
+            n = self._stream_insert_executors_direct(bare, src_df, cols)
+        else:
+            with self._plane_batches(plane, src_df) as batches:
+                n = self._remote.insert_arrow_batches(
+                    bare, batches, cols,
+                    write_concurrency=self.write_concurrency)
+        self.last_remote_insert = self._APPEND_LABELS[plane]
+        return n
 
     def _stream_insert_executors_direct(self, bare: str, src_df,
                                         cols: str = "",
@@ -622,22 +563,22 @@ class ClickHouseSparkEngine:
                                         sink: str | None = None,
                                         batch_id: int | None = None
                                         ) -> int:
-        """The executor_direct write plane (r14, VERDICT task 2): the
-        executor-parallel twin of the driver-funnel 'direct' plane —
-        per-partition Arrow streams over the token-gated wire, each
-        inside its own server-side transaction, with three
-        micro-batch-throughput cuts over :meth:`_stream_insert_
-        executors` (the r12 executor plane):
+        """The executor_direct write plane (r14): the executor-parallel
+        twin of the driver-funnel 'direct' plane — each source partition
+        streams its Arrow batches over its own connection to the
+        remote's token-gated ingest server, inside its own server-side
+        transaction (no spool, no driver funnel; a Spark task RETRY
+        re-streams atomically instead of duplicating a partial prefix).
+        The count is the sum of server acks. Micro-batch cost cuts:
 
         * partitions coalesce to ``write_concurrency`` (wire
           parallelism is cursor-pool-bound anyway, so 32 source
           partitions as 32 tasks/connections for a 200k-row
           micro-batch is pure per-task fixed cost — a narrow
           dependency, no shuffle);
-        * per-partition counts return via a bare ``collect()`` (the
-          r13 probe's exec_nc finding: the ``agg(sum)`` final stage
-          adds an exchange + AQE round per micro-batch for a ≤wc-row
-          sum the driver can do itself);
+        * per-partition counts return via a bare ``collect()`` (an
+          ``agg(sum)`` final stage adds an exchange + AQE round per
+          micro-batch for a ≤wc-row sum the driver can do itself);
         * the writability fast-fail is a driver-side catalog check,
           not an empty wire insert round trip.
 
@@ -659,7 +600,10 @@ class ClickHouseSparkEngine:
         token = self._remote.ingest_token
         # fail fast driver-side before launching a distributed job
         self._remote.assert_writable(bare)
-        # positional append — normalize names (see the r12 plane)
+        # the remote append is POSITIONAL, so source column names are
+        # free — normalize them: mapInArrow resolves columns by
+        # unescaped name, and an auto-generated alias containing a dot
+        # (e.g. a bare TIMESTAMP '...58.123456' literal) breaks it
         src_df = src_df.toDF(*[f"_c{i}"
                                for i in range(len(src_df.columns))])
         src_df = src_df.coalesce(max(1, int(self.write_concurrency)))
@@ -719,6 +663,9 @@ class ClickHouseSparkEngine:
                             "remote ingest failed: bad gate byte "
                             f"{gate!r} (server closed?)")
                 writer = pa.ipc.new_stream(f, first.schema)
+                # coalesce Spark's small (~10k-row) Arrow batches up to
+                # write_batch_rows: each received batch costs the server
+                # one register+INSERT round trip
                 buf, nbuf = [], 0
 
                 def flush_buf():
@@ -753,71 +700,38 @@ class ClickHouseSparkEngine:
     def append_remote(self, table: str, df, cols: str = "",
                       allow_direct: bool = True) -> int:
         """Append a DataFrame into a writable remote table through the
-        engine's write data plane (``write_mode``: 'spool' default /
-        'executor' when an ingest server is attached / 'direct' for
-        trigger-bounded micro-batches) — the DataFrame-API twin of
+        engine's write data plane — the DataFrame-API twin of
         ``INSERT INTO clickhouse.<db>.<table>`` and the
         per-micro-batch body of the streaming federated sink
         (streaming.events.stream_to_remote_table). Returns the
         appended row count.
 
-        ``write_mode='direct'`` (r13, the per-micro-batch fixed-cost
-        cut): collect the DataFrame as ONE Arrow table on the driver
-        and stream its batches straight into the pooled writers — no
-        parquet spool round trip (two filesystem passes + a Spark
-        write job per micro-batch). Driver memory = the whole batch,
-        so this plane is for TRIGGER-BOUNDED sources only (a streaming
-        micro-batch is bounded by maxFilesPerTrigger /
-        maxOffsetsPerTrigger by construction); an unbounded
-        ``INSERT INTO remote.t SELECT ...`` must stay on planes whose
-        memory is batch-size-bounded — ``allow_direct=False`` (what
-        the SQL front door passes, r13 ADVICE) ENFORCES that demotion
-        instead of trusting the docstring: under ``write_mode=
-        'direct'`` the append falls back to the executor plane (ingest
-        server attached) or the spool, and ``last_write_plane_demoted``
-        records it. Measured on the st12 replay (1M rows, 5
-        micro-batches, tools/probe_microbatch_cost_r13.py): spool 393k
-        → direct 501k rows/s, against a 442-620k rows/s noop/count
-        streaming floor.
+        ``write_mode`` names one of three planes:
 
-        ``write_mode='executor_direct'`` (r14, VERDICT task 2): the
-        executor-parallel twin of 'direct' — every partition streams
-        its Arrow batches straight over the token-gated wire inside
-        its own server-side transaction (no parquet spool, no driver
-        funnel), so throughput scales with partitions AND driver
-        memory stays flat at any batch size. Falls back to the spool
-        when no ingest server is attached."""
+        * 'spool' (default): the source writes a parquet spool
+          distributed, which streams back through ``write_concurrency``
+          pooled writers — parity with the reference's single-client
+          sink (src/sink.rs:102-211); driver memory is batch-bounded.
+        * 'direct': collect the DataFrame as ONE Arrow table on the
+          driver and stream it into the pooled writers — no spool
+          round trip, for TRIGGER-BOUNDED sources only (a streaming
+          micro-batch is bounded by maxFilesPerTrigger /
+          maxOffsetsPerTrigger by construction).
+        * 'executor_direct': every partition streams its Arrow batches
+          straight to the remote's ingest server inside its own
+          server-side transaction; throughput scales with partitions
+          and driver memory stays flat at any batch size.
+
+        One rule picks the plane (:meth:`_write_plane`):
+        ``allow_direct=False`` (what the SQL front door passes — its
+        source is unbounded) demotes 'direct' to 'executor_direct',
+        and 'executor_direct' falls back to 'spool' when no ingest
+        server is attached; ``last_write_plane_demoted`` records a
+        demotion. Any other ``write_mode`` raises ValueError."""
         bare = table.lower().rsplit(".", 1)[-1]
         if self._remote is None or bare not in self._remote.tables():
             raise ValueError(f"no remote table {table!r}")
-        mode = self.write_mode
-        self.last_write_plane_demoted = False
-        if mode == "direct" and not allow_direct:
-            # the caller's source is unbounded (SQL front door): the
-            # driver-funnel plane would collect it whole — demote
-            mode = ("executor_direct"
-                    if self._remote.ingest_address is not None
-                    else "spool")
-            self.last_write_plane_demoted = True
-        if (mode == "executor"
-                and self._remote.ingest_address is not None):
-            n = self._stream_insert_executors(bare, df, cols)
-            self.last_remote_insert = "executor-parallel"
-        elif (mode == "executor_direct"
-                and self._remote.ingest_address is not None):
-            n = self._stream_insert_executors_direct(bare, df, cols)
-            self.last_remote_insert = "executor-direct"
-        elif mode == "direct":
-            tbl = df.toArrow()
-            n = self._remote.insert_arrow_batches(
-                bare,
-                iter(tbl.to_batches(max_chunksize=self.write_batch_rows)),
-                cols, write_concurrency=self.write_concurrency)
-            self.last_remote_insert = "direct-arrow"
-        else:
-            n = self._stream_insert_local(bare, df, cols)
-            self.last_remote_insert = "arrow-stream"
-        return n
+        return self._append(self._write_plane(allow_direct), bare, df, cols)
 
     def append_remote_exactly_once(self, table: str, df, batch_id: int,
                                    cols: str = "",
@@ -842,14 +756,14 @@ class ClickHouseSparkEngine:
         The commit log is ``<table>__commits (sink_id VARCHAR,
         batch_id BIGINT)`` in the remote, auto-created. ``sink_id``
         (default: the table name) namespaces independent streams
-        writing the same table. The drain is single-cursor per
-        TRANSACTION — cross-connection atomicity does not exist, so
-        under ``write_mode='executor'`` this path uses the spool
-        funnel. ``write_mode='executor_direct'`` (r14) instead drops
-        the batch-grain transaction to PARTITION grain: every
-        partition commits its rows with its own
-        ``(sink#b<batch_id>, partition)`` marker in one wire
-        transaction (server-side gate skips already-committed
+        writing the same table. The plane follows the same rule as
+        :meth:`append_remote` (a micro-batch is trigger-bounded, so
+        'direct' is never demoted). On 'spool' and 'direct' the drain
+        is one cursor per TRANSACTION — cross-connection atomicity does
+        not exist. 'executor_direct' instead drops the batch-grain
+        transaction to PARTITION grain: every partition commits its
+        rows with its own ``(sink#b<batch_id>, partition)`` marker in
+        one wire transaction (server-side gate skips already-committed
         partitions before any data ships), and the whole-batch
         ``(sink, batch_id)`` marker lands after the job so a replayed
         batch skips in one probe — any crash point leaves each
@@ -859,15 +773,10 @@ class ClickHouseSparkEngine:
         namespace). Returns the appended row count (0 for a skipped
         replay; on a partial-crash replay, only the missing
         partitions' rows are counted)."""
-        import os
-        import shutil
-        import uuid
-
-        import pyarrow.dataset as pads
-
         bare = table.lower().rsplit(".", 1)[-1]
         if self._remote is None or bare not in self._remote.tables():
             raise ValueError(f"no remote table {table!r}")
+        plane = self._write_plane(allow_direct=True)
         commits = f"{bare}__commits"
         sink = (sink_id or bare).replace("'", "''")
         bid = int(batch_id)
@@ -891,11 +800,7 @@ class ClickHouseSparkEngine:
             self.last_remote_insert = "exactly-once-skip"
             return 0
         marker = profile.commits_marker(commits, sink, bid)
-        if (self.write_mode == "executor_direct"
-                and self._remote.ingest_address is not None):
-            # executor-parallel exactly-once (r14): per-partition wire
-            # transactions with per-partition markers; driver memory
-            # stays flat at any batch size
+        if plane == "executor_direct":
             n = self._stream_insert_executors_direct(
                 bare, df, cols, commits=commits, sink=sink,
                 batch_id=bid)
@@ -913,35 +818,11 @@ class ClickHouseSparkEngine:
                     raise
             self.last_remote_insert = "exactly-once-executor"
             return n
-        if self.write_mode == "direct":
-            # direct-arrow plane (r13): a micro-batch is trigger-
-            # bounded, so collecting it as one Arrow table skips the
-            # per-batch parquet spool round trip; the drain stays
-            # single-cursor (ingest_transaction), which is what makes
-            # rows + marker atomic
-            tbl = df.toArrow()
-            n = self._remote.ingest_transaction(
-                bare,
-                iter(tbl.to_batches(max_chunksize=self.write_batch_rows)),
-                cols, pre_commit_sql=marker)
-            self.last_remote_insert = "exactly-once-txn"
-            return n
-        path = os.path.join(self._remote_spool_dir,
-                            "x1_" + uuid.uuid4().hex)
-        try:
-            df.write.parquet(path)
-            files = sorted(
-                os.path.join(path, f) for f in os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith("."))
-            batches = (iter(()) if not files else
-                       pads.dataset(files, format="parquet").to_batches(
-                           batch_size=self.write_batch_rows))
-            # empty batch still commits its marker (and runs the
-            # writability check) so a replay of it skips cheaply
+        # an empty batch still commits its marker (and runs the
+        # writability check) so a replay of it skips cheaply
+        with self._plane_batches(plane, df) as batches:
             n = self._remote.ingest_transaction(
                 bare, batches, cols, pre_commit_sql=marker)
-        finally:
-            shutil.rmtree(path, ignore_errors=True)
         self.last_remote_insert = "exactly-once-txn"
         return n
 
@@ -1124,6 +1005,8 @@ class ClickHouseSparkEngine:
             self._remote.create_table_as(bare, shipped)
             self.last_remote_sql = f"CREATE TABLE {bare} AS {shipped}"
         else:
+            # an unbounded source, like the INSERT front door's
+            plane = self._write_plane(allow_direct=False)
             df = self.sql(src)
             # set AFTER the nested self.sql(src), which resets the
             # per-statement diagnostics (r10d review)
@@ -1132,8 +1015,7 @@ class ClickHouseSparkEngine:
                 f"{f.name} {self._remote_col_type(f.dataType)}"
                 for f in df.schema.fields)
             self._remote.create_table(bare, schema_sql)
-            self._stream_insert_local(bare, df)
-            self.last_remote_insert = "arrow-stream"
+            self._append(plane, bare, df)
         return self.spark.createDataFrame([], "result string")
 
     # ---------------------------------------------------------------------

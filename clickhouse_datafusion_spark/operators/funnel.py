@@ -192,10 +192,12 @@ def sequence_count(events: DataFrame, conds: list[Column],
         mask.cast("int").alias("m"))
     per_user = slim.groupBy("u").agg(
         F.expr("sort_array(collect_list(struct(t, m))) AS _ev"))
-    # acc = (state, last_t, n); one fold over the sorted event array
+    # acc = (state, last_t, n); one fold over the sorted event array.
+    # last_t starts as a NULL of ts's own type (timestamp, date, bigint
+    # ...): the untaken IF branch types it and is never evaluated
     scan = (
         "aggregate(_ev, "
-        "named_struct('s', 0, 'lt', CAST(NULL AS TIMESTAMP), 'n', 0L), "
+        "named_struct('s', 0, 'lt', IF(FALSE, _ev[0].t, NULL), 'n', 0L), "
         "(acc, x) -> CASE "
         "WHEN acc.lt IS NOT NULL AND x.t <= acc.lt THEN acc "
         f"WHEN (x.m & CAST(shiftleft(1, acc.s) AS INT)) != 0 THEN "

@@ -64,10 +64,16 @@ def _positions_sql(key_expr: str, n_hashes: int, n_bits: int) -> str:
     """array<bigint> of ``n_hashes`` bit positions in [0, n_bits) for a
     string key expression. Hash i salts the key with ``i:`` —
     independent-enough functions from one base hash, and trivially
-    portable SQL."""
-    h = _h60_sql(f"concat(CAST(i AS STRING), ':', {key_expr})")
+    portable SQL. The lambda variable is a name that occurs nowhere in
+    ``key_expr`` (case-insensitively, like Spark's resolver), so it
+    cannot shadow a column the key references (a key column named
+    ``i``)."""
+    v = "i"
+    while v in key_expr.lower():
+        v += "_"
+    h = _h60_sql(f"concat(CAST({v} AS STRING), ':', {key_expr})")
     return (f"transform(sequence(0, {n_hashes - 1}), "
-            f"i -> pmod({h}, {n_bits}))")
+            f"{v} -> pmod({h}, {n_bits}))")
 
 
 # ---------------------------------------------------------------------------

@@ -1666,8 +1666,9 @@ def x46_sequence_match(spark, sf):
 def x47_sequence_count(spark, sf):
     """ClickHouse sequenceCount() analog: how many non-overlapping
     click → view chains per user (greedy from the earliest event,
-    strictly-later semantics). Spark side is the per-user applyInPandas
-    automaton (operators/funnel.py::sequence_count); the oracle unrolls
+    strictly-later semantics). Spark side is the greedy automaton as a
+    JVM ``aggregate()`` fold over each user's time-sorted events
+    (operators/funnel.py::sequence_count); the oracle unrolls
     the same greedy recursion as a per-chain recursive CTE — equivalent
     because the automaton's state after any prefix is a pure function of
     nested timestamp mins."""

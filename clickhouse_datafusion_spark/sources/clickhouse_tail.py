@@ -8,7 +8,7 @@ a single client; here every micro-batch is a key-range delta and every
 PARTITION of it is pulled by an executor over its own connection to
 the remote's Arrow endpoint — the ``op: query`` half of
 ``ArrowIngestServer``). The write-direction twin is the executor-
-parallel ingest path (engine._stream_insert_executors).
+parallel ingest path (engine._stream_insert_executors_direct).
 
 Semantics
 ---------

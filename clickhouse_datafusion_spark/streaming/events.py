@@ -248,8 +248,9 @@ def stream_to_remote_table(stream: DataFrame, engine, table: str,
     """Structured-Streaming FEDERATED sink (r12): drive a streaming
     DataFrame into a writable remote table, one micro-batch at a time,
     through the engine's write data plane
-    (:meth:`ClickHouseSparkEngine.append_remote` — the spool funnel by
-    default, executor-parallel when an ingest server is attached).
+    (:meth:`ClickHouseSparkEngine.append_remote` — the plane named by
+    ``engine.write_mode``: 'spool' by default, 'direct', or
+    'executor_direct' when an ingest server is attached).
     This is the streaming completion of the reference's sink story:
     src/sink.rs IS a streaming insert sink (RecordBatches drained from
     a plan into ClickHouse); here the stream is unbounded and each
@@ -258,7 +259,7 @@ def stream_to_remote_table(stream: DataFrame, engine, table: str,
 
     Delivery semantics: append-only, at-least-once per micro-batch on
     failure/replay by default (the reference sink's no-transaction
-    contract). Under ``write_mode='executor'`` each PARTITION of a
+    contract). Under ``write_mode='executor_direct'`` each PARTITION of a
     batch appends atomically (transaction per connection), so a task
     retry cannot duplicate a partial prefix — but a whole-batch replay
     after a sink crash still re-appends. ``exactly_once=True`` (r12)

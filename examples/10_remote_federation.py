@@ -75,16 +75,17 @@ print(eng.remote_decision(
 print(eng.sql("EXPLAIN SELECT count(*) AS n FROM clickhouse.remote.orders")
       .collect()[0][0].split("\n")[1])
 
-# r12: two write data planes. Default = the streamed driver spool
-# (bounded memory, single-client parity with the reference sink,
+# Write data planes. Default = the streamed driver spool (bounded
+# memory, single-client parity with the reference sink,
 # src/sink.rs:102-211). For a server-mode remote reachable from
-# executors, write_mode="executor" streams each source partition
+# executors, write_mode="executor_direct" streams each source partition
 # straight to the remote's Arrow ingest endpoint — the driver never
 # touches a row, and each partition appends in ONE remote transaction
-# (task retries re-stream atomically).
+# (task retries re-stream atomically). Without an ingest server it
+# falls back to the spool.
 remote.create_table("order_wide", "k BIGINT, v DOUBLE")
 addr = remote.start_ingest_server()     # (host, port), loopback here
-eng.write_mode = "executor"
+eng.write_mode = "executor_direct"
 eng.sql("""
     INSERT INTO clickhouse.remote.order_wide
     SELECT CAST(o_orderkey AS BIGINT), log(o_totalprice)

@@ -1,7 +1,7 @@
-"""r12: executor-parallel federated write — the scale extension of the
-driver-funnel spool path (BASELINE.md r12 design note, now implemented):
-each source partition streams its Arrow batches straight to the remote's
-ingest server over its own TCP connection. Reference anchor: the sink
+"""The executor_direct federated write plane — the scale extension of
+the driver-funnel spool path: each source partition streams its Arrow
+batches straight to the remote's ingest server over its own TCP
+connection. Reference anchor: the sink
 ships RecordBatches over a client connection (src/sink.rs:102-211); the
 extension turns 1 client into N (one per partition), with per-partition
 transactional atomicity the reference's no-transaction sink lacks."""
@@ -27,16 +27,17 @@ def fed(spark):
     remote.register_parquet_dir(SF_SMOKE, tables=["orders", "customer"])
     eng.attach_remote(remote, db="remote", local_twin_dir=SF_SMOKE)
     remote.start_ingest_server()
-    eng.write_mode = "executor"
+    eng.write_mode = "executor_direct"
     yield eng, remote
     remote.stop_ingest_server()
 
 
 def test_executor_insert_exact_and_parallel(fed, spark):
-    """A federated INSERT with an unshippable source in executor mode
+    """A federated INSERT with an unshippable source on executor_direct
     appends exactly once per source row, reports the server-acked
-    count, and uses one connection PER NON-EMPTY PARTITION (the wire
-    is parallel, not driver-serialized)."""
+    count, and uses one connection PER NON-EMPTY PARTITION after the
+    coalesce to ``write_concurrency`` (the wire is parallel, not
+    driver-serialized)."""
     eng, remote = fed
     remote.create_table("ew_t", "k BIGINT, v DOUBLE")
     before = remote._ingest.connections_served
@@ -45,7 +46,7 @@ def test_executor_insert_exact_and_parallel(fed, spark):
             "INSERT INTO clickhouse.remote.ew_t "
             "SELECT CAST(o_orderkey AS BIGINT), log(o_totalprice) "
             "FROM clickhouse.remote.orders WHERE o_orderkey < 2000")
-        assert eng.last_remote_insert == "executor-parallel"
+        assert eng.last_remote_insert == "executor-direct"
         want = spark.read.parquet(f"{SF_SMOKE}/orders.parquet") \
             .filter("o_orderkey < 2000").count()
         assert r.first()["count"] == want
@@ -57,13 +58,15 @@ def test_executor_insert_exact_and_parallel(fed, spark):
         # the single-file smoke source collapses to ONE partition —
         # exactly one connection for the statement above
         assert remote._ingest.connections_served - before == 1
-        # parallel wire: an explicitly 4-partition source opens one
-        # connection PER non-empty partition
+        # parallel wire: an explicitly 4-partition source, coalesced to
+        # write_concurrency = 4, opens one connection PER non-empty
+        # partition
+        assert eng.write_concurrency == 4
         before2 = remote._ingest.connections_served
         src = (spark.range(0, 4000)
                .selectExpr("id + 1000000 AS k", "CAST(id AS DOUBLE) AS v")
                .repartition(4))
-        n = eng._stream_insert_executors("ew_t", src)
+        n = eng._stream_insert_executors_direct("ew_t", src)
         assert n == 4000
         assert remote._ingest.connections_served - before2 == 4
     finally:
@@ -71,13 +74,13 @@ def test_executor_insert_exact_and_parallel(fed, spark):
 
 
 def test_executor_insert_matches_spool_path_values(fed, spark):
-    """Mode equivalence: the same INSERT through every write plane
-    produces identical table contents (including float and timestamp
-    columns) — the data plane changes, the values don't. The SQL front
-    door under 'direct' DEMOTES to a batch-size-bounded plane (r13
-    ADVICE: an unbounded INSERT..SELECT must never be collected whole
-    on the driver); the DataFrame API keeps 'direct' for its
-    trigger-bounded contract."""
+    """Mode equivalence: the same INSERT — and the same CTAS — through
+    every write plane produces identical table contents (including
+    float and timestamp columns) — the data plane changes, the values
+    don't. The SQL front door (INSERT and CTAS alike) under 'direct'
+    DEMOTES to a batch-size-bounded plane (r13 ADVICE: an unbounded
+    INSERT..SELECT must never be collected whole on the driver); the
+    DataFrame API keeps 'direct' for its trigger-bounded contract."""
     eng, remote = fed
 
     def run2(mode):
@@ -117,25 +120,80 @@ def test_executor_insert_matches_spool_path_values(fed, spark):
         finally:
             remote.drop_table("ew_m")
 
+    def run_ctas(mode):
+        """CTAS with a gate-refused source: the table is created from
+        the local result schema and filled through the write plane."""
+        try:
+            eng.write_mode = mode
+            eng.sql(
+                "CREATE TABLE clickhouse.remote.ew_m AS "
+                "SELECT CAST(o_orderkey AS BIGINT) AS k, "
+                "log(o_totalprice) AS v, "
+                "TIMESTAMP '1996-12-31 23:59:58.123456' AS ev "
+                "FROM clickhouse.remote.orders WHERE o_orderkey < 300")
+            tbl = remote.execute(
+                "SELECT k, v, CAST(ev AS VARCHAR) AS e "
+                "FROM ew_m ORDER BY k")
+            return list(zip(*(tbl.column(i).to_pylist()
+                              for i in range(3))))
+        finally:
+            remote.drop_table("ew_m", if_exists=True)
+
     try:
-        a = run2("executor")
-        assert eng.last_remote_insert == "executor-parallel"
-        assert not eng.last_write_plane_demoted
         b = run2("spool")
         assert eng.last_remote_insert == "arrow-stream"
         c = run2("direct")      # SQL front door: demoted (r13 ADVICE)
         assert eng.last_remote_insert == "executor-direct"
         assert eng.last_write_plane_demoted
-        d = run2("executor_direct")   # r14: the fourth plane
+        d = run2("executor_direct")
         assert eng.last_remote_insert == "executor-direct"
         assert not eng.last_write_plane_demoted
         e = run_df_direct()     # DataFrame API: direct stays direct
         assert eng.last_remote_insert == "direct-arrow"
         assert not eng.last_write_plane_demoted
-        assert a == b == c == d == e and len(a) > 0
-        assert a[0][2] == "1996-12-31 23:59:58.123456"
+        # CTAS follows write_mode, and is demoted like INSERT
+        f = run_ctas("spool")
+        assert eng.last_remote_insert == "arrow-stream"
+        g = run_ctas("direct")
+        assert eng.last_remote_insert == "executor-direct"
+        assert eng.last_write_plane_demoted
+        h = run_ctas("executor_direct")
+        assert eng.last_remote_insert == "executor-direct"
+        assert not eng.last_write_plane_demoted
+        assert b == c == d == e == f == g == h and len(b) > 0
+        assert b[0][2] == "1996-12-31 23:59:58.123456"
     finally:
-        eng.write_mode = "executor"
+        eng.write_mode = "executor_direct"
+
+
+@pytest.mark.parametrize("mode", ["executor", "executor-direct", "Spool"])
+def test_unknown_write_mode_raises_before_any_row_lands(fed, spark, mode):
+    """There are three write planes; any other ``write_mode`` — the
+    deleted r12 'executor' plane, or a typo — raises ValueError naming
+    them from every remote append entry point (DataFrame API,
+    exactly-once, SQL INSERT front door), before a row or a commit
+    marker lands."""
+    eng, remote = fed
+    remote.create_table("ew_bad", "k BIGINT")
+    src = spark.range(0, 10).selectExpr("id AS k")
+    try:
+        eng.write_mode = mode
+        with pytest.raises(ValueError, match="executor_direct"):
+            eng.append_remote("ew_bad", src)
+        with pytest.raises(ValueError, match="executor_direct"):
+            eng.append_remote_exactly_once("ew_bad", src, 0, sink_id="s")
+        with pytest.raises(ValueError, match="executor_direct"):
+            eng.sql("INSERT INTO clickhouse.remote.ew_bad "
+                    "SELECT CAST(c_custkey AS BIGINT) "
+                    "FROM clickhouse.remote.customer "
+                    "WHERE log(c_custkey + 1) >= 0")
+        assert remote.execute(
+            "SELECT CAST(count(*) AS BIGINT) FROM ew_bad"
+        ).column(0)[0].as_py() == 0
+        assert "ew_bad__commits" not in remote.tables()
+    finally:
+        eng.write_mode = "executor_direct"
+        remote.drop_table("ew_bad")
 
 
 def test_executor_insert_readonly_fails_fast(fed, spark):
@@ -229,14 +287,14 @@ def test_ingest_transaction_concurrent_appends_commit():
 
 
 def test_concurrent_executor_inserts_through_one_server(fed, spark):
-    """Four concurrent federated INSERTs in executor mode share one
+    """Four concurrent federated INSERTs on executor_direct share one
     ingest server and one cursor pool: every statement's rows land
     exactly once (the server-level twin of the reference's
     multi-client stress, tests/e2e_stress.rs:241-250)."""
     import threading
 
     eng, remote = fed
-    eng.write_mode = "executor"
+    eng.write_mode = "executor_direct"
     remote.create_table("ew_cc", "k BIGINT")
     errs = []
 
@@ -274,7 +332,7 @@ def test_executor_insert_with_server_down_fails_loud(fed, spark):
     from clickhouse_datafusion_spark.sink import SchemaValidationError
 
     eng, remote = fed
-    eng.write_mode = "executor"
+    eng.write_mode = "executor_direct"
     remote.create_table("ew_down", "k BIGINT")
     addr = remote.ingest_address
     try:
@@ -301,7 +359,7 @@ def test_executor_insert_with_server_down_fails_loud(fed, spark):
 
 
 def test_executor_plane_timestamp_semantics_non_utc(fed, spark):
-    """Under a non-UTC session both planes store the UTC rendering of a
+    """Under a non-UTC session every plane stores the UTC rendering of a
     TIMESTAMP instant (mapInArrow hands the executor plane tz-aware
     Arrow columns; the remote normalizes them to UTC exactly like the
     spool's parquet normalization) — the planes cannot diverge on
@@ -311,7 +369,7 @@ def test_executor_plane_timestamp_semantics_non_utc(fed, spark):
     vals = {}
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        for mode in ("spool", "executor", "direct", "executor_direct"):
+        for mode in ("spool", "direct", "executor_direct"):
             eng.write_mode = mode
             remote.create_table("ew_tz", "k BIGINT, ev TIMESTAMP")
             try:
@@ -329,12 +387,11 @@ def test_executor_plane_timestamp_semantics_non_utc(fed, spark):
         # 12:00 EST == 17:00 UTC — the instant, in UTC form, all planes
         assert vals == {
             "spool": "2001-01-15 17:00:00.123456",
-            "executor": "2001-01-15 17:00:00.123456",
             "direct": "2001-01-15 17:00:00.123456",
             "executor_direct": "2001-01-15 17:00:00.123456"}
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
-        eng.write_mode = "executor"
+        eng.write_mode = "executor_direct"
         spark.catalog.dropTempView("ew_tz_src")
 
 

@@ -283,30 +283,56 @@ def _key_sets(draw):
     return ins, [p for p in probes if p not in set(ins)]
 
 
-@given(_key_sets())
+@given(_key_sets(), st.sampled_from(["h", "i", "I", "i_", "x"]))
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_bloom_no_false_negatives(spark, keysets):
+def test_bloom_no_false_negatives(spark, keysets, key_col):
     """The Bloom contract: might_contain = 1 for EVERY inserted key (no
     false negatives, a hard invariant) — and at this sizing (n<=25 keys
     in 2^20 bits, k=7) a false positive on a disjoint probe has
-    probability ~1e-26, so we assert exact separation both ways."""
+    probability ~1e-26, so we assert exact separation both ways.
+    Identifier hygiene: a key column named like the parsed fragment's
+    hash-index lambda variable (``i``, in any case) hashes its VALUES —
+    the bits equal the Column-API construction, and disjoint probes
+    stay separated (a shadowed key gives every key the same positions,
+    so every probe hits)."""
     from clickhouse_datafusion_spark.operators.sketch import (
         bloom_build, bloom_probe)
 
     ins, probes = keysets
-    df = spark.createDataFrame([(k,) for k in ins], "h string")
-    bloom = bloom_build(df, "h")
+    q = f"`{key_col}`"
+    df = spark.createDataFrame([(k,) for k in ins], f"{q} string")
+    bloom = bloom_build(df, key_col)
+    want = _bloom_bits_column_api(df, key_col, 1 << 20, 7)
+    assert sorted(bloom.collect()) == sorted(want.collect()), (key_col, ins)
     got_in = {r.doc_id: r.might_contain for r in bloom_probe(
-        df.withColumnRenamed("h", "hh").selectExpr("hh AS h", "hh AS doc_id"),
-        bloom, "h", id_col="doc_id").collect()}
+        df.selectExpr(q, f"{q} AS doc_id"), bloom, key_col,
+        id_col="doc_id").collect()}
     assert all(v == 1 for v in got_in.values()), (ins, got_in)
     if probes:
         pdf = spark.createDataFrame([(k, k) for k in probes],
-                                    "h string, doc_id string")
+                                    f"{q} string, doc_id string")
         got_out = {r.doc_id: r.might_contain
-                   for r in bloom_probe(pdf, bloom, "h").collect()}
+                   for r in bloom_probe(pdf, bloom, key_col).collect()}
         assert all(v == 0 for v in got_out.values()), (ins, probes, got_out)
+
+
+def _bloom_bits_column_api(df, key_col, n_bits, n_hashes):
+    """bloom_build's word table built with the Column API, whose Python
+    lambdas get generated variable names that cannot shadow a column."""
+    from pyspark.sql import functions as F
+
+    from clickhouse_datafusion_spark.operators.sketch import _h60
+
+    pos = df.select(F.explode(F.transform(
+        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
+        lambda j: F.pmod(_h60(F.concat(j.cast("string"), F.lit(":"),
+                                       F.col(key_col))),
+                         F.lit(n_bits)))).alias("p"))
+    return (pos.select(F.floor(F.col("p") / 63).alias("word"),
+                       F.pmod("p", F.lit(63)).cast("int").alias("bit"))
+            .selectExpr("word", "shiftleft(CAST(1 AS BIGINT), bit) AS bv")
+            .groupBy("word").agg(F.bit_or("bv").alias("bits")))
 
 
 @st.composite
@@ -635,3 +661,35 @@ def test_sequence_match_and_count_match_serial_oracles(spark, case):
     got_c = {r.user_id: r.n_matches
              for r in sequence_count(df, conds).collect()}
     assert got_c == _seq_count_oracle(rows), (rows, got_c)
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "date", "bigint"])
+@given(_event_streams(), st.sampled_from(["ts", "t", "acc", "x"]))
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_sequence_count_ts_type_envelope(spark, ts_type, case, ts_col):
+    """sequence_count's input-type envelope: the fold's NULL start for
+    last_t is typed from the data, so an orderable ``ts`` of type
+    timestamp, date or bigint (under any column name) gives the serial
+    automaton's counts."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    from clickhouse_datafusion_spark.operators.funnel import sequence_count
+
+    rows, _ = case
+    conv = {
+        "timestamp": lambda t: (datetime.datetime(2024, 1, 1)
+                                + datetime.timedelta(seconds=t)),
+        "date": lambda t: (datetime.date(2024, 1, 1)
+                           + datetime.timedelta(days=t)),
+        "bigint": lambda t: t,
+    }[ts_type]
+    df = spark.createDataFrame(
+        [(u, s, conv(t)) for u, s, t in rows],
+        f"user_id int, step int, `{ts_col}` {ts_type}")
+    got = {r.user_id: r.n_matches for r in sequence_count(
+        df, [F.col("step") == i for i in range(3)],
+        ts_col=ts_col).collect()}
+    assert got == _seq_count_oracle(rows), (ts_type, rows, got)

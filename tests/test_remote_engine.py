@@ -1265,9 +1265,10 @@ def test_empty_source_insert_into_readonly_raises(fed, spark):
     insert_arrow_batches with an empty iterator, which performs the
     writability check."""
     eng, _ = fed
+    assert eng.write_mode == "spool"
     empty = spark.createDataFrame([], "o_orderkey bigint")
     with pytest.raises(ValueError, match="read-only"):
-        eng._stream_insert_local("orders", empty)
+        eng.append_remote("orders", empty)
 
 
 def test_decimal_gate_scoped_to_referenced_tables(fed, spark):

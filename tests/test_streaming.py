@@ -400,7 +400,7 @@ def test_stream_to_remote_table_federated_sink(spark, tmp_path):
     """r12: the streaming federated sink drains a file stream into a
     writable remote table micro-batch by micro-batch through
     engine.append_remote — totals match the batch read exactly, and the
-    same stream lands identically under the executor-parallel plane."""
+    same stream lands identically under the executor_direct plane."""
     import shutil
 
     from clickhouse_datafusion_spark.engine import ClickHouseSparkEngine
@@ -438,13 +438,13 @@ def test_stream_to_remote_table_federated_sink(spark, tmp_path):
         assert n == want
         assert drained() == want
         assert eng.last_remote_insert == "arrow-stream"
-        # executor-parallel plane: same totals
+        # executor_direct plane: same totals
         remote.start_ingest_server()
-        eng.write_mode = "executor"
+        eng.write_mode = "executor_direct"
         n2 = stream_to_remote_table(stream, eng, "ev_sink")
         assert n2 == want
         assert drained() == 2 * want
-        assert eng.last_remote_insert == "executor-parallel"
+        assert eng.last_remote_insert == "executor-direct"
         # direct-arrow plane (r13): the trigger-bounded fast path —
         # same totals, and exactly-once rides it too (the single-
         # cursor transactional drain is plane-independent)

@@ -4,7 +4,7 @@
 The write-direction twin of the r10c streamed-read table: a federated
 ``INSERT INTO remote.t SELECT ...`` whose source is gate-refused (log()
 divergence) evaluates locally and must stream through the parquet spool
-+ pooled batch appends (engine._stream_insert_local ->
++ pooled batch appends (the engine's 'spool' write plane ->
 RemoteEngine.insert_arrow_batches — the reference sink's
 ``buffer_unordered(write_concurrency)`` append, src/sink.rs:129-211)
 WITHOUT ever materializing the source on the driver. This probe
