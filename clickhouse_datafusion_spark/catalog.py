@@ -24,6 +24,8 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
+from clickhouse_datafusion_spark.fragments import sql_ident
+
 TESTDATA_TABLES = ("region", "nation", "customer", "supplier", "part",
                    "orders", "lineitem", "events", "documents", "embeddings")
 
@@ -93,6 +95,10 @@ def resolve_parquet_path(path: str) -> str:
     return out
 
 
+def _qname(db: str, table: str) -> str:
+    return f"{sql_ident(db)}.{sql_ident(table)}"
+
+
 class ClickHouseCatalog:
     def __init__(self, spark: SparkSession, catalog_name: str = DEFAULT_CATALOG):
         self.spark = spark
@@ -101,18 +107,19 @@ class ClickHouseCatalog:
     # -- DDL ---------------------------------------------------------------
     def create_database(self, db: str) -> None:
         """Reference: src/utils/create.rs:17-40 (CREATE DATABASE, default no-op)."""
-        self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
+        self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {sql_ident(db)}")
 
     def drop_database(self, db: str, cascade: bool = True) -> None:
         self.spark.sql(
-            f"DROP DATABASE IF EXISTS `{db}` {'CASCADE' if cascade else ''}")
+            f"DROP DATABASE IF EXISTS {sql_ident(db)} "
+            f"{'CASCADE' if cascade else ''}")
 
     def register_parquet_table(self, db: str, table: str, path: str) -> None:
         """Register one parquet file/dir as an external catalog table."""
         self.create_database(db)
         self.spark.sql(
-            f"CREATE TABLE IF NOT EXISTS `{db}`.`{table}` USING parquet "
-            f"LOCATION '{path}'")
+            f"CREATE TABLE IF NOT EXISTS {_qname(db, table)} USING parquet "
+            "LOCATION :path", args={"path": path})
 
     def register_parquet_dir(self, sf_dir: str, db: str = "main",
                              tables: tuple[str, ...] | None = None) -> list[str]:
@@ -133,13 +140,13 @@ class ClickHouseCatalog:
         if not self.table_exists(db, name):
             raise ValueError(f"table {db}.{name} does not exist")
         self.spark.sql(
-            f"CREATE OR REPLACE VIEW `{db}`.`{name_as}` AS "
-            f"SELECT * FROM `{db}`.`{name}`")
+            f"CREATE OR REPLACE VIEW {_qname(db, name_as)} AS "
+            f"SELECT * FROM {_qname(db, name)}")
 
     def drop_table(self, db: str, table: str, if_exists: bool = True) -> None:
         """Reference: src/providers/catalog.rs:202-240 (DROP TABLE IF EXISTS)."""
         ie = "IF EXISTS " if if_exists else ""
-        self.spark.sql(f"DROP TABLE {ie}`{db}`.`{table}`")
+        self.spark.sql(f"DROP TABLE {ie}{_qname(db, table)}")
 
     def create_table(self, db: str, table: str, schema_ddl: str,
                      engine: str = "MergeTree",
@@ -178,12 +185,14 @@ class ClickHouseCatalog:
             props["clickhouse.primary_keys"] = ",".join(primary_keys)
         if ttl:
             props["clickhouse.ttl"] = ttl
-        props_sql = ", ".join(f"'{k}'='{v}'" for k, v in props.items())
+        # property values are bound as parameters, not spliced
+        props_sql = ", ".join(f"'{k}'=:p{i}" for i, k in enumerate(props))
         ine = "IF NOT EXISTS " if if_not_exists else ""
         part = f"PARTITIONED BY ({partition_by}) " if partition_by else ""
         self.spark.sql(
-            f"CREATE TABLE {ine}`{db}`.`{table}` ({', '.join(cols)}) "
-            f"USING parquet {part}TBLPROPERTIES ({props_sql})")
+            f"CREATE TABLE {ine}{_qname(db, table)} ({', '.join(cols)}) "
+            f"USING parquet {part}TBLPROPERTIES ({props_sql})",
+            args={f"p{i}": v for i, v in enumerate(props.values())})
 
     def register_native_table(self, db_or_name: str, table: str | None,
                               path: str) -> None:
@@ -204,7 +213,8 @@ class ClickHouseCatalog:
          .load().createOrReplaceTempView(name))
 
     def table_properties(self, db: str, table: str) -> dict[str, str]:
-        rows = self.spark.sql(f"SHOW TBLPROPERTIES `{db}`.`{table}`").collect()
+        rows = self.spark.sql(
+            f"SHOW TBLPROPERTIES {_qname(db, table)}").collect()
         return {r["key"]: r["value"] for r in rows}
 
     # -- listing / refresh (src/providers/catalog.rs:54-200) ---------------
@@ -215,7 +225,7 @@ class ClickHouseCatalog:
         return [t.name for t in self.spark.catalog.listTables(db)]
 
     def table_exists(self, db: str, table: str) -> bool:
-        return self.spark.catalog.tableExists(f"`{db}`.`{table}`")
+        return self.spark.catalog.tableExists(_qname(db, table))
 
     def refresh_catalog(self, db: str | None = None) -> None:
         for d in ([db] if db else self.schema_names()):
@@ -223,11 +233,11 @@ class ClickHouseCatalog:
                 # listTables includes session temp views (e.g. streaming
                 # memory sinks) — only file-backed tables are refreshable
                 if t.tableType in ("MANAGED", "EXTERNAL"):
-                    self.spark.sql(f"REFRESH TABLE `{d}`.`{t.name}`")
+                    self.spark.sql(f"REFRESH TABLE {_qname(d, t.name)}")
 
     # -- reads -------------------------------------------------------------
     def table(self, db: str, table: str) -> DataFrame:
-        return self.spark.table(f"`{db}`.`{table}`")
+        return self.spark.table(_qname(db, table))
 
 
 # One registration per (session, sf_dir): the driver gate runs ~90 queries

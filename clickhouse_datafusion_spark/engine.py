@@ -27,6 +27,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from clickhouse_datafusion_spark.catalog import ClickHouseCatalog, DEFAULT_CATALOG
+from clickhouse_datafusion_spark.fragments import sql_ident
 from clickhouse_datafusion_spark.functions.rewrite import rewrite_sql
 
 
@@ -417,7 +418,7 @@ class ClickHouseSparkEngine:
             names = [f.name for f in local_schema.fields]
             if len({n.lower() for n in names}) == len(names):
                 out = out.select([
-                    F.col(f"`{f.name}`").cast(f.dataType).alias(f.name)
+                    F.col(sql_ident(f.name)).cast(f.dataType).alias(f.name)
                     for f in local_schema.fields])
             if rebuild_ok and out.schema != local_schema:
                 # the residual delta is nullability (count(1) is
@@ -1595,14 +1596,13 @@ class ClickHouseSparkEngine:
         # (plain parquet scan there — same data, same schema)
         ine = "IF NOT EXISTS " if m.group("ine") else ""
         self.catalog.create_database(db)
-        # single quotes in the path are escaped for the generated DDL; note
+        # the path is bound as a parameter, not spliced; note
         # `_CREATE_NATIVE_RE` cannot parse an OPTIONS body containing ')' —
         # such paths must use catalog.register_native_table directly
-        esc = path.replace("'", "''")
         return self.spark.sql(
-            f"CREATE TABLE {ine}`{db}`.`{tbl}` USING parquet "
-            f"LOCATION '{esc}' TBLPROPERTIES ("
-            f"'clickhouse.native'='true', 'clickhouse.native.path'='{esc}')")
+            f"CREATE TABLE {ine}{sql_ident(db)}.{sql_ident(tbl)} USING "
+            "parquet LOCATION :path TBLPROPERTIES ('clickhouse.native'="
+            "'true', 'clickhouse.native.path'=:path)", args={"path": path})
 
     def _drop_native_mapping(self, name: str) -> None:
         name = name.replace("`", "")

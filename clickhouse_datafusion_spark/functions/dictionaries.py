@@ -21,6 +21,8 @@ query text.
 
 from __future__ import annotations
 
+from clickhouse_datafusion_spark.fragments import sql_lit
+
 _DICTIONARIES: dict[str, dict] = {}
 
 MAX_ENTRIES = 10_000
@@ -58,18 +60,6 @@ def drop_dictionary(name: str) -> None:
     _DICTIONARIES.pop(name, None)
 
 
-def _sql_lit(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, int):
-        return str(v)
-    if isinstance(v, float):
-        return repr(v)
-    return "'" + str(v).replace("'", "''") + "'"
-
-
 def _unquote(frag: str, what: str) -> str:
     frag = frag.strip()
     if len(frag) >= 2 and frag[0] == "'" and frag[-1] == "'":
@@ -93,7 +83,7 @@ def _lookup(name_frag: str, attr_frag: str):
 
 def _map_literal(kv: dict) -> str:
     items = sorted(kv.items(), key=lambda x: str(x[0]))
-    pairs = ", ".join(f"{_sql_lit(k)}, {_sql_lit(v)}" for k, v in items)
+    pairs = ", ".join(f"{sql_lit(k)}, {sql_lit(v)}" for k, v in items)
     return f"map({pairs})"
 
 
@@ -103,7 +93,7 @@ def dict_get(args: list[str]) -> str:
     kv, default = _lookup(args[0], args[1])
     expr = f"element_at({_map_literal(kv)}, {args[2]})"
     if default is not None:
-        expr = f"coalesce({expr}, {_sql_lit(default)})"
+        expr = f"coalesce({expr}, {sql_lit(default)})"
     return expr
 
 
@@ -123,5 +113,5 @@ def dict_has(args: list[str]) -> str:
     keys: set = set()
     for kv in d["attrs"].values():
         keys.update(kv)
-    arr = ", ".join(_sql_lit(k) for k in sorted(keys, key=str))
+    arr = ", ".join(sql_lit(k) for k in sorted(keys, key=str))
     return f"(array_contains(array({arr}), {args[1]}))"

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from clickhouse_datafusion_spark.fragments import sql_ident
+
 
 def asof_join(left: DataFrame, right: DataFrame, on: str,
               left_ts: str, right_ts: str,
@@ -31,9 +33,7 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
     """
     if direction not in ("backward", "forward"):
         raise ValueError("direction must be 'backward' or 'forward'")
-    from clickhouse_datafusion_spark.operators.dedup import sql_ident
-
-    # r15: parsed fragments (py4j round-trip economy, dedup.sql_str) and
+    # r15: parsed fragments (py4j round-trip economy, see fragments) and
     # a null-padding unionByName. The r14 form paid ~200 round trips per
     # call (per-column F.col/alias chatter) plus TWO analysis passes —
     # `r.schema["_rv"].dataType` / `l_.schema[...]` analyzed each side

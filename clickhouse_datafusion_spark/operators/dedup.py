@@ -24,42 +24,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from clickhouse_datafusion_spark.fragments import sql_ident, sql_str
 
-def sql_str(s: str) -> str:
-    """SQL string literal expression for ``s``, independent of
-    ``spark.sql.parser.escapedStringLiterals`` (r15, advice fix).
-
-    Hot plan-construction paths build parsed SQL fragments
-    (``selectExpr`` / ``F.expr``) instead of Column-API chains — one py4j
-    round trip per fragment instead of one per operator (~0.3 ms each on
-    a warm driver adds up to hundreds of ms per plan build). Literals
-    embedded in those fragments go through here.
-
-    The r14 form used backslash escapes, which are only correct under
-    the DEFAULT parser mode; on a Hive-compat session
-    (``escapedStringLiterals=true``) ``\\'`` no longer terminates safely
-    and separators/blocklist terms produced corrupted literals. This
-    form parses identically under BOTH modes, with no conf lookup (a
-    per-literal conf read would re-pay the round trips the fragments
-    exist to avoid):
-
-    - plain strings (no quote, backslash, or control character — every
-      hot-path literal): a bare single-quoted literal, which the two
-      modes lex identically;
-    - anything else: ``CAST(X'<utf8-hex>' AS STRING)``, a hex binary
-      literal both modes parse byte-identically (legacy mode keeps
-      ``\\'`` AND ``''`` escapes literal in the value, so no quoted
-      spelling of a quote agrees across modes); constant folding
-      collapses it to the same string literal in the optimized plan.
-    """
-    if any(ch in "\\'" or ord(ch) < 0x20 for ch in s):
-        return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
-    return "'" + s + "'"
-
-
-def sql_ident(name: str) -> str:
-    """Backquoted SQL identifier (r14, companion of :func:`sql_str`)."""
-    return "`" + name.replace("`", "``") + "`"
+# Compressed scan bytes per task for each widen (plans.explain.width).
+# Measured at sf0.1 and the 500k-doc corpus (BASELINE.md r14/r15).
+WIDEN_BYTES_PER_TASK = 128 << 10        # CPU-heavy signature kernels
+WIDEN_BYTES_PER_TASK_LIGHT = 256 << 10  # cheap streaming projections
+SPAN_BYTES_PER_TASK = 16 << 10          # d8 gram stream (~4x per byte)
+PARAGRAPH_BYTES_PER_TASK = 32 << 10     # d10 meta shape
+# d10 takes the meta shape at or above this scan size
+PARAGRAPH_META_SHAPE_MIN_BYTES = 8 << 20
 
 
 # ---------------------------------------------------------------------------
@@ -290,10 +264,9 @@ def _ensure_parallelism(df: DataFrame, cpu_heavy: bool = True,
     with chunk = 128 KiB (cpu_heavy) / 256 KiB (cheap projections) of
     COMPRESSED input per task — sized so any corpus ≥ ~4/8 MB (every
     at-scale measurement in BASELINE.md: the 100× corpus is 59 MB)
-    saturates the core count and behaves exactly as before. Both
-    chunks are conf-overridable
-    (``spark.clickhouse_datafusion_spark.widenChunkBytes[.light]``)
-    for clusters whose per-core throughput differs.
+    saturates the core count and behaves exactly as before. The chunks
+    are :data:`WIDEN_BYTES_PER_TASK` / :data:`WIDEN_BYTES_PER_TASK_LIGHT`;
+    the width rule itself is :func:`plans.explain.width`.
 
     ``by`` (r15): when the caller's downstream reduce is keyed by a
     column, widen with a HASH repartition on that column instead of
@@ -308,47 +281,32 @@ def _ensure_parallelism(df: DataFrame, cpu_heavy: bool = True,
     determinism (guide §2.5) — hash routing is deterministic per row.
     """
     from clickhouse_datafusion_spark.plans.explain import (
-        estimated_scan_bytes, estimated_scan_partitions)
+        _packed_splits, _scan_file_sizes, width)
 
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    est = estimated_scan_partitions(df)
+    target = df.sparkSession.sparkContext.defaultParallelism
+    sizes = _scan_file_sizes(df)
+    est = None if sizes is None else _packed_splits(df.sparkSession, sizes)
     floor = target if cpu_heavy else max(1, target // 4)
-    if est is None or est < floor:
-        width = target
-        b = estimated_scan_bytes(df)
-        if b is not None:
-            key = ("spark.clickhouse_datafusion_spark.widenChunkBytes"
-                   + ("" if cpu_heavy else ".light"))
-            chunk = int(spark.conf.get(
-                key, str((128 if cpu_heavy else 256) << 10)))
-            width = min(target, max(2, -(-b // chunk), est or 1))
-        if by is not None:
-            return df.repartition(width, F.col(by))
-        return df.repartition(width)
-    return df
+    if est is not None and est >= floor:
+        return df
+    chunk = WIDEN_BYTES_PER_TASK if cpu_heavy else WIDEN_BYTES_PER_TASK_LIGHT
+    w = max(width(df, chunk, target, sizes), est or 1)
+    if by is not None:
+        return df.repartition(w, F.col(by))
+    return df.repartition(w)
 
 
-def _doc_width(df: DataFrame, chunk_default: int,
-               conf_key: str) -> int:
-    """Size-derived doc-stream width for :func:`_repartition_docs_by_id`
-    and friends: ``ceil(scan_bytes / chunk)`` clamped to
-    [2, max(defaultParallelism, spark.sql.shuffle.partitions)]."""
-    from clickhouse_datafusion_spark.plans.explain import (
-        estimated_scan_bytes)
-
-    spark = df.sparkSession
+def _shuffle_cap(spark) -> int:
+    """Width cap of the doc-stream repartitions: the wider of
+    defaultParallelism and ``spark.sql.shuffle.partitions``, i.e. the
+    width the implicit exchange they replace would have had."""
     sc = spark.sparkContext
-    cap = max(sc.defaultParallelism,
-              int(spark.conf.get("spark.sql.shuffle.partitions",
-                                 str(sc.defaultParallelism))))
-    chunk = int(spark.conf.get(conf_key, str(chunk_default)))
-    b = estimated_scan_bytes(df)
-    return cap if b is None else min(cap, max(2, -(-b // chunk)))
+    return max(sc.defaultParallelism,
+               int(spark.conf.get("spark.sql.shuffle.partitions",
+                                  str(sc.defaultParallelism))))
 
 
-def _repartition_docs_by_id(df: DataFrame, id_col: str,
-                            chunk_default: int = 16 << 10) -> DataFrame:
+def _repartition_docs_by_id(df: DataFrame, id_col: str) -> DataFrame:
     """Hash-repartition the DOCUMENT stream by its id so that the
     token-level window/aggregate stages downstream inherit the
     partitioning and need no exchange of their own (r15, d8 reshape).
@@ -374,16 +332,15 @@ def _repartition_docs_by_id(df: DataFrame, id_col: str,
     cap = max(defaultParallelism, spark.sql.shuffle.partitions) — at
     real scale the clamp saturates to exactly the width the implicit
     exchange would have had, so the reshape only ever removes bytes and
-    a serial stage, never parallelism. The chunk default (16 KiB of
+    a serial stage, never parallelism. The chunk (16 KiB of
     compressed input per task) is deliberately smaller than
     ``_ensure_parallelism``'s 128 KiB: this feeds a kernel ~4x heavier
     per byte (measured width sweep at sf0.1: 32 tasks 0.27 s vs 4 tasks
-    0.49 s for the gram stream). Conf-overridable via
-    ``spark.clickhouse_datafusion_spark.spanDedup.chunkBytes``."""
-    width = _doc_width(
-        df, chunk_default,
-        "spark.clickhouse_datafusion_spark.spanDedup.chunkBytes")
-    return df.repartition(width, F.col(id_col))
+    0.49 s for the gram stream): :data:`SPAN_BYTES_PER_TASK`."""
+    from clickhouse_datafusion_spark.plans.explain import width
+
+    w = width(df, SPAN_BYTES_PER_TASK, _shuffle_cap(df.sparkSession))
+    return df.repartition(w, F.col(id_col))
 
 
 def _bucket_pairs(banded: DataFrame, payload_cols: list[str]) -> DataFrame:
@@ -1047,7 +1004,7 @@ def _span_removal_positions(df: DataFrame, ngram: int, text_col: str,
     # fall out via the trailing-lead NULL filter.
     # r14: the LEAD projection and every dense select below are parsed
     # SQL fragments — one py4j round trip per selectExpr instead of one
-    # per Column operator (see sql_str); identical Catalyst trees (the
+    # per Column operator (see fragments); identical Catalyst trees (the
     # 19 identical OVER specs still collapse into one Window operator).
     # r15: the id partitioning the window needs is established on the
     # DOC stream, pre-explode (see _repartition_docs_by_id) — the text
@@ -1143,7 +1100,7 @@ def drop_duplicate_paragraphs(df: DataFrame, text_col: str = "text",
     or id keys — no skew (a mega-duplicated paragraph contributes ONE
     winner row; its occurrences join against a broadcast-size slice).
     """
-    # r14: dense expression blocks are parsed SQL fragments (see sql_str)
+    # r14: dense expression blocks are parsed SQL fragments (see fragments)
     # — one py4j round trip each instead of one per Column operator.
     # r15 (guide §8: decide with small rows, move big rows once): the
     # r14 shape shuffled PARAGRAPH TEXT twice — once through the _h
@@ -1157,24 +1114,21 @@ def drop_duplicate_paragraphs(df: DataFrame, text_col: str = "text",
     # bytes cross the network once instead of twice, and the metadata
     # shuffles carry ~24 B/paragraph.
     #
-    # SIZE-GATED (measured, tools/probe_d10_reshape_r15.py, alternating
+    # SIZE-GATED (measured, BASELINE.md r15, alternating
     # one-session pairs): at the 500k-doc corpus (59 MB) the meta shape
     # is 1.21x faster (pairwise median, all pairs 1.14-1.31) — the
     # avoided double text shuffle; at sf0.1 (0.6 MB) it is 0.86x — the
     # two extra narrow waves cost more than the trivial text bytes they
     # save. So the shape follows the input size, like the widen: meta
-    # shape at >= 8 MB (conf `...paragraphDedup.metaShapeMinBytes`),
-    # the single-pipeline r14 shape below. Outputs are identical either
-    # way (oracle-gated; the probe asserts row equality per arm).
+    # shape at >= PARAGRAPH_META_SHAPE_MIN_BYTES (8 MB), the
+    # single-pipeline r14 shape below. Outputs are identical either
+    # way (oracle-gated; the A/B asserted row equality per arm).
     qid, qtx, qsep = sql_ident(id_col), sql_ident(text_col), sql_str(sep)
     from clickhouse_datafusion_spark.plans.explain import (
-        estimated_scan_bytes)
+        _scan_file_sizes, width)
 
-    b = estimated_scan_bytes(df)
-    min_bytes = int(df.sparkSession.conf.get(
-        "spark.clickhouse_datafusion_spark.paragraphDedup.metaShapeMinBytes",
-        str(8 << 20)))
-    if b is not None and b < min_bytes:
+    sizes = _scan_file_sizes(df)
+    if sizes is not None and sum(sizes) < PARAGRAPH_META_SHAPE_MIN_BYTES:
         paras = (df.select(F.col(id_col),
                            F.posexplode(F.split(F.col(text_col), sep))
                            .alias("_pos", "_p"))
@@ -1185,10 +1139,9 @@ def drop_duplicate_paragraphs(df: DataFrame, text_col: str = "text",
         kept = (paras.join(winners, "_h")
                 .filter(F.expr(f"{qid} = _w._i AND _pos = _w._o")))
     else:
-        width = _doc_width(
-            df, 32 << 10,
-            "spark.clickhouse_datafusion_spark.paragraphDedup.chunkBytes")
-        paras = (df.repartition(width, F.col(id_col))
+        w = width(df, PARAGRAPH_BYTES_PER_TASK,
+                  _shuffle_cap(df.sparkSession), sizes)
+        paras = (df.repartition(w, F.col(id_col))
                  .select(F.col(id_col),
                          F.posexplode(F.split(F.col(text_col), sep))
                          .alias("_pos", "_p"))
@@ -1199,7 +1152,7 @@ def drop_duplicate_paragraphs(df: DataFrame, text_col: str = "text",
         keep = (meta.join(winners, "_h")
                 .filter(F.expr("_mi = _w._i AND _mo = _w._o"))
                 .select("_mi", "_mo")
-                .repartition(width, F.col("_mi")))
+                .repartition(w, F.col("_mi")))
         kept = paras.join(keep, (F.col(id_col) == F.col("_mi"))
                           & (F.col("_pos") == F.col("_mo")))
     rebuilt = (kept.groupBy(F.col(id_col))

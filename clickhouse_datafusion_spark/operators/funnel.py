@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from clickhouse_datafusion_spark.fragments import sql_ident
+
 
 def retention(events: DataFrame, conds: list[Column],
               user_col: str = "user_id") -> DataFrame:
@@ -206,8 +208,6 @@ def sequence_count(events: DataFrame, conds: list[Column],
         f"'n', acc.n + IF(acc.s + 1 = {k}, 1L, 0L)) "
         "ELSE acc END, "
         "acc -> acc.n)")
-    from clickhouse_datafusion_spark.operators.dedup import sql_ident
-
     return per_user.selectExpr(
         f"u AS {sql_ident(user_col)}",
         f"CAST({scan} AS BIGINT) AS n_matches")

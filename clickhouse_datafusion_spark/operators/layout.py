@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_datafusion_spark.fragments import sql_ident
+
 
 def write_range_sorted(df: DataFrame, path: str, key_cols: list[str],
                        n_files: int | None = None,
@@ -96,10 +98,13 @@ def register_bucketed(spark, table: str, path: str, key_cols: list[str],
     mismatch silently reintroduces the shuffle rather than erroring (the
     planner just stops trusting the layout).
 
-    ``schema_ddl`` overrides the schema (otherwise inferred from one
-    parquet footer read). Raises if ``table`` already exists — dropping a
-    same-name MANAGED table would delete the very files being attached,
-    so replacement is deliberately left to the caller.
+    ``table`` is a name as Spark's catalog API takes it (``db.t``,
+    backticks allowed), like :func:`write_bucketed`'s; column names and
+    ``path`` are taken verbatim. ``schema_ddl`` overrides the schema
+    (otherwise inferred from one parquet footer read). Raises if
+    ``table`` already exists — dropping a same-name MANAGED table would
+    delete the very files being attached, so replacement is deliberately
+    left to the caller.
     """
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
@@ -112,13 +117,15 @@ def register_bucketed(spark, table: str, path: str, key_cols: list[str],
     if schema_ddl is None:
         sch = spark.read.parquet(path).schema
         schema_ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in sch.fields)
-    keys = ", ".join(f"`{c}`" for c in key_cols)
-    sorts = ", ".join(f"`{c}`" for c in sort_cols)
+            f"{sql_ident(f.name)} {f.dataType.simpleString()}"
+            for f in sch.fields)
+    keys = ", ".join(map(sql_ident, key_cols))
+    sorts = ", ".join(map(sql_ident, sort_cols))
+    # LOCATION takes a string token, not an expression: bind the path
     spark.sql(
         f"CREATE TABLE {table} ({schema_ddl}) USING parquet "
         f"CLUSTERED BY ({keys}) SORTED BY ({sorts}) "
-        f"INTO {n_buckets} BUCKETS LOCATION '{path}'")
+        f"INTO {n_buckets} BUCKETS LOCATION :path", args={"path": path})
 
 
 def write_hive_partitioned(df: DataFrame, path: str,

@@ -29,27 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-
-def _num(x) -> str:
-    """SQL literal for a numeric bucket bound, preserving F.lit typing:
-    Python int -> integral literal, Python float -> DOUBLE (a bare SQL
-    decimal would change comparison types). r15 advice fixes: bool is an
-    int subclass (render as a BOOLEAN literal, as F.lit did), and
-    non-finite floats have no bare SQL spelling (``infD``/``nanD`` fail
-    to parse) — cast the Java spelling, which constant-folds to the same
-    DOUBLE literal F.lit produced."""
-    if isinstance(x, bool):
-        return "true" if x else "false"
-    if isinstance(x, int):
-        return str(x)
-    x = float(x)
-    if x != x:
-        return "CAST('NaN' AS DOUBLE)"
-    if x == float("inf"):
-        return "CAST('Infinity' AS DOUBLE)"
-    if x == float("-inf"):
-        return "CAST('-Infinity' AS DOUBLE)"
-    return repr(x) + "D"
+from clickhouse_datafusion_spark.fragments import sql_ident, sql_lit, sql_str
 
 
 def global_prefix_sum(df: DataFrame, value_col: str, order_col: str,
@@ -92,9 +72,9 @@ def global_prefix_sum(df: DataFrame, value_col: str, order_col: str,
     # at 32 buckets); same Catalyst tree after parsing. Float bounds
     # (quantile mode) need the D suffix: a bare SQL float literal parses
     # as DECIMAL, changing comparison typing.
-    qord = "`" + order_col.replace("`", "``") + "`"
+    qord = sql_ident(order_col)
     bkt_sql = "0" + "".join(
-        f" + (CASE WHEN {qord} > {_num(x)} THEN 1 ELSE 0 END)"
+        f" + (CASE WHEN {qord} > {sql_lit(x)} THEN 1 ELSE 0 END)"
         for x in bounds)
     bucketed = df.withColumn("_bkt", F.expr(bkt_sql))
     w_in = (W.partitionBy("_bkt").orderBy(order_col)
@@ -125,9 +105,7 @@ def chunk_documents(df: DataFrame, chunk_size: int = 256, overlap: int = 32,
     spans are exact integer arithmetic, so any engine reproduces them.
     """
     assert 0 <= overlap < chunk_size, "overlap must be < chunk_size"
-    from clickhouse_datafusion_spark.operators.dedup import sql_ident
-
-    # r14: parsed projections (py4j round-trip economy, dedup.sql_str)
+    # r14: parsed projections (py4j round-trip economy, see fragments)
     stride = chunk_size - overlap
     qid, qtx = sql_ident(id_col), sql_ident(text_col)
     # r15 advice fix: quote the text column here too (the adjacent
@@ -257,10 +235,7 @@ def length_bucket_batches(df: DataFrame, batch_size: int = 8,
     evenly, and the rank window is the same shape seeded_shuffle already
     runs at corpus scale. No Python, no driver state.
     """
-    from clickhouse_datafusion_spark.operators.dedup import (
-        sql_ident, sql_str)
-
-    # r14: parsed projections (py4j round-trip economy, dedup.sql_str)
+    # r14: parsed projections (py4j round-trip economy, see fragments)
     qid = sql_ident(id_col)
     tok = (sql_ident(token_col) if token_col
            else f"size(split({sql_ident(text_col)}, ' '))")

@@ -42,6 +42,8 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_datafusion_spark.fragments import sql_lit
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -197,18 +199,19 @@ def _lit_vec(values: list[float]) -> Column:
 
     ``F.lit(list)`` builds the literal element-by-element over py4j —
     measured 2.4 s for a 64×64 nested matrix (and ~40 ms per 64-d query
-    vector) vs 8 ms for the parsed form; ``repr`` round-trips doubles
-    exactly, so the values are bit-identical."""
-    return F.expr("array(" + ",".join(f"CAST({float(x)!r} AS DOUBLE)"
-                                      for x in values) + ")")
+    vector) vs 8 ms for the parsed form; ``sql_lit`` round-trips doubles
+    exactly (NaN and infinities included), so the values are
+    bit-identical."""
+    return F.expr(_array_sql(values))
+
+
+def _array_sql(values: list[float]) -> str:
+    return "array(" + ",".join(sql_lit(float(x)) for x in values) + ")"
 
 
 def _lit_mat(rows: list[list[float]]) -> Column:
     """``array<array<double>>`` literal, same single-parse trick."""
-    return F.expr(
-        "array(" + ",".join(
-            "array(" + ",".join(f"CAST({float(x)!r} AS DOUBLE)" for x in row)
-            + ")" for row in rows) + ")")
+    return F.expr("array(" + ",".join(map(_array_sql, rows)) + ")")
 
 
 def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10,

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_datafusion_spark.fragments import sql_ident
+
 
 def _h60(col):
     """Non-negative 60-bit integer hash (first 15 hex chars of md5).
@@ -53,7 +55,7 @@ def _h60(col):
 
 def _h60_sql(expr: str) -> str:
     """Parsed-SQL twin of :func:`_h60` (r15: py4j round-trip economy,
-    see dedup.sql_str — the sketch builders are called once per batch
+    see fragments — the sketch builders are called once per batch
     in an ingestion pipeline, and their Column-API chains cost ~200-400
     round trips per plan build; the fragments parse to the identical
     Catalyst tree)."""
@@ -95,8 +97,6 @@ def bloom_build(df: DataFrame, key_col: str = "h",
     One shuffle, keyed by the word index (≤ n_bits/63 distinct keys,
     uniform); only (word, 64-bit block) pairs move, never keys.
     """
-    from clickhouse_datafusion_spark.operators.dedup import sql_ident
-
     # r15: parsed fragments — same tree, ~10 round trips instead of ~150
     pos = df.selectExpr(
         f"explode({_positions_sql(sql_ident(key_col), n_hashes, n_bits)})"
@@ -127,8 +127,6 @@ def bloom_probe(df: DataFrame, bloom: DataFrame, key_col: str = "h",
     self-join attribute dedup), and every key keeps ≥1 expanded row so
     none are lost by the aggregate.
     """
-    from clickhouse_datafusion_spark.operators.dedup import sql_ident
-
     qid = sql_ident(id_col)
     expanded = (df.selectExpr(
         qid,
@@ -220,8 +218,7 @@ def cms_build(df: DataFrame, token_col: str = "tok", depth: int = 4,
     the point: the exact frequency table over 10¹² tokens is itself huge;
     the sketch never is.
     """
-    from clickhouse_datafusion_spark.operators.dedup import (
-        _ensure_parallelism, sql_ident)
+    from clickhouse_datafusion_spark.operators.dedup import _ensure_parallelism
 
     # r15: widen the token stream before the depth-way expansion — the
     # build is depth x one md5 per token, the module's densest kernel,
@@ -249,8 +246,6 @@ def cms_estimate(tokens: DataFrame, sketch: DataFrame,
     probability 1−δ for width = e/ε, depth = ln 1/δ. The sketch is
     broadcast (constant-size by construction).
     """
-    from clickhouse_datafusion_spark.operators.dedup import sql_ident
-
     probe = tokens.selectExpr(f"{sql_ident(token_col)} AS tok").distinct()
     h = _h60_sql("concat(CAST(r AS STRING), ':', tok)")
     addressed = (probe.selectExpr(

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_datafusion_spark.fragments import sql_ident, sql_str
+
 # Small function-word profiles per language. Counting is done with
 # multiplicity (filter + contains, not set-intersect) so Spark and the SQL
 # oracle agree exactly.
@@ -439,9 +441,7 @@ def _hashed_sentinel_pairs(df: DataFrame, text_col: str = "text",
     slice(ws, 2, n-1))`` (zip pads the shorter side with NULL — the
     sentinel falls out for free) and the hashes are a plain post-explode
     projection, all inside one codegen span."""
-    from clickhouse_datafusion_spark.operators.dedup import sql_ident
-
-    # r14: parsed projections (py4j round-trip economy; dedup.sql_str).
+    # r14: parsed projections (py4j round-trip economy; see fragments).
     # The zip needs named fields, so the word array and its tail are
     # projected (aliased a/b) first — CollapseProject folds it away.
     qid, qtx = sql_ident(id_col), sql_ident(text_col)
@@ -611,8 +611,6 @@ def score_with_bigram_lm(df: DataFrame, bigrams: DataFrame,
     # documented word-hash analysis. The backoff probe (h2) is already
     # single-key; the shuffle path (broadcast_lm=False) shuffles on the
     # one long instead of two — same values, narrower exchange.
-    from clickhouse_datafusion_spark.operators.dedup import sql_ident
-
     qid = sql_ident(id_col)
     hp = _hashed_sentinel_pairs(df, text_col, id_col)
     bi1k = bigrams.selectExpr("xxhash64(h1, h2) AS _h12", "_seen")
@@ -1120,11 +1118,7 @@ def hashed_classifier_score(df: DataFrame, weights: DataFrame,
     (id, w_ppm) pairs. The sigmoid is monotone, so thresholding in ppm
     logit space ≡ thresholding the probability — no float ever needed.
     """
-    from clickhouse_datafusion_spark.operators.dedup import (
-        _ensure_parallelism)
-
-    from clickhouse_datafusion_spark.operators.dedup import (
-        sql_ident, sql_str)
+    from clickhouse_datafusion_spark.operators.dedup import _ensure_parallelism
 
     # cheap streaming projection: widen only on near-serial scans.
     # ``widen=False`` (r14) is for MID-CHAIN callers whose input already
@@ -1137,7 +1131,7 @@ def hashed_classifier_score(df: DataFrame, weights: DataFrame,
         df = _ensure_parallelism(df, cpu_heavy=False, by=id_col)
     # r14: dense expression blocks are parsed SQL fragments — one py4j
     # round trip each instead of one per Column operator (see
-    # dedup.sql_str); same Catalyst expressions.
+    # fragments); same Catalyst expressions.
     qid, qtx = sql_ident(id_col), sql_ident(text_col)
     wd = df.selectExpr(qid, f"explode(split({qtx}, ' ')) AS _w")
     bkt = (f"CAST(conv(substring(md5(concat({sql_str(f'{seed}:')}, _w)), "
@@ -1174,11 +1168,8 @@ def c4_line_filter(df: DataFrame, min_words: int = 5,
     never leaves its partition. Regex/contains stay in the Java-regex ∩
     RE2 common subset so any engine agrees byte-for-byte.
     """
-    from clickhouse_datafusion_spark.operators.dedup import (
-        sql_ident, sql_str)
-
     # r14: one parsed projection instead of a Column-API lambda chain
-    # (py4j round-trip economy; see dedup.sql_str). Same expressions.
+    # (py4j round-trip economy; see fragments). Same expressions.
     if isinstance(text_col, str):
         src = sql_ident(text_col)
     else:
@@ -1215,10 +1206,7 @@ def blocklist_filter(df: DataFrame, blocklist: tuple[str, ...],
     beyond that, explode words and broadcast-join the term table
     (exactly ``hashed_classifier_score``'s shape with unit weights).
     """
-    from clickhouse_datafusion_spark.operators.dedup import (
-        sql_ident, sql_str)
-
-    # r14: one parsed projection (py4j round-trip economy; dedup.sql_str)
+    # r14: one parsed projection (py4j round-trip economy; see fragments)
     terms = f"array({', '.join(sql_str(t) for t in blocklist)})"
     hits = (f"filter(split({sql_ident(text_col)}, ' '), "
             f"w -> array_contains({terms}, w))")

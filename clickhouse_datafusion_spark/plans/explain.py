@@ -47,18 +47,20 @@ def _conf_bytes(spark, key: str, default: int) -> int:
 def estimated_scan_partitions(df: DataFrame) -> int | None:
     """Scan-task estimate for a file-backed DataFrame WITHOUT ``df.rdd``
     (an RDD conversion re-plans the query — measurable build cost on wide
-    plans, so probes must not pay it). Mirrors Spark's FilePartition
-    packing: ``maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
-    totalBytes / defaultParallelism))``, files padded by the open cost and
-    packed into bins of that capacity. Returns None when the plan is not
+    plans, so probes must not pay it). Returns None when the plan is not
     file-backed (local relation, memory stream) — callers fall back to
     their own default."""
+    sizes = _scan_file_sizes(df)
+    return None if sizes is None else _packed_splits(df.sparkSession, sizes)
+
+
+def _packed_splits(spark, sizes: list[int]) -> int:
+    """Mirrors Spark's FilePartition packing: ``maxSplitBytes =
+    min(maxPartitionBytes, max(openCostInBytes, totalBytes /
+    defaultParallelism))``, files padded by the open cost and packed into
+    bins of that capacity."""
     import math
 
-    sizes = _scan_file_sizes(df)
-    if sizes is None:
-        return None
-    spark = df.sparkSession
     open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 << 20)
     max_part = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
     total = sum(sizes)
@@ -95,13 +97,28 @@ def _scan_file_sizes(df: DataFrame) -> list[int] | None:
     return sizes
 
 
-def estimated_scan_bytes(df: DataFrame) -> int | None:
-    """Total on-disk bytes behind ``df``'s file scan (the same estimate
-    :func:`estimated_scan_partitions` packs into splits), or None for
-    non-file-backed plans. Used by the widen probe to derive a
-    scale-adaptive repartition width instead of a cluster constant."""
-    sizes = _scan_file_sizes(df)
-    return None if sizes is None else sum(sizes)
+_UNREAD = object()
+
+
+def width(df: DataFrame, bytes_per_task: int, cap: int,
+          sizes=_UNREAD) -> int:
+    """The engine's one partition-width rule: ``ceil(scan_bytes /
+    bytes_per_task)`` clamped to ``[2, cap]``, or ``cap`` when the plan
+    is not file-backed (in-memory corpora conservatively go wide).
+
+    Width follows input size, not a cluster constant: widening a sub-MB
+    corpus to the full core count pays a per-task overhead per stage
+    for nothing, while width 1 re-creates the single-task pathology for
+    CPU-heavy kernels. ``bytes_per_task`` is COMPRESSED scan input per
+    task; any corpus of ``cap * bytes_per_task`` or more saturates
+    ``cap``. ``sizes`` takes the caller's :func:`_scan_file_sizes` read
+    when it needs the files for another estimate too, so one decision
+    lists them once."""
+    if sizes is _UNREAD:
+        sizes = _scan_file_sizes(df)
+    if sizes is None:
+        return cap
+    return min(cap, max(2, -(-sum(sizes) // bytes_per_task)))
 
 
 def plan_report(df: DataFrame, execute: bool = False) -> dict[str, object]:

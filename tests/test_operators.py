@@ -331,6 +331,12 @@ def test_query_cosine_kernel_matches_fold(spark, emb):
         _cosine_to_query("embedding", qvec).alias("b")).collect()
     for r in rows:
         assert r["a"] is None and r["b"] is None, r
+    # non-finite elements are DOUBLE literals, not column references
+    inf, nan = float("inf"), float("nan")
+    v = spark.range(1).select(_lit_vec([1.5, nan, inf, -inf]).alias("v"))
+    assert v.schema["v"].dataType.simpleString() == "array<double>"
+    got = v.first().v
+    assert got[0] == 1.5 and got[1] != got[1] and got[2:] == [inf, -inf]
 
 
 def test_bucket_kernel_keeps_round_up_borderline(spark):

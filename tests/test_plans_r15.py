@@ -55,16 +55,13 @@ def test_d8_token_stream_never_shuffles(spark):
     assert "REPARTITION_BY_NUM" in plan  # the doc-id repartition
 
 
-def test_d10_paragraph_text_single_exchange(spark):
-    # the meta shape is size-gated (>= 8 MB by default; the gate corpus
-    # is tiny) — force it on so the structural claim is what gets pinned
-    key = ("spark.clickhouse_datafusion_spark.paragraphDedup"
-           ".metaShapeMinBytes")
-    spark.conf.set(key, "0")
-    try:
-        plan = _plan(q("d10_paragraph_dedup", spark))
-    finally:
-        spark.conf.unset(key)
+def test_d10_paragraph_text_single_exchange(spark, monkeypatch):
+    # the meta shape is size-gated (>= 8 MB; the gate corpus is tiny) —
+    # force it on so the structural claim is what gets pinned
+    from clickhouse_datafusion_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "PARAGRAPH_META_SHAPE_MIN_BYTES", 0)
+    plan = _plan(q("d10_paragraph_dedup", spark))
     # paragraph bodies (_p) cross only the explicit doc repartition;
     # ownership/keep flow as (id, pos, hash) metadata
     for inputs in _ensure_exchange_inputs(plan):
@@ -75,7 +72,7 @@ def test_d10_paragraph_text_single_exchange(spark):
 def test_d10_small_input_keeps_single_pipeline_shape(spark):
     # below the gate the r14 shape plans: no doc repartition, and the
     # shape has strictly fewer exchanges (the sf0.1 A/B reads 0.86x for
-    # the meta shape there — tools/probe_d10_reshape_r15.py)
+    # the meta shape there — BASELINE.md r15)
     plan = _plan(q("d10_paragraph_dedup", spark))
     assert "REPARTITION_BY_NUM" not in plan
 

@@ -1,80 +1,11 @@
 """r15 optimization-round regression tests: the ADVICE correctness fixes
-(escape-mode-independent sql_str, packing literal guards, quoted chunk
-column, conf-gated span-removal broadcast, no-probe d5 dim routing)."""
+(packing literal guards, quoted chunk column, conf-gated span-removal
+broadcast, no-probe d5 dim routing). The fragment-spelling tests live in
+test_fragments.py."""
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-
-# ---------------------------------------------------------------- sql_str
-
-SQL_STR_CASES = [
-    "plain",
-    "it's quoted",
-    "tab\there",
-    "line\nbreak",
-    "back\\slash",
-    "mix'\\\n\t'",
-    "unicode £σ✓",
-    "",
-    "trailing'",
-]
-
-
-@pytest.mark.parametrize("mode", ["false", "true"])
-def test_sql_str_roundtrips_under_both_parser_modes(spark, mode):
-    """sql_str output must parse back to the exact Python string under
-    BOTH spark.sql.parser.escapedStringLiterals settings (r14's
-    backslash-escape form corrupted literals under Hive-compat mode)."""
-    from clickhouse_datafusion_spark.operators.dedup import sql_str
-
-    old = spark.conf.get("spark.sql.parser.escapedStringLiterals")
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", mode)
-    try:
-        exprs = [f"{sql_str(s)} AS c{i}" for i, s in enumerate(SQL_STR_CASES)]
-        row = spark.range(1).selectExpr(*exprs).first()
-        for i, s in enumerate(SQL_STR_CASES):
-            assert row[f"c{i}"] == s, (mode, s)
-    finally:
-        spark.conf.set("spark.sql.parser.escapedStringLiterals", old)
-
-
-def test_sql_str_folds_to_plain_literal(spark):
-    """The CAST(X'..' AS STRING) form must constant-fold — the optimized
-    plan carries the same string literal the old form produced."""
-    from clickhouse_datafusion_spark.operators.dedup import sql_str
-    from clickhouse_datafusion_spark.plans.explain import optimized_plan
-
-    frag = sql_str("a\\b")
-    assert frag.startswith("CAST(X'")
-    plan = optimized_plan(spark.range(1).selectExpr(f"{frag} AS c"))
-    assert "a\\b" in plan  # folded literal, not a runtime cast
-    assert "cast" not in plan.lower()
 
 
 # ------------------------------------------------- packing literal guards
-
-def test_num_literal_guards(spark):
-    """_num renders bool as a BOOLEAN literal (bool is an int subclass —
-    the r14 form emitted the invalid bare token ``True``) and non-finite
-    floats as castable spellings (``infD``/``nanD`` fail to parse); the
-    finite forms keep F.lit's typing exactly."""
-    from clickhouse_datafusion_spark.operators.packing import _num
-
-    cases = [True, False, 3, -1, 2.5, float("inf"), float("-inf"),
-             float("nan")]
-    exprs = [f"{_num(x)} AS c{i}" for i, x in enumerate(cases)]
-    lits = [F.lit(x).alias(f"l{i}") for i, x in enumerate(cases)]
-    df = spark.range(1).selectExpr(*exprs).select("*", *lits)
-    row = df.first()
-    for i, x in enumerate(cases):
-        got, want = row[f"c{i}"], row[f"l{i}"]
-        assert got == want or (got != got and want != want), (x, got)
-        # typing identical to F.lit
-        assert (df.schema[f"c{i}"].dataType
-                == df.schema[f"l{i}"].dataType), x
-
 
 def test_global_prefix_sum_inf_order_values(spark):
     """A double order column containing inf drives inf into the uniform

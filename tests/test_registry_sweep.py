@@ -500,7 +500,7 @@ def test_dictionary_surface(spark, views):
     calling convention without the join."""
     from clickhouse_datafusion_spark.engine import ClickHouseSparkEngine
     from clickhouse_datafusion_spark.functions.dictionaries import (
-        UnknownDictionary, drop_dictionary)
+        UnknownDictionary, dict_get, drop_dictionary)
 
     eng = ClickHouseSparkEngine(spark)
     eng.register_dictionary(
@@ -538,6 +538,27 @@ def test_dictionary_surface(spark, views):
         assert df.collect()[0].v == 1
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Join" not in plan and "PythonUDF" not in plan
+        # values needing quoting, and non-finite floats, come back
+        # verbatim: a backslash is not an escape, inf is not a column, and
+        # float attributes are DOUBLE literals (as F.lit types them)
+        eng.register_dictionary(
+            "quirks", {"q": {"name": "O'Brien", "w": float("inf")},
+                       "p": {"name": "C:\\temp", "w": 0.5},
+                       "n": {"name": "a\\nb", "w": float("-inf")}})
+        qr = eng.sql("""
+            SELECT clickhouse(dictGet('quirks', 'name', 'q'), 'Utf8') AS q,
+                   clickhouse(dictGet('quirks', 'name', 'p'), 'Utf8') AS p,
+                   clickhouse(dictGet('quirks', 'name', 'n'), 'Utf8') AS n,
+                   clickhouse(dictGet('quirks', 'w', 'q'), 'Float64') AS wq,
+                   clickhouse(dictGet('quirks', 'w', 'n'), 'Float64') AS wn,
+                   clickhouse(dictHas('quirks', 'p'), 'Boolean') AS has_p
+            """).collect()[0]
+        assert (qr.q, qr.p, qr.n) == ("O'Brien", "C:\\temp", "a\\nb")
+        assert (qr.wq, qr.wn, qr.has_p) == (float("inf"), float("-inf"), True)
+        raw = spark.sql("SELECT " + dict_get(["'quirks'", "'w'", "'p'"])
+                        + " AS w")
+        assert raw.schema["w"].dataType.typeName() == "double"
+        assert raw.first().w == 0.5
         # unknown dictionary errors eagerly with the registered list
         import pytest as _pt
         with _pt.raises(UnknownDictionary):
@@ -545,3 +566,4 @@ def test_dictionary_surface(spark, views):
     finally:
         drop_dictionary("status_names")
         drop_dictionary("kv")
+        drop_dictionary("quirks")

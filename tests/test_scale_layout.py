@@ -89,6 +89,46 @@ def test_estimated_scan_partitions_contract(spark, tmp_path):
     assert est <= actual * 4 + 4, (est, actual)  # no runaway overestimate
 
 
+def test_width_rule_reads_files_once(spark, tmp_path, monkeypatch):
+    """plans.explain.width is clamp(ceil(scan_bytes / bytes_per_task), 2,
+    cap) over the scan's on-disk bytes, ``cap`` for a non-file-backed
+    plan, and one width decision lists the scan's files exactly once —
+    including the widen, which also derives its split-count gate and
+    lower bound from that same read."""
+    import glob
+    import math
+    import os
+
+    from clickhouse_datafusion_spark.operators.dedup import (
+        _ensure_parallelism)
+    from clickhouse_datafusion_spark.plans.explain import width
+
+    p = str(tmp_path / "w")
+    spark.range(30_000).selectExpr(
+        "id", "repeat(uuid(), 4) AS pad").repartition(3).write.parquet(p)
+    total = sum(os.path.getsize(f) for f in glob.glob(f"{p}/*.parquet"))
+    df = spark.read.parquet(p)
+    for bpt in (1, 1 << 10, total // 5, total, 1 << 40):
+        for cap in (2, 4, 64):
+            want = min(cap, max(2, math.ceil(total / bpt)))
+            assert width(df, bpt, cap) == want, (bpt, cap)
+    assert width(spark.createDataFrame([(1,)], "a int"), 1, 7) == 7
+
+    calls = []
+    real = type(df).inputFiles
+
+    def counting(self):
+        calls.append(1)
+        return real(self)
+
+    monkeypatch.setattr(type(df), "inputFiles", counting)
+    width(df, 1 << 10, 8)
+    assert len(calls) == 1
+    calls.clear()
+    _ensure_parallelism(df)
+    assert len(calls) == 1
+
+
 def test_count_star_empty_projection(spark, views):
     """S3: COUNT(*) never reads data columns — ReadSchema is empty struct."""
     df = spark.table("lineitem").groupBy().count()
