@@ -194,14 +194,6 @@ class ClickHouseSparkEngine:
             # column name in an unrelated remote table must not
             # de-federate statements that merely reuse the word
             dec_cols = self._remote.decimal_columns(tables=refs)
-        except TypeError:  # pragma: no cover - legacy remote signature
-            # r12 advice fix: the legacy retry gets its own guard so a
-            # failure inside the except block degrades to frozenset()
-            # instead of propagating out of the gate
-            try:
-                dec_cols = self._remote.decimal_columns()
-            except Exception:
-                dec_cols = frozenset()
         except Exception:  # pragma: no cover - remote without the API
             dec_cols = frozenset()
         shipped = unparse_for_remote(

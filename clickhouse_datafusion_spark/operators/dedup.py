@@ -113,22 +113,19 @@ def bind_once(col, f):
     return F.element_at(F.transform(F.array(col), f), 1)
 
 
-def word_ngrams(col, n: int = 3, bound: bool = True):
+def word_ngrams(col, n: int = 3):
     """Distinct word n-grams of a text column (array<string>).
 
     Guarded for short texts: Spark's ``sequence(1, 0)`` counts *down*, so a
     doc with fewer than n words must short-circuit to an empty array.
     The split is bound once per row (see :func:`bind_once`) — it is
     referenced n+2 times below, and inside the per-gram lambda.
-    ``bound=False`` keeps the raw inlined expression: required ONLY when
-    the result feeds a pandas UDF (Spark cannot extract a PythonUDF whose
-    argument contains the bind_once wrapper — INTERNAL_ERROR at exec).
 
     r14: a STRING column name takes the parsed-SQL path — one py4j round
     trip instead of ~40 Column-API calls per use (same Catalyst tree; the
     ``i + 0`` term is kept so the parse matches the Column form exactly).
     """
-    if bound and isinstance(col, str):
+    if isinstance(col, str):
         terms = ", ".join(f"element_at(ws, i + {k})" for k in range(n))
         g = (f"transform(sequence(1, size(ws) - {n - 1}), "
              f"i -> concat_ws(' ', {terms}))")
@@ -146,12 +143,6 @@ def word_ngrams(col, n: int = 3, bound: bool = True):
         return F.when(F.size(ws) >= n, F.array_distinct(g)) \
             .otherwise(F.array().cast("array<string>"))
 
-    if not bound:
-        if isinstance(col, str):
-            col = F.col(col)
-        return grams(F.split(col, " "))
-    if isinstance(col, str):
-        col = F.col(col)
     return bind_once(F.split(col, " "), grams)
 
 
@@ -176,8 +167,7 @@ def _mh_params(n_hashes: int) -> list[tuple[int, int]]:
     return params
 
 
-def gram_hashes(col, ngram: int = 3, family: str = "xx",
-                bound: bool = True):
+def gram_hashes(col, ngram: int = 3, family: str = "xx"):
     """31-bit hash per distinct word n-gram (computed ONCE per row — the
     expensive string hashing must not be repeated per hash function).
 
@@ -190,9 +180,6 @@ def gram_hashes(col, ngram: int = 3, family: str = "xx",
       reproduces it bit-for-bit as
       ``('0x' || substring(md5(g), 1, 8))::BIGINT % 2147483647`` — the
       correctness gate pins this family while production keeps xxhash64.
-
-    ``bound`` is forwarded to :func:`word_ngrams` (pandas-UDF consumers
-    must pass ``bound=False``).
     """
     if family == "md5":
         h = lambda g: F.pmod(  # noqa: E731
@@ -200,7 +187,7 @@ def gram_hashes(col, ngram: int = 3, family: str = "xx",
             F.lit(_MH_P))
     else:
         h = lambda g: F.pmod(F.xxhash64(g), F.lit(_MH_P))  # noqa: E731
-    return F.transform(word_ngrams(col, ngram, bound=bound), h)
+    return F.transform(word_ngrams(col, ngram), h)
 
 
 def _sig_from_gram_hashes(gh_col, n_hashes: int):
@@ -389,46 +376,10 @@ def _bucket_pairs(banded: DataFrame, payload_cols: list[str]) -> DataFrame:
             .filter(F.col("id_a") < F.col("id_b")))
 
 
-def _mh_sig_arrow_kernel(n_hashes: int):
-    """Arrow-batched numpy kernel for the MinHash slots: one broadcasted
-    ``(grams × slots)`` affine + min per row instead of ``n_hashes``
-    interpreted HOF traversals (higher-order functions sit outside
-    whole-stage codegen, so the HOF form runs on Catalyst's interpreter).
-    Same multiply-shift family, bit-identical signatures incl. the
-    all-NULL signature for sub-n-gram docs; measured −25% end-to-end on
-    the 5k-doc bench corpus. The string-side work (split → n-grams →
-    xxhash64) stays JVM-side; only integer arrays cross the Arrow
-    boundary."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    a_vec = np.array([a for a, _ in _mh_params(n_hashes)], dtype=np.int64)
-    b_vec = np.array([b for _, b in _mh_params(n_hashes)], dtype=np.int64)
-    empty = [None] * n_hashes  # mirrors array_min(transform([])) = NULLs
-
-    def mh_sig(gh):
-        out = []
-        for arr in gh:
-            h = np.asarray(arr, dtype=np.int64)
-            if h.size == 0:
-                out.append(empty)
-            else:
-                out.append(((h[:, None] * a_vec + b_vec) % _MH_P).min(axis=0))
-        return pd.Series(out)
-
-    # real class objects as annotations: the Series-in/Series-out contract
-    # must be declared, but ``pd`` is a function-local import the string
-    # form can't resolve
-    mh_sig.__annotations__ = {"gh": pd.Series, "return": pd.Series}
-    return pandas_udf(mh_sig, "array<bigint>")
-
-
 def minhash_candidates(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", n_hashes: int = 32,
                        bands: int = 8, ngram: int = 3,
                        threshold: float = 0.5,
-                       arrow_kernel: bool = False,
                        gram_hash: str = "xx") -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding, scored by estimated
     Jaccard (fraction of agreeing MinHashes), filtered at ``threshold``.
@@ -461,69 +412,56 @@ def minhash_candidates(df: DataFrame, text_col: str = "text",
     # Filter BELOW the repartition exchange — evaluated once per row in
     # the scan's (single) partition. Measured on d3 at sf0.1: 4.1 s → 1.1 s
     # for the identical output when the filter became scan-cheap.
-    if arrow_kernel:
-        # opt-in Arrow/numpy slot kernel (small-corpus latency). It must
-        # consume the UNBOUND gram expression: Spark cannot extract a
-        # PythonUDF whose argument contains the bind_once wrapper
-        # (INTERNAL_ERROR: Cannot evaluate ... PythonUDF). Outputs are
-        # bit-identical to the default path.
-        gh = (_ensure_parallelism(df)
-              .filter(F.size(F.split(F.col(text_col), " ")) >= ngram)
-              .select(F.col(id_col).alias("id"),
-                      gram_hashes(F.col(text_col), ngram, gram_hash,
-                                  bound=False).alias("gh")))
-        sig = gh.select("id", _mh_sig_arrow_kernel(n_hashes)("gh").alias("sig"))
+    # r7: explode-and-aggregate, zero HOFs in the hot path.
+    # Spark HOF lambdas are CodegenFallback — interpreted per element
+    # — so the r6 per-row form (32 × array_min(transform(gh, ...)))
+    # paid 32 interpreted passes over every gram array. Instead the
+    # gram positions come from arrays_zip of the split with its own
+    # tails (whole-stage codegen, like the t9/t11 pair extraction),
+    # and ONE groupBy(id) computes all 32 slot minima: duplicates
+    # cannot change a min, so word_ngrams' array_distinct is
+    # unnecessary here. Measured at the 500k-doc corpus: 5.45 →
+    # 3.70 s for identical output; neutral at sf0.1 (±0.05 s).
+    # Scale shape: the explode keeps gram rows in their doc's
+    # partition, so the map-side combine collapses them to one
+    # 33-column row per doc before the (tiny) shuffle — no skew
+    # hazard (one combiner row per unique id).
+    # r14: the dense expression blocks below are parsed SQL strings
+    # (selectExpr / F.expr) rather than Column-API chains — the Column
+    # form cost ~700 py4j round trips per plan build (~0.25 s warm;
+    # the bench pays it every iteration, a production driver every
+    # batch), the parsed form ~30. Same Catalyst expressions.
+    ws = F.split(F.col(text_col), " ")
+    # r15: widen BY the id — the mins aggregate below then needs no
+    # exchange of the 33-column partial-min rows (see
+    # _ensure_parallelism's ``by``); same text bytes move either way
+    base = (_ensure_parallelism(df, by=id_col)
+            .filter(F.size(ws) >= ngram)
+            .select(F.col(id_col).alias("id"), ws.alias("ws")))
+    slices = ["ws AS g0"] + [
+        f"slice(ws, {k + 1}, greatest(size(ws) - {k}, 0)) AS g{k}"
+        for k in range(1, ngram)]
+    # arrays_zip pads the shorter tails with NULL; padding is
+    # suffix-aligned, so "last component non-null" keeps exactly the
+    # size-ngram+1 real gram positions
+    zip_cols = ", ".join(f"g{k}" for k in range(ngram))
+    g = (base.selectExpr("id", *slices)
+         .selectExpr("id", f"explode(arrays_zip({zip_cols})) AS p")
+         .filter(F.col(f"p.g{ngram-1}").isNotNull()))
+    gram = "concat_ws(' ', " + ", ".join(
+        f"p.g{k}" for k in range(ngram)) + ")"
+    if gram_hash == "md5":
+        h = (f"pmod(CAST(conv(substring(md5({gram}), 1, 8), 16, 10) "
+             f"AS BIGINT), {_MH_P})")
     else:
-        # default (r7): explode-and-aggregate, zero HOFs in the hot path.
-        # Spark HOF lambdas are CodegenFallback — interpreted per element
-        # — so the r6 per-row form (32 × array_min(transform(gh, ...)))
-        # paid 32 interpreted passes over every gram array. Instead the
-        # gram positions come from arrays_zip of the split with its own
-        # tails (whole-stage codegen, like the t9/t11 pair extraction),
-        # and ONE groupBy(id) computes all 32 slot minima: duplicates
-        # cannot change a min, so word_ngrams' array_distinct is
-        # unnecessary here. Measured at the 500k-doc corpus: 5.45 →
-        # 3.70 s for identical output; neutral at sf0.1 (±0.05 s).
-        # Scale shape: the explode keeps gram rows in their doc's
-        # partition, so the map-side combine collapses them to one
-        # 33-column row per doc before the (tiny) shuffle — no skew
-        # hazard (one combiner row per unique id).
-        # r14: the dense expression blocks below are parsed SQL strings
-        # (selectExpr / F.expr) rather than Column-API chains — the Column
-        # form cost ~700 py4j round trips per plan build (~0.25 s warm;
-        # the bench pays it every iteration, a production driver every
-        # batch), the parsed form ~30. Same Catalyst expressions.
-        ws = F.split(F.col(text_col), " ")
-        # r15: widen BY the id — the mins aggregate below then needs no
-        # exchange of the 33-column partial-min rows (see
-        # _ensure_parallelism's ``by``); same text bytes move either way
-        base = (_ensure_parallelism(df, by=id_col)
-                .filter(F.size(ws) >= ngram)
-                .select(F.col(id_col).alias("id"), ws.alias("ws")))
-        slices = ["ws AS g0"] + [
-            f"slice(ws, {k + 1}, greatest(size(ws) - {k}, 0)) AS g{k}"
-            for k in range(1, ngram)]
-        # arrays_zip pads the shorter tails with NULL; padding is
-        # suffix-aligned, so "last component non-null" keeps exactly the
-        # size-ngram+1 real gram positions
-        zip_cols = ", ".join(f"g{k}" for k in range(ngram))
-        g = (base.selectExpr("id", *slices)
-             .selectExpr("id", f"explode(arrays_zip({zip_cols})) AS p")
-             .filter(F.col(f"p.g{ngram-1}").isNotNull()))
-        gram = "concat_ws(' ', " + ", ".join(
-            f"p.g{k}" for k in range(ngram)) + ")"
-        if gram_hash == "md5":
-            h = (f"pmod(CAST(conv(substring(md5({gram}), 1, 8), 16, 10) "
-                 f"AS BIGINT), {_MH_P})")
-        else:
-            h = f"pmod(xxhash64({gram}), {_MH_P})"
-        mins = (g.selectExpr("id", f"{h} AS h")
-                .groupBy("id")
-                .agg(*[F.expr(f"min(pmod(h * {a} + {b}, {_MH_P})) AS m{i}")
-                       for i, (a, b) in enumerate(_mh_params(n_hashes))]))
-        sig = mins.selectExpr(
-            "id",
-            f"array({', '.join(f'm{i}' for i in range(n_hashes))}) AS sig")
+        h = f"pmod(xxhash64({gram}), {_MH_P})"
+    mins = (g.selectExpr("id", f"{h} AS h")
+            .groupBy("id")
+            .agg(*[F.expr(f"min(pmod(h * {a} + {b}, {_MH_P})) AS m{i}")
+                   for i, (a, b) in enumerate(_mh_params(n_hashes))]))
+    sig = mins.selectExpr(
+        "id",
+        f"array({', '.join(f'm{i}' for i in range(n_hashes))}) AS sig")
     banded = sig.selectExpr(
         "id", "sig",
         f"explode(transform(sequence(0, {bands - 1}), "

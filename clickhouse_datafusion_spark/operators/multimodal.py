@@ -423,33 +423,6 @@ def resize_media(df: DataFrame, width: int, height: int,
             F.col("meta.duration_ms").alias("duration_ms")))
 
 
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: validates metadata, updates dims, passes payload
-    through (kernel stubbed). Superseded by :func:`resize_media` for the
-    PNG/PPM family; kept as the minimal metadata-contract reference."""
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.col("meta.kind").alias("kind"),
-            F.col("meta.mime").alias("mime"),
-            F.lit(width).cast("int").alias("width"),
-            F.lit(height).cast("int").alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms")))
-
-
-def frame_sample_stub(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: one output row per sampled timestamp
-    (frame payload stubbed as NULL; timestamps real)."""
-    n_frames = F.greatest(
-        F.coalesce((F.col("meta.duration_ms") / every_ms).cast("int"), F.lit(1)),
-        F.lit(1))
-    return (df.select(
-        "media_id", "meta",
-        F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx"))
-        .withColumn("frame_ts_ms", F.col("frame_idx") * every_ms)
-        .withColumn("frame_payload", F.lit(None).cast("binary")))
-
-
 def encode_wav_pcm(sample_rate: int, channels: int, bits: int,
                    data: bytes) -> bytes:
     """RIFF/WAVE PCM encoder — the write half of :func:`decode_wav_pcm`."""
@@ -580,9 +553,9 @@ def frame_sample(df: DataFrame, every_ms: int = 1000,
     are decoded and one frame per ``every_ms`` of media time is emitted
     as a grayscale PNG of its luma plane (real image bytes, consumable by
     :func:`decode_png` / :func:`resize_media` downstream). Other
-    containers keep the metadata-only contract of
-    :func:`frame_sample_stub` (timestamps real, payload null) or raise in
-    ``strict`` mode.
+    containers get the metadata-only contract — one row per ``every_ms``
+    of ``meta.duration_ms`` (at least one), timestamps real, payload
+    null — or raise in ``strict`` mode.
 
     Output schema: (media_id, frame_idx, frame_ts_ms, frame_payload).
     mapInPandas row-expansion is Arrow-batched and shuffle-free; at scale

@@ -42,15 +42,13 @@ def global_prefix_sum(df: DataFrame, value_col: str, order_col: str,
 
     ``bounds_mode="quantile"`` (default) samples the order-key
     distribution for balanced buckets on ANY distribution;
-    ``"uniform"`` derives equal-width bounds from a single min/max
-    aggregate — one Spark job cheaper, and equally balanced whenever the
-    order key is hash-uniform; ``"md5domain"`` (r15) takes equal-width
-    bounds over the FIXED domain of the synthetic md5 order key
-    ([0, 16¹⁵) — top 15 hex digits), which needs NO data pass at all:
-    the min/max probe was a full column scan per call at every scale
-    (plus a plan-build-time driver round trip serializing two jobs ahead
-    of the main query), spent on values that cannot change the output —
-    the result is bucketing-invariant by construction. Correctness never
+    ``"md5domain"`` (r15) takes equal-width bounds over the FIXED domain
+    of the synthetic md5 order key ([0, 16¹⁵) — top 15 hex digits), which
+    needs NO data pass at all: bounds from the key's observed min/max
+    would cost a full column scan per call at every scale (plus a
+    plan-build-time driver round trip serializing two jobs ahead of the
+    main query), spent on values that cannot change the output — the
+    result is bucketing-invariant by construction. Correctness never
     depends on the mode.
     """
     spark = df.sparkSession
@@ -59,10 +57,6 @@ def global_prefix_sum(df: DataFrame, value_col: str, order_col: str,
         dom = 16 ** 15
         bounds = sorted(set(
             dom * i // n_buckets for i in range(1, n_buckets)))
-    elif bounds_mode == "uniform":
-        lo, hi = df.agg(F.min(order_col), F.max(order_col)).first()
-        bounds = [] if lo is None or lo == hi else sorted(set(
-            lo + (hi - lo) * i // n_buckets for i in range(1, n_buckets)))
     else:
         probs = [i / n_buckets for i in range(1, n_buckets)]
         bounds = sorted(set(

@@ -27,7 +27,8 @@ uses, interpreted per element, never on a hot path), the fold-exact
 Arrow kernels (:func:`_fold_dot_np` — the same fold vectorized ACROSS
 rows; powers the query-cosine scan paths, the kNN join, and the
 in-bucket pair scorer), and the signature matmul kernel (gemm + γ-bound
-sign guard, where only the SIGN must match the fold). The codegen
+sign guard, where only the SIGN must match the fold; the only signature
+path, at every plane budget). The codegen
 middle road — unrolling the fold into a fixed-dim expression tree
 (60c3905) — is a dead end: three dots per cosine is 192 terms, janino
 fails with "Code grows beyond 64 KB", and Spark disables whole-stage
@@ -299,7 +300,7 @@ def _bucket_cosine_kernel(dim: int, threshold: float, tile: int = 2048):
     the sequential FOLD recomputes the survivors exactly, so candidate
     pairs never materialize as Spark rows at all.
 
-    Bit-identity discipline (same as :func:`_lsh_sig_arrow_kernel`): the
+    Bit-identity discipline (same as :func:`_lsh_sig_matmul_kernel`): the
     gemm uses pairwise/SIMD summation, the JVM ``dot`` a left-to-right
     fold — both within γ·Σ|aᵢbᵢ| of the exact value — so the gemm may
     only DECIDE which pairs to look at, never what to emit. Every
@@ -619,16 +620,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane signature as a bigint bit pattern."""
-    sig = F.lit(0).cast("bigint")
-    for i, p in enumerate(planes):
-        bit = F.when(dot(vec, _lit_vec(p)) >= 0,
-                     F.shiftleft(F.lit(1).cast("bigint"), i)).otherwise(F.lit(0).cast("bigint"))
-        sig = sig.bitwiseXOR(bit)
-    return sig
-
-
 def _query_signature(query_vec: list[float], planes: list[list[float]]) -> int:
     qsig = 0
     for i, p in enumerate(planes):
@@ -637,37 +628,36 @@ def _query_signature(query_vec: list[float], planes: list[list[float]]) -> int:
     return qsig
 
 
-def _lsh_sig_arrow_kernel(dim: int, n_planes: int, n_tables: int,
-                          seed: int):
+def _lsh_sig_matmul_kernel(dim: int, n_planes: int, n_tables: int,
+                           seed: int):
     """Arrow-batched signature kernel: ALL ``n_tables × n_planes``
     hyperplane dot products as ONE BLAS matmul per batch, bit-packed in
     vectorized int64.
 
-    Bit-compatibility with the JVM fold path is engineered, not assumed:
-    numpy's matmul uses pairwise/SIMD summation while the JVM ``dot`` is
-    a sequential left-to-right fold, so a dot product within rounding
-    slack of zero could sign-flip between them. Both summations differ
+    Bit-compatibility with the sequential left-to-right fold (the
+    driver-side :func:`_query_signature` that :func:`ann_query` probes
+    with) is engineered, not assumed: numpy's matmul uses pairwise/SIMD
+    summation, so a dot product within rounding slack of zero could
+    sign-flip between the two. Both summations differ
     from the exact value by at most ``γ·Σ|vᵢpᵢ|`` (γ ≈ (dim+2)·2⁻⁵²), so
     any matmul dot with ``|d| > 2γ·Σ|vᵢpᵢ|`` (the abs-matmul, one more
     BLAS call) provably has the fold's sign; only the ambiguous handful
     (measure-zero for real embeddings: exact orthogonality) re-computes
     the sequential fold per flagged (row, plane). Sign test is
     ``d >= 0 or isnan(d)`` — Spark SQL orders NaN above every double, so
-    ``NaN >= 0`` is TRUE there and numpy must follow.
+    ``NaN >= 0`` is TRUE there and numpy follows.
 
-    Edge contract (mirrors the JVM expressions): a NULL embedding or one
-    whose length ≠ dim yields signature 0 for every table (``zip_with``
-    pads with NULL → the fold is NULL → every ``when(d >= 0, w)`` takes
-    the 0 branch); an all-zero vector yields all-ones signatures
-    (0 ≥ 0). Known divergence, documented: a NULL *element* inside an
-    otherwise-valid array reaches numpy as NaN, so the JVM's
-    NULL-propagating fold (bit 0) becomes the NaN rule (bit 1) — pick
-    the JVM path if element-null embeddings are a real input class.
+    Edge contract: a NULL embedding, one whose length ≠ dim, or one
+    holding a NULL element yields signature 0 for every table (the fold
+    over a NULL is NULL, so no bit is set); an all-zero vector yields
+    all-ones signatures (0 ≥ 0). The kernel takes Arrow arrays, not
+    pandas, because only the validity bitmap tells a NULL element from
+    a NaN: as a double it would read as NaN and take the NaN rule.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     planes = np.array([p for t in range(n_tables)
                        for p in _hyperplanes(dim, n_planes, seed + t)],
@@ -677,16 +667,23 @@ def _lsh_sig_arrow_kernel(dim: int, n_planes: int, n_tables: int,
     gamma = 2.0 * (dim + 2) * 2.0 ** -52
     weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
 
-    def sig(batch: pd.Series) -> pd.Series:
-        out = np.zeros((len(batch), n_tables), dtype=np.int64)
-        ok_rows: list[int] = []
-        vecs: list = []
-        for i, v in enumerate(batch):
-            if v is not None and len(v) == dim:
-                ok_rows.append(i)
-                vecs.append(v)
-        if ok_rows:
-            V = np.asarray(vecs, dtype=np.float64)
+    def sig(batch: pa.Array) -> pa.Array:
+        n = len(batch)
+        out = np.zeros((n, n_tables), dtype=np.int64)
+        # offsets index the whole child array (a sliced batch keeps its
+        # parent's child); the running NULL count tells which rows hold a
+        # NULL element
+        offs = batch.offsets.to_numpy()
+        vals = batch.values
+        nulls = np.concatenate(([0], np.cumsum(
+            vals.is_null().to_numpy(zero_copy_only=False))))
+        ok_rows = np.flatnonzero(
+            batch.is_valid().to_numpy(zero_copy_only=False)
+            & (np.diff(offs) == dim)
+            & (nulls[offs[1:]] == nulls[offs[:-1]]))
+        if ok_rows.size:
+            V = vals.to_numpy(zero_copy_only=False)[
+                offs[ok_rows][:, None] + np.arange(dim)]
             D = V @ P
             A = np.abs(V) @ absP
             amb = np.abs(D) <= gamma * A
@@ -698,43 +695,32 @@ def _lsh_sig_arrow_kernel(dim: int, n_planes: int, n_tables: int,
                         acc = acc + float(vr[d]) * float(pc[d])
                     D[r, c] = acc
             bits = (D >= 0) | np.isnan(D)
-            out[np.asarray(ok_rows)] = (
-                bits.reshape(len(ok_rows), n_tables, n_planes)
-                * weights).sum(axis=2)
-        return pd.Series(list(out))
+            out[ok_rows] = (bits.reshape(len(ok_rows), n_tables, n_planes)
+                            * weights).sum(axis=2)
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(0, (n + 1) * n_tables, n_tables,
+                               dtype=np.int32)),
+            pa.array(out.ravel()))
 
-    sig.__annotations__ = {"batch": pd.Series, "return": pd.Series}
-    return pandas_udf(sig, "array<bigint>")
+    sig.__annotations__ = {"batch": pa.Array, "return": pa.Array}
+    return arrow_udf(sig, "array<bigint>")
 
 
 def with_lsh_signatures(df: DataFrame, vec_col: str = "embedding",
                         n_planes: int = 8, n_tables: int = 8,
-                        dim: int | None = None, seed: int = 42,
-                        kernel: str = "auto") -> DataFrame:
+                        dim: int | None = None, seed: int = 42) -> DataFrame:
     """Append all ``n_tables`` LSH signatures (``_sig_0`` .. ``_sig_{n-1}``)
     in ONE pass over the input.
 
-    Two kernels, bit-identical outputs (pinned by
-    tests/test_operators.py::test_lsh_signature_kernels_agree):
-
-    - ``jvm``: hyperplanes ride in a single literal matrix and ALL dot
-      products come from one ``transform`` over it, materialized as a
-      ``_dots`` column; each signature bit-packs its slice. No Python in
-      the path — but Spark HOF lambdas are CodegenFallback (interpreted
-      per element), so cost is ~(rows × planes × dim) interpreted evals
-      PLUS a literal expression tree that grows with the plane count.
-      Right for small plane budgets (probes, gates, the 8×8 ANN index).
-    - ``arrow``: one BLAS matmul per Arrow batch
-      (:func:`_lsh_sig_arrow_kernel`), planes regenerated from the seed
-      inside the worker — no literal matrix in the plan at all. Right
-      for auto-sized pair blocking, where 200k rows × 13 planes × 49
-      tables made the interpreted path the whole job (measured in
-      baseline_embeddings_100x.py).
-    - ``auto``: ``arrow`` when ``n_planes × n_tables > 64`` (the
-      auto-sizing regime), else ``jvm``. The dispatch threshold is a
-      plane-count, not a row-count: below it the JVM path is within
-      noise at every scale, above it the interpreted cost grows with
-      rows × planes while the matmul stays bandwidth-bound.
+    All ``n_tables × n_planes`` hyperplane dot products come from one
+    BLAS matmul per Arrow batch (:func:`_lsh_sig_matmul_kernel`), planes
+    regenerated from the seed inside the worker — no literal matrix in
+    the plan. Signatures are bit-identical to the sequential fold
+    (:func:`_query_signature`, which :func:`ann_query` probes with),
+    pinned by tests/test_operators.py::test_lsh_signature_kernels_agree.
+    One kernel serves every plane budget: an interpreted JVM HOF fold
+    measured flat against it at 24 total planes (d9/s8) and 4.6× slower
+    at 64 (the 8×8 ANN index).
 
     ``dim=None`` probes the dimensionality with a driver-side ``first()``
     — one tiny Spark job per call. Every registry/bench caller passes
@@ -742,54 +728,26 @@ def with_lsh_signatures(df: DataFrame, vec_col: str = "embedding",
     production pipelines too, where the plan may be rebuilt per batch."""
     if dim is None:
         dim = _infer_dim(df, vec_col)
-    if kernel == "auto":
-        # r15: >= 64, not > 64 — the 8x8 ANN index sat exactly AT the
-        # old threshold and took the interpreted path: measured 6.2 s of
-        # single-task CodegenFallback evals + a 2.7 s driver gap from
-        # the 64-plane literal matrix at sf0.1, vs 1.3 s with the
-        # matmul kernel (bit-identical, 4.6x pairwise median over 5
-        # alternating pairs; s2/s9/st11 oracle-gated). At 24 total
-        # planes (the 1x24 pair-blocking family) the two kernels
-        # measure FLAT (0.97x pairwise, d9/d6), so the boundary moves
-        # only to include 64.
-        kernel = "arrow" if n_planes * n_tables >= 64 else "jvm"
-    if kernel == "arrow":
-        # The matmul stage is compute-DENSE per task, so a scan that
-        # arrives in fewer splits than cores serializes it AND leaves the
-        # stage straggler-bound (one slow worker extends the whole stage).
-        # Widen to 2× parallelism — small tasks schedule around
-        # stragglers. Measured at the 200k corpus (20-split parquet scan,
-        # 32 cores): 17–56 s/run erratic before, 9.6–12 s steady after;
-        # the r7 d3 repartition finding, one level up. At real scale the
-        # scan already has ≥ parallelism splits and this is a no-op.
-        # actual planned splits, not the byte-based estimate — the
-        # estimator read 40 where the scan really arrives in 20 (row
-        # groups bound splits below bytes/maxPartitionBytes), and 20
-        # heavy tasks on 32 cores is exactly the straggler regime
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            df = df.repartition(2 * target)
-        udf = _lsh_sig_arrow_kernel(dim, n_planes, n_tables, seed)
-        sigs_arr = udf(_as_double(vec_col))
-        return (df.withColumn("_sigs", sigs_arr)
-                .select("*", *[F.element_at("_sigs", t + 1).alias(f"_sig_{t}")
-                               for t in range(n_tables)])
-                .drop("_sigs"))
-    planes = [p for t in range(n_tables)
-              for p in _hyperplanes(dim, n_planes, seed + t)]
-    v = _as_double(vec_col)
-    dots = F.transform(_lit_mat(planes), lambda p: dot(v, p))
-    weights = _lit_vec([float(1 << i) for i in range(n_planes)])
-    sigs = []
-    for t in range(n_tables):
-        bits = F.slice(F.col("_dots"), t * n_planes + 1, n_planes)
-        packed = F.aggregate(
-            F.zip_with(bits, weights,
-                       lambda d, w: F.when(d >= 0, w).otherwise(F.lit(0.0))),
-            F.lit(0.0), lambda acc, x: acc + x)
-        sigs.append(packed.cast("bigint").alias(f"_sig_{t}"))
-    return (df.withColumn("_dots", dots)
-            .select("*", *sigs).drop("_dots"))
+    # The matmul stage is compute-DENSE per task, so a scan that
+    # arrives in fewer splits than cores serializes it AND leaves the
+    # stage straggler-bound (one slow worker extends the whole stage).
+    # Widen to 2× parallelism — small tasks schedule around
+    # stragglers. Measured at the 200k corpus (20-split parquet scan,
+    # 32 cores): 17–56 s/run erratic before, 9.6–12 s steady after;
+    # the r7 d3 repartition finding, one level up. At real scale the
+    # scan already has ≥ parallelism splits and this is a no-op.
+    # actual planned splits, not the byte-based estimate — the
+    # estimator read 40 where the scan really arrives in 20 (row
+    # groups bound splits below bytes/maxPartitionBytes), and 20
+    # heavy tasks on 32 cores is exactly the straggler regime
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        df = df.repartition(2 * target)
+    udf = _lsh_sig_matmul_kernel(dim, n_planes, n_tables, seed)
+    return (df.withColumn("_sigs", udf(_as_double(vec_col)))
+            .select("*", *[F.element_at("_sigs", t + 1).alias(f"_sig_{t}")
+                           for t in range(n_tables)])
+            .drop("_sigs"))
 
 
 def build_ann_index(df: DataFrame, path: str | None = None,

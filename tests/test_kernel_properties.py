@@ -119,7 +119,7 @@ def _keyed_values(draw):
 
 @given(_keyed_values(),
        st.sampled_from([1, 2, 5]),
-       st.sampled_from(["quantile", "uniform", "md5domain"]))
+       st.sampled_from(["quantile", "md5domain"]))
 @settings(max_examples=15, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_global_prefix_sum_matches_serial_cumsum(spark, rows, n_buckets,
@@ -136,6 +136,22 @@ def test_global_prefix_sum_matches_serial_cumsum(spark, rows, n_buckets,
         want[k] = cum
         cum += v
     assert got == want, (rows, n_buckets, mode, got, want)
+
+
+def test_global_prefix_sum_inf_order_values(spark):
+    """A double order column containing inf drives inf into the quantile
+    bucket bounds — the build must parse and the prefix sum stay exact."""
+    from clickhouse_datafusion_spark.operators.packing import (
+        global_prefix_sum)
+
+    df = spark.createDataFrame(
+        [(0.0, 1.0), (1.0, 2.0), (float("inf"), 4.0)], ["k", "v"])
+    # 4 buckets: the 0.75 quantile of three keys is the inf key
+    assert float("inf") in df.stat.approxQuantile(
+        "k", [0.25, 0.5, 0.75], 0.001)
+    out = global_prefix_sum(df, value_col="v", order_col="k", n_buckets=4)
+    rows = {r["k"]: r["_cum_before"] for r in out.collect()}
+    assert rows == {0.0: 0.0, 1.0: 1.0, float("inf"): 3.0}
 
 
 @given(st.lists(st.integers(min_value=0, max_value=5000),

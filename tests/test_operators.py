@@ -127,26 +127,58 @@ def test_exact_jaccard_verify_semantics_and_plan(spark):
 
 
 def test_minhash_arrow_kernel_matches_hof(spark, docs):
-    """The Arrow/numpy slot kernel must be bit-identical to the Catalyst
-    HOF form — including the NULL signature for sub-n-gram documents."""
+    """The explode-and-aggregate MinHash path must reproduce a pure-Python
+    MinHash over the same multiply-shift family (``_mh_params``) and md5
+    gram hash: same banding candidates, same estimated Jaccard. The
+    sub-n-gram document has no grams, so it is never a candidate."""
+    import hashlib
+    import math
+
     from pyspark.sql import Row
 
-    from clickhouse_datafusion_spark.operators.dedup import minhash_candidates
+    from clickhouse_datafusion_spark.operators.dedup import (
+        _MH_P, _mh_params, minhash_candidates)
 
     short = spark.createDataFrame([Row(doc_id=777_000, text="one two")])
     corpus = docs.select("doc_id", "text").unionByName(short)
-    hof = set(map(tuple, minhash_candidates(
-        corpus, threshold=0.3, arrow_kernel=False).collect()))
-    arrow = set(map(tuple, minhash_candidates(
-        corpus, threshold=0.3, arrow_kernel=True).collect()))
-    assert hof == arrow and len(hof) > 0
+    got = set(map(tuple, minhash_candidates(
+        corpus, threshold=0.3, gram_hash="md5").collect()))
+
+    params = _mh_params(32)
+    sigs = {}
+    for doc_id, text in corpus.collect():
+        ws = text.split(" ")
+        if len(ws) < 3:
+            continue
+        hs = {int(hashlib.md5(" ".join(ws[i:i + 3]).encode())
+                  .hexdigest()[:8], 16) % _MH_P
+              for i in range(len(ws) - 2)}
+        sigs[doc_id] = [min((h * a + b) % _MH_P for h in hs)
+                        for a, b in params]
+    assert 777_000 not in sigs
+    bands = {}
+    for doc_id, sig in sigs.items():
+        for band in range(8):
+            bands.setdefault((band, tuple(sig[band * 4:band * 4 + 4])),
+                             []).append(doc_id)
+    want = set()
+    for ids in bands.values():
+        for x in ids:
+            for y in ids:
+                if x < y:
+                    same = sum(p == q for p, q in zip(sigs[x], sigs[y]))
+                    est = math.floor(same / 32 * 10000 + 0.5) / 10000.0
+                    if est >= 0.3:
+                        want.add((x, y, est))
+    assert got == want and len(got) > 0
 
 
 def test_bind_once_word_ngrams_equivalence(spark, docs):
-    """bind_once is an evaluation-strategy change only: the bound (default)
-    and unbound forms of word_ngrams must agree row-for-row, including the
-    short-text empty-array branch and NULL text (the when/otherwise guard
-    turns the NULL condition into the empty-array branch in BOTH forms)."""
+    """The string-column parsed-SQL form of word_ngrams must agree
+    row-for-row with the Column form (both bind the split once),
+    including the short-text empty-array branch and NULL text (the
+    guard turns the NULL condition into the empty-array branch in BOTH
+    forms)."""
     from pyspark.sql import Row
 
     from clickhouse_datafusion_spark.operators.dedup import (
@@ -157,11 +189,11 @@ def test_bind_once_word_ngrams_equivalence(spark, docs):
          Row(doc_id=3, text=None)], "doc_id int, text string")
     corpus = docs.select("doc_id", "text").unionByName(edge)
     both = corpus.select(
-        word_ngrams(F.col("text"), 3, bound=True).alias("b"),
-        word_ngrams(F.col("text"), 3, bound=False).alias("u"))
-    bad = both.filter(~(F.col("b").eqNullSafe(F.col("u")))).count()
+        word_ngrams("text", 3).alias("s"),
+        word_ngrams(F.col("text"), 3).alias("c"))
+    bad = both.filter(~(F.col("s").eqNullSafe(F.col("c")))).count()
     assert bad == 0
-    assert both.filter(F.col("b").isNull()).count() == 0
+    assert both.filter(F.col("s").isNull()).count() == 0
 
     doubled = spark.range(1).select(
         bind_once(F.lit(21), lambda x: x + x).alias("v")).first()
@@ -388,6 +420,23 @@ def test_blocked_cosine_dups_small_n_routes_exact(spark, emb):
     assert "FlatMapGroupsInPandas" not in plan2
 
 
+def test_blocked_cosine_small_n_route_needs_no_dim_probe(spark):
+    """The small-N exact route must not probe the data for dim: an
+    all-NULL vector column would make _infer_dim raise, so reaching the
+    result proves no probe ran."""
+    from clickhouse_datafusion_spark.operators.similarity import (
+        blocked_cosine_dups)
+    from pyspark.sql.types import (ArrayType, DoubleType, LongType,
+                                   StructField, StructType)
+
+    schema = StructType([StructField("vec_id", LongType()),
+                         StructField("embedding", ArrayType(DoubleType()))])
+    df = spark.createDataFrame([(1, None), (2, None)], schema)
+    out = blocked_cosine_dups(df, threshold=0.5, n_planes=1, n_tables=2,
+                              n_rows=2)
+    assert out.count() == 0
+
+
 def test_query_cosine_zero_norm_is_nan_not_null(spark):
     """r9 advisor: ``pd.array(..., 'Float64')`` coerced np.nan → pd.NA,
     returning NULL for zero-norm rows where the JVM fold divides to NaN.
@@ -513,47 +562,55 @@ def test_knn_join_kernel_matches_window_reference(spark, emb):
 
 
 def test_lsh_signature_kernels_agree(spark, emb):
-    """The Arrow matmul kernel must be BIT-IDENTICAL to the JVM fold path
-    — the guard recomputes the sequential fold for any dot within the
-    floating-point error bound of zero, so sign tests can never diverge
-    (operators/similarity.py::_lsh_sig_arrow_kernel). Covers the edge
-    contract too: NULL embedding and wrong-length embedding → signature
-    0 everywhere; all-zero vector → all-ones (0 ≥ 0 takes the bit); and
-    an exactly-orthogonal construction that lands in the ambiguous zone
-    of the matmul-vs-fold error bound."""
+    """The Arrow matmul kernel must be BIT-IDENTICAL to the sequential
+    left-to-right fold that ann_query probes with
+    (operators/similarity.py::_query_signature) — the guard recomputes
+    the fold for any dot within the floating-point error bound of zero,
+    so sign tests can never diverge. Covers the edge contract too: NULL
+    embedding, wrong-length embedding and a NULL element → signature 0
+    everywhere (the fold is NULL, so no bit is set); a NaN element and
+    the all-zero vector → all-ones (NaN ≥ 0 and 0 ≥ 0 take the bit in
+    Spark SQL); and an exactly-orthogonal
+    construction that lands in the ambiguous zone of the matmul-vs-fold
+    error bound. Every plane budget runs the one kernel."""
     from clickhouse_datafusion_spark.operators.similarity import (
-        _hyperplanes, with_lsh_signatures)
+        _hyperplanes, _query_signature, with_lsh_signatures)
 
     p0 = _hyperplanes(64, 5, seed=42)[0]
     # v·p0 == 0 exactly in double arithmetic: the two products round
     # identically and cancel, every later term is 0*x
     ortho = [float(p0[1]), -float(p0[0])] + [0.0] * 62
+    holed = [0.5, None, 0.25, 1.0] * 16
     edge = spark.createDataFrame(
-        [(1, None), (2, [0.5] * 10), (3, [0.0] * 64), (4, ortho)],
+        [(1, None), (2, [0.5] * 10), (3, [0.0] * 64), (4, ortho),
+         (5, holed), (6, [float("nan")] + [0.5] * 63)],
         "vec_id bigint, embedding array<float>")
     corpus = emb.select("vec_id", "embedding").unionByName(edge)
+    vecs = dict(corpus.collect())
+    arrow_evals = []
     for n_planes, n_tables in ((5, 3), (13, 12)):
+        # on the plain scan: a Union would get the UDF pushed into each
+        # of its branches
+        arrow_evals.append(with_lsh_signatures(
+            emb, dim=64, n_planes=n_planes, n_tables=n_tables)._jdf
+            .queryExecution().executedPlan().toString()
+            .count("ArrowEvalPython"))
+        signed = with_lsh_signatures(corpus, dim=64, n_planes=n_planes,
+                                     n_tables=n_tables)
         cols = ["vec_id"] + [f"_sig_{t}" for t in range(n_tables)]
-        j = {r[0]: r[1:] for r in with_lsh_signatures(
-            corpus, dim=64, n_planes=n_planes, n_tables=n_tables,
-            kernel="jvm").select(cols).collect()}
-        a = {r[0]: r[1:] for r in with_lsh_signatures(
-            corpus, dim=64, n_planes=n_planes, n_tables=n_tables,
-            kernel="arrow").select(cols).collect()}
-        assert j == a
-        assert j[1] == tuple([0] * n_tables)      # NULL embedding
-        assert j[2] == tuple([0] * n_tables)      # wrong length
-        assert j[3] == tuple([2 ** n_planes - 1] * n_tables)  # zero vec
-    # auto dispatch: big plane budgets take the arrow kernel (one
-    # ArrowEvalPython), small ones stay pure-JVM
-    big = with_lsh_signatures(emb, dim=64, n_planes=13, n_tables=12,
-                              kernel="auto")
-    small = with_lsh_signatures(emb, dim=64, n_planes=4, n_tables=8,
-                                kernel="auto")
-    assert big._jdf.queryExecution().executedPlan().toString().count(
-        "ArrowEvalPython") == 1
-    assert "ArrowEvalPython" not in (
-        small._jdf.queryExecution().executedPlan().toString())
+        got = {r[0]: r[1:] for r in signed.select(cols).collect()}
+        zero = tuple([0] * n_tables)
+        assert got.pop(5) == zero, (n_planes, n_tables)   # NULL element
+        assert got.pop(1) == zero                         # NULL embedding
+        assert got.pop(2) == zero                         # wrong length
+        ones = tuple([2 ** n_planes - 1] * n_tables)
+        assert got.pop(6) == ones                         # NaN element
+        assert got[3] == ones                             # zero vec
+        tables = [_hyperplanes(64, n_planes, 42 + t)
+                  for t in range(n_tables)]
+        assert got == {i: tuple(_query_signature(vecs[i], pl)
+                                for pl in tables) for i in got}
+    assert arrow_evals == [1, 1]
 
 
 def test_ann_multiprobe_superset_recall(spark, emb):
@@ -661,8 +718,8 @@ def test_fingerprint_is_content_hash(spark, docs):
 
 def test_multimodal_plumbing(spark, docs):
     from clickhouse_datafusion_spark.operators.multimodal import (
-        FEATURE_DIM, decode_features, documents_as_media, frame_sample_stub,
-        resize_stub)
+        FEATURE_DIM, decode_features, documents_as_media, frame_sample,
+        resize_media)
 
     media = documents_as_media(docs.limit(30))
     assert [f.name for f in media.schema.fields] == ["media_id", "payload", "meta"]
@@ -672,7 +729,7 @@ def test_multimodal_plumbing(spark, docs):
     assert all(len(r.features) == FEATURE_DIM for r in rows)
     assert all(0.0 <= v <= 1.0 for r in rows for v in r.features)
 
-    resized = resize_stub(media, 224, 224)
+    resized = resize_media(media, 224, 224)
     r = resized.first()
     assert (r.meta.width, r.meta.height) == (224, 224)
 
@@ -681,7 +738,7 @@ def test_multimodal_plumbing(spark, docs):
                          F.lit(None).cast("int").alias("width"),
                          F.lit(None).cast("int").alias("height"),
                          F.lit(3500).cast("long").alias("duration_ms")))
-    frames = frame_sample_stub(vids, every_ms=1000)
+    frames = frame_sample(vids, every_ms=1000)
     per_media = frames.groupBy("media_id").count().first()
     assert per_media["count"] == 3
 
@@ -1164,6 +1221,22 @@ def test_chunk_documents_reconstruction(spark):
         spark.createDataFrame([Row(doc_id=2, text="a b c")]),
         chunk_size=64, overlap=16, with_text=True).collect()
     assert len(one) == 1 and one[0].chunk_text == "a b c"
+
+
+def test_chunk_documents_quoted_text_col(spark):
+    """A text column whose name needs backquoting must work end to end
+    (the r14 n_chunks fragment interpolated the raw name)."""
+    from clickhouse_datafusion_spark.operators.packing import (
+        chunk_documents)
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e f g h"), (2, "x y")],
+        ["doc id", "body text"])
+    out = chunk_documents(df, chunk_size=4, overlap=1,
+                          text_col="body text", id_col="doc id")
+    per_doc = sorted((r["doc id"], r["chunk_id"]) for r in out.collect())
+    # doc1: 8 tokens, stride 3 -> 3 chunks; doc2: short doc -> 1 chunk
+    assert per_doc == [(1, 0), (1, 1), (1, 2), (2, 0)]
 
 
 # -- bm25 / domain cap / seeded shuffle (r5) -------------------------------
@@ -2025,6 +2098,32 @@ def test_cross_doc_span_skew_guard(spark):
     assert out[2] == 1
     assert out[9999] == 1
     assert out[20000] == 8         # untouched doc
+
+
+def test_span_dedup_broadcast_gate_matches(spark):
+    """broadcastRemovals=false must produce byte-identical output to the
+    default broadcast plan (AQE plans the marker join from runtime size
+    instead of the unbounded-broadcast hint)."""
+    from clickhouse_datafusion_spark.operators.dedup import (
+        drop_cross_doc_spans)
+
+    span = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9 " \
+           "wa wb wc wd we wf wg wh wi wj"
+    rows = [(1, span + " tail one"), (2, span + " tail two"),
+            (3, "unique doc with no duplicate span at all " * 2)]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+
+    def run():
+        return sorted(
+            tuple(r) for r in drop_cross_doc_spans(df, ngram=20).collect())
+
+    base = run()
+    key = "spark.clickhouse_datafusion_spark.spanDedup.broadcastRemovals"
+    spark.conf.set(key, "false")
+    try:
+        assert run() == base
+    finally:
+        spark.conf.unset(key)
 
 
 def test_jsonl_permissive_on_malformed_lines(spark, tmp_path):

@@ -544,9 +544,8 @@ def test_no_split_inside_hof_lambdas(spark):
     split. This sweep renders each operator's analyzed plan and asserts
     no ``split(`` appears inside any ``lambdafunction(`` body.
 
-    Deliberately NOT swept: ``word_ngrams(bound=False)`` (the pandas-UDF
-    feed — Spark cannot extract a PythonUDF argument containing the
-    wrapper) and ``_bucket_pairs``'s banding-bounded re-sort (no split)."""
+    Deliberately NOT swept: ``_bucket_pairs``'s banding-bounded re-sort
+    (no split)."""
     from clickhouse_datafusion_spark.operators import dedup, text
 
     F_ = __import__("pyspark.sql.functions", fromlist=["F"])
