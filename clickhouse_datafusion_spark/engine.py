@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from clickhouse_datafusion_spark.catalog import ClickHouseCatalog, DEFAULT_CATALOG
 from clickhouse_datafusion_spark.fragments import sql_ident
 from clickhouse_datafusion_spark.functions.rewrite import rewrite_sql
+from clickhouse_datafusion_spark.sink import arrow_frame
 
 
 class ClickHouseSparkEngine:
@@ -284,8 +285,8 @@ class ClickHouseSparkEngine:
         except Exception as e:
             body = (f"(local plan unavailable: {type(e).__name__}: "
                     f"{str(e)[:200]})")
-        return self.spark.createDataFrame([(f"{head}\n\n{body}",)],
-                                          "plan string")
+        return arrow_frame(self.spark, [(f"{head}\n\n{body}",)],
+                           "plan string")
 
     def _try_remote_exec(self, sql: str):
         """S7/J8: return a DataFrame when the whole statement shipped,
@@ -297,10 +298,12 @@ class ClickHouseSparkEngine:
         Scale contract (r10): output-REDUCING statements (GROUP BY /
         non-windowed aggregate / LIMIT) hand back one Arrow table
         directly — that is what federation exists to ship. Everything
-        else STREAMS batch-by-batch through a parquet spool
-        (``_spool_remote_stream``), so an unaggregated
-        ``SELECT * FROM remote.lineitem`` never materializes the full
-        result in driver memory — the reference's RecordBatchStream
+        else STREAMS batch-by-batch (``_spool_remote_stream``): a
+        result that fits comes back as an Arrow LocalRelation, and the
+        stream spills to a parquet spool past Spark's local-relation
+        threshold, so an unaggregated
+        ``SELECT * FROM remote.lineitem`` never holds more than the
+        threshold in driver memory — the reference's RecordBatchStream
         hand-back (src/stream.rs:110-131). Bare table names resolve
         LOCAL-first (nearest scope): a statement whose bare ref is
         shadowed by an existing local table/view stays local."""
@@ -320,7 +323,7 @@ class ClickHouseSparkEngine:
                 df = self._arrow_to_df(self._remote.execute(shipped),
                                        local_schema)
             else:
-                df = self._spool_remote_stream(shipped)
+                df = self._spool_remote_stream(shipped, local_schema)
         except Exception as e:
             self.last_remote_error = e
             return None
@@ -342,8 +345,7 @@ class ClickHouseSparkEngine:
                 cast = (tbl.rename_columns(
                     [f.name for f in local_schema.fields])
                     .cast(to_arrow_schema(local_schema)))
-                return self.spark.createDataFrame(cast,
-                                                  schema=local_schema)
+                return arrow_frame(self.spark, cast, local_schema)
             except (pa.ArrowInvalid, pa.ArrowNotImplementedError,
                     pa.ArrowTypeError, ValueError, TypeError,
                     KeyError) as e:
@@ -353,7 +355,7 @@ class ClickHouseSparkEngine:
                 # positionally aligns); anything else raises. The fall-
                 # through is OBSERVABLE, not silent:
                 self.last_remote_align_error = e
-        return self.spark.createDataFrame(tbl)
+        return arrow_frame(self.spark, tbl)
 
     def _local_twins_resolve(self, local_form: str) -> bool:
         """True when every (non-CTE) table ref of the local form exists
@@ -417,8 +419,7 @@ class ClickHouseSparkEngine:
                 # non-nullable locally, the Arrow hand-back nullable);
                 # the direct path's result is output-reduced and already
                 # materialized, so a rebuild is a driver-local no-op
-                out = self.spark.createDataFrame(out.collect(),
-                                                 local_schema)
+                out = arrow_frame(self.spark, out.toArrow(), local_schema)
         except (AnalysisException, ValueError, TypeError, KeyError) as e:
             # narrow on purpose (r12 — the _arrow_to_df convention
             # applied to the direct hand-back path): only the known
@@ -443,32 +444,46 @@ class ClickHouseSparkEngine:
                 if "." not in r and r in remote_tables
                 and self.spark.catalog.tableExists(r)}
 
-    def _spool_remote_stream(self, shipped: str) -> DataFrame:
-        """Stream a shippable-but-not-reducing remote result to a
-        parquet spool one RecordBatch at a time (bounded driver
-        memory), then hand Spark the distributed scan of the spool.
-        Empty results fall back to the direct path — a zero-row Arrow
-        table is by definition bounded."""
+    def _spool_remote_stream(self, shipped: str, local_schema) -> DataFrame:
+        """Hand back a shippable-but-not-reducing remote result from its
+        RecordBatch stream. Batches buffer on the driver up to Spark's
+        own ``spark.sql.execution.arrow.localRelationThreshold``: a
+        stream that ends under it comes back through
+        :meth:`_arrow_to_df` (one Arrow-side cast to the local analyzed
+        schema, a LocalRelation — no spool file, no schema-inference
+        job). Past the threshold it spills to a parquet spool — the
+        buffered batches, then the rest one at a time — and Spark scans
+        the spool, so driver memory stays bounded by the threshold."""
         import os
         import uuid
 
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        path = os.path.join(self._remote_spool_dir, uuid.uuid4().hex)
-        os.makedirs(path, exist_ok=True)
-        writer = None
+        limit = (self.spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+                 .arrowLocalRelationThreshold())
+        stream = self._remote.execute_stream(shipped)
+        buffered, size = [], 0
         try:
-            for batch in self._remote.execute_stream(shipped):
-                if writer is None:
-                    writer = pq.ParquetWriter(
-                        os.path.join(path, "part-00000.parquet"),
-                        batch.schema)
-                writer.write_batch(batch)
+            for batch in stream:
+                buffered.append(batch)
+                size += batch.nbytes
+                if size > limit:
+                    break
+            else:
+                return self._arrow_to_df(pa.Table.from_batches(buffered),
+                                         local_schema)
+            path = os.path.join(self._remote_spool_dir, uuid.uuid4().hex)
+            os.makedirs(path, exist_ok=True)
+            with pq.ParquetWriter(os.path.join(path, "part-00000.parquet"),
+                                  buffered[0].schema) as writer:
+                for batch in buffered:
+                    writer.write_batch(batch)
+                del buffered        # drain the rest one batch at a time
+                for batch in stream:
+                    writer.write_batch(batch)
         finally:
-            if writer is not None:
-                writer.close()
-        if writer is None:
-            return self.spark.createDataFrame(self._remote.execute(shipped))
+            stream.close()
         return self.spark.read.parquet(path)
 
     # write plane -> its last_remote_insert label
@@ -931,10 +946,9 @@ class ClickHouseSparkEngine:
         sh = self._REMOTE_SHOW_RE.match(sql)
         if sh and sh.group("db").lower() in (db, f"{cat}.{db}"):
             rows = [(db, t, "REMOTE") for t in sorted(self._remote.refresh())]
-            return self.spark.createDataFrame(
-                rows or [("", "", "")],
-                "namespace string, tableName string, engine string"
-            ).where("tableName <> ''")
+            return arrow_frame(
+                self.spark, rows,
+                "namespace string, tableName string, engine string")
         c = self._REMOTE_CREATE_RE.match(sql)
         if c:
             bare = self._remote_bare(c.group("name"))
@@ -942,10 +956,10 @@ class ClickHouseSparkEngine:
                 return None
             if bare in self._remote.tables():
                 if c.group("ine"):
-                    return self.spark.createDataFrame([], "result string")
+                    return arrow_frame(self.spark, [], "result string")
                 raise ValueError(f"remote table {bare!r} already exists")
             self._remote.create_table(bare, c.group("cols"))
-            return self.spark.createDataFrame([], "result string")
+            return arrow_frame(self.spark, [], "result string")
         ct = self._REMOTE_CTAS_RE.match(sql)
         if ct:
             bare = self._remote_bare(ct.group("name"))
@@ -953,7 +967,7 @@ class ClickHouseSparkEngine:
                 return None
             if bare in self._remote.tables():
                 if ct.group("ine"):
-                    return self.spark.createDataFrame([], "result string")
+                    return arrow_frame(self.spark, [], "result string")
                 raise ValueError(f"remote table {bare!r} already exists")
             return self._remote_ctas(bare, ct.group("src").strip())
         d = self._REMOTE_DROP_RE.match(sql)
@@ -962,7 +976,7 @@ class ClickHouseSparkEngine:
             if bare is None:
                 return None
             self._remote.drop_table(bare, if_exists=bool(d.group("ie")))
-            return self.spark.createDataFrame([], "result string")
+            return arrow_frame(self.spark, [], "result string")
         return None
 
     # Spark simpleString -> remote-dialect column type for the local-eval
@@ -1009,7 +1023,7 @@ class ClickHouseSparkEngine:
                 for f in df.schema.fields)
             self._remote.create_table(bare, schema_sql)
             self._append(plane, bare, df)
-        return self.spark.createDataFrame([], "result string")
+        return arrow_frame(self.spark, [], "result string")
 
     # ---------------------------------------------------------------------
     def rewrite(self, query: str) -> str:
@@ -1149,12 +1163,12 @@ class ClickHouseSparkEngine:
     def _show_mat_views(self) -> DataFrame:
         rows = [(k, mv["version"], mv["sql"].strip())
                 for k, mv in sorted(self._mat_views.items())]
-        return self.spark.createDataFrame(
-            rows or [], "view string, version int, definition string")
+        return arrow_frame(self.spark, rows,
+                           "view string, version int, definition string")
 
     def _mv_result(self, key: str, version: int) -> DataFrame:
-        return self.spark.createDataFrame(
-            [(key, version)], "view string, version int")
+        return arrow_frame(self.spark, [(key, version)],
+                           "view string, version int")
 
     # -- mutations ---------------------------------------------------------
     def _mutate_mat_view(self, name: str, kind: str, tail: str) -> DataFrame:
@@ -1423,8 +1437,8 @@ class ClickHouseSparkEngine:
             found = (key in self._mat_views
                      or self.spark.catalog.tableExists(ex.group("name"))
                      or self.spark.catalog.tableExists(key))
-            return self.spark.createDataFrame([(1 if found else 0,)],
-                                              "result int")
+            return arrow_frame(self.spark, [(1 if found else 0,)],
+                               "result int")
         sc = _SHOW_CREATE_RE.match(rewritten)
         if sc:
             key = self._mv_key(sc.group("name"))
@@ -1432,8 +1446,8 @@ class ClickHouseSparkEngine:
             if mv is not None:
                 stmt = (f"CREATE MATERIALIZED VIEW {key} AS "
                         f"{mv['sql'].strip()}")
-                return self.spark.createDataFrame([(stmt,)],
-                                                  "statement string")
+                return arrow_frame(self.spark, [(stmt,)],
+                                   "statement string")
             return self.spark.sql(f"SHOW CREATE TABLE {sc.group('name')}")
         if re.search(r"\b(prewhere|totals|format|global|final)\b",
                      rewritten, re.IGNORECASE):
@@ -1512,13 +1526,14 @@ class ClickHouseSparkEngine:
                 for tbl in spark.catalog.listTables(db.name):
                     rows.append((tbl.namespace[0] if tbl.namespace else "",
                                  tbl.name, tbl.tableType or "VIEW"))
-            spark.createDataFrame(
-                rows or [("", "", "")],
-                "database string, name string, engine string")                 .where("name <> '' OR database <> ''")                 .createOrReplaceTempView("_ch_system_tables")
+            arrow_frame(spark, rows,
+                        "database string, name string, engine string"
+                        ).createOrReplaceTempView("_ch_system_tables")
             sql = _SYS_TABLES_RE.sub(" _ch_system_tables ", sql)
         if _SYS_DATABASES_RE.search(sql):
             rows = [(db.name,) for db in spark.catalog.listDatabases()]
-            spark.createDataFrame(rows, "name string")                 .createOrReplaceTempView("_ch_system_databases")
+            arrow_frame(spark, rows, "name string"
+                        ).createOrReplaceTempView("_ch_system_databases")
             sql = _SYS_DATABASES_RE.sub(" _ch_system_databases ", sql)
         return sql
 
@@ -1675,7 +1690,7 @@ class ClickHouseSparkEngine:
             T.StructField("depth", T.IntegerType(), False),
             T.StructField("metric", T.StringType(), False),
             T.StructField("value", T.LongType(), False)])
-        return self.spark.createDataFrame(rows, schema)
+        return arrow_frame(self.spark, rows, schema)
 
     def explain_str(self, query: str, mode: str = "formatted") -> str:
         df = self.sql(query)

@@ -1179,11 +1179,13 @@ def fed3_remote_stream(spark, sf):
     task 2): a shippable statement with NO aggregate/LIMIT/GROUP BY is
     not output-reducing, so the seam must not materialize it as one
     driver-side Arrow table — it flows batch-by-batch through
-    ``RemoteEngine.execute_stream`` into a parquet spool and hands
-    Spark the distributed scan (the reference's RecordBatchStream
-    contract, src/stream.rs:110-131). The gate row proves the streamed
-    path end-to-end: names, types, and values of a multi-batch scan
-    must survive the spool round trip to hash-match the oracle; the
+    ``RemoteEngine.execute_stream``, comes back as an Arrow
+    LocalRelation while it fits under Spark's local-relation threshold,
+    and spills to a parquet spool past that threshold, handing Spark
+    the distributed scan (the reference's RecordBatchStream contract,
+    src/stream.rs:110-131). The gate row proves the streamed path
+    end-to-end: names, types, and values of the streamed scan must
+    survive the hand-back to hash-match the oracle; the
     in-body asserts pin that it SHIPPED and that the reducing fast
     path was not what ran (tests/test_remote_engine.py pins the
     never-materialize property with an execute() spy)."""

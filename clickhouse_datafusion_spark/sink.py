@@ -23,7 +23,7 @@ import re
 import threading
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Observation, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -62,9 +62,36 @@ def _table_write_lock(table: str) -> threading.Lock:
         return _TABLE_WRITE_LOCKS.setdefault(table.lower(), threading.Lock())
 
 
+def arrow_frame(spark: SparkSession, data, schema=None) -> DataFrame:
+    """The one way the engine builds a result frame it made itself.
+
+    ``data`` is a pyarrow Table, or a list of row tuples laid out by
+    ``schema`` (a StructType or a DDL string). Either way the frame is
+    built from Arrow, which Spark plans as a ``LocalRelation`` (a
+    ``LocalTableScan``) up to ``spark.sql.execution.arrow.
+    localRelationThreshold`` — the reference hands results back as Arrow
+    RecordBatches (src/stream.rs:110-131). A Python list would become a
+    pickled RDD instead (``Scan ExistingRDD``), so collecting even one
+    count row would start Python workers."""
+    import pyarrow as pa
+
+    if not isinstance(data, pa.Table):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        if isinstance(schema, str):
+            schema = T.DataType.fromDDL(schema)
+        arrow_schema = to_arrow_schema(schema)
+        data = pa.Table.from_arrays(
+            [pa.array([row[i] for row in data], type=f.type)
+             for i, f in enumerate(arrow_schema)], schema=arrow_schema)
+    return spark.createDataFrame(data, schema)
+
+
+_COUNT_SCHEMA = T.StructType([T.StructField("count", T.LongType(), False)])
+
+
 def _count_df(spark: SparkSession, n: int) -> DataFrame:
-    return spark.createDataFrame(
-        [Row(count=n)], T.StructType([T.StructField("count", T.LongType(), False)]))
+    return arrow_frame(spark, [(n,)], _COUNT_SCHEMA)
 
 
 # Logical nodes that (can) change the partitioning between the file scan

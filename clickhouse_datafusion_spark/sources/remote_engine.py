@@ -11,9 +11,10 @@ DuckDB playing the remote ClickHouse server:
   matters at 100 TB, where shipping a 1000-row aggregate beats
   scanning the table into the local engine; everything else STREAMS
   batch-by-batch (:meth:`RemoteEngine.execute_stream`, the
-  reference's RecordBatchStream contract, src/stream.rs:110-131)
-  through a parquet spool so an unaggregated full-scan ship never
-  materializes on the driver.
+  reference's RecordBatchStream contract, src/stream.rs:110-131): a
+  result under Spark's local-relation threshold comes back as an Arrow
+  LocalRelation, and past it the stream spills to a parquet spool, so
+  an unaggregated full-scan ship never materializes on the driver.
 - **J8 remote join pushdown** (``tests/e2e.rs`` federation join
   suites): a join whose sides are all remote ships as part of that
   subtree — the remote engine joins locally to ITS data.
@@ -447,17 +448,27 @@ class RemoteEngine:
     def execute_stream(self, sql: str, batch_rows: int = 65536):
         """Run ``sql`` on a pooled cursor and yield pyarrow
         RecordBatches incrementally — the reference's
-        ``RecordBatchStream`` hand-back (src/stream.rs:110-131). At no
-        point does more than one batch live in driver memory, which is
-        what makes an unaggregated shippable SELECT safe at 100 TB;
-        the direct :meth:`execute` path stays reserved for
-        output-reducing statements. The cursor returns to the pool when
-        the generator is exhausted or closed."""
+        ``RecordBatchStream`` hand-back (src/stream.rs:110-131). The
+        stream itself holds one batch at a time; the engine buffers it
+        and spills to a parquet spool past Spark's local-relation
+        threshold, which is what makes an unaggregated
+        shippable SELECT safe at 100 TB. The direct :meth:`execute`
+        path stays reserved for output-reducing statements. A result
+        with no rows yields one zero-row batch carrying the reader's
+        schema, so the consumer never runs the statement again to learn
+        it. The cursor returns to the pool when the generator is
+        exhausted or closed."""
+        import pyarrow as pa
+
         cur = self._pool.get()
         try:
             reader = cur.execute(sql).fetch_record_batch(batch_rows)
+            empty = True
             for batch in reader:
+                empty = False
                 yield batch
+            if empty:
+                yield pa.RecordBatch.from_pylist([], schema=reader.schema)
         finally:
             self._pool.put(cur)
 

@@ -35,11 +35,37 @@ def fed(spark):
     return eng, remote
 
 
-def test_streamed_ship_with_all_null_column(fed, spark):
+@pytest.fixture(params=["fits", "spills"])
+def hand_back(request, spark):
+    """Both branches of the streamed hand-back: the default threshold
+    (the result comes back as an Arrow LocalRelation) and a 1-byte
+    ``localRelationThreshold`` (the first batch already crosses it, so
+    the stream spills to the parquet spool)."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    prev = spark.conf.get(key)
+    if request.param == "spills":
+        spark.conf.set(key, "1")
+    try:
+        yield request.param
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _assert_hand_back(df, remote, branch):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scan = "LocalTableScan" if branch == "fits" else "FileScan parquet"
+    assert scan in plan, plan
+    assert remote._pool.qsize() == remote.pool_size     # every cursor back
+
+
+def test_streamed_ship_with_all_null_column(fed, spark, hand_back):
     """A shipped non-reducing result whose column is ALL NULL must
-    survive the parquet spool round trip (an all-null Arrow column can
-    carry the null type, which parquet cannot store untyped) with the
-    local schema and values intact."""
+    survive either hand-back — the Arrow LocalRelation and the parquet
+    spool round trip (an all-null Arrow column can carry the null type,
+    which parquet cannot store untyped) — with the schema and values
+    intact."""
+    from pyspark.sql import types as T
+
     eng, remote = fed
     remote.create_table("nullcol_t", "k BIGINT, v DOUBLE, s VARCHAR")
     remote.execute_insert(
@@ -49,17 +75,25 @@ def test_streamed_ship_with_all_null_column(fed, spark):
         q = "SELECT k, v, s FROM clickhouse.remote.nullcol_t"
         df = eng.sql(q)
         assert eng.last_remote_sql is not None          # shipped
+        _assert_hand_back(df, remote, hand_back)
+        assert df.schema == T.StructType([
+            T.StructField("k", T.LongType()),
+            T.StructField("v", T.DoubleType()),
+            T.StructField("s", T.StringType())])
         rows = sorted((r.k, r.v, r.s) for r in df.collect())
         assert rows == [(1, None, None), (2, None, None), (3, None, None)]
     finally:
         remote.drop_table("nullcol_t")
 
 
-def test_streamed_ship_spans_many_batches_exact_rows(fed, spark):
-    """A shipped result larger than one RecordBatch (the spool streams
-    64k-row batches) must hand back EXACTLY the remote row count — no
-    dropped or duplicated batch at any boundary, including the final
-    partial batch."""
+def test_streamed_ship_spans_many_batches_exact_rows(fed, spark, hand_back):
+    """A shipped result larger than one RecordBatch (the stream yields
+    64k-row batches) must hand back EXACTLY the remote row count on
+    either branch — no dropped or duplicated batch at any boundary,
+    including the final partial batch, and none lost where the spill
+    branch switches from its buffer to the rest of the stream."""
+    from pyspark.sql import types as T
+
     eng, remote = fed
     n = 150_000          # 2 full batches + 1 partial at 65536
     remote.create_table("big_t", "k BIGINT")
@@ -68,6 +102,8 @@ def test_streamed_ship_spans_many_batches_exact_rows(fed, spark):
     try:
         df = eng.sql("SELECT k FROM clickhouse.remote.big_t")
         assert eng.last_remote_sql is not None
+        _assert_hand_back(df, remote, hand_back)
+        assert df.schema == T.StructType([T.StructField("k", T.LongType())])
         assert df.count() == n
         agg = df.agg({"k": "sum"}).first()[0]
         assert agg == n * (n - 1) // 2                   # exact content

@@ -10,7 +10,10 @@ over-subscription), src/dialect.rs (unparser)."""
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import threading
+import uuid
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -1034,16 +1037,106 @@ def test_decimal_involvement_is_statement_level(fed, spark):
 
 
 def test_empty_streamed_ship_keeps_schema(fed, spark):
-    """A shippable non-reducing statement with ZERO result rows takes
-    the spool's empty-fallback branch — it must still ship, return an
-    empty DataFrame, and carry the exact local schema."""
-    eng, _ = fed
+    """A shippable non-reducing statement with ZERO result rows must
+    still ship, return an empty DataFrame, and carry the exact local
+    schema — taken from the stream's one zero-row batch, so the remote
+    runs the statement exactly once."""
+    eng, remote = fed
+    calls = {"execute": 0, "stream": 0}
+    orig_exec, orig_stream = remote.execute, remote.execute_stream
+
+    def spy_exec(sql, timeout=None):
+        calls["execute"] += 1
+        return orig_exec(sql, timeout)
+
+    def spy_stream(sql, batch_rows=65536):
+        calls["stream"] += 1
+        return orig_stream(sql, batch_rows=batch_rows)
+
     q = ("SELECT o_orderkey, o_orderstatus FROM clickhouse.remote.orders "
          "WHERE o_orderkey < 0")
-    df = eng.sql(q)
+    remote.execute, remote.execute_stream = spy_exec, spy_stream
+    try:
+        df = eng.sql(q)
+    finally:
+        remote.execute, remote.execute_stream = orig_exec, orig_stream
     assert eng.last_remote_sql is not None
+    assert calls == {"execute": 0, "stream": 1}
     assert df.count() == 0
     assert df.schema == spark.sql(q.replace("clickhouse.remote.", "")).schema
+
+
+@contextlib.contextmanager
+def _local_insert(eng, spark):
+    name = f"ps_{uuid.uuid4().hex[:10]}"
+    spark.sql(f"CREATE TABLE {name} (k BIGINT) USING parquet")
+    try:
+        yield eng.sql(f"INSERT INTO {name} SELECT 1")
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+@contextlib.contextmanager
+def _remote_insert(eng, spark, source, plane):
+    name = f"ps_{uuid.uuid4().hex[:10]}"
+    eng._remote.create_table(name, "k BIGINT")
+    try:
+        df = eng.sql(f"INSERT INTO clickhouse.remote.{name} SELECT {source} "
+                     "FROM clickhouse.remote.orders WHERE o_orderkey < 10")
+        assert eng.last_remote_insert == plane
+        yield df
+    finally:
+        eng._remote.drop_table(name)
+
+
+@contextlib.contextmanager
+def _remote_create(eng, spark):
+    name = f"ps_{uuid.uuid4().hex[:10]}"
+    try:
+        yield eng.sql(f"CREATE TABLE clickhouse.remote.{name} (k BIGINT)")
+    finally:
+        eng._remote.drop_table(name, if_exists=True)
+
+
+@contextlib.contextmanager
+def _show_create_mv(eng, spark):
+    eng.sql("CREATE MATERIALIZED VIEW ps_mv AS SELECT 1 AS one")
+    try:
+        yield eng.sql("SHOW CREATE TABLE ps_mv")
+    finally:
+        eng.sql("DROP MATERIALIZED VIEW ps_mv")
+
+
+@contextlib.contextmanager
+def _streamed_ship(eng, spark):
+    q = ("SELECT o_orderkey FROM clickhouse.remote.orders "
+         "WHERE o_orderkey < 100")
+    assert eng.remote_decision(q)["mode"] == "streamed-spool"
+    df = eng.sql(q)
+    assert eng.last_remote_sql is not None
+    yield df
+
+
+@pytest.mark.parametrize("frame", [
+    _local_insert,
+    functools.partial(_remote_insert, source="o_orderkey", plane="whole"),
+    functools.partial(_remote_insert, plane="arrow-stream",
+                      source="CAST(log(o_orderkey + 1) AS BIGINT)"),
+    lambda eng, spark: contextlib.nullcontext(eng.sql("EXISTS TABLE orders")),
+    _remote_create,
+    _show_create_mv,
+    _streamed_ship,
+], ids=["local_insert", "remote_insert_whole", "remote_insert_spool",
+        "exists", "remote_create", "show_create_mv", "streamed_ship"])
+def test_engine_made_frames_plan_local_table_scan(fed, spark, frame):
+    """Result frames the engine builds itself (INSERT counts, client
+    probes, DDL results, a streamed ship that fits) come from Arrow, so
+    Spark plans a LocalTableScan — never a pickled Python RDD
+    (``Scan ExistingRDD``), whose collect starts Python workers."""
+    eng, _ = fed
+    with frame(eng, spark) as df:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
 # -- r11: streamed federated WRITE path (verdict task 1) ---------------
