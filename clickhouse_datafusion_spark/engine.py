@@ -248,22 +248,11 @@ class ClickHouseSparkEngine:
         statement must stay byte-identical to what the executing gate
         sees (r11, advice: a non-idempotent rewrite pass must not make
         the dry-run verdict diverge from the executed decision)."""
-        from clickhouse_datafusion_spark.sources.remote_engine import (
-            _SQL_STRING_RE,
-            is_output_reducing,
-        )
-
         reasons: list = []
         stmt = query if pre_rewritten else self.rewrite(query)
         shipped, _ = self._remote_gate(stmt, reasons)
-        mode = None
-        if shipped is not None:
-            mode = ("direct-arrow"
-                    if is_output_reducing(_SQL_STRING_RE.sub("''", shipped))
-                    else "streamed-spool")
         return {"ships": shipped is not None,
                 "remote_sql": shipped,
-                "mode": mode,
                 "reason": "; ".join(reasons) or None}
 
     def _explain_with_federation(self, mode: str, inner: str):
@@ -295,41 +284,29 @@ class ClickHouseSparkEngine:
         ``last_remote_error`` (so an outage is distinguishable from a
         dialect-gate refusal, which records ``last_remote_refusal``).
 
-        Scale contract (r10): output-REDUCING statements (GROUP BY /
-        non-windowed aggregate / LIMIT) hand back one Arrow table
-        directly — that is what federation exists to ship. Everything
-        else STREAMS batch-by-batch (``_spool_remote_stream``): a
-        result that fits comes back as an Arrow LocalRelation, and the
-        stream spills to a parquet spool past Spark's local-relation
-        threshold, so an unaggregated
-        ``SELECT * FROM remote.lineitem`` never holds more than the
-        threshold in driver memory — the reference's RecordBatchStream
-        hand-back (src/stream.rs:110-131). Bare table names resolve
-        LOCAL-first (nearest scope): a statement whose bare ref is
-        shadowed by an existing local table/view stays local."""
-        from clickhouse_datafusion_spark.sources.remote_engine import (
-            is_output_reducing)
-
+        Scale contract: every shipped read STREAMS batch-by-batch
+        (``_spool_remote_stream``, the reference's RecordBatchStream
+        hand-back, src/stream.rs:110-131). A result that fits under
+        Spark's local-relation threshold comes back as an Arrow
+        LocalRelation; past it the stream spills to a parquet spool, so
+        no shipped result — an unaggregated
+        ``SELECT * FROM remote.lineitem`` or a high-cardinality GROUP BY
+        alike — holds more than the threshold in driver memory. Bare
+        table names resolve LOCAL-first (nearest scope): a statement
+        whose bare ref is shadowed by an existing local table/view
+        stays local."""
         reasons: list = []
         shipped, local_schema = self._remote_gate(sql, reasons)
         if shipped is None:
             self.last_remote_refusal = "; ".join(reasons) or None
             return None
-        from clickhouse_datafusion_spark.sources.remote_engine import (
-            _SQL_STRING_RE)
-        reduced = is_output_reducing(_SQL_STRING_RE.sub("''", shipped))
         try:
-            if reduced:
-                df = self._arrow_to_df(self._remote.execute(shipped),
-                                       local_schema)
-            else:
-                df = self._spool_remote_stream(shipped, local_schema)
+            df = self._spool_remote_stream(shipped, local_schema)
         except Exception as e:
             self.last_remote_error = e
             return None
         if local_schema is None or df.schema != local_schema:
-            df = self._align_remote_schema(df, local_schema,
-                                           rebuild_ok=reduced)
+            df = self._align_remote_schema(df, local_schema)
         self.last_remote_sql = shipped
         return df
 
@@ -392,8 +369,7 @@ class ClickHouseSparkEngine:
             else m.group(0),
             stmt)
 
-    def _align_remote_schema(self, df, local_schema,
-                             rebuild_ok: bool = False):
+    def _align_remote_schema(self, df, local_schema):
         """Align a remote hand-back to the locally-analyzed schema so
         ship-vs-local is schema-identical BY CONSTRUCTION — the
         reference enforces its logical schema on returned RecordBatches
@@ -414,18 +390,11 @@ class ClickHouseSparkEngine:
                 out = out.select([
                     F.col(sql_ident(f.name)).cast(f.dataType).alias(f.name)
                     for f in local_schema.fields])
-            if rebuild_ok and out.schema != local_schema:
-                # the residual delta is nullability (count(1) is
-                # non-nullable locally, the Arrow hand-back nullable);
-                # the direct path's result is output-reduced and already
-                # materialized, so a rebuild is a driver-local no-op
-                out = arrow_frame(self.spark, out.toArrow(), local_schema)
         except (AnalysisException, ValueError, TypeError, KeyError) as e:
-            # narrow on purpose (r12 — the _arrow_to_df convention
-            # applied to the direct hand-back path): only the known
-            # cast/rebuild failure classes keep the renamed-but-uncast
-            # frame, and the fall-through is OBSERVABLE, not silent;
-            # anything else raises
+            # narrow on purpose (r12 — the _arrow_to_df convention):
+            # only the known cast failure classes keep the renamed-but-
+            # uncast frame, and the fall-through is OBSERVABLE, not
+            # silent; anything else raises
             self.last_remote_align_error = e
         return out
 
@@ -445,16 +414,18 @@ class ClickHouseSparkEngine:
                 and self.spark.catalog.tableExists(r)}
 
     def _spool_remote_stream(self, shipped: str, local_schema) -> DataFrame:
-        """Hand back a shippable-but-not-reducing remote result from its
-        RecordBatch stream. Batches buffer on the driver up to Spark's
+        """Hand back a shipped remote result from its RecordBatch
+        stream. Batches buffer on the driver up to Spark's
         own ``spark.sql.execution.arrow.localRelationThreshold``: a
         stream that ends under it comes back through
         :meth:`_arrow_to_df` (one Arrow-side cast to the local analyzed
         schema, a LocalRelation — no spool file, no schema-inference
         job). Past the threshold it spills to a parquet spool — the
         buffered batches, then the rest one at a time — and Spark scans
-        the spool, so driver memory stays bounded by the threshold."""
+        the spool, so driver memory stays bounded by the threshold. A
+        stream that fails mid-spill takes its partial spool with it."""
         import os
+        import shutil
         import uuid
 
         import pyarrow as pa
@@ -475,16 +446,21 @@ class ClickHouseSparkEngine:
                                          local_schema)
             path = os.path.join(self._remote_spool_dir, uuid.uuid4().hex)
             os.makedirs(path, exist_ok=True)
-            with pq.ParquetWriter(os.path.join(path, "part-00000.parquet"),
-                                  buffered[0].schema) as writer:
-                for batch in buffered:
-                    writer.write_batch(batch)
-                del buffered        # drain the rest one batch at a time
-                for batch in stream:
-                    writer.write_batch(batch)
+            try:
+                with pq.ParquetWriter(
+                        os.path.join(path, "part-00000.parquet"),
+                        buffered[0].schema) as writer:
+                    for batch in buffered:
+                        writer.write_batch(batch)
+                    del buffered    # drain the rest one batch at a time
+                    for batch in stream:
+                        writer.write_batch(batch)
+                return self.spark.read.parquet(path)
+            except BaseException:
+                shutil.rmtree(path, ignore_errors=True)
+                raise
         finally:
             stream.close()
-        return self.spark.read.parquet(path)
 
     # write plane -> its last_remote_insert label
     _APPEND_LABELS = {"spool": "arrow-stream", "direct": "direct-arrow",

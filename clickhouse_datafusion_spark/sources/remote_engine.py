@@ -6,15 +6,15 @@ DuckDB playing the remote ClickHouse server:
   analyzer shipping the largest all-ClickHouse subtree): when every
   table a SELECT references lives in the attached remote engine and
   the statement unparses to the remote dialect, the WHOLE statement
-  executes remotely. Output-REDUCING results (GROUP BY / aggregate /
-  LIMIT) hand back as one Arrow table — the federation move that
-  matters at 100 TB, where shipping a 1000-row aggregate beats
-  scanning the table into the local engine; everything else STREAMS
-  batch-by-batch (:meth:`RemoteEngine.execute_stream`, the
-  reference's RecordBatchStream contract, src/stream.rs:110-131): a
-  result under Spark's local-relation threshold comes back as an Arrow
+  executes remotely — the federation move that matters at 100 TB,
+  where shipping a 1000-row aggregate beats scanning the table into
+  the local engine. Every shipped result STREAMS batch-by-batch
+  (:meth:`RemoteEngine.execute_stream`, the reference's
+  RecordBatchStream contract, src/stream.rs:110-131): a result under
+  Spark's local-relation threshold comes back as an Arrow
   LocalRelation, and past it the stream spills to a parquet spool, so
-  an unaggregated full-scan ship never materializes on the driver.
+  no shipped result — a full scan or a high-cardinality GROUP BY —
+  materializes whole on the driver.
 - **J8 remote join pushdown** (``tests/e2e.rs`` federation join
   suites): a join whose sides are all remote ships as part of that
   subtree — the remote engine joins locally to ITS data.
@@ -451,9 +451,8 @@ class RemoteEngine:
         ``RecordBatchStream`` hand-back (src/stream.rs:110-131). The
         stream itself holds one batch at a time; the engine buffers it
         and spills to a parquet spool past Spark's local-relation
-        threshold, which is what makes an unaggregated
-        shippable SELECT safe at 100 TB. The direct :meth:`execute`
-        path stays reserved for output-reducing statements. A result
+        threshold, which is what makes any shipped SELECT safe at
+        100 TB; every shipped read comes through here. A result
         with no rows yields one zero-row batch carrying the reader's
         schema, so the consumer never runs the statement again to learn
         it. The cursor returns to the pool when the generator is
@@ -1225,35 +1224,6 @@ def sub_outside_literals(pattern: str, repl, sql: str) -> str:
     for lit, seg in zip(lits, parts[1:]):
         out += lit + seg
     return out
-
-
-_AGG_CALL_RE = re.compile(
-    r"(?i)\b(count|sum|min|max|avg)\s*\(")
-_LIMIT_RE = re.compile(r"(?i)\blimit\s+\d+")
-_GROUP_BY_RE = re.compile(r"(?i)\bgroup\s+by\b")
-
-
-def is_output_reducing(scan: str) -> bool:
-    """True when the statement provably returns (far) fewer rows than it
-    reads: a GROUP BY, a LIMIT, or at least one NON-windowed aggregate
-    call. This is the ship-size gate for the direct Arrow hand-back —
-    anything else streams (the reference's RecordBatchStream contract,
-    src/stream.rs:110-131) so an unbounded remote result never
-    materializes on the driver. ``scan`` is the literal-stripped text."""
-    if _GROUP_BY_RE.search(scan) or _LIMIT_RE.search(scan):
-        return True
-    for m in _AGG_CALL_RE.finditer(scan):
-        depth, i = 1, m.end()
-        while i < len(scan) and depth:
-            if scan[i] == "(":
-                depth += 1
-            elif scan[i] == ")":
-                depth -= 1
-            i += 1
-        if not re.match(r"(?i)\s*(?:filter\s*\([^()]*\)\s*)?over\b",
-                        scan[i:]):
-            return True                       # a plain (reducing) aggregate
-    return False
 
 
 def unparse_for_remote(sql: str, catalog: str, db: str,

@@ -311,7 +311,7 @@ def test_unparse_gate_transcript(spark):
         d = eng.remote_decision(q)
         lines.append(f"-- in : {q}")
         if d["ships"]:
-            lines.append(f"-- out ({d['mode']}):")
+            lines.append("-- out:")
             lines.append(d["remote_sql"])
         else:
             lines.append(f"-- stays local: {d['reason']}")

@@ -5,9 +5,12 @@ partitionable index.
 
 from __future__ import annotations
 
+import threading
 import uuid
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from clickhouse_datafusion_spark.plans.explain import executed_plan
@@ -464,3 +467,89 @@ def test_register_bucketed_reattaches_exchange_free_layout(spark, views):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
         for t in (a, b):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+# ---------------------------------------------------------------------
+# register_bucketed under concurrent re-attach
+# ---------------------------------------------------------------------
+
+def test_register_bucketed_concurrent_reattach(spark, tmp_path):
+    """Two sessions racing to re-attach the same bucketed layout under
+    one table name: exactly one CREATE wins, every loser gets a raised
+    error (never a silent no-op), and the winner's table answers
+    queries — the deployment round trip is safe to retry."""
+    from clickhouse_datafusion_spark.operators.layout import (
+        register_bucketed, write_bucketed)
+
+    df = spark.range(1000).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
+    spark.sql("DROP TABLE IF EXISTS race_src")
+    write_bucketed(df, "race_src", ["k"], 4)
+    path = (spark.sql("DESCRIBE TABLE EXTENDED race_src")
+            .filter("col_name = 'Location'").first()[1])
+    results: list = [None] * 4
+
+    def attempt(i):
+        try:
+            register_bucketed(spark, "race_bkt", path, ["k"], 4)
+            results[i] = "ok"
+        except Exception as e:
+            results[i] = type(e).__name__
+
+    ts = [threading.Thread(target=attempt, args=(i,)) for i in range(4)]
+    for t in ts:
+        t.start()
+    for t in ts:
+        t.join()
+    try:
+        assert results.count("ok") >= 1          # someone won
+        # losers raised (ValueError from the exists-check or the
+        # catalog's AnalysisException from the CREATE race) — never a
+        # silent success beyond one
+        assert all(r is not None for r in results)
+        assert spark.sql("SELECT count(*) FROM race_bkt").first()[0] == 1000
+    finally:
+        spark.sql("DROP TABLE IF EXISTS race_bkt")
+        spark.sql("DROP TABLE IF EXISTS race_src")
+
+
+# ---------------------------------------------------------------------
+# compaction idempotence under adversarial small-file distributions
+# ---------------------------------------------------------------------
+
+@given(parts=st.integers(min_value=1, max_value=24),
+       rows=st.integers(min_value=0, max_value=2000))
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_compaction_idempotent_and_monotone(spark, tmp_path_factory,
+                                            parts, rows):
+    """compact_snapshot under generated small-file layouts: (a) data is
+    row-identical across versions, (b) the file count never grows
+    (compaction only shrinks), (c) compacting an already-compacted
+    snapshot is idempotent on layout — a second pass cannot
+    re-fragment."""
+    import os
+
+    from clickhouse_datafusion_spark.operators.layout import (
+        compact_snapshot, list_snapshots, read_snapshot, write_snapshot)
+
+    path = str(tmp_path_factory.mktemp("compact"))
+
+    def n_files(v):
+        vdir = os.path.join(path, f"v={v}")
+        return sum(1 for f in os.listdir(vdir) if f.endswith(".parquet"))
+
+    df = spark.range(rows).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("doc_"), F.col("id")).alias("text"))
+    v1 = write_snapshot(df.repartition(parts), path)
+    v2 = compact_snapshot(spark, path, target_bytes=1 << 30)
+    v3 = compact_snapshot(spark, path, target_bytes=1 << 30)
+    assert list_snapshots(path) == [v1, v2, v3]
+    base = sorted(tuple(r) for r in read_snapshot(spark, path, v1).collect())
+    for v in (v2, v3):
+        assert sorted(tuple(r)
+                      for r in read_snapshot(spark, path, v).collect()) \
+            == base
+    assert n_files(v2) <= max(1, n_files(v1))
+    assert n_files(v3) == n_files(v2)          # idempotent on layout
