@@ -132,11 +132,18 @@ class ClickHouseSparkEngine:
         dry-run diagnostics surface (:meth:`remote_decision`, EXPLAIN).
         Returns ``(shipped_sql | None, local_schema | None)``; on
         refusal the WHY is appended to ``reasons`` — the analog of the
-        reference analyzer's not-pushed diagnostics."""
-        import re as _re
+        reference analyzer's not-pushed diagnostics.
 
-        from clickhouse_datafusion_spark.sources.remote_engine import (
-            unparse_for_remote)
+        Past the lexical refusals (``remote_engine.lexical_refusal``)
+        every decision reads Spark's parsed plan, parsed ONCE per
+        statement: a statement the local surface cannot parse (or whose
+        plan cannot be serialized) stays local, where the fallback
+        raises the surface's own error; a command (any ``*Statement`` /
+        ``*Command`` node) stays local before anything is analyzed, and
+        an INSERT into the remote db that reached here (a CTE-headed or
+        multi-insert form the INSERT front door does not route) raises
+        ValueError before any row lands."""
+        from clickhouse_datafusion_spark.sources import remote_engine as rx
 
         def refuse(why: str):
             if reasons is not None:
@@ -145,6 +152,26 @@ class ClickHouseSparkEngine:
 
         if self._remote is None:
             return refuse("no remote engine attached")
+        why = rx.lexical_refusal(sql)
+        if why is not None:
+            return refuse(why)
+        try:
+            nodes = rx.parse_plan(self.spark, sql)
+        except Exception:
+            return refuse("statement does not parse on the local surface "
+                          "(remote-only syntax)")
+        cmd = next((n for n in nodes
+                    if n["cls"].endswith(("Statement", "Command"))), None)
+        if cmd is not None:
+            target = (rx.node_name(cmd["table"])
+                      if cmd["cls"] == "InsertIntoStatement" else "")
+            if self._remote_bare(target) is not None:
+                raise ValueError(
+                    f"an INSERT into remote table {target} must start with "
+                    f"INSERT: write it as INSERT INTO {target} WITH … "
+                    "SELECT …")
+            return refuse(f"command, not a query: {cmd['cls']}")
+        refs = rx.plan_refs(nodes)
         # ALL time extraction is session-timezone-dependent in Spark
         # (timestamps are instants rendered in the session tz — even
         # year() flips on a New Year's Eve instant) but tz-naive in the
@@ -152,15 +179,10 @@ class ClickHouseSparkEngine:
         # otherwise those statements stay local (errs toward not
         # shipping, like every other gate). r10d widened this from the
         # sub-day set: year/month/day are equally tz-dependent.
-        from clickhouse_datafusion_spark.sources.remote_engine import (
-            _SQL_STRING_RE, table_refs)
-
-        scan = _SQL_STRING_RE.sub("''", sql)
-        refs = table_refs(scan)
         tz = self.spark.conf.get("spark.sql.session.timeZone", "UTC")
         if tz not in ("UTC", "Etc/UTC", "GMT", "+00:00", "Z"):
-            if _re.search(r"(?i)\b(year|month|day|hour|minute"
-                          r"|second|date_trunc)\s*\(", sql):
+            if any(n["cls"] == "UnresolvedFunction"
+                   and rx.node_name(n) in _TIME_FUNCS for n in nodes):
                 return refuse(f"time extraction under non-UTC session "
                               f"timezone ({tz}) is tz-dependent locally "
                               "but tz-naive remotely")
@@ -180,12 +202,11 @@ class ClickHouseSparkEngine:
                 return refuse(
                     f"cannot enumerate remote timestamp columns under "
                     f"non-UTC session timezone ({tz}): {e!r}")
-            # select-list star only (count(*) is not a column flow):
-            star = _re.search(r"(?i)(?:\bselect\s+(?:distinct\s+)?|,\s*)"
-                              r"(?:[\w.]+\.)?\*", scan)
-            if ts_cols and (star or any(
-                    _re.search(rf"(?i)\b{_re.escape(c)}\b", scan)
-                    for c in ts_cols)):
+            if ts_cols and any(
+                    n["cls"] == "UnresolvedStar"
+                    or (n["cls"] == "UnresolvedAttribute"
+                        and rx.node_name(n).rsplit(".", 1)[-1] in ts_cols)
+                    for n in nodes):
                 return refuse(
                     f"remote timestamp column under non-UTC session "
                     f"timezone ({tz}): rendering is tz-dependent "
@@ -197,39 +218,24 @@ class ClickHouseSparkEngine:
             dec_cols = self._remote.decimal_columns(tables=refs)
         except Exception:  # pragma: no cover - remote without the API
             dec_cols = frozenset()
-        shipped = unparse_for_remote(
-            sql, next(iter(self._catalog_names)), self._remote_db or "remote",
-            self._remote.tables(), local_tables=self._remote_shadows(sql),
+        shipped = rx.unparse_for_remote(
+            sql, nodes, next(iter(self._catalog_names)),
+            self._remote_db or "remote", self._remote.tables(),
+            local_tables=self._remote_shadows(refs),
             decimal_cols=dec_cols, reasons=reasons)
         if shipped is None:
             return None, None                   # reason already recorded
         # Schema fidelity (r10b): the LOCAL analyzed schema is the engine
         # surface's contract; remote result dtypes legitimately differ
         # (sum(int) -> HUGEINT, date_trunc(_, DATE) -> DATE, year/length
-        # -> BIGINT, greatest -> DOUBLE — probed,
-        # tools/probe_dialect_divergence_r10b.py). Analysis is lazy and
-        # driver-only. A local ParseException means the statement is not
-        # valid on the engine surface at all — shipping would execute
-        # what the surface rejects (e.g. DuckDB-only `2 ** 3`), so stay
-        # local and let the fallback raise the user-visible error. An
-        # AnalysisException (no local twins registered) ships uncast,
-        # best-effort.
-        local_form = self._local_form(sql)
-        try:
-            # parse-only (no table resolution needed, no JVM error log):
-            # the local surface must at least PARSE anything that ships
-            self.spark._jsparkSession.sessionState().sqlParser() \
-                .parsePlan(local_form)
-        except Exception as e:
-            if ("ParseException" in type(e).__name__
-                    or "PARSE_SYNTAX_ERROR" in str(e)
-                    or "ParseException" in str(e)):
-                return refuse("statement does not parse on the local "
-                              "surface (remote-only syntax)")
+        # -> BIGINT, greatest -> DOUBLE — probed r10b,
+        # tools/audit_remote_allowlist.py). Analysis is lazy and
+        # driver-only; with no local twins registered the hand-back
+        # ships uncast, best-effort.
         local_schema = None
-        if self._local_twins_resolve(local_form):
+        if self._local_twins_resolve(refs):
             try:
-                local_schema = self.spark.sql(local_form).schema
+                local_schema = self.spark.sql(self._local_form(sql)).schema
             except Exception as e:
                 # no local analysis = no alignment hint: the hand-back
                 # keeps the remote's own names/types. Recorded, not
@@ -250,7 +256,11 @@ class ClickHouseSparkEngine:
         the dry-run verdict diverge from the executed decision)."""
         reasons: list = []
         stmt = query if pre_rewritten else self.rewrite(query)
-        shipped, _ = self._remote_gate(stmt, reasons)
+        try:
+            shipped, _ = self._remote_gate(stmt, reasons)
+        except ValueError as e:     # a statement sql() would reject
+            shipped = None
+            reasons.append(str(e))
         return {"ships": shipped is not None,
                 "remote_sql": shipped,
                 "reason": "; ".join(reasons) or None}
@@ -334,24 +344,15 @@ class ClickHouseSparkEngine:
                 self.last_remote_align_error = e
         return arrow_frame(self.spark, tbl)
 
-    def _local_twins_resolve(self, local_form: str) -> bool:
-        """True when every (non-CTE) table ref of the local form exists
-        in the local catalog — the precondition for the driver-only
-        schema analysis (avoids a spurious JVM TABLE_OR_VIEW_NOT_FOUND
-        error log when no twin views were registered)."""
-        import re as _re
-
-        from clickhouse_datafusion_spark.sources.remote_engine import (
-            table_refs)
-
-        from clickhouse_datafusion_spark.sources.remote_engine import (
-            _SQL_STRING_RE)
-        scan = _SQL_STRING_RE.sub("''", local_form)
-        ctes = {m.group(1).lower() for m in _re.finditer(
-            r"(?i)\b(?:with|,)\s*([A-Za-z_]\w*)\s+as\s*\(", scan)}
+    def _local_twins_resolve(self, refs) -> bool:
+        """True when every table ref (:func:`remote_engine.plan_refs`)
+        exists in the local catalog under its local-form name — the
+        precondition for the driver-only schema analysis (avoids a
+        spurious JVM TABLE_OR_VIEW_NOT_FOUND error log when no twin
+        views were registered)."""
         try:
-            return all(self.spark.catalog.tableExists(r)
-                       for r in table_refs(scan) - ctes)
+            return all(self.spark.catalog.tableExists(self._local_form(r))
+                       for r in refs)
         except Exception:  # pragma: no cover - defensive
             return False
 
@@ -398,18 +399,12 @@ class ClickHouseSparkEngine:
             self.last_remote_align_error = e
         return out
 
-    def _remote_shadows(self, sql: str) -> set[str]:
-        """Bare table refs of ``sql`` that exist BOTH remotely and as a
-        local table/view — those resolve local (nearest scope) and keep
-        the statement from shipping."""
-        from clickhouse_datafusion_spark.sources.remote_engine import (
-            table_refs)
-
+    def _remote_shadows(self, refs) -> set[str]:
+        """Bare table refs that exist BOTH remotely and as a local
+        table/view — those resolve local (nearest scope) and keep the
+        statement from shipping."""
         remote_tables = self._remote.tables()
-        from clickhouse_datafusion_spark.sources.remote_engine import (
-            _SQL_STRING_RE)
-        scan = _SQL_STRING_RE.sub("''", sql)
-        return {r for r in table_refs(scan)
+        return {r for r in refs
                 if "." not in r and r in remote_tables
                 and self.spark.catalog.tableExists(r)}
 
@@ -1681,6 +1676,10 @@ class ClickHouseSparkEngine:
 
         return sink.run_insert_sql(self.spark, rewritten)
 
+
+# Spark functions whose value depends on the session timezone
+_TIME_FUNCS = frozenset(
+    ("year", "month", "day", "hour", "minute", "second", "date_trunc"))
 
 _SYSTEM_TABLE_RE = re.compile(r"\bsystem\s*\.\s*(tables|databases|one)\b",
                               re.IGNORECASE)

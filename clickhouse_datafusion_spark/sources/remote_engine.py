@@ -24,16 +24,22 @@ DuckDB playing the remote ClickHouse server:
   beyond ``pool_size`` queue instead of erroring — the reference's
   over-subscription contract (``tests/e2e_stress.rs:161-239``).
 - **W6 window semantic validation** (``src/analyzer``'s
-  window-function check before pushdown): window/aggregate functions
-  in the candidate subtree are validated against the remote dialect's
-  supported set; an unsupported name keeps the statement LOCAL
-  rather than failing remotely.
+  window-function check before pushdown): the function under every
+  ``WindowExpression`` of the statement's parsed plan is validated
+  against the remote dialect's supported set; an unsupported name keeps
+  the statement LOCAL rather than failing remotely.
 - **F6 unparser dialect** (``src/dialect.rs``): the engine-side
   translation of a shippable statement into the remote engine's SQL.
-  The surfaces share ANSI SQL, so the dialect work is the seam
-  itself: catalog-qualifier stripping, construct validation (local
-  rewrites like ``clickhouse(...)`` wrappers, LIMIT BY, SAMPLE,
-  system tables must NOT ship), and the function allowlist.
+  Like the reference's analyzer, which walks DataFusion's LogicalPlan
+  (``src/analyzer/function_pushdown.rs``), the gate decides from the
+  plan Spark's parser builds (:func:`parse_plan`, one ``toJSON`` call):
+  table references, a deny-by-default node-class allowlist
+  (:data:`SHIPPABLE_NODES` — local rewrites like ``clickhouse(...)``
+  wrappers, LIMIT BY, SAMPLE and system tables never reach it as
+  shippable nodes), the function allowlist and its per-call guards.
+  Only the few lexical divergences (:func:`lexical_refusal`) and the
+  translation itself — qualifier stripping and explicit null ordering —
+  read the text.
 
 The storage substrate is DuckDB instead of a ClickHouse wire protocol
 for the same reason the connector's is parquet
@@ -51,6 +57,7 @@ and belongs in the same `_shippable` seam.
 
 from __future__ import annotations
 
+import json
 import os
 import queue
 import re
@@ -66,21 +73,23 @@ SUPPORTED_WINDOW_FUNCS = {
     "first_value", "last_value", "count", "sum", "min", "max", "avg",
 }
 
-# The unparser's function allowlist (F6): ONLY names proven to share
-# semantics between the local and remote dialects may ship — the
-# reference's unparser refuses expressions it cannot prove translate
+# The unparser's function allowlist (F6), checked against the
+# ``UnresolvedFunction`` nodes of Spark's parsed plan: ONLY names proven
+# to share semantics between the local and remote dialects may ship —
+# the reference's unparser refuses expressions it cannot prove translate
 # (src/dialect.rs), and same-name/different-semantics traps are real
-# (probed r10, both engines, same literal inputs):
+# (probed r10, both engines, same literal inputs; re-checked mechanically
+# by tools/audit_remote_allowlist.py):
 #   LOG        — Spark ln vs DuckDB log10            → never ships
 #   ROUND      — double scale-round: Spark HALF_UP shortest-string
 #                (round(1.015d,2)=1.02) vs DuckDB 1.01 → guarded:
-#                ships ONLY when every round() argument span contains
-#                a decimal cast and no double/float cast (decimal
+#                ships ONLY when each round() argument subtree holds a
+#                decimal Cast and no double/float Cast (decimal
 #                rounding is exact + HALF_UP in both engines)
 #   CONCAT     — NULL arg: Spark → NULL, DuckDB skips → never ships
 #                (concat_ws skips NULLs in BOTH — stays allowed)
 #   SUBSTRING  — start 0: Spark 'ab', DuckDB 'a'     → guarded:
-#                ships only with a positive integer literal start
+#                ships only with a positive integer Literal start
 #   CEIL/FLOOR — same VALUES but Spark returns BIGINT, DuckDB DOUBLE
 #                → silent schema divergence, never ships
 #   TRIM/LTRIM/RTRIM — two-arg forms take OPPOSITE argument order
@@ -89,149 +98,169 @@ SUPPORTED_WINDOW_FUNCS = {
 #                only as the single-argument whitespace form
 #   UPPER/LOWER — Unicode case mapping diverges (upper('straße') =
 #                'STRASSE' vs 'STRAẞE') → never ships
+#   ANY/SOME   — boolean aggregates locally, a parser error remotely
+#                → never ship
 #   AVG        — avg(DECIMAL) accumulates in binary DOUBLE remotely
 #                but exact decimal locally → guarded: ships only when
-#                no argument span can be decimal-typed (cast, literal,
-#                or remote-catalog column type)
-# Non-call divergences guarded in unparse_for_remote (r10b probes):
-#   ^ / **     — XOR locally vs power remotely / remote-only syntax
-#   / and %    — x/0 raises locally (ANSI) but is NULL remotely →
-#                only nonzero literal divisors ship, and the engine
-#                additionally keeps decimal-output division local
-#   backslash  — escape sequence locally, literal remotely
-#   "..."      — string literal locally, IDENTIFIER remotely
+#                no decimal value can flow through the statement (a
+#                decimal Cast or Literal, or an attribute the remote
+#                catalog types DECIMAL)
+# Divergences that are not function names are node classes of the
+# parsed plan, kept out by SHIPPABLE_NODES (r10b probes):
+#   ^          — BitwiseXor: XOR locally vs power remotely
+#   div        — IntegralDivide: a syntax error remotely
+#   / and %    — Divide/Remainder: x/0 raises locally (ANSI) but is
+#                NULL remotely → only a nonzero numeric Literal divisor
+#                ships, and decimal division stays local (as AVG)
+#   CAST(… AS STRING) — a double renders '1.0E10' locally but
+#                '10000000000.0' remotely → a string-typed Cast never
+#                ships (the parsed plan does not know the source type)
+# and a few are lexical (lexical_refusal): backslash, double quote,
+# backquote, SQL comments.
 # Probed-SHARED semantics (r10d, not guarded): GROUP BY / DISTINCT over
 # double keys treat ±0.0 as one group and all NaNs as one group in BOTH
 # engines; the surviving difference is the representative bit pattern
 # (-0.0 vs 0.0), which is IEEE-equal. Float SUM association order is an
 # inherent property of any parallel engine, not a dialect divergence.
-# A statement containing ANY call outside this set stays local.
+# A statement calling ANY function outside this set stays local.
 SUPPORTED_REMOTE_FUNCS = SUPPORTED_WINDOW_FUNCS | {
     # scalar, verified-shared
-    "cast", "coalesce", "nullif", "greatest", "least", "abs",
-    "length",
+    "coalesce", "nullif", "greatest", "least", "abs", "length",
     "concat_ws", "replace",
     "year", "month", "day", "hour", "minute", "second", "date_trunc",
-    # type names inside CAST(... AS T(p,s))
-    "decimal", "numeric", "varchar", "char",
-    # SQL keywords/constructs the call-shaped regex also captures
-    # when a parenthesis follows them ("WHERE (", "OVER (", "ON (", …)
-    "in", "exists", "values", "interval", "filter", "any", "some",
-    "over", "on", "where", "and", "or", "not", "select", "from",
-    "when", "then", "else", "union", "all", "intersect", "except",
-    "by", "having", "distinct", "as", "join", "using", "between",
+    # Spark's parser emits x BETWEEN a AND b as a between() call
+    "between",
 }
 
+# The plan and expression node classes a shipped statement may hold —
+# deny by default: a statement with any other class stays local.
+# Seeded from the classes of every statement that shipped under the
+# earlier lexical gate in the federation tests, the golden unparse
+# corpus, fed2/fed3, examples/10_remote_federation.py, the perfbench
+# front-door workload and tools/deep_federation_sweep.py, plus
+# UnresolvedWith: a named subquery (SubqueryAlias is seeded) carries no
+# value semantics of its own; recursive CTEs stay local.
+SHIPPABLE_NODES = frozenset({
+    # plan operators
+    "Aggregate", "Distinct", "Except", "Filter", "GlobalLimit",
+    "Intersect", "Join", "LocalLimit", "Project", "Sort", "SubqueryAlias",
+    "Union", "UnresolvedHaving", "UnresolvedRelation", "UnresolvedWith",
+    # expressions
+    "Add", "Alias", "And", "CaseWhen", "Cast", "Divide", "EqualTo",
+    "Exists", "GreaterThan", "GreaterThanOrEqual", "InSubquery",
+    "LessThan", "LessThanOrEqual", "Like", "ListQuery", "Literal",
+    "Multiply", "Not", "Or", "Remainder", "ScalarSubquery", "SortOrder",
+    "Subtract", "UnresolvedAlias", "UnresolvedAttribute",
+    "UnresolvedFunction", "UnresolvedOrdinal", "UnresolvedStar",
+    "UnspecifiedFrame$", "WindowExpression", "WindowSpecDefinition",
+})
 
-def _call_spans(scan: str, name: str):
-    """Yield the balanced-paren argument text of every ``name(...)``
-    call in ``scan`` (literal-stripped text). Unbalanced → yield None
-    once, which guards treat as not-provable (stay local)."""
-    for m in re.finditer(rf"(?i)\b{name}\s*\(", scan):
-        depth, i = 1, m.end()
-        while i < len(scan) and depth:
-            if scan[i] == "(":
-                depth += 1
-            elif scan[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            yield None
-            return
-        yield scan[m.end():i - 1]
-
-
-_DEC_CAST_RE = re.compile(r"(?i)\bas\s+(?:decimal|numeric)\b")
-_FP_CAST_RE = re.compile(r"(?i)\bas\s+(?:double|float|real)\b")
-_POS_INT_START_RE = re.compile(r"^[^,]+,\s*[1-9]\d*\s*(?:,|$)")
-
-
-def _round_guard(scan: str) -> bool:
-    """ROUND ships only under the decimal discipline: every call's
-    argument span carries a decimal/numeric cast and no explicit
-    floating cast — decimal scale-rounding is exact and HALF_UP in
-    both engines; double rounding diverges (see allowlist header)."""
-    return all(span is not None and _DEC_CAST_RE.search(span)
-               and not _FP_CAST_RE.search(span)
-               for span in _call_spans(scan, "round"))
+# why a known-divergent class is not listed, for the refusal reason
+_NODE_NOTES = {"BitwiseXor": "^ is XOR locally, power remotely",
+               "IntegralDivide": "div is a syntax error remotely"}
 
 
-def _substr_guard(scan: str) -> bool:
-    """SUBSTRING/SUBSTR ship only with a positive integer literal start
+def parse_plan(spark, sql: str) -> list[dict]:
+    """Every node of Spark's parsed, unresolved plan of ``sql`` in
+    pre-order — plan operators, expressions, subquery plans and CTE
+    bodies alike — each with its short class name (``cls``) and its
+    child subtrees (``kids``). One ``parsePlan(...).toJSON()`` py4j
+    call; raises whatever the parser or the serializer raises."""
+    flat = json.loads(spark._jsparkSession.sessionState().sqlParser()
+                      .parsePlan(sql).toJSON())
+    nodes: list[dict] = []
+
+    def nest(v):
+        # toJSON flattens every tree to a pre-order list in which each
+        # node is followed by its num-children subtrees
+        if isinstance(v, dict):
+            return {k: nest(x) for k, x in v.items()}
+        if not isinstance(v, list):
+            return v
+        if not (v and isinstance(v[0], dict) and "num-children" in v[0]):
+            return [nest(x) for x in v]
+        it = iter(v)
+
+        def take():
+            raw = next(it)
+            node = {"cls": raw["class"].rsplit(".", 1)[-1]}
+            nodes.append(node)
+            node.update((k, nest(x)) for k, x in raw.items())
+            node["kids"] = [take() for _ in range(raw["num-children"])]
+            return node
+        return take()
+
+    nest(flat)
+    return nodes
+
+
+def node_name(node: dict) -> str:
+    """The lowercased dotted name of a relation, attribute or function
+    node (Spark renders name parts as ``[remote, orders]``)."""
+    parts = node.get("multipartIdentifier") or node["nameParts"]
+    return ".".join(parts[1:-1].split(", ")).lower()
+
+
+def plan_refs(nodes: list[dict]) -> set[str]:
+    """The relation names a parsed statement reads, lowercased and as
+    qualified as written, minus the statement's own CTE names."""
+    ctes = {c["_1"].lower() for n in nodes if n["cls"] == "UnresolvedWith"
+            for c in n["cteRelations"]}
+    return {node_name(n) for n in nodes
+            if n["cls"] == "UnresolvedRelation"} - ctes
+
+
+def _subtree(node: dict):
+    yield node
+    for k in node["kids"]:
+        yield from _subtree(k)
+
+
+def _type(node: dict) -> str:
+    """A Cast or Literal node's data type (complex types render as a
+    JSON object, which no check below matches)."""
+    return str(node["dataType"])
+
+
+def _number(node: dict) -> float | None:
+    """The value of a numeric Literal node, else None."""
+    if (node["cls"] == "Literal" and node["value"] is not None
+            and _type(node).startswith(
+                ("integer", "bigint", "smallint", "tinyint", "double",
+                 "float", "decimal"))):
+        return float(node["value"])
+    return None
+
+
+def _round_guard(args) -> bool:
+    """ROUND ships only under the decimal discipline: its argument
+    subtree holds a decimal Cast and no double/float Cast — decimal
+    scale-rounding is exact and HALF_UP in both engines; double rounding
+    diverges (see allowlist header)."""
+    casts = {_type(n) for a in args for n in _subtree(a)
+             if n["cls"] == "Cast"}
+    return (any(t.startswith("decimal") for t in casts)
+            and not casts & {"double", "float"})
+
+
+def _substr_guard(args) -> bool:
+    """SUBSTRING/SUBSTR ship only with a positive integer Literal start
     (start 0 / negative starts diverge between the dialects)."""
-    return all(span is not None and _POS_INT_START_RE.match(span)
-               for name in ("substring", "substr")
-               for span in _call_spans(scan, name))
+    return (len(args) > 1 and args[1]["cls"] == "Literal"
+            and args[1]["dataType"] in ("integer", "bigint")
+            and int(args[1]["value"]) > 0)
 
 
-def _trim_guard(scan: str) -> bool:
+def _trim_guard(args) -> bool:
     """TRIM/LTRIM/RTRIM ship only in the single-argument whitespace
     form: the two-argument forms take OPPOSITE argument order in the
     two dialects (Spark trim(trimStr, src) vs remote trim(src, chars) —
     probed: trim('xxabcxx','x') = '' locally, 'abc' remotely)."""
-    for name in ("trim", "ltrim", "rtrim"):
-        for span in _call_spans(scan, name):
-            if span is None:
-                return False
-            depth = 0
-            for ch in span:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif ch == "," and depth == 0:
-                    return False              # two-arg form: stay local
-    return True
+    return len(args) == 1
 
 
-# Operator-token divergences the call-shaped allowlist cannot see
-# (probed r10b, tools/probe_dialect_divergence_r10b.py):
-#   ^   — bitwise XOR locally, POWER remotely (2 ^ 3 = 1 vs 8.0)
-#   **  — invalid locally, power remotely (the engine-level local
-#         ParseException refusal also covers this; belt and braces)
-_DIVERGENT_OP_RE = re.compile(r"\^|\*\*")
-
-_DIVISOR_LIT_RE = re.compile(r"[/%]\s*(\d+(?:\.\d+)?)")
-
-
-def _div_mod_guard(scan: str) -> bool:
-    """Division/modulo ship only with a NONZERO NUMERIC LITERAL divisor:
-    ``x / 0`` raises DIVIDE_BY_ZERO locally (ANSI) but returns NULL
-    remotely (probed r10b), so any data-dependent divisor is a silent
-    error-vs-value divergence and stays local. ``scan`` is
-    literal-stripped, so ``%`` inside LIKE patterns / date formats and
-    ``/`` inside paths never trip this; a ``/*`` comment opener fails
-    the literal test and conservatively keeps the statement local."""
-    lits = {m.start(): m.group(1) for m in _DIVISOR_LIT_RE.finditer(scan)}
-    for m in re.finditer(r"[/%]", scan):
-        lit = lits.get(m.start())
-        if lit is None or float(lit) == 0.0:
-            return False
-    return True
-
-
-_DEC_LITERAL_RE = re.compile(r"\d+\.\d")
-_DIV_AVG_RE = re.compile(r"(?i)[/%]|\bavg\s*\(")
-
-
-def decimal_involved(scan: str, decimal_cols: frozenset) -> bool:
-    """True when ANY decimal value can flow through the statement: a
-    decimal/numeric cast, a decimal literal (1.00 is DECIMAL in both
-    dialects), or a column name the remote catalog types as DECIMAL —
-    anywhere in the literal-stripped text. Statement-level on purpose:
-    span- or output-schema-level checks are defeated by CTE/alias
-    renames and CAST-to-double wrappers (r10d review), while any data
-    flow from a decimal column must reference its name SOMEWHERE in
-    the statement, so the statement-wide name scan is sound
-    (conservative toward staying local)."""
-    if _DEC_CAST_RE.search(scan) or _DEC_LITERAL_RE.search(scan):
-        return True
-    return any(re.search(rf"(?i)\b{re.escape(c)}\b", scan)
-               for c in decimal_cols)
-
-
-# Functions allowed through the gate only when a per-call syntactic
-# guard proves the divergent argument class is absent.
+# Functions allowed through the gate only when a per-call guard over
+# their argument subtrees proves the divergent argument class absent.
 GUARDED_REMOTE_FUNCS = {
     "round": _round_guard,
     "substring": _substr_guard,
@@ -241,31 +270,33 @@ GUARDED_REMOTE_FUNCS = {
     "rtrim": _trim_guard,
 }
 
-_IDENT_CALL_RE = re.compile(r"(?i)\b([a-z_][a-z_0-9]*)\s*\(")
 _SQL_STRING_RE = re.compile(r"'(?:[^']|'')*'")
 
-# Construct markers that must NOT ship: they are local-engine rewrites
-# (the front door lowers them before Catalyst) or local introspection.
-_LOCAL_ONLY_RE = re.compile(
-    r"(?i)\bclickhouse\s*\(|\bclickhouse_eval\b|\blimit\s+\d+\s+by\b"
-    r"|\bsample\b|\bsystem\s*\.|\binformation_schema\b|\bdictGet"
-    r"|\bprewhere\b|\bwith\s+totals\b|\bformat\s+\w+\s*;?\s*$")
 
-# A FROM/JOIN head captures the whole comma-separated list (implicit
-# joins: ``FROM orders o, customer c``), each item optionally aliased —
-# the r9 blind spot where only the first item was seen. The alias slot
-# must NOT swallow clause keywords (``FROM orders JOIN ...``), so it
-# carries a reserved-word lookahead.
-_KEYWORDS = (
-    "join|inner|left|right|full|cross|outer|natural|semi|anti|lateral"
-    "|on|where|group|order|having|limit|union|intersect|except|using"
-    "|window|qualify|sample|values|tablesample|as")
-_ALIAS = rf"(?:\s+(?:as\s+)?(?!(?:{_KEYWORDS})\b)[A-Za-z_]\w*)?"
-_TABLE_REF_RE = re.compile(
-    rf"(?i)\b(?:from|join)\s+"
-    rf"([A-Za-z_][\w.]*{_ALIAS}(?:\s*,\s*[A-Za-z_][\w.]*{_ALIAS})*)")
+def lexical_refusal(sql: str) -> str | None:
+    """Why ``sql`` must stay local for a reason its parsed plan cannot
+    show, or None (probed r10b, both engines, same input):
 
-_OVER_FN_RE = re.compile(r"(?i)\b([A-Za-z_][A-Za-z_0-9]*)\s*\([^()]*\)\s+over\s*\(")
+    - backslash — Spark interprets escape sequences in string literals
+      ('a\\nb' is a newline; LIKE 'a\\_b' escapes the _), the remote
+      dialect takes them literally;
+    - double quote — a STRING LITERAL locally ("c" = 'c') but an
+      IDENTIFIER remotely ("c" = column c): both valid, different values;
+    - backquote — an identifier locally, a syntax error remotely;
+    - a ``--`` or ``/*`` comment outside string literals — the shipped
+      text is rewritten (qualifier stripping, explicit null ordering) by
+      passes that cannot see comments."""
+    if "\\" in sql:
+        return "backslash: escape sequence locally, literal remotely"
+    if '"' in sql:
+        return 'double quote: string literal locally, identifier remotely'
+    scan = _SQL_STRING_RE.sub("''", sql)
+    if "`" in scan:
+        return "backquote: identifier locally, syntax error remotely"
+    if "--" in scan or "/*" in scan:
+        return ("comment: the shipped-text rewrites cannot see SQL "
+                "comments")
+    return None
 
 
 class RemoteEngine:
@@ -1084,23 +1115,6 @@ def assert_read_only_sql(sql: str) -> None:
             "collide with these names)")
 
 
-def table_refs(sql: str) -> set[str]:
-    """Table references of a SELECT, lowercased, catalog-qualified or
-    bare — including every member of a comma-separated (implicit-join)
-    FROM list. Regex over FROM/JOIN heads — the same pragmatic level as
-    the front door's other routing passes; anything it cannot see
-    (derived tables resolve to their inner FROMs, CTE names show up as
-    refs and simply won't match remote tables) errs toward NOT
-    shipping."""
-    refs = set()
-    for m in _TABLE_REF_RE.finditer(sql):
-        for item in m.group(1).split(","):
-            tok = item.strip().split()[0].lower().rstrip(";,)")
-            if tok:
-                refs.add(tok)
-    return refs
-
-
 _ORDER_BY_RE = re.compile(r"(?i)\border\s+by\b")
 _ORDER_END_RE = re.compile(
     r"(?i)^(limit|offset|rows|range|groups|union|intersect|except|fetch"
@@ -1180,37 +1194,6 @@ def make_nulls_explicit(sql: str) -> str:
     return "".join(out)
 
 
-_CLAUSE_TOKEN_RE = re.compile(
-    r"(?i)[(),]|\b(select|from|where|group|order|having|limit|union"
-    r"|intersect|except|window|qualify)\b")
-
-
-def has_unseen_from_comma(scan: str) -> bool:
-    """True when a depth-0 comma inside a FROM zone was NOT part of a
-    comma-list the ref regex captured — e.g. ``FROM a JOIN b ON x = y,
-    c``, where the continuation hangs off the ON expression. Such a
-    statement has a table reference the gate cannot see and must stay
-    local (the err-toward-NOT-shipping direction)."""
-    seen = set()
-    for m in _TABLE_REF_RE.finditer(scan):
-        for i, ch in enumerate(m.group(1), m.start(1)):
-            if ch == ",":
-                seen.add(i)
-    depth, in_from = 0, False
-    for m in _CLAUSE_TOKEN_RE.finditer(scan):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth = max(0, depth - 1)
-        elif tok == ",":
-            if depth == 0 and in_from and m.start() not in seen:
-                return True
-        elif depth == 0:
-            in_from = tok.lower() == "from"
-    return False
-
-
 def sub_outside_literals(pattern: str, repl, sql: str) -> str:
     """Apply ``re.sub`` only to the non-literal segments of ``sql`` —
     string literals are DATA and must never be rewritten (the r9
@@ -1226,26 +1209,30 @@ def sub_outside_literals(pattern: str, repl, sql: str) -> str:
     return out
 
 
-def unparse_for_remote(sql: str, catalog: str, db: str,
+def unparse_for_remote(sql: str, nodes: list[dict], catalog: str, db: str,
                        remote_tables: set[str],
                        local_tables: set[str] | frozenset = frozenset(),
                        decimal_cols: frozenset = frozenset(),
                        reasons: list | None = None) -> str | None:
     """F6: translate the engine-surface SQL to the remote dialect, or
-    None when the statement must stay local.
+    None when the statement must stay local. ``nodes`` is the
+    statement's parsed plan (:func:`parse_plan`); every decision reads
+    it, and only the translation reads the text.
 
-    Shippable means: a SELECT/WITH statement, every table reference
-    resolves to a remote table (bare, ``db.t``, or
-    ``catalog.db.t``), no local-only construct markers, every windowed
-    function name is in :data:`SUPPORTED_WINDOW_FUNCS` (W6), every
-    call-shaped name passes the allowlist + per-call guards, AND no
-    BARE reference is shadowed by a local table of the same name
-    (``local_tables``) — bare names resolve local-first, the standard
-    nearest-scope rule, so attaching a remote can never silently
-    re-point an existing local view; qualified ``db.t`` references
-    state intent and always ship. The translation itself is qualifier
-    stripping — the shared surface is ANSI SQL; divergent constructs
-    are excluded by the gate.
+    Shippable means: every relation the statement reads (CTE names
+    aside) resolves to a remote table (bare, ``db.t`` or
+    ``catalog.db.t``), no BARE reference is shadowed by a local table of
+    the same name (``local_tables`` — bare names resolve local-first,
+    the standard nearest-scope rule, so attaching a remote can never
+    silently re-point an existing local view; qualified ``db.t``
+    references state intent and always ship), every node class is in
+    :data:`SHIPPABLE_NODES`, every windowed function is in
+    :data:`SUPPORTED_WINDOW_FUNCS` (W6), every function passes the
+    allowlist and its guard, every ``/`` and ``%`` has a nonzero numeric
+    literal divisor, and a division or avg sees no decimal value. The
+    translation itself is qualifier stripping outside string literals
+    plus explicit null ordering — the shared surface is ANSI SQL;
+    divergent constructs are excluded by the gate.
     """
     def refuse(why: str):
         """Record WHY the gate kept the statement local — the analog of
@@ -1254,85 +1241,70 @@ def unparse_for_remote(sql: str, catalog: str, db: str,
             reasons.append(why)
         return None
 
-    s = sql.strip().rstrip(";")
-    if not re.match(r"(?i)\s*(select|with)\b", s):
-        return refuse("not a SELECT/WITH statement")
-    if _LOCAL_ONLY_RE.search(s):
-        return refuse("local-only construct (clickhouse()/LIMIT BY/"
-                      "SAMPLE/system tables/...)")
-    # Lexical divergences (probed r10b, both engines, same input):
-    #   backslash — Spark interprets escape sequences in string
-    #     literals ('a\nb' is a newline; LIKE 'a\_b' escapes the _),
-    #     the remote dialect takes them literally → any backslash
-    #     anywhere keeps the statement local;
-    #   double quote — a STRING LITERAL locally ("c" = 'c') but an
-    #     IDENTIFIER remotely ("c" = column c): same statement, both
-    #     valid, different values → never ships.
-    if "\\" in s:
-        return refuse("backslash: escape sequence locally, literal "
-                      "remotely")
-    if '"' in s:
-        return refuse('double quote: string literal locally, '
-                      'identifier remotely')
-    # all structural scans run on the literal-stripped text — string
-    # contents are data, not syntax
-    scan = _SQL_STRING_RE.sub("''", s)
-    refs = table_refs(scan)
+    refs = plan_refs(nodes)
     if not refs:
         return refuse("no table references")
-    if has_unseen_from_comma(scan):
-        return refuse("comma-list table ref the gate cannot attribute")
-    if _DIVERGENT_OP_RE.search(scan):
-        return refuse("operator ^/**: XOR locally, power remotely")
-    if not _div_mod_guard(scan):
-        return refuse("division/modulo without a nonzero literal "
-                      "divisor (x/0 raises locally, NULL remotely)")
-    # Decimal arithmetic through / % or avg computes EXACT decimal
-    # locally but binary DOUBLE remotely (probed r10b: decimal/int and
-    # avg(DECIMAL) both return DOUBLE in the remote dialect) —
-    # low-digit HALF_UP flips at scale. Statement-level involvement
-    # check: sound against CTE/alias renames and CAST-to-double
-    # wrappers, needs no local twin views.
-    if _DIV_AVG_RE.search(scan) and decimal_involved(scan, decimal_cols):
-        return refuse("division/modulo/avg with possible decimal "
-                      "involvement (exact decimal locally, binary "
-                      "double remotely)")
-    cte_names = {m.group(1).lower() for m in re.finditer(
-        r"(?i)\b(?:with|,)\s*([A-Za-z_]\w*)\s+as\s*\(", scan)}
     prefixes = (f"{catalog}.{db}.".lower(), f"{db}.".lower())
-    for r in refs - cte_names:
-        bare = r
-        for p in prefixes:
-            if r.startswith(p):
-                bare = r[len(p):]
-                break
+    for r in sorted(refs):
+        bare = next((r[len(p):] for p in prefixes if r.startswith(p)), r)
         if "." in bare or bare not in remote_tables:
             return refuse(f"table ref not in the remote catalog: {r}")
         if bare == r and r in local_tables:
             return refuse(f"bare name shadowed by a local table: {r}")
-    for m in _OVER_FN_RE.finditer(scan):
-        if m.group(1).lower() not in SUPPORTED_WINDOW_FUNCS:
-            return refuse(f"unsupported window function: {m.group(1)}")
-    # F6 allowlist: strip string literals first (a quoted "foo(" must
-    # not read as a call), then every call-shaped identifier must be a
-    # proven-shared function — with per-call syntactic guards for the
-    # conditionally-shared ones (ROUND's decimal discipline, SUBSTRING's
-    # positive-literal start). Failing ANY name keeps the whole
-    # statement local — never a silent semantic divergence.
-    for m in _IDENT_CALL_RE.finditer(scan):
-        name = m.group(1).lower()
-        if name in GUARDED_REMOTE_FUNCS:
-            if not GUARDED_REMOTE_FUNCS[name](scan):
-                return refuse(f"guard refused: {name} (divergent "
-                              "argument class not provably absent)")
-        elif name not in SUPPORTED_REMOTE_FUNCS:
-            return refuse(f"function not in the proven-shared "
-                          f"allowlist: {name}")
+    for n in nodes:
+        if n["cls"] not in SHIPPABLE_NODES or n.get("allowRecursion"):
+            note = _NODE_NOTES.get(n["cls"])
+            return refuse("construct not in the proven-shared allowlist: "
+                          + n["cls"] + (f" ({note})" if note else ""))
+    divides = avg = False
+    for n in nodes:
+        if n["cls"] == "WindowExpression":
+            fn = n["kids"][0]
+            name = (node_name(fn) if fn["cls"] == "UnresolvedFunction"
+                    else fn["cls"])
+            if name not in SUPPORTED_WINDOW_FUNCS:
+                return refuse(f"unsupported window function: {name}")
+        elif n["cls"] == "UnresolvedFunction":
+            name = node_name(n)
+            avg = avg or name == "avg"
+            guard = GUARDED_REMOTE_FUNCS.get(name)
+            if guard is not None:
+                if not guard([n["kids"][i] for i in n["arguments"]]):
+                    return refuse(f"guard refused: {name} (divergent "
+                                  "argument class not provably absent)")
+            elif name not in SUPPORTED_REMOTE_FUNCS:
+                return refuse(f"function not in the proven-shared "
+                              f"allowlist: {name}")
+        elif n["cls"] == "Cast" and _type(n).startswith(
+                ("string", "varchar", "char")):
+            return refuse("cast to string: doubles render differently "
+                          "(1.0E10 locally, 10000000000.0 remotely)")
+        elif n["cls"] in ("Divide", "Remainder"):
+            divides = True
+            if not _number(n["kids"][1]):
+                return refuse("division/modulo without a nonzero literal "
+                              "divisor (x/0 raises locally, NULL remotely)")
+    # Decimal arithmetic through / % or avg computes EXACT decimal
+    # locally but binary DOUBLE remotely (probed r10b: decimal/int and
+    # avg(DECIMAL) both return DOUBLE in the remote dialect) —
+    # low-digit HALF_UP flips at scale. Statement-level involvement: any
+    # decimal Cast or Literal, or any attribute named like a decimal
+    # column of the referenced tables, anywhere (CTE bodies and aliased
+    # renames included) — needs no local twin views.
+    if (divides or avg) and any(
+            (n["cls"] in ("Cast", "Literal")
+             and _type(n).startswith("decimal"))
+            or (n["cls"] == "UnresolvedAttribute"
+                and node_name(n).rsplit(".", 1)[-1] in decimal_cols)
+            for n in nodes):
+        return refuse("division/modulo/avg with possible decimal "
+                      "involvement (exact decimal locally, binary "
+                      "double remotely)")
     # Qualifier stripping OUTSIDE string literals only: a literal like
     # 'remote.orders' is DATA and must cross the seam untouched (the
     # r9 self-review catch; pinned by
     # tests/test_remote_engine.py::test_unparser_preserves_literals).
-    out = s
+    out = sql.strip().rstrip(";")
     for p in (f"{catalog}.{db}.", f"{db}."):
         out = sub_outside_literals(re.escape(p), "", out)
     # dialect defaults diverge on null ordering (Spark ASC = NULLS

@@ -27,3 +27,19 @@ def test_window_func_battery():
     checked, div = run_window_battery()
     assert checked >= 18, checked
     assert not div, div
+
+
+def test_every_allowlisted_function_has_a_battery_row():
+    """The allowlist stays honest only if the audit exercises it: every
+    scalar name the gate lets ship has a BATTERY row. ``between`` is the
+    one exemption — Spark's parser emits it for ``x BETWEEN a AND b``,
+    which is the comparisons the differential fuzz already covers."""
+    from clickhouse_datafusion_spark.sources.remote_engine import (
+        SUPPORTED_REMOTE_FUNCS,
+        SUPPORTED_WINDOW_FUNCS,
+    )
+    from tools.audit_remote_allowlist import BATTERY
+
+    audited = {name for name, _pools, _guarded in BATTERY}
+    scalar = SUPPORTED_REMOTE_FUNCS - SUPPORTED_WINDOW_FUNCS
+    assert scalar - audited == {"between"}

@@ -21,6 +21,8 @@ from hypothesis import strategies as st
 
 from clickhouse_datafusion_spark.sources.remote_engine import (
     RemoteEngine,
+    parse_plan,
+    plan_refs,
     unparse_for_remote,
 )
 from tests.conftest import SF_SMOKE
@@ -40,6 +42,12 @@ def fed(spark):
 
 def _rows(df):
     return sorted(tuple((v is None, v) for v in r) for r in df.collect())
+
+
+def _unparse(spark, sql, tables, **kw):
+    """The F6 gate over ``sql``'s parsed plan, remote db ``remote``."""
+    return unparse_for_remote(sql, parse_plan(spark, sql), "clickhouse",
+                              "remote", tables, **kw)
 
 
 def test_whole_subtree_remote_join_matches_local(fed, spark):
@@ -135,28 +143,29 @@ def test_pool_over_subscription(fed):
     assert not errs and len(set(results)) == 1 and len(results) == 16
 
 
-def test_unparser_gate_unit():
-    """F6 unit coverage of the dialect gate itself."""
-    tables = {"orders", "customer"}
-    ok = unparse_for_remote(
+def test_unparser_gate_unit(fed):
+    """F6 unit coverage of the dialect gate itself, through the dry
+    run (orders/customer/lineitem/nation are remote, part is not)."""
+    eng, _ = fed
+    ok = eng.remote_decision(
         "SELECT o_orderkey FROM clickhouse.remote.orders WHERE "
-        "o_orderkey < 5", "clickhouse", "remote", tables)
-    assert ok == ("SELECT o_orderkey FROM orders WHERE o_orderkey < 5")
+        "o_orderkey < 5")
+    assert ok["remote_sql"] == (
+        "SELECT o_orderkey FROM orders WHERE o_orderkey < 5")
     # non-SELECT, unknown table, local-only construct, unknown function
-    assert unparse_for_remote("INSERT INTO t VALUES (1)",
-                              "clickhouse", "remote", tables) is None
-    assert unparse_for_remote("SELECT * FROM clickhouse.remote.part",
-                              "clickhouse", "remote", tables) is None
-    assert unparse_for_remote(
-        "SELECT * FROM clickhouse.remote.orders SAMPLE 0.1",
-        "clickhouse", "remote", tables) is None
-    assert unparse_for_remote(
-        "SELECT xxhash64(o_orderkey) FROM clickhouse.remote.orders",
-        "clickhouse", "remote", tables) is None
+    for q in ("INSERT INTO t VALUES (1)",
+              "SELECT * FROM clickhouse.remote.part",
+              "SELECT * FROM clickhouse.remote.orders SAMPLE 0.1",
+              "SELECT xxhash64(o_orderkey) FROM clickhouse.remote.orders",
+              # a complex-type Cast under a guarded call (its data type
+              # renders as a JSON object, not a string)
+              "SELECT round(CAST(o_totalprice AS DECIMAL(10,2)), "
+              "size(CAST(array(1) AS ARRAY<INT>))) AS r "
+              "FROM clickhouse.remote.orders"):
+        assert not eng.remote_decision(q)["ships"], q
     # a string literal containing "foo(" must not trip the gate
-    assert unparse_for_remote(
-        "SELECT 'log(' AS s FROM clickhouse.remote.orders",
-        "clickhouse", "remote", tables) is not None
+    assert eng.remote_decision(
+        "SELECT 'log(' AS s FROM clickhouse.remote.orders")["ships"]
 
 
 @pytest.fixture(scope="module")
@@ -221,13 +230,17 @@ def test_remote_join_exec_matches_local(fed_fuzz, spark, sql):
 def _divergent_queries(draw):
     """Queries built around the PROBED Spark/DuckDB divergence classes:
     raw-double ROUND (HALF_UP-shortest-string vs rint), NULL-skipping
-    CONCAT, start-0 SUBSTRING, BIGINT-vs-DOUBLE CEIL/FLOOR — each must
+    CONCAT, start-0 SUBSTRING, BIGINT-vs-DOUBLE CEIL/FLOOR, double
+    rendering under CAST(... AS STRING) — each must
     stay LOCAL (the guard refuses), and the local answer must match
     spark.sql exactly."""
     kind = draw(st.sampled_from(
         ["round", "concat", "substr", "floor", "trim2", "case",
-         "caret", "divisor", "decdiv"]))
-    if kind == "caret":
+         "caret", "divisor", "decdiv", "caststr"]))
+    if kind == "caststr":
+        n = draw(st.integers(min_value=4, max_value=9))
+        expr = f"CAST(o_totalprice * 1e{n} AS STRING)"  # 1.0E5 locally
+    elif kind == "caret":
         n = draw(st.integers(min_value=1, max_value=7))
         expr = f"o_orderkey ^ {n}"               # XOR local, power remote
     elif kind == "divisor":
@@ -271,7 +284,7 @@ def test_divergent_function_classes_never_ship(fed_fuzz, spark, sql):
 
 @st.composite
 def _implicit_join_queries(draw):
-    """Implicit (comma) and USING joins — the r9 table_refs blind spot."""
+    """Implicit (comma) and USING joins — the r9 comma-list blind spot."""
     style = draw(st.sampled_from(["comma", "using"]))
     pred = draw(st.sampled_from(
         ["o.o_totalprice > 100000", "o.o_orderstatus = 'F'",
@@ -302,21 +315,20 @@ def test_comma_join_mixed_refs_never_ship(fed, spark):
     """r9 blind spot (verdict What's-wrong 3): the SECOND table of a
     comma-separated FROM list must be seen by the gate — a mixed
     remote,local implicit join never ships."""
-    from clickhouse_datafusion_spark.sources.remote_engine import (
-        has_unseen_from_comma,
-        table_refs,
-    )
+    def refs(sql):
+        return plan_refs(parse_plan(spark, sql))
 
-    assert table_refs("SELECT * FROM orders o, customer c, nation "
-                      "WHERE o.k = c.k") == {"orders", "customer", "nation"}
-    # a comma-continuation hanging off an ON expression is a ref the
-    # regex cannot attribute — the depth-0 comma audit refuses to ship
-    assert has_unseen_from_comma("SELECT * FROM a JOIN b ON a.x = b.x, c")
-    assert not has_unseen_from_comma(
-        "SELECT x, y FROM a o, b c WHERE o.k = c.k GROUP BY x, y")
-    assert unparse_for_remote(
-        "SELECT count(*) AS n FROM remote.a JOIN remote.b "
-        "ON a.x = b.x, c", "clickhouse", "remote", {"a", "b", "c"}) is None
+    assert refs("SELECT * FROM orders o, customer c, nation "
+                "WHERE o.k = c.k") == {"orders", "customer", "nation"}
+    # a comma-continuation hanging off an ON expression is one more
+    # relation of the parsed plan, attributed like any other
+    assert refs("SELECT * FROM a JOIN b ON a.x = b.x, c") == {"a", "b", "c"}
+    assert refs("SELECT x, y FROM a o, b c WHERE o.k = c.k "
+                "GROUP BY x, y") == {"a", "b"}
+    q = "SELECT count(*) AS n FROM remote.a JOIN remote.b ON a.x = b.x, c"
+    assert _unparse(spark, q, {"a", "b"}) is None
+    assert _unparse(spark, q, {"a", "b", "c"}) == (
+        "SELECT count(*) AS n FROM a JOIN b ON a.x = b.x, c")
     eng, _ = fed
     spark.range(3).selectExpr("id AS p_partkey") \
          .createOrReplaceTempView("local_only_t")
@@ -407,14 +419,13 @@ def test_unparser_preserves_literals(fed, spark):
     assert "'remote.orders'" in eng.last_remote_sql  # literal intact
     row = df.first()
     assert row.tag == "remote.orders" and row.n > 0
-    # a literal containing gate-refused tokens ('sample', 'log(') keeps
-    # the statement LOCAL (those markers scan the raw text by design —
-    # the safe direction: they can only refuse to ship, never mis-ship)
-    # and the local fallback still answers correctly
+    # a literal holding gate-refused tokens ('sample', 'log(') is a
+    # Literal node of the parsed plan: it neither refuses the ship nor
+    # changes on the way through
     df2 = eng.sql("SELECT 'free sample log(' AS s, "
                   "CAST(count(*) AS BIGINT) AS n "
                   "FROM clickhouse.remote.orders GROUP BY 1")
-    assert eng.last_remote_sql is None
+    assert "'free sample log('" in eng.last_remote_sql
     r2 = df2.first()
     assert r2.s == "free sample log(" and r2.n == 1500
 
@@ -784,9 +795,9 @@ def test_data_dependent_divisor_stays_local(fed, spark):
     assert eng.last_remote_sql is None
     # literal zero divisor likewise refused (stays local -> local error
     # semantics preserved)
-    assert unparse_for_remote(
-        "SELECT o_orderkey % 0 AS v FROM remote.orders LIMIT 1",
-        "clickhouse", "remote", {"orders"}) is None
+    d = eng.remote_decision(
+        "SELECT o_orderkey % 0 AS v FROM clickhouse.remote.orders LIMIT 1")
+    assert not d["ships"] and "divisor" in d["reason"]
 
 
 def test_decimal_division_stays_local_double_ships(fed, spark):
@@ -882,18 +893,19 @@ def test_avg_decimal_guard(fed, spark):
     remotely-decimal-typed column name anywhere), so CTE/alias renames
     cannot smuggle a decimal column past it (r10d review);
     double/int avg still ships."""
-    from clickhouse_datafusion_spark.sources.remote_engine import (
-        decimal_involved)
-
     dc = frozenset({"price"})
-    assert decimal_involved("SELECT avg(CAST(x AS DECIMAL(10,2))) FROM t", dc)
-    assert decimal_involved("SELECT avg(x * 1.00) FROM t", dc)
-    assert decimal_involved("SELECT avg(price) FROM t", dc)
+
+    def ships(sql):
+        return _unparse(spark, sql, {"t"}, decimal_cols=dc) is not None
+
+    assert not ships("SELECT avg(CAST(x AS DECIMAL(10,2))) FROM t")
+    assert not ships("SELECT avg(x * 1.00) FROM t")
+    assert not ships("SELECT avg(price) FROM t")
     # the alias-rename bypass: price only appears inside the CTE body,
     # but the statement-wide scan still sees it
-    assert decimal_involved(
-        "WITH s AS (SELECT price AS p FROM t) SELECT avg(p) FROM s", dc)
-    assert not decimal_involved("SELECT avg(x) FROM t", dc)
+    assert not ships(
+        "WITH s AS (SELECT price AS p FROM t) SELECT avg(p) FROM s")
+    assert ships("SELECT avg(x) FROM t")
     eng, _ = fed
     q = ("SELECT avg(CAST(o_totalprice AS DECIMAL(18,2))) AS a "
          "FROM clickhouse.remote.orders")
@@ -1734,3 +1746,175 @@ def test_insert_arrow_batches_midstream_failure_raises():
         assert n == 2          # first batch landed; failure was loud
     finally:
         remote.drop_table("fail_t")
+
+
+# -- the parsed-plan gate: commands, comments, metamorphic verdicts ----
+
+def test_cte_headed_insert_never_ships_or_runs_in_gate(fed, spark, tmp_path,
+                                                      monkeypatch):
+    """A CTE-headed INSERT is a command, not a read: the dry run refuses
+    it before any analysis (analyzing an INSERT runs it), and the front
+    door raises before a row lands — it must not ship down the read
+    path nor fall back onto the local twin. The supported form,
+    ``INSERT INTO <t> WITH … SELECT …``, lands exactly one remote row."""
+    eng, remote = fed
+    remote.create_table("cte_w", "a BIGINT")
+    spark.sql(f"CREATE TABLE cte_w (a BIGINT) USING parquet "
+              f"LOCATION '{tmp_path}'")
+
+    def counts():
+        return (remote.execute("SELECT count(*) FROM cte_w")
+                .column(0)[0].as_py(),
+                spark.sql("SELECT count(*) FROM cte_w").first()[0])
+
+    q = ("WITH c AS (SELECT 7 AS a) "
+         "INSERT INTO clickhouse.remote.cte_w SELECT a FROM c")
+    form = "INSERT INTO remote.cte_w WITH … SELECT …"
+    try:
+        analyzed = []
+        monkeypatch.setattr(spark, "sql", lambda *a, **k: analyzed.append(a))
+        d = eng.remote_decision(q)
+        monkeypatch.undo()
+        assert not d["ships"] and form in d["reason"]
+        assert not analyzed             # a command is never analyzed
+        assert counts() == (0, 0)
+        with pytest.raises(ValueError, match="INSERT INTO remote.cte_w WITH"):
+            eng.sql(q)
+        assert counts() == (0, 0)
+        eng.sql("INSERT INTO clickhouse.remote.cte_w "
+                "WITH c AS (SELECT 7 AS a) SELECT a FROM c")
+        assert eng.last_remote_insert is not None
+        assert counts() == (1, 0)
+    finally:
+        remote.drop_table("cte_w")
+        spark.sql("DROP TABLE IF EXISTS cte_w")
+
+
+def test_sql_comments_never_ship(fed, spark):
+    """A comment outside string literals keeps the statement local:
+    qualifier stripping and explicit null ordering rewrite the shipped
+    text and cannot see comments (``-- order by`` used to gain a
+    ``NULLS FIRST`` the remote parser rejects, after a wasted round
+    trip). A comment marker inside a literal is data and ships."""
+    eng, remote = fed
+    calls = []
+    orig = remote.execute_stream
+
+    def spy(sql, *a, **k):
+        calls.append(sql)
+        return orig(sql, *a, **k)
+
+    remote.execute_stream = spy
+    try:
+        for q in ("SELECT o_orderkey FROM clickhouse.remote.orders -- order by"
+                  "\n WHERE o_orderkey > 1 LIMIT 1",
+                  "SELECT /* log( */ CAST(count(*) AS BIGINT) AS n "
+                  "FROM clickhouse.remote.orders"):
+            got = _rows(eng.sql(q))
+            assert not calls and eng.last_remote_sql is None, q
+            assert "comment" in eng.last_remote_refusal
+            assert got == _rows(spark.sql(q.replace("clickhouse.remote.", "")))
+        eng.sql("SELECT '-- x /* y' AS s FROM clickhouse.remote.orders "
+                "LIMIT 1").collect()
+        assert len(calls) == 1 and "'-- x /* y'" in eng.last_remote_sql
+    finally:
+        remote.execute_stream = orig
+
+
+def test_cte_statement_ships_and_matches_local(fed, spark, monkeypatch):
+    """UnresolvedWith is on the node allowlist: a CTE over remote tables
+    ships (its statement parsed once) and answers like the local plan;
+    a recursive CTE stays local."""
+    from clickhouse_datafusion_spark.sources import remote_engine
+
+    eng, _ = fed
+    parses = []
+    monkeypatch.setattr(remote_engine, "parse_plan",
+                        lambda *a: parses.append(a) or parse_plan(*a))
+    q = ("WITH big AS (SELECT o_custkey FROM clickhouse.remote.orders "
+         "WHERE o_totalprice > 100000) "
+         "SELECT c.c_mktsegment AS seg, CAST(count(*) AS BIGINT) AS n "
+         "FROM big b JOIN clickhouse.remote.customer c "
+         "ON b.o_custkey = c.c_custkey GROUP BY c.c_mktsegment")
+    got = _rows(eng.sql(q))
+    assert eng.last_remote_sql is not None and len(parses) == 1
+    assert got == _rows(spark.sql(q.replace("clickhouse.remote.", "")))
+    d = eng.remote_decision(
+        "WITH RECURSIVE r AS (SELECT 1 AS n UNION ALL SELECT n + 1 FROM r "
+        "WHERE n < 3) SELECT count(*) FROM r JOIN clickhouse.remote.nation "
+        "ON n = n_nationkey")
+    assert not d["ships"] and "UnresolvedWith" in d["reason"]
+
+
+def test_trim_from_and_substring_from_refuse_as_constructs(fed):
+    """The SQL-standard FROM forms parse to their own expression classes
+    (StringTrim, Substring), which are not on the node allowlist — the
+    refusal names the construct, not a phantom table reference."""
+    eng, _ = fed
+    for q in ("SELECT trim(BOTH 'x' FROM o_orderpriority) AS t "
+              "FROM clickhouse.remote.orders",
+              "SELECT substring(o_orderpriority FROM 0) AS t "
+              "FROM clickhouse.remote.orders"):
+        d = eng.remote_decision(q)
+        assert not d["ships"], q
+        assert "construct" in d["reason"] or "guard" in d["reason"], d
+
+
+_BAD_CALLS = ("upper('a')", "log(2.0)")
+
+
+def _gate_stmt(shape: str, k: int, cte: str = "c", sel: str = "",
+               where: str = "", order: str = "", sub: str = "",
+               body: str = "") -> str:
+    """A statement over the remote tables whose shape puts a keyword
+    before ``(`` — IN (, EXISTS (, OVER (, USING ( — or reads a CTE;
+    the keyword arguments splice text into the select list, WHERE,
+    ORDER BY, the subquery and the CTE body."""
+    head = (f"WITH {cte} AS (SELECT o_orderkey, o_custkey{body} "
+            f"FROM remote.orders WHERE o_orderkey > {k}) "
+            if shape == "cte" else "")
+    src = cte if shape == "cte" else "remote.orders"
+    join = (" JOIN remote.orders u USING (o_orderkey)"
+            if shape == "using" else "")
+    item = (", row_number() OVER (PARTITION BY t.o_custkey "
+            "ORDER BY t.o_orderkey) AS rn" if shape == "over" else "")
+    sub_q = (f"SELECT c_custkey FROM remote.customer "
+             f"WHERE c_nationkey < {k % 25}{sub}")
+    pred = (f"EXISTS ({sub_q} AND c_custkey = t.o_custkey)"
+            if shape == "exists" else f"t.o_custkey IN ({sub_q})")
+    return (f"{head}SELECT t.o_orderkey, abs(t.o_custkey) AS a{item}{sel} "
+            f"FROM {src} t{join} WHERE {pred}{where} "
+            f"ORDER BY {order}t.o_orderkey LIMIT {k}")
+
+
+@given(shape=st.sampled_from(["plain", "cte", "exists", "over", "using"]),
+       k=st.integers(min_value=1, max_value=500),
+       lit=st.sampled_from(["x", "upper(", "log(o_totalprice)", "sample 0.1",
+                            "-- c", "/* c */", "remote.lineitem"]),
+       bad=st.sampled_from(_BAD_CALLS),
+       cte=st.sampled_from(["c", "orders", "customer", "lineitem"]))
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_gate_verdicts_are_metamorphic(fed, shape, k, lit, bad, cte):
+    """Verdict-only properties of the parsed-plan gate (a dry run, no
+    execution): keywords before ``(`` never refuse by themselves; a
+    non-allowlisted name inside a string literal or a backquoted alias
+    never changes the verdict; the same call in the select list, WHERE,
+    ORDER BY, a subquery or a CTE body always refuses; renaming a CTE
+    to a remote table's name keeps the verdict."""
+    eng, _ = fed
+
+    def ships(shape=shape, **kw):
+        return eng.remote_decision(_gate_stmt(shape, k, **kw))["ships"]
+
+    assert ships()
+    assert ships(sel=f", '{lit}' AS tag")
+    assert (ships(sel=", t.o_orderkey AS `v`")
+            == ships(sel=f", t.o_orderkey AS `{bad}`"))
+    assert ships("cte", cte=cte) == ships("cte")
+    for slot, text in (("sel", f", {bad} AS z"),
+                       ("where", f" AND {bad} = {bad}"),
+                       ("order", f"{bad}, "),
+                       ("sub", f" AND {bad} = {bad}")):
+        assert not ships(**{slot: text}), slot
+    assert not ships("cte", body=f", {bad} AS z")

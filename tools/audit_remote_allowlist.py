@@ -2,7 +2,8 @@
 """Mechanical audit of the federation gate's function allowlist.
 
 For every scalar function the unparser lets ship unguarded
-(``SUPPORTED_REMOTE_FUNCS`` minus keywords/type names), plus the
+(``SUPPORTED_REMOTE_FUNCS`` minus the window set and ``between``, the
+parser's spelling of ``x BETWEEN a AND b``), plus the
 guarded forms in their PROVEN-SAFE shape, build a battery of literal
 statements over adversarial typed inputs (NULL, empty/unicode strings,
 ±0.0, NaN/inf, int extremes, decimal casts, date/timestamp edges) and
@@ -13,9 +14,11 @@ answers. Dtype-only differences are reported but non-fatal — the
 engine aligns hand-back schemas to the local analysis
 (engine.py::_align_remote_schema).
 
-This is the r10 hand-probe (tools/probe_dialect_divergence_r10b.py)
-made mechanical, so the allowlist stays honest against future edits.
-A compact battery runs in CI via tests/test_allowlist_audit.py.
+This is the r10/r10b hand-probe made mechanical (the probe script is
+gone; COVERAGE.md keeps its findings), so the allowlist stays honest
+against future edits. A compact battery runs in CI via
+tests/test_allowlist_audit.py, which also checks that every allowlisted
+scalar name has a BATTERY row.
 
 Usage: python tools/audit_remote_allowlist.py [-v]
 Exit 1 on any value divergence for an unguarded shippable form.
