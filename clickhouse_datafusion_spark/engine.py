@@ -235,7 +235,8 @@ class ClickHouseSparkEngine:
         local_schema = None
         if self._local_twins_resolve(refs):
             try:
-                local_schema = self.spark.sql(self._local_form(sql)).schema
+                local_schema = self.spark.sql(
+                    self._local_form(sql, nodes)).schema
             except Exception as e:
                 # no local analysis = no alignment hint: the hand-back
                 # keeps the remote's own names/types. Recorded, not
@@ -356,19 +357,38 @@ class ClickHouseSparkEngine:
         except Exception:  # pragma: no cover - defensive
             return False
 
-    def _local_form(self, stmt: str) -> str:
+    def _local_form(self, stmt: str, nodes=None) -> str:
         """The statement as the LOCAL fallback would run it: remote db
         qualifiers stripped (literal-safe) so twin views resolve — the
-        exact rewrite :meth:`sql` applies when the gate refuses."""
-        from clickhouse_datafusion_spark.sources.remote_engine import (
-            sub_outside_literals)
+        exact rewrite :meth:`sql` applies when the gate refuses. Raises
+        ValueError where a stripped name would bind to one of the
+        statement's CTEs instead of its twin (``WITH customer AS (…)
+        … FROM remote.customer``); inside that CTE's own body the name
+        still reaches the twin. ``nodes`` is the statement's parsed plan
+        when the caller holds one; otherwise a statement that has a
+        ``WITH`` and a stripped qualifier is parsed here."""
+        from clickhouse_datafusion_spark.sources import remote_engine as rx
 
-        return sub_outside_literals(
+        local = rx.sub_outside_literals(
             rf"\b{re.escape(self._remote_db)}\.(\w+)\b",
             lambda m: m.group(1)
             if m.group(1).lower() in self._remote.tables()
             else m.group(0),
             stmt)
+        if local == stmt or not re.search(r"(?i)\bwith\b", stmt):
+            return local
+        if nodes is None:
+            try:
+                nodes = rx.parse_plan(self.spark, stmt)
+            except Exception:
+                return local    # the local run raises the parser's error
+        tables = self._remote.tables()
+        for cte, ref in rx.cte_captures(nodes, self._remote_db):
+            if cte.lower() in tables:
+                raise ValueError(
+                    f"CTE {cte} shadows {ref}: run locally, {ref} would "
+                    f"read the CTE, not the table; rename the CTE")
+        return local
 
     def _align_remote_schema(self, df, local_schema):
         """Align a remote hand-back to the locally-analyzed schema so
@@ -828,15 +848,8 @@ class ClickHouseSparkEngine:
         m = self._REMOTE_INSERT_RE.match(sql)
         if not m:
             return None
-        name = m.group("name").lower()
-        cat = next(iter(self._catalog_names))
-        db = self._remote_db or "remote"
-        bare = None
-        for p in (f"{cat}.{db}.", f"{db}."):
-            if name.startswith(p):
-                bare = name[len(p):]
-                break
-        if bare is None or "." in bare or bare not in self._remote.tables():
+        bare = self._remote_bare(m.group("name"))
+        if bare is None or bare not in self._remote.tables():
             return None
         if m.group("kind").lower() == "overwrite":
             raise sink.OverwriteNotSupported(
@@ -1454,10 +1467,7 @@ class ClickHouseSparkEngine:
             remote_ins = self._try_remote_insert(rewritten)
             if remote_ins is not None:
                 return remote_ins
-            # INSERT is detected BEFORE routing: the target stays on the
-            # writable catalog table (the connector temp view is read-only);
-            # only the source query is routed to the connector view.
-            return self._insert_sql(self._route_insert_source(rewritten))
+            return self._insert_sql(rewritten)
         if _SYSTEM_TABLE_RE.search(rewritten):
             rewritten = self._route_system_tables(rewritten)
         lb = _parse_limit_by(rewritten)
@@ -1623,16 +1633,18 @@ class ClickHouseSparkEngine:
                 for i, s in enumerate(segments)]
         return "".join(segments)
 
-    def _route_insert_source(self, q: str) -> str:
-        """Route native-table references in an INSERT's *source query* only,
-        leaving the insert target untouched (it must resolve to the writable
-        catalog table, not the read-only connector view)."""
-        from clickhouse_datafusion_spark.sink import _INSERT_HEAD_RE
-
-        m = _INSERT_HEAD_RE.match(q)
-        if not m:
-            return q  # unroutable shape: leave for Spark to diagnose
-        return q[:m.end()] + self._route_native_tables(q[m.end():])
+    def _route_insert_source(self, q: str, plan) -> str:
+        """Route native-table references in the text after an INSERT's
+        target only (its column list, PARTITION spec and source query),
+        leaving the target untouched: it must resolve to the writable
+        catalog table, not the read-only connector view. ``plan`` is the
+        statement's parsed plan; the target ends where its parsed
+        relation does, so ``TABLE t`` and ``FROM t SELECT`` sources are
+        routed whole."""
+        if not self._native_tables:
+            return q
+        end = plan.table().origin().stopIndex().get() + 1
+        return q[:end] + self._route_native_tables(q[end:])
 
     def explain_analyze(self, query: str) -> DataFrame:
         """``EXPLAIN ANALYZE <q>`` — execute the query and return per-operator
@@ -1645,8 +1657,10 @@ class ClickHouseSparkEngine:
 
         rows: list[tuple] = []
         if _is_insert(self.rewrite(query)):
-            # write path: the sink's observed row count IS the write-side
-            # output_rows metric (reference src/sink.rs:100-114)
+            # write path: the count row IS the write-side output_rows
+            # metric — the write command's numOutputRows for a local
+            # table, the appended rows for a remote one (reference
+            # src/sink.rs:100-114)
             count = self.sql(query).collect()[0]["count"]
             rows.append(("ClickHouseDataSink", 0, "output_rows", int(count)))
             nodes = []
@@ -1670,11 +1684,15 @@ class ClickHouseSparkEngine:
 
     # ---------------------------------------------------------------------
     def _insert_sql(self, rewritten: str) -> DataFrame:
-        """Run INSERT, returning a single-row `count` DataFrame (UInt64 in the
-        reference → BIGINT here), matching src/sink.rs:202-210 semantics."""
+        """Run a local INSERT, returning a single-row `count` DataFrame
+        (UInt64 in the reference → BIGINT here), matching
+        src/sink.rs:202-210 semantics. The statement is parsed once: the
+        same plan routes the source and keys the sink's table lock."""
         from clickhouse_datafusion_spark import sink
 
-        return sink.run_insert_sql(self.spark, rewritten)
+        plan = sink.parse_insert(self.spark, rewritten)
+        return sink.run_insert_sql(
+            self.spark, self._route_insert_source(rewritten, plan), plan)
 
 
 # Spark functions whose value depends on the session timezone

@@ -197,7 +197,8 @@ class _ChResult:
 # Rewriter
 # --------------------------------------------------------------------------
 
-def _emit_tokens(toks: list[Tok], catalog_names: set[str]) -> str:
+def _emit_tokens(toks: list[Tok], catalog_names: set[str],
+                 cast: str) -> str:
     """Rewrite a token run in *normal SQL* context."""
     out: list[str] = []
     i = 0
@@ -208,11 +209,11 @@ def _emit_tokens(toks: list[Tok], catalog_names: set[str]) -> str:
             nxt = _skip_ws(toks, i + 1)
             starts_call = nxt < len(toks) and toks[nxt].kind == PUNCT and toks[nxt].text == "("
             if starts_call and low in ENTRY_NAMES:
-                sql, i = _rewrite_ch_call(toks, nxt, catalog_names)
+                sql, i = _rewrite_ch_call(toks, nxt, cast)
                 out.append(sql)
                 continue
             if starts_call and low in EVAL_NAMES:
-                sql, i = _rewrite_eval_call(toks, nxt, catalog_names)
+                sql, i = _rewrite_eval_call(toks, nxt, cast)
                 out.append(sql)
                 continue
             if starts_call and low in WRAPPER_NAMES and _contains_dollar(toks, nxt):
@@ -221,8 +222,8 @@ def _emit_tokens(toks: list[Tok], catalog_names: set[str]) -> str:
                 args, j = _parse_call_args(toks, nxt)
                 if len(args) != 1:
                     raise SqlRewriteError(f"{t.text}() wrapper takes one expression")
-                res = _translate_ch_expr(_strip_outer_ws(args[0]), catalog_names)
-                out.append(_finish_ch(res, None))
+                res = _translate_ch_expr(_strip_outer_ws(args[0]), cast)
+                out.append(_finish_ch(res, None, cast))
                 i = j
                 continue
             if low in catalog_names and not starts_call:
@@ -259,7 +260,7 @@ def _contains_dollar(toks: list[Tok], open_paren: int) -> bool:
 
 
 def _rewrite_ch_call(toks: list[Tok], open_paren: int,
-                     catalog_names: set[str]) -> tuple[str, int]:
+                     cast: str) -> tuple[str, int]:
     args, j = _parse_call_args(toks, open_paren)
     if len(args) != 2:
         raise SqlRewriteError(
@@ -268,12 +269,12 @@ def _rewrite_ch_call(toks: list[Tok], open_paren: int,
     if len(type_toks) != 1 or type_toks[0].kind != STR:
         raise SqlRewriteError("clickhouse() second argument must be a 'Type' string")
     ddl = ch_type_to_spark_ddl(_str_value(type_toks[0]))
-    res = _translate_ch_expr(_strip_outer_ws(args[0]), catalog_names)
-    return _finish_ch(res, ddl), j
+    res = _translate_ch_expr(_strip_outer_ws(args[0]), cast)
+    return _finish_ch(res, ddl, cast), j
 
 
 def _rewrite_eval_call(toks: list[Tok], open_paren: int,
-                       catalog_names: set[str]) -> tuple[str, int]:
+                       cast: str) -> tuple[str, int]:
     args, j = _parse_call_args(toks, open_paren)
     if len(args) != 2:
         raise SqlRewriteError("clickhouse_eval() takes ('raw expr', 'Type')")
@@ -285,26 +286,24 @@ def _rewrite_eval_call(toks: list[Tok], open_paren: int,
             "clickhouse_eval() arguments must be string literals")
     inner = tokenize(_str_value(raw_toks[0]))
     ddl = ch_type_to_spark_ddl(_str_value(type_toks[0]))
-    res = _translate_ch_expr(_strip_outer_ws(inner), catalog_names)
-    return _finish_ch(res, ddl), j
+    res = _translate_ch_expr(_strip_outer_ws(inner), cast)
+    return _finish_ch(res, ddl, cast), j
 
 
-_CAST_MODE = "CAST"  # set per-rewrite; TRY_CAST in coercion mode
-
-
-def _finish_ch(res: _ChResult, ddl: str | None) -> str:
+def _finish_ch(res: _ChResult, ddl: str | None, cast: str) -> str:
+    """``cast`` is ``CAST``, or ``TRY_CAST`` in coercion mode."""
     if res.generator is not None:
         if ddl is None:
             return f"{res.generator}({res.generator_arg})"
         # CAST must wrap the generator's *argument*: declared 'Utf8' is the
         # element type produced per row (reference: arrayJoin returns rows of T).
-        return f"{res.generator}({_CAST_MODE}({res.generator_arg} AS ARRAY<{ddl}>))"
+        return f"{res.generator}({cast}({res.generator_arg} AS ARRAY<{ddl}>))"
     if ddl is None:
         return f"({res.sql})"
-    return f"{_CAST_MODE}(({res.sql}) AS {ddl})"
+    return f"{cast}(({res.sql}) AS {ddl})"
 
 
-def _translate_ch_expr(toks: list[Tok], catalog_names: set[str]) -> _ChResult:
+def _translate_ch_expr(toks: list[Tok], cast: str) -> _ChResult:
     """Translate a ClickHouse expression (inside clickhouse()/eval) to Spark SQL."""
     toks = _strip_outer_ws(toks)
     # Detect top-level generator call: `arrayJoin`(x) / arrayJoin(x)
@@ -315,12 +314,12 @@ def _translate_ch_expr(toks: list[Tok], catalog_names: set[str]) -> _ChResult:
                 and toks[nxt].kind == PUNCT and toks[nxt].text == "("):
             args, j = _parse_call_args(toks, nxt)
             if j == len(toks) and len(args) == 1:
-                arg_sql = _ch_emit(_strip_outer_ws(args[0]), catalog_names)
+                arg_sql = _ch_emit(_strip_outer_ws(args[0]), cast)
                 return _ChResult("", GENERATOR_TRANSLATORS[name.lower()], arg_sql)
-    return _ChResult(_ch_emit(toks, catalog_names))
+    return _ChResult(_ch_emit(toks, cast))
 
 
-def _ch_emit(toks: list[Tok], catalog_names: set[str]) -> str:
+def _ch_emit(toks: list[Tok], cast: str) -> str:
     """Emit Spark SQL for a ch-context token run (recursive)."""
     out: list[str] = []
     i = 0
@@ -337,33 +336,33 @@ def _ch_emit(toks: list[Tok], catalog_names: set[str]) -> str:
                     args, j = _parse_call_args(toks, nxt)
                     if len(args) != 1:
                         raise SqlRewriteError(f"{name}() wrapper takes one expression")
-                    out.append(_ch_emit(_strip_outer_ws(args[0]), catalog_names))
+                    out.append(_ch_emit(_strip_outer_ws(args[0]), cast))
                     i = j
                     continue
                 if low in ENTRY_NAMES:  # nested clickhouse(expr,'T')
-                    sql, i = _rewrite_ch_call(toks, nxt, catalog_names)
+                    sql, i = _rewrite_ch_call(toks, nxt, cast)
                     out.append(sql)
                     continue
                 if low in EVAL_NAMES:
-                    sql, i = _rewrite_eval_call(toks, nxt, catalog_names)
+                    sql, i = _rewrite_eval_call(toks, nxt, cast)
                     out.append(sql)
                     continue
                 if low in HOF_TRANSLATORS:
                     args, j = _parse_call_args(toks, nxt)
-                    out.append(_translate_hof(name, args, catalog_names))
+                    out.append(_translate_hof(name, args, cast))
                     i = j
                     continue
                 if low in GENERATOR_TRANSLATORS:
                     args, j = _parse_call_args(toks, nxt)
                     if len(args) != 1:
                         raise SqlRewriteError(f"{name}() takes one array argument")
-                    arg_sql = _ch_emit(_strip_outer_ws(args[0]), catalog_names)
+                    arg_sql = _ch_emit(_strip_outer_ws(args[0]), cast)
                     out.append(f"{GENERATOR_TRANSLATORS[low]}({arg_sql})")
                     i = j
                     continue
                 if low in SCALAR_TRANSLATORS:
                     args, j = _parse_call_args(toks, nxt)
-                    arg_sqls = [_ch_emit(_strip_outer_ws(a), catalog_names)
+                    arg_sqls = [_ch_emit(_strip_outer_ws(a), cast)
                                 for a in args]
                     out.append(SCALAR_TRANSLATORS[low](arg_sqls))
                     i = j
@@ -375,7 +374,7 @@ def _ch_emit(toks: list[Tok], catalog_names: set[str]) -> str:
                 # plain unknown word + '(': assume a Spark-resolvable function;
                 # translate its arguments and keep the name.
                 args, j = _parse_call_args(toks, nxt)
-                arg_sqls = [_ch_emit(_strip_outer_ws(a), catalog_names)
+                arg_sqls = [_ch_emit(_strip_outer_ws(a), cast)
                             for a in args]
                 out.append(f"{name}({', '.join(arg_sqls)})")
                 i = j
@@ -392,8 +391,7 @@ def _ch_emit(toks: list[Tok], catalog_names: set[str]) -> str:
     return "".join(out)
 
 
-def _translate_hof(name: str, args: list[list[Tok]],
-                   catalog_names: set[str]) -> str:
+def _translate_hof(name: str, args: list[list[Tok]], cast: str) -> str:
     """``arrayMap($x[, $y], body, arr1[, arr2])`` → Spark HOF SQL."""
     args = [_strip_outer_ws(a) for a in args]
     placeholders: list[str] = []
@@ -408,8 +406,8 @@ def _translate_hof(name: str, args: list[list[Tok]],
     if len(args) - k < 1 + len(placeholders):
         raise SqlRewriteError(
             f"{name}() needs a body and {len(placeholders)} array argument(s)")
-    body = _ch_emit(args[k], catalog_names)
-    arrays = [_ch_emit(a, catalog_names) for a in args[k + 1:]]
+    body = _ch_emit(args[k], cast)
+    arrays = [_ch_emit(a, cast) for a in args[k + 1:]]
     if len(arrays) != len(placeholders):
         raise SqlRewriteError(
             f"{name}(): {len(placeholders)} placeholder(s) but {len(arrays)} array(s)")
@@ -433,11 +431,6 @@ def rewrite_sql(sql: str, catalog_names: set[str] | None = None,
       (src/stream.rs:45-78, enabled via ClickHouseBuilder::with_coercion,
       src/builders.rs:128-135).
     """
-    global _CAST_MODE
     names = {n.lower() for n in (catalog_names or {"clickhouse"})}
-    prev = _CAST_MODE
-    _CAST_MODE = "TRY_CAST" if coercion else "CAST"
-    try:
-        return _emit_tokens(tokenize(sql), names)
-    finally:
-        _CAST_MODE = prev
+    return _emit_tokens(tokenize(sql), names,
+                        "TRY_CAST" if coercion else "CAST")

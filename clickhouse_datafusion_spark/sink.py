@@ -5,16 +5,20 @@ Reference semantics reproduced here:
   count mismatch, missing field by name, type mismatch, nullability violation
   (src/sink.rs:46-81, 143-176; tests/e2e.rs:1590-1650);
 - ``INSERT`` returns a one-row, one-column ``count`` result (src/sink.rs:202-210,
-  examples/03_joins.rs:79-81) — Spark normally returns an empty DataFrame;
+  examples/03_joins.rs:79-81) — Spark normally returns an empty DataFrame.
+  The count comes from the write job itself: an ``Observation`` on the
+  DataFrame path (:func:`insert_into`), the write command's
+  ``numOutputRows`` metric on the SQL path (:func:`run_insert_sql`), which
+  runs every INSERT shape as Spark's own command;
 - configurable write concurrency, default 4 (src/connection.rs:45-57): the
   reference fans batches out over ``buffer_unordered(n)``; the Spark analog is
   one writer task per partition, so we ``repartition(n)`` before the write;
 - ``InsertOp::Overwrite`` rejected (src/providers/table.rs:148-152).
 
-Nullability is validated against the *data* (null-count per non-nullable
-target field) rather than the DataFrame's static nullable flags, because Spark
-marks most derived columns nullable even when no nulls can occur; the
-reference's per-batch check is likewise a data-level check.
+Nullability is validated against the *data* (an in-job guard on each
+non-nullable target field) rather than the DataFrame's static nullable flags,
+because Spark marks most derived columns nullable even when no nulls can
+occur; the reference's per-batch check is likewise a data-level check.
 """
 
 from __future__ import annotations
@@ -45,21 +49,33 @@ class OverwriteNotSupported(NotImplementedError):
 # ClickHouse INSERT is an independent server-side transaction
 # (tests/e2e_stress.rs runs 16 truly-concurrent writers). Spark analog: a
 # driver-side per-table mutex around the WHOLE write job — execution AND
-# commit serialize for same-table writers, because insertInto stages into
-# _temporary from the first task, so there is no commit-only window to
-# lock without a staged-directory write path (the clickhouse_native
-# connector has exactly that — one part_<uuid> file per task, no staging
-# dir — and therefore takes no lock; route truly-concurrent same-table
-# load through it). Task parallelism inside each job is untouched and
+# commit serialize for same-table writers, because insertInto and Spark's
+# own SQL INSERT stage into _temporary from the first task, so there is no
+# commit-only window to lock without a staged-directory write path (the
+# clickhouse_native connector has exactly that — one part_<uuid> file per
+# task, no staging dir — and therefore takes no lock; route
+# truly-concurrent same-table load through it). Task parallelism inside each job is untouched and
 # different tables proceed concurrently; the lock is process-local, so
 # multi-DRIVER writers sharing a path still need an external committer.
-_TABLE_WRITE_LOCKS: dict[str, threading.Lock] = {}
+_TABLE_WRITE_LOCKS: dict[tuple, threading.Lock] = {}
 _LOCKS_GUARD = threading.Lock()
 
 
-def _table_write_lock(table: str) -> threading.Lock:
+def _parser(spark: SparkSession):
+    return spark._jsparkSession.sessionState().sqlParser()  # noqa: SLF001
+
+
+def _table_write_lock(spark: SparkSession, name_parts) -> threading.Lock:
+    """The write mutex of one table, for the DataFrame and the SQL
+    insert paths alike. ``name_parts`` is the parser's multipart name (a
+    Scala Seq); the key is its parts lowercased, a one-part name
+    qualified by the current database — so ``pbw.w_local``,
+    ```pbw`.`w_local``` and ``PBW.W_LOCAL`` share one lock."""
+    key = tuple(name_parts.apply(i).lower() for i in range(name_parts.size()))
+    if len(key) == 1:
+        key = (spark.catalog.currentDatabase().lower(),) + key
     with _LOCKS_GUARD:
-        return _TABLE_WRITE_LOCKS.setdefault(table.lower(), threading.Lock())
+        return _TABLE_WRITE_LOCKS.setdefault(key, threading.Lock())
 
 
 def arrow_frame(spark: SparkSession, data, schema=None) -> DataFrame:
@@ -147,25 +163,6 @@ def _not_null_columns(spark: SparkSession, table: str,
     return sorted(set(cols))
 
 
-def validate_no_nulls(df: DataFrame, target_schema: T.StructType,
-                      non_nullable: list[str] | None = None) -> None:
-    """Data-level nullability validation (reference src/sink.rs:143-176)."""
-    if non_nullable is None:
-        non_nullable = [f.name for f in target_schema.fields if not f.nullable]
-    present = {f.name.lower() for f in df.schema.fields}
-    checks = [f for f in non_nullable if f.lower() in present]
-    if not checks:
-        return
-    counts = df.select(
-        [F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in checks]
-    ).collect()[0]
-    for c in checks:
-        if counts[c] > 0:
-            raise SchemaValidationError(
-                f"nullability violation: field {c} is non-nullable but input "
-                f"contains {counts[c]} null(s)")
-
-
 _NULL_GUARD_MARK = "nullability violation"
 
 
@@ -247,7 +244,8 @@ def insert_into(spark: SparkSession, df: DataFrame, table: str,
     # v1 write path (works for parquet catalog tables); positional resolution,
     # hence the explicit column reorder above.
     try:
-        with _table_write_lock(table):
+        with _table_write_lock(
+                spark, _parser(spark).parseMultipartIdentifier(table)):
             writer.write.insertInto(table, overwrite=False)
     except Exception as e:  # surface the in-job null guard as a typed error
         m = re.search(
@@ -259,107 +257,41 @@ def insert_into(spark: SparkSession, df: DataFrame, table: str,
     return _count_df(spark, obs.get["rows"])
 
 
-def run_insert_sql(spark: SparkSession, insert_sql: str) -> DataFrame:
-    """Execute an INSERT statement, returning the reference-style count row.
-
-    Spark's ``INSERT`` returns an empty DataFrame. For the common
-    ``INSERT INTO <t> <query>`` shape we run ``<query>`` ourselves with an
-    attached ``Observation`` and write it positionally (identical semantics
-    to SQL INSERT), so the count comes from the single write job. Statements
-    we don't rewrite (column lists, PARTITION specs) fall back to
-    ``spark.sql`` plus a metadata-backed count diff.
-    """
-    split = _split_insert(insert_sql)
-    if split is not None:
-        table, query, overwrite = split
-        src = spark.sql(query)
-        obs = Observation()
-        observed = src.observe(obs, F.count(F.lit(1)).alias("rows"))
-        with _table_write_lock(table):
-            observed.write.insertInto(table, overwrite=overwrite)
-        return _count_df(spark, obs.get["rows"])
-    table = _parse_insert_target(insert_sql)
-    before = spark.table(table).count() if table else None
-    spark.sql(insert_sql)
-    if table is None:
-        return _count_df(spark, -1)
-    after = spark.table(table).count()
-    return _count_df(spark, after - before)
 
 
-_INSERT_HEAD_RE = re.compile(
-    r"^\s*insert\s+(into|overwrite)\s+(?:table\s+)?"
-    r"(`[^`]+`(?:\s*\.\s*`[^`]+`)*|[\w.$]+)\s*",
-    re.IGNORECASE)
+def parse_insert(spark: SparkSession, insert_sql: str):
+    """Spark's parsed plan of a table INSERT (an ``InsertIntoStatement``).
+    Any other INSERT-led command (``INSERT OVERWRITE DIRECTORY``,
+    ``REPLACE WHERE``) raises ValueError."""
+    plan = _parser(spark).parsePlan(insert_sql)
+    kind = plan.getClass().getSimpleName()
+    if kind != "InsertIntoStatement":
+        raise ValueError(f"not a table INSERT ({kind}): {insert_sql[:80]}")
+    return plan
 
 
-def _split_insert(sql: str) -> tuple[str, str, bool] | None:
-    """Split ``INSERT INTO|OVERWRITE [TABLE] <name> <query>`` into
-    (table, query, overwrite). Returns None for shapes with a column list or
-    PARTITION spec — those keep Spark's own INSERT path."""
-    m = _INSERT_HEAD_RE.match(sql)
-    if not m:
-        return None
-    rest = sql[m.end():].lstrip()
-    up = rest.upper()
-    if not rest or rest.startswith("(") or up.startswith("PARTITION"):
-        return None
-    if not (up.startswith("SELECT") or up.startswith("VALUES")
-            or up.startswith("WITH") or up.startswith("TABLE")
-            or up.startswith("FROM")):
-        return None
-    table = _normalize_target(m.group(2))
-    return table, rest, m.group(1).lower() == "overwrite"
+def run_insert_sql(spark: SparkSession, insert_sql: str,
+                   plan=None) -> DataFrame:
+    """Execute a SQL INSERT, returning the reference-style count row.
 
-
-def _normalize_target(raw: str) -> str:
-    """Normalize a (possibly backticked, possibly ``a . b``-spaced) multipart
-    table name: trim whitespace around the dots BETWEEN parts only —
-    whitespace inside backticked segments is part of the identifier, so
-    ```my table``` keeps its backticks (and its space) while ```t``` is
-    unquoted to ``t``."""
-    parts: list[str] = []
-    buf = ""
-    in_bt = False
-    for ch in raw:
-        if ch == "`":
-            in_bt = not in_bt
-            buf += ch
-        elif ch == "." and not in_bt:
-            parts.append(buf.strip())
-            buf = ""
-        else:
-            buf += ch
-    parts.append(buf.strip())
-    out = []
-    for p in parts:
-        if p.startswith("`") and p.endswith("`") and len(p) >= 2:
-            inner = p[1:-1]
-            out.append(inner if re.fullmatch(r"[\w$]+", inner) else f"`{inner}`")
-        else:
-            out.append(p)
-    return ".".join(out)
-
-
-def _parse_insert_target(sql: str) -> str | None:
-    """Extract the target table name from INSERT INTO/OVERWRITE <name>."""
-    toks = sql.replace("\n", " ").split()
-    up = [t.upper() for t in toks]
-    try:
-        i = up.index("INSERT")
-    except ValueError:
-        return None
-    j = i + 1
-    if j < len(up) and up[j] in ("INTO", "OVERWRITE"):
-        j += 1
-    if j < len(up) and up[j] == "TABLE":
-        j += 1
-    if j >= len(toks):
-        return None
-    name = toks[j]
-    # strip trailing ( or (cols...) fragment glued to the name
-    for stop in "(;":
-        k = name.find(stop)
-        if k != -1:
-            name = name[:k]
-    return name.replace("`", "") or None
+    Every shape (plain, column list, ``VALUES``, static or dynamic
+    ``PARTITION``, ``OVERWRITE``) runs as Spark's own command:
+    ``spark.sql`` executes it eagerly under the target's write lock, and
+    the count is the write command's ``numOutputRows`` metric, so no
+    job reads the table or the source a second time — the reference
+    likewise folds the count from its write stream
+    (src/sink.rs:202-210). ``plan`` is the statement's
+    parsed plan when the caller already holds one (the engine parses
+    once to route the source); otherwise it is parsed here."""
+    if plan is None:
+        plan = parse_insert(spark, insert_sql)
+    with _table_write_lock(spark, plan.table().multipartIdentifier()):
+        done = spark.sql(insert_sql)
+    qe = done._jdf.queryExecution()  # noqa: SLF001
+    write = qe.executedPlan().commandPhysicalPlan()
+    if write.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        # a source with an exchange runs adaptively; the plan is final
+        # by now, so this reads it without running anything again
+        write = write.finalPhysicalPlan()
+    return _count_df(
+        spark, write.cmd().metrics().apply("numOutputRows").value())

@@ -201,13 +201,49 @@ def node_name(node: dict) -> str:
     return ".".join(parts[1:-1].split(", ")).lower()
 
 
+def cte_names(nodes: list[dict]) -> set[str]:
+    """The lowercased names of every CTE a parsed statement defines."""
+    return {c["_1"].lower() for n in nodes if n["cls"] == "UnresolvedWith"
+            for c in n["cteRelations"]}
+
+
 def plan_refs(nodes: list[dict]) -> set[str]:
     """The relation names a parsed statement reads, lowercased and as
     qualified as written, minus the statement's own CTE names."""
-    ctes = {c["_1"].lower() for n in nodes if n["cls"] == "UnresolvedWith"
-            for c in n["cteRelations"]}
     return {node_name(n) for n in nodes
-            if n["cls"] == "UnresolvedRelation"} - ctes
+            if n["cls"] == "UnresolvedRelation"} - cte_names(nodes)
+
+
+def _reachable(node: dict):
+    """``node`` and every node nested in it: children, CTE bodies and
+    subquery plans alike."""
+    todo = [node]
+    while todo:
+        v = todo.pop()
+        if isinstance(v, list):
+            todo.extend(v)
+        elif isinstance(v, dict):
+            if "cls" in v:
+                yield v
+            todo.extend(v.values())
+
+
+def cte_captures(nodes: list[dict], db: str) -> list[tuple[str, str]]:
+    """``(cte, ref)`` pairs in which the relation ``ref`` = ``<db>.<cte>``
+    would bind to the statement's CTE ``cte`` once its qualifier is
+    stripped: it is read inside that CTE's WITH but outside the CTE's
+    own body, which cannot see its own name."""
+    out = []
+    for w in nodes:
+        if w["cls"] != "UnresolvedWith":
+            continue
+        for c in w["cteRelations"]:
+            ref = f"{db}.{c['_1']}".lower()
+            own = {id(n) for n in _reachable(c["_2"])}
+            out += [(c["_1"], ref) for n in _reachable(w)
+                    if n["cls"] == "UnresolvedRelation"
+                    and id(n) not in own and node_name(n) == ref]
+    return out
 
 
 def _subtree(node: dict):
@@ -1225,7 +1261,9 @@ def unparse_for_remote(sql: str, nodes: list[dict], catalog: str, db: str,
     the same name (``local_tables`` — bare names resolve local-first,
     the standard nearest-scope rule, so attaching a remote can never
     silently re-point an existing local view; qualified ``db.t``
-    references state intent and always ship), every node class is in
+    references state intent and always ship), no CTE is named like a
+    qualified reference's bare name (stripping the qualifier would bind
+    the reference to the CTE), every node class is in
     :data:`SHIPPABLE_NODES`, every windowed function is in
     :data:`SUPPORTED_WINDOW_FUNCS` (W6), every function passes the
     allowlist and its guard, every ``/`` and ``%`` has a nonzero numeric
@@ -1245,12 +1283,16 @@ def unparse_for_remote(sql: str, nodes: list[dict], catalog: str, db: str,
     if not refs:
         return refuse("no table references")
     prefixes = (f"{catalog}.{db}.".lower(), f"{db}.".lower())
+    ctes = cte_names(nodes)
     for r in sorted(refs):
         bare = next((r[len(p):] for p in prefixes if r.startswith(p)), r)
         if "." in bare or bare not in remote_tables:
             return refuse(f"table ref not in the remote catalog: {r}")
         if bare == r and r in local_tables:
             return refuse(f"bare name shadowed by a local table: {r}")
+        if bare != r and bare in ctes:
+            return refuse(f"CTE {bare} shadows remote ref {r} once its "
+                          "qualifier is stripped")
     for n in nodes:
         if n["cls"] not in SHIPPABLE_NODES or n.get("allowRecursion"):
             note = _NODE_NOTES.get(n["cls"])

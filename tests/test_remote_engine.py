@@ -1860,6 +1860,37 @@ def test_trim_from_and_substring_from_refuse_as_constructs(fed):
         assert "construct" in d["reason"] or "guard" in d["reason"], d
 
 
+def test_cte_shadowing_a_qualified_remote_ref_never_answers_wrong(
+        fed, spark):
+    """A CTE named like a qualified remote ref's bare name would capture
+    the ref once the qualifier is stripped: shipped, the remote reads
+    the CTE; run locally, so does Spark. The gate refuses such a
+    statement, naming both, and the local fallback raises wherever the
+    stripped name would bind to the CTE. Inside the CTE's own body the
+    name still reaches the table, so that statement runs locally."""
+    eng, _ = fed
+    q = ("WITH customer AS (SELECT 1 AS c_custkey) "
+         "SELECT CAST(count(*) AS BIGINT) AS n "
+         "FROM clickhouse.remote.customer")
+    d = eng.remote_decision(q)
+    assert not d["ships"]
+    assert "CTE customer shadows remote ref remote.customer" in d["reason"]
+    with pytest.raises(ValueError, match="CTE customer shadows "
+                                         "remote.customer"):
+        eng.sql(q)
+    with pytest.raises(ValueError, match="CTE orders shadows"):
+        eng.sql("WITH orders AS (SELECT 1 AS o_orderkey) SELECT * FROM "
+                "remote.customer c WHERE c.c_custkey IN "
+                "(SELECT o_orderkey FROM remote.orders)")
+    own = ("WITH orders AS (SELECT o_orderkey FROM remote.orders "
+           "WHERE o_orderkey < 100) "
+           "SELECT CAST(count(*) AS BIGINT) AS n FROM orders")
+    assert not eng.remote_decision(own)["ships"]
+    got = _rows(eng.sql(own))
+    assert got == _rows(spark.sql(own.replace("remote.", "")))
+    assert got[0][0][1] > 1
+
+
 _BAD_CALLS = ("upper('a')", "log(2.0)")
 
 
@@ -1901,7 +1932,9 @@ def test_gate_verdicts_are_metamorphic(fed, shape, k, lit, bad, cte):
     non-allowlisted name inside a string literal or a backquoted alias
     never changes the verdict; the same call in the select list, WHERE,
     ORDER BY, a subquery or a CTE body always refuses; renaming a CTE
-    to a remote table's name keeps the verdict."""
+    keeps the verdict, unless the new name is the bare name of a
+    qualified remote ref the statement reads (``orders``, ``customer``):
+    that refuses, naming both."""
     eng, _ = fed
 
     def ships(shape=shape, **kw):
@@ -1911,7 +1944,12 @@ def test_gate_verdicts_are_metamorphic(fed, shape, k, lit, bad, cte):
     assert ships(sel=f", '{lit}' AS tag")
     assert (ships(sel=", t.o_orderkey AS `v`")
             == ships(sel=f", t.o_orderkey AS `{bad}`"))
-    assert ships("cte", cte=cte) == ships("cte")
+    if cte in ("orders", "customer"):
+        d = eng.remote_decision(_gate_stmt("cte", k, cte=cte))
+        assert not d["ships"]
+        assert f"CTE {cte} shadows remote ref remote.{cte}" in d["reason"]
+    else:
+        assert ships("cte", cte=cte) == ships("cte")
     for slot, text in (("sel", f", {bad} AS z"),
                        ("where", f" AND {bad} = {bad}"),
                        ("order", f"{bad}, "),

@@ -86,6 +86,41 @@ def test_coercion_still_casts_valid_values(spark):
         .collect()[0].v == 42
 
 
+def test_coercion_mode_is_per_rewrite_under_threads():
+    """Two threads rewrite with opposite ``coercion`` settings at a
+    microsecond switch interval; each rewrite emits its own cast mode,
+    so concurrent engines never swap ``CAST`` and ``TRY_CAST``."""
+    import sys
+    import threading
+
+    from clickhouse_datafusion_spark.functions.rewrite import rewrite_sql
+
+    q = "SELECT clickhouse(concat('4', '2'), 'Int64') AS v"
+    wrong = {True: 0, False: 0}
+    start = threading.Barrier(2)
+
+    def run(coercion):
+        start.wait(timeout=60)
+        want = "SELECT TRY_CAST(" if coercion else "SELECT CAST("
+        for _ in range(300):
+            out = rewrite_sql(q, coercion=coercion)
+            if not out.startswith(want):
+                wrong[coercion] += 1
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        ts = [threading.Thread(target=run, args=(c,)) for c in (True, False)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in ts)
+    assert wrong == {True: 0, False: 0}
+
+
 # -- error parity (SURVEY §7) ---------------------------------------------
 
 def test_group_by_violation_errors(engine):

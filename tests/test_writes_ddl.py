@@ -135,11 +135,29 @@ def test_catalog_listing_refresh(spark, engine):
 
 
 def test_insert_sql_count_parse(spark):
-    from clickhouse_datafusion_spark.sink import _parse_insert_target
+    """The SQL path reads its target from Spark's parsed plan and keys
+    the table lock through the same function as the DataFrame path, so
+    every spelling of one table shares one lock."""
+    from clickhouse_datafusion_spark.sink import (
+        _parser, _table_write_lock, parse_insert)
 
-    assert _parse_insert_target("INSERT INTO main.t VALUES (1)") == "main.t"
-    assert _parse_insert_target("INSERT INTO TABLE main.t SELECT 1") == "main.t"
-    assert _parse_insert_target("insert into `main`.`t`(a,b) values (1,2)") == "main.t"
+    locks = set()
+    for stmt in ("INSERT INTO main.t VALUES (1)",
+                 "INSERT INTO TABLE main.t SELECT 1",
+                 "insert into `main`.`t`(a,b) values (1,2)",
+                 "INSERT INTO MAIN.T SELECT 1"):
+        target = parse_insert(spark, stmt).table().multipartIdentifier()
+        assert target.mkString(".").lower() == "main.t"
+        locks.add(_table_write_lock(spark, target))
+    for name in ("main.t", "`main`.`t`", "MAIN.T"):
+        locks.add(_table_write_lock(
+            spark, _parser(spark).parseMultipartIdentifier(name)))
+    assert len(locks) == 1
+    other = _parser(spark).parseMultipartIdentifier("main.u")
+    assert _table_write_lock(spark, other) not in locks
+    with pytest.raises(ValueError, match="not a table INSERT"):
+        parse_insert(spark, "INSERT OVERWRITE DIRECTORY '/x' "
+                            "USING parquet SELECT 1")
 
 
 def test_insert_into_single_pass(spark, tbl):
@@ -161,27 +179,105 @@ def test_insert_into_single_pass(spark, tbl):
     assert acc.value == 100
 
 
+def _jobs_of(spark, fn):
+    """Run ``fn`` under a fresh job group; return (its result, the
+    number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_run_insert_sql_single_pass(spark, tbl):
-    # INSERT INTO <t> SELECT goes through the observe path: no before/after
-    # table count scans, count derived from the one write job.
+    # Every INSERT shape runs as Spark's own command and counts from the
+    # write's numOutputRows: one write job, no before/after table counts.
     spark.sql(f"INSERT INTO {tbl} VALUES (1, 'seed', 0.5)")
     res = run_insert_sql(
         spark, f"INSERT INTO {tbl} SELECT id, 'n', 2.0 FROM range(10)")
     assert res.collect()[0]["count"] == 10
     assert spark.table(tbl).count() == 11
+    res, jobs = _jobs_of(spark, lambda: run_insert_sql(
+        spark, f"INSERT INTO {tbl} (val, id) SELECT 1.0, id FROM range(7)"))
+    assert (res.collect()[0]["count"], jobs) == (7, 1)
+    # a source with an exchange runs adaptively; its count is as exact
+    res = run_insert_sql(
+        spark, f"INSERT INTO {tbl} (id, val) SELECT id % 4, 0.0 "
+               "FROM range(50) GROUP BY id % 4")
+    assert res.collect()[0]["count"] == 4
+    part = f"main.p_{uuid.uuid4().hex[:10]}"
+    spark.sql(f"CREATE TABLE {part} (id BIGINT, p INT) USING parquet "
+              "PARTITIONED BY (p)")
+    try:
+        res, jobs = _jobs_of(spark, lambda: run_insert_sql(
+            spark, f"INSERT INTO {part} PARTITION (p = 1) "
+                   "SELECT id FROM range(5)"))
+        assert (res.collect()[0]["count"], jobs) == (5, 1)
+        res, jobs = _jobs_of(spark, lambda: run_insert_sql(
+            spark, f"INSERT INTO {part} PARTITION (p) "
+                   "SELECT id, CAST(id % 3 AS INT) FROM range(9)"))
+        assert (res.collect()[0]["count"], jobs) == (9, 1)
+        assert spark.table(part).count() == 14
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {part}")
+
+
+def test_concurrent_sql_inserts_count_what_lands(spark, engine, tbl):
+    """Column-list and plain INSERTs race into one local table through
+    ``eng.sql``. Each statement writes under the table's lock and counts
+    its own write, so every count is exact, the counts sum to the rows
+    that landed, and no statement fails on a shared staging directory."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    shapes = (f"INSERT INTO {tbl} (id, val) SELECT id, 1.0 FROM range({{}}, {{}})",
+              f"INSERT INTO {tbl} SELECT id, 'p', 2.0 FROM range({{}}, {{}})",
+              f"INSERT INTO {tbl} (val, id) SELECT 3.0, id FROM range({{}}, {{}})")
+
+    def writer(w):
+        out = []
+        for i in range(4):
+            lo = (w * 4 + i) * 250
+            res = engine.sql(shapes[w].format(lo, lo + 250))
+            out.append(res.collect()[0]["count"])
+        return out
+
+    with ThreadPoolExecutor(len(shapes)) as pool:
+        futs = [pool.submit(writer, w) for w in range(len(shapes))]
+        counts = [n for f in futs for n in f.result(timeout=600)]
+    assert counts == [250] * 12
+    assert spark.table(tbl).count() == sum(counts)
 
 
 def test_split_insert_shapes(spark):
-    from clickhouse_datafusion_spark.sink import _split_insert
+    """The parsed plan splits every INSERT shape into target, OVERWRITE
+    flag, column list, PARTITION spec and the text after the target,
+    which the engine routes native tables in (so a ``TABLE src`` or
+    ``FROM src`` source keeps its keyword)."""
+    from clickhouse_datafusion_spark.sink import parse_insert
 
-    t, q, ow = _split_insert("INSERT INTO main.t SELECT * FROM x")
+    def split(stmt):
+        p = parse_insert(spark, stmt)
+        end = p.table().origin().stopIndex().get() + 1
+        return (p.table().multipartIdentifier().mkString("."),
+                stmt[end:].lstrip(), p.overwrite(),
+                p.userSpecifiedCols().mkString(","),
+                p.partitionSpec().keys().mkString(","))
+
+    t, q, ow, _, _ = split("INSERT INTO main.t SELECT * FROM x")
     assert (t, ow) == ("main.t", False) and q.startswith("SELECT")
-    t, q, ow = _split_insert("insert overwrite table main.t VALUES (1)")
-    assert (t, ow) == ("main.t", True)
-    t, q, ow = _split_insert("INSERT INTO `main`.`t` WITH c AS (SELECT 1) SELECT * FROM c")
+    t, q, ow, _, _ = split("insert overwrite table main.t VALUES (1)")
+    assert (t, ow) == ("main.t", True) and q.startswith("VALUES")
+    t, q, ow, _, _ = split(
+        "INSERT INTO `main`.`t` WITH c AS (SELECT 1) SELECT * FROM c")
     assert t == "main.t" and q.startswith("WITH")
-    assert _split_insert("INSERT INTO main.t (a, b) VALUES (1, 2)") is None
-    assert _split_insert("INSERT INTO main.t PARTITION (p=1) SELECT 1") is None
+    t, q, _, cols, _ = split("INSERT INTO main.t (a, b) VALUES (1, 2)")
+    assert (t, cols) == ("main.t", "a,b") and q.startswith("(a, b) VALUES")
+    t, q, _, _, spec = split("INSERT INTO main.t PARTITION (p=1) SELECT 1")
+    assert (t, spec) == ("main.t", "p") and q.startswith("PARTITION")
+    assert split("INSERT INTO main.t TABLE x")[1] == "TABLE x"
 
 
 def test_null_guard_skipped_for_static_non_nullable(spark, tbl):

@@ -8,19 +8,40 @@ must equal the plain local plan's. Also tallies the ship/refuse split
 so a gate regression that silently stops shipping everything is
 visible, not just a correctness pass.
 
+The draws are derandomized (Hypothesis ``derandomize=True``, no example
+database), so every run sees the same statements and prints the same
+per-family ship counts.
+
 Usage: python tools/deep_federation_sweep.py [N_per_family]  (default 100)
 """
 from __future__ import annotations
 
 import os
 import sys
-import warnings
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 100
 SF = os.environ.get("SPARK_GRAFT_SWEEP_SF_DIR", "/root/testdata/sf0.001")
+
+
+def draws(strategy, n: int) -> list:
+    """Up to ``n`` examples of ``strategy``, the same ones on every run
+    (fewer only when the strategy has fewer distinct examples)."""
+    from hypothesis import HealthCheck, Phase, given, settings
+
+    out: list = []
+
+    @settings(derandomize=True, database=None, max_examples=n,
+              deadline=None, phases=[Phase.generate],
+              suppress_health_check=list(HealthCheck))
+    @given(strategy)
+    def collect(example):
+        out.append(example)
+
+    collect()
+    return out[:n]
 
 
 def main() -> int:
@@ -89,20 +110,16 @@ def main() -> int:
                              c="clickhouse.remote.customer"))),
     ]
     total = shipped = 0
-    warnings.filterwarnings(
-        "ignore", message=".*example.*", module="hypothesis.*")
     for name, strat, render in families:
         fam_ship = 0
-        for i in range(N):
-            with warnings.catch_warnings():
-                warnings.simplefilter("ignore")
-                sql = strat.example()
+        sqls = draws(strat, N)
+        for sql in sqls:
             local_sql, fed_sql = render(sql)
             if one(local_sql, fed_sql):
                 fam_ship += 1
-            total += 1
+        total += len(sqls)
         shipped += fam_ship
-        print(f"{name}: {N} queries, {fam_ship} shipped, all agree")
+        print(f"{name}: {len(sqls)} queries, {fam_ship} shipped, all agree")
     print(f"\nDEEP FEDERATION SWEEP: {total} queries, {shipped} shipped "
           f"({100 * shipped // total}%), 0 mismatches")
     return 0
