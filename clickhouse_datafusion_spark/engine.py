@@ -4,14 +4,25 @@
 ``engine.sql(q)``:
 1. rewrites the ClickHouse function surface (``clickhouse()/clickhouse_eval()/
    apply()`` + backticked names + ``$x`` lambdas) into native Spark expressions
-   with explicit casts — the Spark analog of the reference's analyzer running
-   before TypeCoercion (src/context.rs:104-116);
-2. strips the virtual ``clickhouse.`` catalog prefix from 3-part names
-   (src/analyzer/function_pushdown.rs:460-473);
-3. delegates to ``spark.sql`` — Catalyst provides parse/analyze/optimize
-   (predicate pushdown, column pruning, limit pushdown, join selection, AQE),
-   which is the built-in equivalent of the reference's federation pushdown
-   (SURVEY §4.1).
+   with explicit casts, and strips the virtual ``clickhouse.`` catalog prefix
+   from 3-part names — the Spark analog of the reference's analyzer running
+   before TypeCoercion (src/context.rs:104-116,
+   src/analyzer/function_pushdown.rs:460-473);
+2. answers the ClickHouse-only statement forms Spark's parser rejects
+   (``OPTIMIZE``, ``ALTER … UPDATE/DELETE``, ``RENAME TABLE``, ``EXISTS``,
+   the materialized-view family, a remote ``CREATE TABLE <db>.t (cols)``)
+   and lowers the ClickHouse clauses (PREWHERE, WITH TOTALS, FORMAT, GLOBAL,
+   SAMPLE, ``system.*`` tables, LIMIT BY) to Spark SQL text;
+3. parses the statement ONCE with Spark's parser and dispatches on the
+   plan's root, as the reference plans each statement from one parse
+   (src/context.rs:258-304): INSERTs go to the remote write path or the
+   local sink (an INSERT into the remote db that is not the root, as in a
+   multi-table INSERT, raises), the remote db's DDL runs remotely, a query
+   passes the federation gate and either ships whole to the attached
+   remote engine or runs through ``spark.sql`` — Catalyst provides
+   analyze/optimize (predicate pushdown, column pruning, limit pushdown,
+   join selection, AQE), the built-in equivalent of the reference's
+   federation pushdown (SURVEY §4.1).
 
 INSERT statements return a one-row ``count`` DataFrame like the reference's
 sink (src/sink.rs:202-210, examples/03_joins.rs:79-81) instead of Spark's
@@ -22,6 +33,7 @@ from __future__ import annotations
 
 import contextlib
 import re
+from functools import partial
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -126,23 +138,24 @@ class ClickHouseSparkEngine:
         if local_twin_dir is not None:
             register_testdata_views(self.spark, local_twin_dir)
 
-    def _remote_gate(self, sql: str, reasons: list | None = None):
+    def _remote_gate(self, sql: str, nodes: list | None = None,
+                     reasons: list | None = None):
         """Every check that decides WHETHER a statement ships — shared
-        by the executing path (:meth:`_try_remote_exec`) and the
-        dry-run diagnostics surface (:meth:`remote_decision`, EXPLAIN).
-        Returns ``(shipped_sql | None, local_schema | None)``; on
-        refusal the WHY is appended to ``reasons`` — the analog of the
-        reference analyzer's not-pushed diagnostics.
+        by the executing path (:meth:`_try_remote_exec`, the remote
+        INSERT and CTAS sources) and the dry-run diagnostics surface
+        (:meth:`remote_decision`, EXPLAIN). Returns ``(shipped_sql |
+        None, local_schema | None)``; on refusal the WHY is appended to
+        ``reasons`` — the analog of the reference analyzer's not-pushed
+        diagnostics.
 
-        Past the lexical refusals (``remote_engine.lexical_refusal``)
-        every decision reads Spark's parsed plan, parsed ONCE per
-        statement: a statement the local surface cannot parse (or whose
-        plan cannot be serialized) stays local, where the fallback
-        raises the surface's own error; a command (any ``*Statement`` /
-        ``*Command`` node) stays local before anything is analyzed, and
-        an INSERT into the remote db that reached here (a CTE-headed or
-        multi-insert form the INSERT front door does not route) raises
-        ValueError before any row lands."""
+        ``nodes`` is the statement's parsed plan
+        (:func:`remote_engine.plan_nodes`) from the front door's one
+        parse; the dry run, which has none, parses here. Past the
+        lexical refusals (``remote_engine.lexical_refusal``) every
+        decision reads that plan: a statement the local surface cannot
+        parse stays local, where the fallback raises the surface's own
+        error, and a command (any ``*Statement`` / ``*Command`` node)
+        stays local before anything is analyzed."""
         from clickhouse_datafusion_spark.sources import remote_engine as rx
 
         def refuse(why: str):
@@ -155,21 +168,14 @@ class ClickHouseSparkEngine:
         why = rx.lexical_refusal(sql)
         if why is not None:
             return refuse(why)
-        try:
-            nodes = rx.parse_plan(self.spark, sql)
-        except Exception:
-            return refuse("statement does not parse on the local surface "
-                          "(remote-only syntax)")
-        cmd = next((n for n in nodes
-                    if n["cls"].endswith(("Statement", "Command"))), None)
+        if nodes is None:
+            try:
+                nodes = rx.plan_nodes(rx.parse_plan(self.spark, sql))
+            except Exception:
+                return refuse("statement does not parse on the local "
+                              "surface (remote-only syntax)")
+        cmd = next((n for n in nodes if rx.is_command(n)), None)
         if cmd is not None:
-            target = (rx.node_name(cmd["table"])
-                      if cmd["cls"] == "InsertIntoStatement" else "")
-            if self._remote_bare(target) is not None:
-                raise ValueError(
-                    f"an INSERT into remote table {target} must start with "
-                    f"INSERT: write it as INSERT INTO {target} WITH … "
-                    "SELECT …")
             return refuse(f"command, not a query: {cmd['cls']}")
         refs = rx.plan_refs(nodes)
         # ALL time extraction is session-timezone-dependent in Spark
@@ -244,51 +250,46 @@ class ClickHouseSparkEngine:
                 self.last_remote_align_error = e
         return shipped, local_schema
 
-    def remote_decision(self, query: str,
-                        pre_rewritten: bool = False) -> dict:
+    def remote_decision(self, query: str) -> dict:
         """Gate-only dry run: would ``query`` ship to the attached
         remote engine, and if not, why not — the reference analyzer's
         federation diagnostics surfaced as an API (``EXPLAIN`` prepends
-        the same verdict to the plan text). Never executes anything.
-        ``pre_rewritten=True`` skips the dialect rewrite — the EXPLAIN
-        path passes text :meth:`sql` already rewrote, and the diagnosed
-        statement must stay byte-identical to what the executing gate
-        sees (r11, advice: a non-idempotent rewrite pass must not make
-        the dry-run verdict diverge from the executed decision)."""
+        the same verdict to the plan text). Never executes anything."""
         reasons: list = []
-        stmt = query if pre_rewritten else self.rewrite(query)
-        try:
-            shipped, _ = self._remote_gate(stmt, reasons)
-        except ValueError as e:     # a statement sql() would reject
-            shipped = None
-            reasons.append(str(e))
+        shipped, _ = self._remote_gate(self.rewrite(query), reasons=reasons)
         return {"ships": shipped is not None,
                 "remote_sql": shipped,
                 "reason": "; ".join(reasons) or None}
 
-    def _explain_with_federation(self, mode: str, inner: str):
+    def _explain_with_federation(self, stmt: str, inner_at: int,
+                                 nodes: list) -> DataFrame:
         """``EXPLAIN [mode] <stmt>`` with a remote attached: the local
         plan text (over twin views when they resolve), headed by the
         federation verdict — RemoteEngineExec + the exact shipped SQL,
         or the gate's refusal reason (src/context.rs EXPLAIN shows the
-        federated exec nodes the same way)."""
-        d = self.remote_decision(inner, pre_rewritten=True)
-        if d["ships"]:
+        federated exec nodes the same way). ``inner_at`` is where the
+        explained statement starts; ``nodes`` is the EXPLAIN's parsed
+        plan, so the verdict reads the explained statement's subtree."""
+        from clickhouse_datafusion_spark.sources import remote_engine as rx
+
+        reasons: list = []
+        shipped, _ = self._remote_gate(
+            stmt[inner_at:], rx.subtree_nodes(nodes[0]["logicalPlan"]),
+            reasons)
+        if shipped is not None:
             head = ("== Remote Federation ==\nRemoteEngineExec "
-                    f"[db={self._remote_db}]: {d['remote_sql']}")
+                    f"[db={self._remote_db}]: {shipped}")
         else:
-            head = f"== Remote Federation ==\nlocal ({d['reason']})"
+            head = f"== Remote Federation ==\nlocal ({'; '.join(reasons)})"
         try:
-            stmt = self._route_native_tables(
-                self._local_form(f"EXPLAIN {mode or ''} {inner}"))
-            body = self.spark.sql(stmt).collect()[0][0]
+            body = self._run_local(stmt, nodes).collect()[0][0]
         except Exception as e:
             body = (f"(local plan unavailable: {type(e).__name__}: "
                     f"{str(e)[:200]})")
         return arrow_frame(self.spark, [(f"{head}\n\n{body}",)],
                            "plan string")
 
-    def _try_remote_exec(self, sql: str):
+    def _try_remote_exec(self, sql: str, nodes: list):
         """S7/J8: return a DataFrame when the whole statement shipped,
         else None. Never raises out of the federation seam — a remote
         failure falls back to the local plan, recorded on
@@ -305,9 +306,9 @@ class ClickHouseSparkEngine:
         alike — holds more than the threshold in driver memory. Bare
         table names resolve LOCAL-first (nearest scope): a statement
         whose bare ref is shadowed by an existing local table/view
-        stays local."""
+        stays local. ``nodes`` is the statement's parsed plan."""
         reasons: list = []
-        shipped, local_schema = self._remote_gate(sql, reasons)
+        shipped, local_schema = self._remote_gate(sql, nodes, reasons)
         if shipped is None:
             self.last_remote_refusal = "; ".join(reasons) or None
             return None
@@ -352,21 +353,21 @@ class ClickHouseSparkEngine:
         spurious JVM TABLE_OR_VIEW_NOT_FOUND error log when no twin
         views were registered)."""
         try:
-            return all(self.spark.catalog.tableExists(self._local_form(r))
-                       for r in refs)
+            return all(
+                self.spark.catalog.tableExists(self._local_form(r, ()))
+                for r in refs)
         except Exception:  # pragma: no cover - defensive
             return False
 
-    def _local_form(self, stmt: str, nodes=None) -> str:
+    def _local_form(self, stmt: str, nodes) -> str:
         """The statement as the LOCAL fallback would run it: remote db
         qualifiers stripped (literal-safe) so twin views resolve — the
         exact rewrite :meth:`sql` applies when the gate refuses. Raises
         ValueError where a stripped name would bind to one of the
         statement's CTEs instead of its twin (``WITH customer AS (…)
         … FROM remote.customer``); inside that CTE's own body the name
-        still reaches the twin. ``nodes`` is the statement's parsed plan
-        when the caller holds one; otherwise a statement that has a
-        ``WITH`` and a stripped qualifier is parsed here."""
+        still reaches the twin. ``nodes`` is the statement's parsed
+        plan (:func:`remote_engine.plan_nodes`)."""
         from clickhouse_datafusion_spark.sources import remote_engine as rx
 
         local = rx.sub_outside_literals(
@@ -375,20 +376,22 @@ class ClickHouseSparkEngine:
             if m.group(1).lower() in self._remote.tables()
             else m.group(0),
             stmt)
-        if local == stmt or not re.search(r"(?i)\bwith\b", stmt):
-            return local
-        if nodes is None:
-            try:
-                nodes = rx.parse_plan(self.spark, stmt)
-            except Exception:
-                return local    # the local run raises the parser's error
-        tables = self._remote.tables()
-        for cte, ref in rx.cte_captures(nodes, self._remote_db):
-            if cte.lower() in tables:
-                raise ValueError(
-                    f"CTE {cte} shadows {ref}: run locally, {ref} would "
-                    f"read the CTE, not the table; rename the CTE")
+        if local != stmt:
+            tables = self._remote.tables()
+            for cte, ref in rx.cte_captures(nodes, self._remote_db):
+                if cte.lower() in tables:
+                    raise ValueError(
+                        f"CTE {cte} shadows {ref}: run locally, {ref} "
+                        "would read the CTE, not the table; rename the CTE")
         return local
+
+    def _run_local(self, stmt: str, nodes) -> DataFrame:
+        """Run a statement the gate kept local: twin-view qualifiers
+        (:meth:`_local_form`, when a remote is attached) and native-table
+        routing, then Spark."""
+        if self._remote is not None:
+            stmt = self._local_form(stmt, nodes)
+        return self.spark.sql(self._route_native_tables(stmt))
 
     def _align_remote_schema(self, df, local_schema):
         """Align a remote hand-back to the locally-analyzed schema so
@@ -825,12 +828,7 @@ class ClickHouseSparkEngine:
         self.last_remote_insert = "exactly-once-txn"
         return n
 
-    _REMOTE_INSERT_RE = re.compile(
-        r"(?is)^\s*insert\s+(?P<kind>into|overwrite)\s+(?:table\s+)?"
-        r"(?P<name>[\w.]+)\s*(?P<cols>\([^)]*\))?\s*(?P<src>(select|with|"
-        r"values)\b.*)$")
-
-    def _try_remote_insert(self, sql: str):
+    def _try_remote_insert(self, stmt: str, ins, nodes: list):
         """Federated INSERT (the write half of S7/S20): a statement
         targeting a writable remote table either ships WHOLE (source
         also all-remote: the remote engine runs INSERT..SELECT itself —
@@ -840,23 +838,36 @@ class ClickHouseSparkEngine:
         src/sink.rs:180-197). Returns the sink-contract one-row count
         DataFrame, or None when the target is not remote. INSERT
         OVERWRITE raises the sink's OverwriteNotSupported — parity with
-        the native path (reference src/providers/table.rs:148-152)."""
-        if self._remote is None:
-            return None
-        from clickhouse_datafusion_spark import sink
+        the native path (reference src/providers/table.rs:148-152).
 
-        m = self._REMOTE_INSERT_RE.match(sql)
-        if not m:
-            return None
-        bare = self._remote_bare(m.group("name"))
+        ``ins`` is the parsed ``InsertIntoStatement`` and ``nodes`` the
+        statement's plan (:func:`remote_engine.plan_nodes`). The source
+        is the statement with the INSERT head cut out, so a ``WITH``
+        before the head (``WITH c AS (…) INSERT INTO … SELECT …``) and
+        one after it read the same; its nodes are the source's subtree
+        of the same plan."""
+        from clickhouse_datafusion_spark import sink
+        from clickhouse_datafusion_spark.sources import remote_engine as rx
+
+        node, ctes = nodes[0], None
+        if node["cls"] == "UnresolvedWith":
+            node, ctes = node["kids"][0], node
+        bare = self._remote_bare(rx.node_name(node["table"]))
         if bare is None or bare not in self._remote.tables():
             return None
-        if m.group("kind").lower() == "overwrite":
+        if node["overwrite"]:
             raise sink.OverwriteNotSupported(
                 "remote tables are append-only (INSERT OVERWRITE is "
                 "rejected, like the native sink)")
-        cols = m.group("cols") or ""
-        src = m.group("src").strip()
+        # the parsed INSERT spans its head (INSERT INTO t [(cols)]): the
+        # source is the text around it, the column list the text between
+        # the target and the head's end
+        head_end = _at(ins, end=True)
+        cols = stmt[_at(ins.table(), end=True):head_end].strip()
+        src = stmt[:_at(ins)] + stmt[head_end:]
+        query = node["kids"][0]
+        src_nodes = rx.subtree_nodes(
+            query if ctes is None else dict(ctes, kids=[query]))
         # Source analysis runs OUTSIDE the remote-failure wrap: a typo in
         # the SELECT is a local AnalysisException and must surface as
         # itself, not be mislabeled a remote schema problem (r10).
@@ -865,12 +876,10 @@ class ClickHouseSparkEngine:
         # decimal division, remote-only syntax) shipped whole would
         # WRITE wrong rows silently — worse than returning them (r10d).
         reasons: list = []
-        shipped, _ = self._remote_gate(src, reasons)
-        src_df = self.sql(src) if shipped is None else None
+        shipped, _ = self._remote_gate(src, src_nodes, reasons)
         if shipped is None:
-            # set AFTER the nested self.sql(src), which resets the
-            # per-statement diagnostics (r10d review)
             self.last_remote_refusal = "; ".join(reasons) or None
+            src_df = self._run_local(src, src_nodes)
         try:
             if shipped is not None:
                 stmt = f"INSERT INTO {bare} {cols} {shipped}"
@@ -890,17 +899,11 @@ class ClickHouseSparkEngine:
                 f"remote insert into {bare!r} failed: {e}") from e
         return sink._count_df(self.spark, n)
 
+    # the remote CREATE TABLE's column list ships verbatim in the remote
+    # dialect, which Spark's parser rejects (VARCHAR without a length)
     _REMOTE_CREATE_RE = re.compile(
         r"(?is)^\s*create\s+table\s+(?:(?P<ine>if\s+not\s+exists)\s+)?"
         r"(?P<name>[\w.]+)\s*\((?P<cols>.*)\)\s*;?\s*$")
-    _REMOTE_CTAS_RE = re.compile(
-        r"(?is)^\s*create\s+table\s+(?:(?P<ine>if\s+not\s+exists)\s+)?"
-        r"(?P<name>[\w.]+)\s+as\s+(?P<src>(?:select|with)\b.*)$")
-    _REMOTE_DROP_RE = re.compile(
-        r"(?is)^\s*drop\s+table\s+(?:(?P<ie>if\s+exists)\s+)?"
-        r"(?P<name>[\w.]+)\s*;?\s*$")
-    _REMOTE_SHOW_RE = re.compile(
-        r"(?is)^\s*show\s+tables\s+(?:from|in)\s+(?P<db>[\w.]+)\s*;?\s*$")
 
     def _remote_bare(self, name: str) -> str | None:
         """The bare remote table name when ``name`` is qualified into the
@@ -909,59 +912,28 @@ class ClickHouseSparkEngine:
         handlers."""
         cat = next(iter(self._catalog_names))
         db = (self._remote_db or "remote").lower()
-        low = name.lower().strip("`")
+        low = name.lower()
         for p in (f"{cat}.{db}.", f"{db}."):
             if low.startswith(p):
                 bare = low[len(p):]
                 return bare if "." not in bare else None
         return None
 
-    def _try_remote_ddl(self, sql: str):
-        """Remote DDL through the SQL front door (reference
-        src/providers/table_factory.rs:216-275 CREATE/DROP routing +
-        src/providers/catalog.rs:54-69 catalog refresh/listing):
-        ``CREATE TABLE <db>.<t> (cols)`` / ``DROP TABLE [IF EXISTS]
-        <db>.<t>`` targeting the attached remote db execute THERE;
-        ``SHOW TABLES FROM <db>`` re-lists the live remote catalog
-        (refresh-on-read — introspection is never stale). Statements
-        not aimed at the remote db return None for the local path."""
-        db = (self._remote_db or "remote").lower()
-        cat = next(iter(self._catalog_names))
-        sh = self._REMOTE_SHOW_RE.match(sql)
-        if sh and sh.group("db").lower() in (db, f"{cat}.{db}"):
-            rows = [(db, t, "REMOTE") for t in sorted(self._remote.refresh())]
-            return arrow_frame(
-                self.spark, rows,
-                "namespace string, tableName string, engine string")
-        c = self._REMOTE_CREATE_RE.match(sql)
-        if c:
-            bare = self._remote_bare(c.group("name"))
-            if bare is None:
-                return None
-            if bare in self._remote.tables():
-                if c.group("ine"):
-                    return arrow_frame(self.spark, [], "result string")
+    def _try_remote_create(self, stmt: str):
+        """``CREATE TABLE [IF NOT EXISTS] <db>.<t> (cols)`` aimed at the
+        attached remote db executes THERE, its column list verbatim
+        (reference src/providers/table_factory.rs:216-275 CREATE
+        routing); anything else returns None for the parsed dispatch."""
+        c = self._REMOTE_CREATE_RE.match(stmt)
+        bare = c and self._remote_bare(c.group("name"))
+        if not bare:
+            return None
+        if bare in self._remote.tables():
+            if not c.group("ine"):
                 raise ValueError(f"remote table {bare!r} already exists")
+        else:
             self._remote.create_table(bare, c.group("cols"))
-            return arrow_frame(self.spark, [], "result string")
-        ct = self._REMOTE_CTAS_RE.match(sql)
-        if ct:
-            bare = self._remote_bare(ct.group("name"))
-            if bare is None:
-                return None
-            if bare in self._remote.tables():
-                if ct.group("ine"):
-                    return arrow_frame(self.spark, [], "result string")
-                raise ValueError(f"remote table {bare!r} already exists")
-            return self._remote_ctas(bare, ct.group("src").strip())
-        d = self._REMOTE_DROP_RE.match(sql)
-        if d:
-            bare = self._remote_bare(d.group("name"))
-            if bare is None:
-                return None
-            self._remote.drop_table(bare, if_exists=bool(d.group("ie")))
-            return arrow_frame(self.spark, [], "result string")
-        return None
+        return arrow_frame(self.spark, [], "result string")
 
     # Spark simpleString -> remote-dialect column type for the local-eval
     # CTAS path. Conservative: complex/nested types raise rather than
@@ -981,33 +953,46 @@ class ClickHouseSparkEngine:
             return s.upper()
         raise ValueError(f"remote CTAS cannot map column type {s!r}")
 
-    def _remote_ctas(self, bare: str, src: str):
+    def _remote_ctas(self, bare: str, stmt: str, root, node: dict):
         """CREATE TABLE <db>.<t> AS SELECT — the write form of the
         whole-subtree decision (reference
         src/providers/table_factory.rs:216-275): an all-remote source
         runs CTAS remotely (zero data crosses the seam); otherwise the
         source evaluates locally, the remote table is created from the
-        result schema, and the Arrow batches append through the pool."""
+        result schema, and the Arrow batches append through the pool.
+        ``root`` is the parsed CTAS and ``node`` its plan; a CTAS with
+        Spark table clauses (USING, OPTIONS, …) is not one the remote
+        takes, and returns None."""
+        from clickhouse_datafusion_spark.sources import remote_engine as rx
+
+        src_at, skipped = _skip_keywords(
+            stmt, _at(root.name(), end=True), ("AS",))
+        if skipped != ["AS"]:
+            return None
+        done = arrow_frame(self.spark, [], "result string")
+        if bare in self._remote.tables():
+            if node["ignoreIfExists"]:
+                return done
+            raise ValueError(f"remote table {bare!r} already exists")
+        src, nodes = stmt[src_at:], rx.subtree_nodes(node["kids"][1])
         # full gate, not just the unparser: a divergent CTAS source
         # shipped whole would MATERIALIZE wrong rows remotely (r10d)
         reasons: list = []
-        shipped, _ = self._remote_gate(src, reasons)
+        shipped, _ = self._remote_gate(src, nodes, reasons)
         if shipped is not None:
             self._remote.create_table_as(bare, shipped)
             self.last_remote_sql = f"CREATE TABLE {bare} AS {shipped}"
-        else:
-            # an unbounded source, like the INSERT front door's
-            plane = self._write_plane(allow_direct=False)
-            df = self.sql(src)
-            # set AFTER the nested self.sql(src), which resets the
-            # per-statement diagnostics (r10d review)
-            self.last_remote_refusal = "; ".join(reasons) or None
-            schema_sql = ", ".join(
-                f"{f.name} {self._remote_col_type(f.dataType)}"
-                for f in df.schema.fields)
-            self._remote.create_table(bare, schema_sql)
-            self._append(plane, bare, df)
-        return arrow_frame(self.spark, [], "result string")
+            return done
+        self.last_remote_refusal = "; ".join(reasons) or None
+        # an unbounded source, like the INSERT front door's
+        plane = self._write_plane(allow_direct=False)
+        df = self._run_local(src, nodes)
+        schema_sql = ", ".join(
+            f"{f.name} {self._remote_col_type(f.dataType)}"
+            for f in df.schema.fields)
+        self._remote.create_table(bare, schema_sql)
+        self._append(plane, bare, df)
+        return done
 
     # ---------------------------------------------------------------------
     def rewrite(self, query: str) -> str:
@@ -1205,17 +1190,13 @@ class ClickHouseSparkEngine:
         mv["version"] = v
         return self._mv_result(key, v)
 
-    def _truncate_table(self, name: str) -> DataFrame:
-        """``TRUNCATE TABLE`` — for a materialized view this is the empty
-        mutation (a new 0-row snapshot version; pinned readers keep their
-        data); anything else delegates to Spark's own TRUNCATE."""
+    def _truncate_mat_view(self, key: str, mv: dict) -> DataFrame:
+        """``TRUNCATE TABLE`` of a materialized view: the empty mutation
+        (a new 0-row snapshot version; pinned readers keep their data).
+        Any other table takes Spark's own TRUNCATE."""
         from clickhouse_datafusion_spark.operators.layout import (
             read_snapshot, write_snapshot)
 
-        key = self._mv_key(name)
-        mv = self._mat_views.get(key)
-        if mv is None:
-            return self.spark.sql(f"TRUNCATE TABLE {name}")
         v = write_snapshot(read_snapshot(self.spark, mv["path"]).limit(0),
                            mv["path"])
         read_snapshot(self.spark, mv["path"], v).createOrReplaceTempView(key)
@@ -1290,11 +1271,7 @@ class ClickHouseSparkEngine:
                 j -= 1
             return j
 
-        def sig_next(i):
-            j = i + 1
-            while j < len(toks) and toks[j].kind == "WS":
-                j += 1
-            return j
+        sig_next = partial(_next_sig_at, toks)
 
         def dotted_start(end):
             # walk `db . t` / backticked segments leftward from `end`
@@ -1389,6 +1366,14 @@ class ClickHouseSparkEngine:
         ea = _EXPLAIN_ANALYZE_RE.match(query)
         if ea:
             return self.explain_analyze(query[ea.end():])
+        return self._run(query)[1]
+
+    def _run(self, query: str) -> tuple[bool, DataFrame]:
+        """Run one front-door statement; returns ``(is_insert, result)``.
+        The ClickHouse-only statement forms Spark's parser rejects are
+        matched first, then the text lowerings (dialect, SAMPLE, system
+        tables, LIMIT BY) apply, and everything else is parsed once and
+        dispatched from its plan (:meth:`_run_parsed`)."""
         # federation observability resets for EVERY statement kind, so a
         # probe after an INSERT/DDL never reads a stale prior answer
         self.last_remote_sql = None
@@ -1396,99 +1381,197 @@ class ClickHouseSparkEngine:
         self.last_remote_align_error = None
         self.last_remote_insert = None
         self.last_remote_refusal = None
-        rewritten = self.rewrite(query)
+        stmt = self.rewrite(query)
         # OPTIMIZE TABLE mv [FINAL] is matched BEFORE the dialect pass:
         # its FINAL is the merge-trigger modifier, not the read-time
         # collapse the dialect pass rejects on table references.
-        opt = _OPTIMIZE_RE.match(rewritten)
+        opt = _OPTIMIZE_RE.match(stmt)
         if opt:
-            return self._optimize_mat_view(opt.group("name"))
-        mut = _ALTER_MUT_RE.match(rewritten)
+            return False, self._optimize_mat_view(opt.group("name"))
+        mut = _ALTER_MUT_RE.match(stmt)
         if mut:
-            return self._mutate_mat_view(
+            return False, self._mutate_mat_view(
                 mut.group("name"), mut.group("kind").upper(),
-                rewritten[mut.end():])
-        tr = _TRUNCATE_RE.match(rewritten)
-        if tr:
-            return self._truncate_table(tr.group("name"))
-        rn = _RENAME_RE.match(rewritten)
+                stmt[mut.end():])
+        rn = _RENAME_RE.match(stmt)
         if rn:
-            return self._rename_table(rn.group("a"), rn.group("b"))
-        ex = _EXISTS_RE.match(rewritten)
+            return False, self._rename_table(rn.group("a"), rn.group("b"))
+        ex = _EXISTS_RE.match(stmt)
         if ex:
             # CH client probe: `EXISTS [TABLE] t` -> one row, UInt8 analog
             key = self._mv_key(ex.group("name"))
             found = (key in self._mat_views
                      or self.spark.catalog.tableExists(ex.group("name"))
                      or self.spark.catalog.tableExists(key))
-            return arrow_frame(self.spark, [(1 if found else 0,)],
-                               "result int")
-        sc = _SHOW_CREATE_RE.match(rewritten)
-        if sc:
-            key = self._mv_key(sc.group("name"))
-            mv = self._mat_views.get(key)
-            if mv is not None:
-                stmt = (f"CREATE MATERIALIZED VIEW {key} AS "
-                        f"{mv['sql'].strip()}")
-                return arrow_frame(self.spark, [(stmt,)],
-                                   "statement string")
-            return self.spark.sql(f"SHOW CREATE TABLE {sc.group('name')}")
-        if re.search(r"\b(prewhere|totals|format|global|final)\b",
-                     rewritten, re.IGNORECASE):
-            rewritten = _dialect_transforms(rewritten)
-        if re.search(r"\bSAMPLE\b", rewritten, re.IGNORECASE):
-            rewritten = self._lower_sample(rewritten)
-        mv = _CREATE_MV_RE.match(rewritten)
+            return False, arrow_frame(self.spark, [(1 if found else 0,)],
+                                      "result int")
+        if _DIALECT_RE.search(stmt):
+            stmt = _dialect_transforms(stmt)
+        if _SAMPLE_RE.search(stmt):
+            stmt = self._lower_sample(stmt)
+        mv = _CREATE_MV_RE.match(stmt)
         if mv:
-            return self._create_mat_view(mv.group("name"),
-                                         rewritten[mv.end():].rstrip("; \t\n"),
-                                         if_not_exists=bool(mv.group("ine")))
-        rmv = _REFRESH_MV_RE.match(rewritten)
+            return False, self._create_mat_view(
+                mv.group("name"), stmt[mv.end():].rstrip("; \t\n"),
+                if_not_exists=bool(mv.group("ine")))
+        rmv = _REFRESH_MV_RE.match(stmt)
         if rmv:
-            return self._refresh_mat_view(rmv.group("name"))
-        dmv = _DROP_MV_RE.match(rewritten)
+            return False, self._refresh_mat_view(rmv.group("name"))
+        dmv = _DROP_MV_RE.match(stmt)
         if dmv:
-            return self._drop_mat_view(dmv.group("name"),
-                                       if_exists=bool(dmv.group("ie")))
-        if _SHOW_MV_RE.match(rewritten):
-            return self._show_mat_views()
+            return False, self._drop_mat_view(
+                dmv.group("name"), if_exists=bool(dmv.group("ie")))
+        if _SHOW_MV_RE.match(stmt):
+            return False, self._show_mat_views()
         if self._remote is not None:
-            rddl = self._try_remote_ddl(rewritten)
-            if rddl is not None:
-                return rddl
-        m = _CREATE_NATIVE_RE.match(rewritten)
-        if m:
-            return self._create_native_table(m)
-        d = _DROP_TABLE_RE.match(rewritten)
-        if d:
-            self._drop_native_mapping(d.group("name"))
-            return self.spark.sql(rewritten)
-        if _is_insert(rewritten):
-            remote_ins = self._try_remote_insert(rewritten)
-            if remote_ins is not None:
-                return remote_ins
-            return self._insert_sql(rewritten)
-        if _SYSTEM_TABLE_RE.search(rewritten):
-            rewritten = self._route_system_tables(rewritten)
-        lb = _parse_limit_by(rewritten)
-        if lb is not None:
-            return self._run_limit_by(*lb)
+            created = self._try_remote_create(stmt)
+            if created is not None:
+                return False, created
+        if _SYSTEM_TABLE_RE.search(stmt):
+            stmt = self._route_system_tables(stmt)
+        return self._run_parsed(_lower_limit_by(stmt))
+
+    def _run_parsed(self, stmt: str) -> tuple[bool, DataFrame]:
+        """Parse ``stmt`` ONCE and dispatch on its plan's root, looking
+        through a leading ``WITH`` — the reference plans each statement
+        from one parse the same way (src/context.rs:258-304). The gate,
+        the local form, the remote INSERT router and the sink all read
+        that one plan: an INSERT goes to the remote write path when its
+        target is in the remote db and to the local sink otherwise; the
+        remote db's CTAS, DROP TABLE and SHOW TABLES run remotely;
+        ``USING clickhouse_native`` tables, DROP TABLE, TRUNCATE and
+        SHOW CREATE keep their engine-side bindings; EXPLAIN gains the
+        federation verdict; everything else runs as a query. A
+        statement the parser rejects goes to Spark, which raises its own
+        error."""
+        from clickhouse_datafusion_spark.sources import remote_engine as rx
+
+        try:
+            plan = rx.parse_plan(self.spark, stmt)
+        except Exception:
+            return False, self.spark.sql(stmt)
+        root = plan.child() if _cls(plan) == "UnresolvedWith" else plan
+        kind = _cls(root)
+        if kind == "InsertIntoStatement":
+            return True, self._run_insert(stmt, plan, root)
+        nodes = None
+        if kind in _COMMANDS:
+            nodes = rx.plan_nodes(plan)
+            df = self._run_command(kind, stmt, root, nodes)
+            if df is not None:
+                return False, df
         if self._remote is not None:
-            ex = _EXPLAIN_PLAIN_RE.match(rewritten)
-            if ex:
-                return self._explain_with_federation(
-                    ex.group("mode") or "", rewritten[ex.end():])
-            remote_df = self._try_remote_exec(rewritten)
-            if remote_df is not None:
-                return remote_df
-            # local fallback for a non-shippable statement: remote-
-            # qualified names resolve to the local twin views (the
-            # reference's TableProvider scan when the analyzer cannot
-            # push the subtree). Literal-safe: a string like
-            # 'remote.orders' is data and must not be rewritten.
-            rewritten = self._local_form(rewritten)
-        rewritten = self._route_native_tables(rewritten)
-        return self.spark.sql(rewritten)
+            nodes = nodes or rx.plan_nodes(plan)
+            self._refuse_nested_remote_insert(nodes)
+            df = self._try_remote_exec(stmt, nodes)
+            if df is not None:
+                return False, df
+        # local fallback for a non-shippable statement: remote-qualified
+        # names resolve to the local twin views (the reference's
+        # TableProvider scan when the analyzer cannot push the subtree)
+        return False, self._run_local(stmt, nodes)
+
+    def _refuse_nested_remote_insert(self, nodes: list) -> None:
+        """Raise for an INSERT into the remote db that is not the
+        statement's root (a multi-table ``FROM s INSERT INTO … INSERT
+        INTO …`` parses to a ``Union`` of them; EXPLAIN holds one too):
+        only a root INSERT reaches the remote write path, and the local
+        run would strip the qualifier and write, or explain, a
+        same-named local table."""
+        from clickhouse_datafusion_spark.sources import remote_engine as rx
+
+        for n in nodes:
+            t = n["table"] if n["cls"] == "InsertIntoStatement" else {}
+            if (t.get("cls") == "UnresolvedRelation"
+                    and self._remote_bare(rx.node_name(t)) is not None):
+                raise ValueError(
+                    f"an INSERT into remote table {rx.node_name(t)} must "
+                    "be its own statement: write one INSERT … SELECT … "
+                    "per target")
+
+    def _run_command(self, kind: str, stmt: str, root, nodes: list):
+        """The parsed commands the engine answers itself (``root`` is
+        the command, ``nodes`` its plan), or None to run it as Spark's.
+
+        Aimed at the attached remote db (reference
+        src/providers/table_factory.rs:216-275 CREATE/DROP routing +
+        src/providers/catalog.rs:54-69 catalog refresh/listing), CTAS
+        and DROP TABLE execute THERE and SHOW TABLES re-lists the live
+        remote catalog (refresh-on-read — introspection is never
+        stale); EXPLAIN of a query is headed by the federation verdict.
+        Locally, ``CREATE TABLE … USING clickhouse_native`` registers
+        its connector view, DROP TABLE drops it, and TRUNCATE / SHOW
+        CREATE answer for a materialized view."""
+        from clickhouse_datafusion_spark.sources import remote_engine as rx
+
+        node, remote = nodes[0], self._remote is not None
+        if kind == "ExplainCommand":
+            if not remote or rx.is_command(node["logicalPlan"]):
+                return None
+            inner_at, _ = _skip_keywords(stmt, _at(root), _EXPLAIN_WORDS)
+            return self._explain_with_federation(stmt, inner_at, nodes)
+        target = node["kids"][0]
+        if kind == "ShowTables":
+            db = (self._remote_db or "remote").lower()
+            if (not remote or target["cls"] != "UnresolvedNamespace"
+                    or node.get("pattern") is not None
+                    or rx.node_name(target) not in (
+                        db, f"{next(iter(self._catalog_names))}.{db}")):
+                return None
+            rows = [(db, t, "REMOTE") for t in sorted(self._remote.refresh())]
+            return arrow_frame(
+                self.spark, rows,
+                "namespace string, tableName string, engine string")
+        name = rx.node_name(target)
+        bare = self._remote_bare(name) if remote else None
+        if kind == "CreateTableAsSelect":
+            return None if bare is None else self._remote_ctas(
+                bare, stmt, root, node)
+        if kind == "DropTable":
+            if bare is not None:
+                self._remote.drop_table(bare, if_exists=node["ifExists"])
+                return arrow_frame(self.spark, [], "result string")
+            self._drop_native_mapping(name)
+            return self.spark.sql(stmt)
+        if kind == "CreateTable":
+            spec = node["tableSpec"]
+            if (spec.get("provider") or "").lower() != "clickhouse_native":
+                return None
+            return self._create_native_table(name, spec.get("location"),
+                                             node["ignoreIfExists"])
+        key = self._mv_key(name)
+        mv = self._mat_views.get(key)
+        if mv is None:
+            return self.spark.sql(stmt)
+        if kind == "TruncateTable":
+            return self._truncate_mat_view(key, mv)
+        return arrow_frame(
+            self.spark,
+            [(f"CREATE MATERIALIZED VIEW {key} AS {mv['sql'].strip()}",)],
+            "statement string")
+
+    def _run_insert(self, stmt: str, plan, ins) -> DataFrame:
+        """An INSERT (``ins``, the parsed ``InsertIntoStatement`` under
+        ``plan``): into the remote db through :meth:`_try_remote_insert`,
+        anywhere else as Spark's own command in the sink, which returns
+        a single-row ``count`` DataFrame (UInt64 in the reference →
+        BIGINT here, src/sink.rs:202-210) and keys its table lock off
+        the same plan."""
+        from clickhouse_datafusion_spark import sink
+        from clickhouse_datafusion_spark.sources import remote_engine as rx
+
+        # the target's name parts come from the JVM node, so the plan is
+        # serialized only for an INSERT aimed at the remote db
+        target = ins.table()
+        if (self._remote is not None
+                and _cls(target) == "UnresolvedRelation"
+                and self._remote_bare(
+                    target.multipartIdentifier().mkString(".")) is not None):
+            df = self._try_remote_insert(stmt, ins, rx.plan_nodes(plan))
+            if df is not None:
+                return df
+        return sink.run_insert_sql(
+            self.spark, self._route_insert_source(stmt, ins), ins)
 
     def _route_system_tables(self, sql: str) -> str:
         """ClickHouse ``system.*`` introspection tables, rebuilt from the
@@ -1518,31 +1601,6 @@ class ClickHouseSparkEngine:
             sql = _SYS_DATABASES_RE.sub(" _ch_system_databases ", sql)
         return sql
 
-    def _run_limit_by(self, base: str, order_sql: str, by_sql: str,
-                      offset: int, n: int,
-                      trailing_limit: int | None) -> DataFrame:
-        """ClickHouse ``LIMIT n BY cols``: keep the first n rows per
-        group in result order (``LIMIT offset, n BY`` skips the
-        group's first ``offset`` rows first). CH leaves un-ordered
-        LIMIT BY
-        layout-dependent; this engine REQUIRES the ORDER BY (checked in
-        the parser) so the kept rows are deterministic. Because the
-        query is wrapped as a subquery, the ORDER BY must reference
-        OUTPUT columns (select-list names/aliases), not dropped base
-        columns — alias what you sort by. Compiles to a
-        group-partitioned row_number — one shuffle keyed by the BY
-        columns, never a self-join; the final global ORDER BY is
-        top-k-able when a trailing LIMIT follows."""
-        base = self._route_native_tables(base)
-        inner = (f"SELECT __q.*, row_number() OVER ("
-                 f"PARTITION BY {by_sql} ORDER BY {order_sql}) AS __rn_lb "
-                 f"FROM ({base}) __q")
-        outer = (f"SELECT * FROM ({inner}) WHERE __rn_lb > {offset} "
-                 f"AND __rn_lb <= {offset + n} ORDER BY {order_sql}")
-        if trailing_limit is not None:
-            outer += f" LIMIT {trailing_limit}"
-        return self.spark.sql(outer).drop("__rn_lb")
-
     def table(self, name: str) -> DataFrame:
         """Accepts ``db.table`` or ``clickhouse.db.table`` (prefix stripped)."""
         parts = name.split(".")
@@ -1564,40 +1622,40 @@ class ClickHouseSparkEngine:
     # (pushFilters / row-group partitions).
     _native_tables: dict[str, str]
 
-    def _create_native_table(self, m) -> DataFrame:
-        name = m.group("name").replace("`", "")
-        opts = dict(_OPTION_RE.findall(m.group("opts") or ""))
-        path = opts.get("path") or opts.get("location")
+    def _create_native_table(self, name: str, path: str | None,
+                             if_not_exists: bool) -> DataFrame:
+        """``name`` is the parsed table name; ``path`` the statement's
+        location: its ``LOCATION '…'`` clause, or an ``OPTIONS (path …)``,
+        which Spark's parser moves there. Spark's parser rejects
+        ``OPTIONS (location …)``: ``location`` is a reserved table
+        property."""
         if not path:
             raise ValueError(
                 "CREATE TABLE ... USING clickhouse_native requires a "
-                "'path' option")
+                "'path' option or a LOCATION clause")
         parts = name.split(".")
-        if len(parts) == 3 and parts[0].lower() in self._catalog_names:
+        if len(parts) == 3 and parts[0] in self._catalog_names:
             parts = parts[1:]
         db, tbl = (parts if len(parts) == 2 else ("main", parts[0]))
         view = f"__ch_native_{db}_{tbl}"
         self.catalog.register_native_table(view, None, path)
-        self._native_tables[f"{db}.{tbl}".lower()] = view
-        self._native_tables[tbl.lower()] = view
+        self._native_tables[f"{db}.{tbl}"] = view
+        self._native_tables[tbl] = view
         # catalog entry: listable/droppable, scannable from other sessions
         # (plain parquet scan there — same data, same schema)
-        ine = "IF NOT EXISTS " if m.group("ine") else ""
+        ine = "IF NOT EXISTS " if if_not_exists else ""
         self.catalog.create_database(db)
-        # the path is bound as a parameter, not spliced; note
-        # `_CREATE_NATIVE_RE` cannot parse an OPTIONS body containing ')' —
-        # such paths must use catalog.register_native_table directly
+        # the path is bound as a parameter, not spliced
         return self.spark.sql(
             f"CREATE TABLE {ine}{sql_ident(db)}.{sql_ident(tbl)} USING "
             "parquet LOCATION :path TBLPROPERTIES ('clickhouse.native'="
             "'true', 'clickhouse.native.path'=:path)", args={"path": path})
 
     def _drop_native_mapping(self, name: str) -> None:
-        name = name.replace("`", "")
         parts = name.split(".")
-        if len(parts) == 3 and parts[0].lower() in self._catalog_names:
+        if len(parts) == 3 and parts[0] in self._catalog_names:
             parts = parts[1:]
-        key = ".".join(parts).lower()
+        key = ".".join(parts)
         view = self._native_tables.pop(key, None)
         if view:
             # drop the bare-name alias too, and the backing temp view
@@ -1624,27 +1682,28 @@ class ClickHouseSparkEngine:
         for key, view in self._native_tables.items():
             name_pat = r"`?" + r"`?\s*\.\s*`?".join(
                 re.escape(p) for p in key.split(".")) + r"`?"
-            pat = re.compile(
-                r"\b(?P<kw>from|join|table)(?P<ws>\s+)(?P<name>" + name_pat +
-                r")(?![\w.`$])", re.IGNORECASE)
+            pat = (r"\b(?P<kw>from|join|table)(?P<ws>\s+)(?P<name>"
+                   + name_pat + r")(?![\w.`$])")
             segments = [
-                pat.sub(lambda m: m.group("kw") + m.group("ws") + view, s)
+                re.sub(pat, lambda m: m.group("kw") + m.group("ws") + view,
+                       s, flags=re.IGNORECASE)
                 if i % 2 == 0 else s
                 for i, s in enumerate(segments)]
         return "".join(segments)
 
-    def _route_insert_source(self, q: str, plan) -> str:
-        """Route native-table references in the text after an INSERT's
-        target only (its column list, PARTITION spec and source query),
-        leaving the target untouched: it must resolve to the writable
-        catalog table, not the read-only connector view. ``plan`` is the
-        statement's parsed plan; the target ends where its parsed
-        relation does, so ``TABLE t`` and ``FROM t SELECT`` sources are
-        routed whole."""
+    def _route_insert_source(self, q: str, ins) -> str:
+        """Route native-table references everywhere in an INSERT except
+        its target (the CTEs of a leading ``WITH``, the column list, the
+        PARTITION spec and the source query), leaving the target
+        untouched: it must resolve to the writable catalog table, not the
+        read-only connector view. ``ins`` is the parsed
+        ``InsertIntoStatement``; the target spans its parsed relation, so
+        ``TABLE t`` and ``FROM t SELECT`` sources are routed whole."""
         if not self._native_tables:
             return q
-        end = plan.table().origin().stopIndex().get() + 1
-        return q[:end] + self._route_native_tables(q[end:])
+        start, end = _at(ins.table()), _at(ins.table(), end=True)
+        return (self._route_native_tables(q[:start]) + q[start:end]
+                + self._route_native_tables(q[end:]))
 
     def explain_analyze(self, query: str) -> DataFrame:
         """``EXPLAIN ANALYZE <q>`` — execute the query and return per-operator
@@ -1656,16 +1715,17 @@ class ClickHouseSparkEngine:
         from clickhouse_datafusion_spark.plans.explain import executed_metrics
 
         rows: list[tuple] = []
-        if _is_insert(self.rewrite(query)):
+        is_insert, df = self._run(query)
+        if is_insert:
             # write path: the count row IS the write-side output_rows
             # metric — the write command's numOutputRows for a local
             # table, the appended rows for a remote one (reference
             # src/sink.rs:100-114)
-            count = self.sql(query).collect()[0]["count"]
+            count = df.collect()[0]["count"]
             rows.append(("ClickHouseDataSink", 0, "output_rows", int(count)))
             nodes = []
         else:
-            nodes = executed_metrics(self.sql(query), execute=True)
+            nodes = executed_metrics(df, execute=True)
         for node in nodes:
             for metric, value in sorted(node["metrics"].items()):
                 name = "output_rows" if metric == "numOutputRows" else metric
@@ -1682,28 +1742,60 @@ class ClickHouseSparkEngine:
         return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
             df._jdf.queryExecution(), mode)
 
-    # ---------------------------------------------------------------------
-    def _insert_sql(self, rewritten: str) -> DataFrame:
-        """Run a local INSERT, returning a single-row `count` DataFrame
-        (UInt64 in the reference → BIGINT here), matching
-        src/sink.rs:202-210 semantics. The statement is parsed once: the
-        same plan routes the source and keys the sink's table lock."""
-        from clickhouse_datafusion_spark import sink
-
-        plan = sink.parse_insert(self.spark, rewritten)
-        return sink.run_insert_sql(
-            self.spark, self._route_insert_source(rewritten, plan), plan)
-
-
 # Spark functions whose value depends on the session timezone
 _TIME_FUNCS = frozenset(
     ("year", "month", "day", "hour", "minute", "second", "date_trunc"))
 
-_SYSTEM_TABLE_RE = re.compile(r"\bsystem\s*\.\s*(tables|databases|one)\b",
-                              re.IGNORECASE)
-_SYS_TABLES_RE = re.compile(r"\bsystem\s*\.\s*tables\b", re.IGNORECASE)
-_SYS_DATABASES_RE = re.compile(r"\bsystem\s*\.\s*databases\b", re.IGNORECASE)
-_SYS_ONE_RE = re.compile(r"\bsystem\s*\.\s*one\b", re.IGNORECASE)
+# The parsed root classes the front door may answer itself
+# (:meth:`ClickHouseSparkEngine._run_command`); every other statement
+# runs as a query, whose gate refuses commands.
+_COMMANDS = frozenset((
+    "CreateTable", "CreateTableAsSelect", "DropTable", "ExplainCommand",
+    "ShowCreateTable", "ShowTables", "TruncateTable"))
+
+
+def _cls(plan) -> str:
+    """A JVM plan node's short class name."""
+    return plan.getClass().getSimpleName()
+
+
+def _at(plan, end: bool = False) -> int:
+    """Where a parsed plan node starts in its statement's text (with
+    ``end``, one past where it ends)."""
+    origin = plan.origin()
+    return (origin.stopIndex().get() + 1 if end
+            else origin.startIndex().get())
+
+
+# the keywords that head an EXPLAIN's explained statement
+_EXPLAIN_WORDS = ("EXPLAIN", "LOGICAL", "EXTENDED", "CODEGEN", "COST",
+                  "FORMATTED")
+
+
+def _skip_keywords(sql: str, at: int, words) -> tuple[int, list[str]]:
+    """Skip whitespace, comments and the keywords ``words`` from offset
+    ``at`` of ``sql``: the offset of the next other token, and the
+    keywords skipped (upper-cased)."""
+    from clickhouse_datafusion_spark.functions.rewrite import WORD, tokenize
+
+    skipped = []
+    for t in tokenize(sql[at:]):
+        if t.kind == WORD and t.text.upper() in words:
+            skipped.append(t.text.upper())
+        elif t.kind != "WS":
+            break
+        at += len(t.text)
+    return at, skipped
+
+
+# Statement regexes: only the ClickHouse forms Spark's parser rejects
+# (or, for the materialized-view family, a family Spark parses only in
+# part) and the text lowerings that run before the one parse.
+# tests/test_conventions.py holds this set and each member's reason.
+
+# EXPLAIN ANALYZE, OPTIMIZE, ALTER … UPDATE/DELETE, RENAME TABLE and
+# EXISTS: ClickHouse statements Spark's parser rejects
+_EXPLAIN_ANALYZE_RE = re.compile(r"^\s*EXPLAIN\s+ANALYZE\s+", re.IGNORECASE)
 
 _OPTIMIZE_RE = re.compile(
     r"^\s*OPTIMIZE\s+TABLE\s+(?P<name>[\w.`]+)(?:\s+FINAL)?\s*;?\s*$",
@@ -1713,9 +1805,6 @@ _ALTER_MUT_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(?P<name>[\w.`]+)\s+(?P<kind>UPDATE|DELETE)\b",
     re.IGNORECASE)
 
-_TRUNCATE_RE = re.compile(
-    r"^\s*TRUNCATE\s+TABLE\s+(?P<name>[\w.`]+)\s*;?\s*$", re.IGNORECASE)
-
 _RENAME_RE = re.compile(
     r"^\s*RENAME\s+TABLE\s+(?P<a>[\w.`]+)\s+TO\s+(?P<b>[\w.`]+)\s*;?\s*$",
     re.IGNORECASE)
@@ -1723,9 +1812,39 @@ _RENAME_RE = re.compile(
 _EXISTS_RE = re.compile(
     r"^\s*EXISTS\s+(?:TABLE\s+)?(?P<name>[\w.`]+)\s*;?\s*$", re.IGNORECASE)
 
-_SHOW_CREATE_RE = re.compile(
-    r"^\s*SHOW\s+CREATE\s+TABLE\s+(?P<name>[\w.`]+)\s*;?\s*$",
+# the materialized-view family: Spark parses CREATE MATERIALIZED VIEW
+# but rejects REFRESH / DROP / SHOW, so the family stays together
+_CREATE_MV_RE = re.compile(
+    r"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+    r"(?P<name>[\w.`]+)\s+AS\s+", re.IGNORECASE)
+
+_REFRESH_MV_RE = re.compile(
+    r"^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+(?P<name>[\w.`]+)\s*;?\s*$",
     re.IGNORECASE)
+
+_DROP_MV_RE = re.compile(
+    r"^\s*DROP\s+MATERIALIZED\s+VIEW\s+(?P<ie>IF\s+EXISTS\s+)?"
+    r"(?P<name>[\w.`]+)\s*;?\s*$", re.IGNORECASE)
+
+_SHOW_MV_RE = re.compile(
+    r"^\s*SHOW\s+MATERIALIZED\s+VIEWS\s*;?\s*$", re.IGNORECASE)
+
+# text lowerings: the ClickHouse dialect clauses (PREWHERE, WITH TOTALS,
+# FORMAT, GLOBAL, FINAL), SAMPLE and the system.* tables
+_DIALECT_RE = re.compile(r"\b(prewhere|totals|format|global|final)\b",
+                         re.IGNORECASE)
+_SAMPLE_RE = re.compile(r"\bSAMPLE\b", re.IGNORECASE)
+
+_SYSTEM_TABLE_RE = re.compile(r"\bsystem\s*\.\s*(tables|databases|one)\b",
+                              re.IGNORECASE)
+_SYS_TABLES_RE = re.compile(r"\bsystem\s*\.\s*tables\b", re.IGNORECASE)
+_SYS_DATABASES_RE = re.compile(r"\bsystem\s*\.\s*databases\b",
+                               re.IGNORECASE)
+_SYS_ONE_RE = re.compile(r"\bsystem\s*\.\s*one\b", re.IGNORECASE)
+
+# single-quoted SQL string literals ('' = embedded quote); used to mask
+# literals from the native-table routing substitution
+_STRING_LITERAL_SPLIT = re.compile(r"('(?:[^']|'')*')")
 
 
 def _parse_mutation_tail(kind: str, tail: str):
@@ -1789,58 +1908,6 @@ def _parse_mutation_tail(kind: str, tail: str):
         start = stop + 1
     return assigns, where_sql
 
-_CREATE_MV_RE = re.compile(
-    r"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<name>[\w.`]+)\s+AS\s+", re.IGNORECASE)
-
-_REFRESH_MV_RE = re.compile(
-    r"^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+(?P<name>[\w.`]+)\s*;?\s*$",
-    re.IGNORECASE)
-
-_DROP_MV_RE = re.compile(
-    r"^\s*DROP\s+MATERIALIZED\s+VIEW\s+(?P<ie>IF\s+EXISTS\s+)?"
-    r"(?P<name>[\w.`]+)\s*;?\s*$", re.IGNORECASE)
-
-_SHOW_MV_RE = re.compile(
-    r"^\s*SHOW\s+MATERIALIZED\s+VIEWS\s*;?\s*$", re.IGNORECASE)
-
-_CREATE_NATIVE_RE = re.compile(
-    r"^\s*CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<name>[\w.`]+)\s+USING\s+clickhouse_native"
-    r"(?:\s+OPTIONS\s*\((?P<opts>[^)]*)\))?\s*;?\s*$",
-    re.IGNORECASE)
-
-# OPTIONS (path '/x', key = 'v') — both `k 'v'` and `k = 'v'` spellings
-_OPTION_RE = re.compile(r"(\w+)\s*=?\s*'([^']*)'")
-
-# single-quoted SQL string literals ('' = embedded quote); used to mask
-# literals from the native-table routing substitution
-_STRING_LITERAL_SPLIT = re.compile(r"('(?:[^']|'')*')")
-
-_EXPLAIN_ANALYZE_RE = re.compile(r"^\s*EXPLAIN\s+ANALYZE\s+", re.IGNORECASE)
-_EXPLAIN_PLAIN_RE = re.compile(
-    r"^\s*EXPLAIN\s+(?:(?P<mode>EXTENDED|CODEGEN|COST|FORMATTED)\s+)?"
-    r"(?=SELECT|WITH)", re.IGNORECASE)
-
-_DROP_TABLE_RE = re.compile(
-    r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?P<name>[\w.`]+)\s*;?\s*$",
-    re.IGNORECASE)
-
-
-def _is_insert(q: str) -> bool:
-    s = q.lstrip()
-    # skip leading comments
-    while True:
-        if s.startswith("--"):
-            nl = s.find("\n")
-            s = "" if nl == -1 else s[nl + 1:].lstrip()
-        elif s.startswith("/*"):
-            end = s.find("*/")
-            s = "" if end == -1 else s[end + 2:].lstrip()
-        else:
-            break
-    return s[:6].upper() == "INSERT"
-
 
 _SQL_KEYWORDS = {
     "SELECT", "FROM", "WHERE", "GROUP", "BY", "ORDER", "HAVING", "LIMIT",
@@ -1866,36 +1933,58 @@ def _prev_is_table_name(toks, i: int) -> bool:
     return t.kind == "WORD" and t.text.upper() not in _SQL_KEYWORDS
 
 
-def _parse_limit_by(sql: str):
-    """Detect a top-level ClickHouse ``ORDER BY ... LIMIT n BY cols
-    [LIMIT m]`` tail. Returns (base_sql, order_sql, by_cols_sql, n,
-    trailing_limit|None), or None when the query has no LIMIT BY.
+def _leveled_tokens(sql: str) -> tuple[list, list[int]]:
+    """``sql``'s tokens and each token's paren depth (an opening paren
+    counts inside its parens, a closing one outside)."""
+    from clickhouse_datafusion_spark.functions.rewrite import tokenize
+
+    toks, level, depth = tokenize(sql), [], 0
+    for t in toks:
+        if t.kind == "PUNCT" and t.text in ("(", ")"):
+            depth += 1 if t.text == "(" else -1
+        level.append(depth)
+    return toks, level
+
+
+def _word_at(toks: list, i: int):
+    """The upper-cased word at ``toks[i]``, else False."""
+    return i < len(toks) and toks[i].kind == "WORD" and toks[i].text.upper()
+
+
+def _next_sig_at(toks: list, i: int) -> int:
+    """The index of the first non-whitespace token after ``toks[i]``."""
+    j = i + 1
+    while j < len(toks) and toks[j].kind == "WS":
+        j += 1
+    return j
+
+
+def _lower_limit_by(sql: str) -> str:
+    """Lower a top-level ClickHouse ``ORDER BY … LIMIT [offset,] n BY
+    cols [LIMIT m]`` tail to Spark SQL, before the statement is parsed:
+    keep the first n rows per group in result order (``LIMIT offset, n
+    BY`` skips the group's first ``offset`` rows first). Returns ``sql``
+    unchanged when it has no LIMIT BY.
+
+    The query is wrapped as ``SELECT * EXCEPT (__rn_lb) FROM (SELECT
+    __q.*, row_number() OVER (PARTITION BY cols ORDER BY …) AS __rn_lb
+    FROM (<query>) __q) WHERE … ORDER BY … [LIMIT m]`` — one shuffle
+    keyed by the BY columns, never a self-join; the final ORDER BY is
+    top-k-able when a trailing LIMIT follows. The query is what follows
+    an INSERT head, or the first top-level SELECT/WITH of a statement
+    led by another keyword (EXPLAIN, CREATE … AS); otherwise the whole
+    statement. CH leaves un-ordered LIMIT BY layout-dependent; this
+    engine REQUIRES the ORDER BY so the kept rows are deterministic, and
+    because the query is wrapped, the ORDER BY must reference OUTPUT
+    columns (select-list names/aliases) — alias what you sort by.
 
     Token-level scan with paren-depth tracking, so ORDER BY / LIMIT
     inside subqueries or string literals never confuse the parse.
     """
-    from clickhouse_datafusion_spark.functions.rewrite import (
-        NUM, WORD, tokenize)
+    from clickhouse_datafusion_spark.functions.rewrite import NUM
 
-    toks = tokenize(sql)
-    depth = 0
-    level = []
-    for idx, t in enumerate(toks):
-        if t.kind == "PUNCT":
-            if t.text == "(":
-                depth += 1
-            elif t.text == ")":
-                depth -= 1
-        level.append(depth)
-
-    def _word(i):
-        return toks[i].kind == WORD and toks[i].text.upper()
-
-    def _next_sig(i):
-        j = i + 1
-        while j < len(toks) and toks[j].kind == "WS":
-            j += 1
-        return j
+    toks, level = _leveled_tokens(sql)
+    _word, _next_sig = partial(_word_at, toks), partial(_next_sig_at, toks)
 
     # LIMIT n BY cols  |  LIMIT offset, n BY cols (CH offset form)
     lb = None  # (limit_tok_idx, by_idx, offset, n)
@@ -1912,11 +2001,11 @@ def _parse_limit_by(sql: str):
                         off = int(toks[j].text)
                         j = m2
                         k = _next_sig(m2)
-                if k < len(toks) and _word(k) == "BY":
+                if _word(k) == "BY":
                     lb = (i, k, off, int(toks[j].text))
                     break
     if lb is None:
-        return None
+        return sql
     limit_i, by_i, offset, n = lb
 
     # BY-column list runs until a top-level LIMIT (trailing) or the end
@@ -1938,10 +2027,8 @@ def _parse_limit_by(sql: str):
     # the governing top-level ORDER BY must precede LIMIT BY
     order_i = None
     for i in range(limit_i):
-        if level[i] == 0 and _word(i) == "ORDER":
-            j = _next_sig(i)
-            if j < len(toks) and _word(j) == "BY":
-                order_i = (i, j)
+        if level[i] == 0 and _word(i) == "ORDER" and _word(_next_sig(i)) == "BY":
+            order_i = (i, _next_sig(i))
     if order_i is None:
         raise SqlFrontDoorError(
             "LIMIT BY requires a top-level ORDER BY: ClickHouse keeps "
@@ -1950,8 +2037,25 @@ def _parse_limit_by(sql: str):
             "deterministic form")
     o_start, o_by = order_i
     order_sql = "".join(t.text for t in toks[o_by + 1:limit_i]).strip()
-    base = "".join(t.text for t in toks[:o_start]).strip()
-    return base, order_sql, by_sql, offset, n, trailing
+
+    # where the query starts: past any INSERT head, or at the first
+    # SELECT/WITH of a statement another keyword leads
+    lead = _next_sig(-1)
+    heads = [i for i in range(o_start)
+             if level[i] == 0 and _word(i) == "INSERT"]
+    q_i = 0
+    if heads or (_word(lead) not in ("SELECT", "WITH")
+                 and toks[lead].text != "("):
+        q_i = next((i for i in range((heads or [lead])[-1] + 1, o_start)
+                    if level[i] == 0 and _word(i) in ("SELECT", "WITH")), 0)
+    head = "".join(t.text for t in toks[:q_i])
+    base = "".join(t.text for t in toks[q_i:o_start]).strip()
+    out = (f"{head}SELECT * EXCEPT (__rn_lb) FROM (SELECT __q.*, "
+           f"row_number() OVER (PARTITION BY {by_sql} ORDER BY "
+           f"{order_sql}) AS __rn_lb FROM ({base}) __q) "
+           f"WHERE __rn_lb > {offset} AND __rn_lb <= {offset + n} "
+           f"ORDER BY {order_sql}")
+    return out if trailing is None else f"{out} LIMIT {trailing}"
 
 
 class SqlFrontDoorError(ValueError):
@@ -1978,27 +2082,8 @@ def _dialect_transforms(sql: str) -> str:
       read-time collapse needs the ordering key, and silently ignoring
       FINAL would return duplicates the user asked to collapse.
     """
-    from clickhouse_datafusion_spark.functions.rewrite import tokenize
-
-    toks = tokenize(sql)
-    depth = 0
-    level = []
-    for t in toks:
-        if t.kind == "PUNCT":
-            if t.text == "(":
-                depth += 1
-            elif t.text == ")":
-                depth -= 1
-        level.append(depth)
-
-    def w(i):
-        return toks[i].kind == "WORD" and toks[i].text.upper()
-
-    def nxt(i):
-        j = i + 1
-        while j < len(toks) and toks[j].kind == "WS":
-            j += 1
-        return j
+    toks, level = _leveled_tokens(sql)
+    w, nxt = partial(_word_at, toks), partial(_next_sig_at, toks)
 
     # FORMAT <name> at the tail
     for i in range(len(toks)):
@@ -2009,8 +2094,7 @@ def _dialect_transforms(sql: str) -> str:
                 rest = [t for t in toks[k:] if t.kind != "WS"
                         and t.text != ";"]
                 if not rest:
-                    toks = toks[:i]
-                    level = level[:i]
+                    del toks[i:], level[i:]
                     break
 
     has_where = any(level[i] == 0 and w(i) == "WHERE"

@@ -602,7 +602,7 @@ def score_with_bigram_lm(df: DataFrame, bigrams: DataFrame,
     # multi-column hash join packs every probe into an UnsafeRow and
     # walks the generic UnsafeHashedRelation; a single non-null bigint
     # key takes the LongHashedRelation fast path instead. Measured at
-    # the 500k-doc corpus (tools/probe_t11_score_ledger_r13.py): the
+    # the 500k-doc corpus (BASELINE.md r13, t11's decade gap): the
     # (h1,h2) two-key probe costs 1.7-2.4 s over the 45M-pair stream,
     # the same probe keyed by xxhash64(h1,h2) costs 0.26-0.53 s — 5-7×.
     # So fold the pair key into one long HERE, derived from the SAME

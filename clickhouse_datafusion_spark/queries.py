@@ -2164,7 +2164,7 @@ def x54_limit_by(spark, sf):
     orders per status, compiled to a group-partitioned row_number (one
     BY-keyed shuffle, no self-join); the oracle is the window form it
     lowers to. Un-ordered LIMIT BY is rejected (engine.py
-    _parse_limit_by) — determinism is required, not optional."""
+    _lower_limit_by) — determinism is required, not optional."""
     eng = _engine(spark, sf)
     return eng.sql("""
         SELECT o_orderstatus, o_orderkey,

@@ -50,7 +50,7 @@ def get_spark(app_name: str = "clickhouse_datafusion_spark",
         # PySpark DataFrame/Column call in a conf lookup + PySparkCurrentOrigin
         # set/clear (3 extra py4j round trips) plus a Python stack walk. On
         # plan-construction-heavy operators that is 35-45% of the driver-side
-        # build time (tools/probe_build_overhead_r14.py: 8-entry build total
+        # build time (OPTIMIZATION_r14.md lever 1a: 8-entry build total
         # 1.6-2.4 s -> 1.0-1.4 s, three interleaved process pairs). Pure
         # driver overhead on any topology; the only cost is less detailed
         # call-site info in AnalysisException messages. Static conf.

@@ -32,7 +32,8 @@ DuckDB playing the remote ClickHouse server:
   translation of a shippable statement into the remote engine's SQL.
   Like the reference's analyzer, which walks DataFusion's LogicalPlan
   (``src/analyzer/function_pushdown.rs``), the gate decides from the
-  plan Spark's parser builds (:func:`parse_plan`, one ``toJSON`` call):
+  plan Spark's parser builds (:func:`parse_plan`, one ``parsePlan`` call per
+  statement, read through :func:`plan_nodes`):
   table references, a deny-by-default node-class allowlist
   (:data:`SHIPPABLE_NODES` — local rewrites like ``clickhouse(...)``
   wrappers, LIMIT BY, SAMPLE and system tables never reach it as
@@ -160,16 +161,19 @@ _NODE_NOTES = {"BitwiseXor": "^ is XOR locally, power remotely",
                "IntegralDivide": "div is a syntax error remotely"}
 
 
-def parse_plan(spark, sql: str) -> list[dict]:
-    """Every node of Spark's parsed, unresolved plan of ``sql`` in
-    pre-order — plan operators, expressions, subquery plans and CTE
-    bodies alike — each with its short class name (``cls``) and its
-    child subtrees (``kids``). One ``parsePlan(...).toJSON()`` py4j
-    call; raises whatever the parser or the serializer raises."""
-    flat = json.loads(spark._jsparkSession.sessionState().sqlParser()
-                      .parsePlan(sql).toJSON())
-    nodes: list[dict] = []
+def parse_plan(spark, sql: str):
+    """Spark's parsed, unresolved plan of ``sql`` (a JVM ``LogicalPlan``):
+    the one ``parsePlan`` call the engine makes per statement. Raises
+    whatever the parser raises."""
+    return spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
 
+
+def plan_nodes(plan) -> list[dict]:
+    """Every node of a parsed plan (:func:`parse_plan`) in pre-order —
+    plan operators, expressions, subquery plans and CTE bodies alike —
+    each with its short class name (``cls``) and its child subtrees
+    (``kids``). One ``toJSON`` py4j call; raises whatever the
+    serializer raises."""
     def nest(v):
         # toJSON flattens every tree to a pre-order list in which each
         # node is followed by its num-children subtrees
@@ -184,14 +188,35 @@ def parse_plan(spark, sql: str) -> list[dict]:
         def take():
             raw = next(it)
             node = {"cls": raw["class"].rsplit(".", 1)[-1]}
-            nodes.append(node)
             node.update((k, nest(x)) for k, x in raw.items())
             node["kids"] = [take() for _ in range(raw["num-children"])]
             return node
         return take()
 
-    nest(flat)
-    return nodes
+    return subtree_nodes(nest(json.loads(plan.toJSON())))
+
+
+def subtree_nodes(node: dict) -> list[dict]:
+    """``node`` and every node nested in it — children, CTE bodies,
+    subquery plans and plan-valued fields alike — in pre-order: the node
+    list of the statement ``node`` roots."""
+    out: list[dict] = []
+    todo = [node]
+    while todo:
+        v = todo.pop()
+        if isinstance(v, dict):
+            if "cls" in v:
+                out.append(v)
+            todo.extend(reversed(list(v.values())))
+        elif isinstance(v, list):
+            todo.extend(reversed(v))
+    return out
+
+
+def is_command(node: dict) -> bool:
+    """True for a command node (an INSERT, DDL, EXPLAIN, SET…): it
+    never ships, and analyzing it would run it."""
+    return node["cls"].endswith(("Statement", "Command"))
 
 
 def node_name(node: dict) -> str:
@@ -214,20 +239,6 @@ def plan_refs(nodes: list[dict]) -> set[str]:
             if n["cls"] == "UnresolvedRelation"} - cte_names(nodes)
 
 
-def _reachable(node: dict):
-    """``node`` and every node nested in it: children, CTE bodies and
-    subquery plans alike."""
-    todo = [node]
-    while todo:
-        v = todo.pop()
-        if isinstance(v, list):
-            todo.extend(v)
-        elif isinstance(v, dict):
-            if "cls" in v:
-                yield v
-            todo.extend(v.values())
-
-
 def cte_captures(nodes: list[dict], db: str) -> list[tuple[str, str]]:
     """``(cte, ref)`` pairs in which the relation ``ref`` = ``<db>.<cte>``
     would bind to the statement's CTE ``cte`` once its qualifier is
@@ -239,8 +250,8 @@ def cte_captures(nodes: list[dict], db: str) -> list[tuple[str, str]]:
             continue
         for c in w["cteRelations"]:
             ref = f"{db}.{c['_1']}".lower()
-            own = {id(n) for n in _reachable(c["_2"])}
-            out += [(c["_1"], ref) for n in _reachable(w)
+            own = {id(n) for n in subtree_nodes(c["_2"])}
+            out += [(c["_1"], ref) for n in subtree_nodes(w)
                     if n["cls"] == "UnresolvedRelation"
                     and id(n) not in own and node_name(n) == ref]
     return out
@@ -1252,7 +1263,7 @@ def unparse_for_remote(sql: str, nodes: list[dict], catalog: str, db: str,
                        reasons: list | None = None) -> str | None:
     """F6: translate the engine-surface SQL to the remote dialect, or
     None when the statement must stay local. ``nodes`` is the
-    statement's parsed plan (:func:`parse_plan`); every decision reads
+    statement's parsed plan (:func:`plan_nodes`); every decision reads
     it, and only the translation reads the text.
 
     Shippable means: every relation the statement reads (CTE names

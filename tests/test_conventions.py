@@ -40,3 +40,100 @@ def test_result_frames_built_from_arrow():
                       and n.func.attr == "createDataFrame"
                       and n not in allowed]
     assert not offenders, offenders
+
+
+# The statement regexes engine.py keeps, each with why the one parse
+# (engine._run_parsed) cannot route that form: Spark's parser rejects it,
+# or it belongs to a family Spark parses only in part, or it is a text
+# lowering that runs before the parse. A statement kind Spark parses is
+# dispatched from its plan and must not come back as a regex here.
+_KEPT_ENGINE_REGEXES = {
+    "_EXPLAIN_ANALYZE_RE": "Spark's parser rejects EXPLAIN ANALYZE",
+    "_OPTIMIZE_RE": "Spark's parser rejects OPTIMIZE TABLE",
+    "_ALTER_MUT_RE": "Spark's parser rejects ALTER TABLE … UPDATE/DELETE",
+    "_RENAME_RE": "Spark's parser rejects RENAME TABLE",
+    "_EXISTS_RE": "Spark's parser rejects EXISTS [TABLE] t",
+    "_CREATE_MV_RE": "the materialized-view family stays together: "
+                     "CREATE MATERIALIZED VIEW parses, the rest does not",
+    "_REFRESH_MV_RE": "Spark's parser rejects REFRESH MATERIALIZED VIEW",
+    "_DROP_MV_RE": "Spark's parser rejects DROP MATERIALIZED VIEW",
+    "_SHOW_MV_RE": "Spark's parser rejects SHOW MATERIALIZED VIEWS",
+    "_REMOTE_CREATE_RE": "a remote CREATE TABLE's column list is in the "
+                         "remote dialect, which Spark's parser rejects",
+    "_DIALECT_RE": "text lowering: Spark's parser rejects PREWHERE, "
+                   "WITH TOTALS, FORMAT, GLOBAL and FINAL",
+    "_SAMPLE_RE": "text lowering: Spark's parser rejects FROM t SAMPLE f",
+    "_SYSTEM_TABLE_RE": "text lowering of the system.* tables",
+    "_SYS_TABLES_RE": "text lowering of system.tables",
+    "_SYS_DATABASES_RE": "text lowering of system.databases",
+    "_SYS_ONE_RE": "text lowering of system.one",
+    "_STRING_LITERAL_SPLIT": "masks string literals from the native-table "
+                             "routing substitution",
+}
+
+# one statement per kept statement form, each rejected by Spark's parser
+_REJECTED_FORMS = {
+    "_EXPLAIN_ANALYZE_RE": "EXPLAIN ANALYZE SELECT 1",
+    "_OPTIMIZE_RE": "OPTIMIZE TABLE t FINAL",
+    "_ALTER_MUT_RE": "ALTER TABLE t DELETE WHERE 1",
+    "_RENAME_RE": "RENAME TABLE a TO b",
+    "_EXISTS_RE": "EXISTS TABLE t",
+    "_REFRESH_MV_RE": "REFRESH MATERIALIZED VIEW mv",
+    "_DROP_MV_RE": "DROP MATERIALIZED VIEW IF EXISTS mv",
+    "_SHOW_MV_RE": "SHOW MATERIALIZED VIEWS",
+    "_REMOTE_CREATE_RE": "CREATE TABLE remote.t (a VARCHAR)",
+    "_DIALECT_RE": "SELECT a FROM t PREWHERE a > 1",
+    "_SAMPLE_RE": "SELECT a FROM t SAMPLE 0.1",
+}
+
+
+def test_engine_regexes_are_the_kept_set():
+    """``engine.py`` compiles exactly the kept regexes and spells no
+    other pattern inline: no statement kind Spark's parser accepts goes
+    back to lexical routing."""
+    import ast
+
+    tree = ast.parse((PKG / "engine.py").read_text())
+    named = [n for n in ast.walk(tree) if isinstance(n, ast.Assign)
+             and isinstance(n.value, ast.Call)
+             and isinstance(n.value.func, ast.Attribute)
+             and n.value.func.attr == "compile"]
+    compiled = {t.id for n in named for t in n.targets
+                if isinstance(t, ast.Name)}
+    assert compiled == set(_KEPT_ENGINE_REGEXES)
+    assert all(_KEPT_ENGINE_REGEXES.values())
+    # nor inline: no ``re.*`` call spells its pattern in place, and no
+    # call at all takes a pattern anchored at the statement's start
+    kept = {id(n.value) for n in named}
+    inline = []
+    for n in ast.walk(tree):
+        if not (isinstance(n, ast.Call) and n.args) or id(n) in kept:
+            continue
+        arg = n.args[0]
+        if isinstance(arg, ast.JoinedStr):
+            arg = arg.values[0] if arg.values else None
+        if not (isinstance(arg, ast.Constant) and isinstance(arg.value, str)):
+            continue
+        on_re = (isinstance(n.func, ast.Attribute)
+                 and isinstance(n.func.value, ast.Name)
+                 and n.func.value.id == "re")
+        if on_re or arg.value.startswith(("^", r"\A")):
+            inline.append((n.lineno, ast.unparse(n.func)))
+    assert inline == []
+
+
+def test_kept_statement_forms_are_rejected_by_spark(spark):
+    """Each kept statement form matches its regex and is one Spark's
+    parser rejects — the reason it cannot route from the parse."""
+    from clickhouse_datafusion_spark import engine
+
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    for name, stmt in _REJECTED_FORMS.items():
+        rx = getattr(engine, name, None) or getattr(
+            engine.ClickHouseSparkEngine, name)
+        assert rx.search(stmt), name
+        try:
+            parser.parsePlan(stmt)
+        except Exception:
+            continue
+        raise AssertionError(f"{name}: Spark parses {stmt!r}")

@@ -22,6 +22,7 @@ from hypothesis import strategies as st
 from clickhouse_datafusion_spark.sources.remote_engine import (
     RemoteEngine,
     parse_plan,
+    plan_nodes,
     plan_refs,
     unparse_for_remote,
 )
@@ -46,8 +47,8 @@ def _rows(df):
 
 def _unparse(spark, sql, tables, **kw):
     """The F6 gate over ``sql``'s parsed plan, remote db ``remote``."""
-    return unparse_for_remote(sql, parse_plan(spark, sql), "clickhouse",
-                              "remote", tables, **kw)
+    return unparse_for_remote(sql, plan_nodes(parse_plan(spark, sql)),
+                              "clickhouse", "remote", tables, **kw)
 
 
 def test_whole_subtree_remote_join_matches_local(fed, spark):
@@ -316,7 +317,7 @@ def test_comma_join_mixed_refs_never_ship(fed, spark):
     comma-separated FROM list must be seen by the gate — a mixed
     remote,local implicit join never ships."""
     def refs(sql):
-        return plan_refs(parse_plan(spark, sql))
+        return plan_refs(plan_nodes(parse_plan(spark, sql)))
 
     assert refs("SELECT * FROM orders o, customer c, nation "
                 "WHERE o.k = c.k") == {"orders", "customer", "nation"}
@@ -1753,10 +1754,10 @@ def test_insert_arrow_batches_midstream_failure_raises():
 def test_cte_headed_insert_never_ships_or_runs_in_gate(fed, spark, tmp_path,
                                                       monkeypatch):
     """A CTE-headed INSERT is a command, not a read: the dry run refuses
-    it before any analysis (analyzing an INSERT runs it), and the front
-    door raises before a row lands — it must not ship down the read
-    path nor fall back onto the local twin. The supported form,
-    ``INSERT INTO <t> WITH … SELECT …``, lands exactly one remote row."""
+    it before any analysis (analyzing an INSERT runs it) and lands no
+    row. Through the front door it must not ship down the read path nor
+    fall back onto the local twin: it lands exactly one remote row, as
+    its ``INSERT INTO <t> WITH … SELECT …`` form does."""
     eng, remote = fed
     remote.create_table("cte_w", "a BIGINT")
     spark.sql(f"CREATE TABLE cte_w (a BIGINT) USING parquet "
@@ -1769,22 +1770,21 @@ def test_cte_headed_insert_never_ships_or_runs_in_gate(fed, spark, tmp_path,
 
     q = ("WITH c AS (SELECT 7 AS a) "
          "INSERT INTO clickhouse.remote.cte_w SELECT a FROM c")
-    form = "INSERT INTO remote.cte_w WITH … SELECT …"
     try:
         analyzed = []
         monkeypatch.setattr(spark, "sql", lambda *a, **k: analyzed.append(a))
         d = eng.remote_decision(q)
         monkeypatch.undo()
-        assert not d["ships"] and form in d["reason"]
+        assert not d["ships"] and "command, not a query" in d["reason"]
         assert not analyzed             # a command is never analyzed
         assert counts() == (0, 0)
-        with pytest.raises(ValueError, match="INSERT INTO remote.cte_w WITH"):
-            eng.sql(q)
-        assert counts() == (0, 0)
+        assert eng.sql(q).collect()[0]["count"] == 1
+        assert eng.last_remote_insert is not None
+        assert counts() == (1, 0)
         eng.sql("INSERT INTO clickhouse.remote.cte_w "
                 "WITH c AS (SELECT 7 AS a) SELECT a FROM c")
         assert eng.last_remote_insert is not None
-        assert counts() == (1, 0)
+        assert counts() == (2, 0)
     finally:
         remote.drop_table("cte_w")
         spark.sql("DROP TABLE IF EXISTS cte_w")
@@ -1956,3 +1956,253 @@ def test_gate_verdicts_are_metamorphic(fed, shape, k, lit, bad, cte):
                        ("sub", f" AND {bad} = {bad}")):
         assert not ships(**{slot: text}), slot
     assert not ships("cte", body=f", {bad} AS z")
+
+
+# -- the parsed dispatch: one parse routes every statement -------------
+
+@pytest.fixture
+def route_tables(fed, spark, tmp_path):
+    """A writable remote table ``rw (a BIGINT)`` and a local parquet
+    table ``lw (a BIGINT)``; ``landed()`` counts both."""
+    eng, remote = fed
+    remote.create_table("rw", "a BIGINT")
+    spark.sql(f"CREATE TABLE lw (a BIGINT) USING parquet "
+              f"LOCATION '{tmp_path / 'lw'}'")
+
+    def landed():
+        return (remote.execute("SELECT CAST(count(*) AS BIGINT) FROM rw")
+                .column(0)[0].as_py(),
+                spark.sql("SELECT count(*) FROM lw").first()[0])
+    try:
+        yield landed
+    finally:
+        remote.drop_table("rw", if_exists=True)
+        remote.drop_table("rw2", if_exists=True)
+        spark.sql("DROP TABLE IF EXISTS lw")
+
+
+def _native_dir(tmp_path) -> str:
+    """A parquet directory whose path holds a ')'."""
+    import shutil
+
+    d = tmp_path / "a)b"
+    d.mkdir()
+    shutil.copy(f"{SF_SMOKE}/nation.parquet", d / "part-0.parquet")
+    return str(d)
+
+
+@pytest.mark.parametrize("case", [
+    "cte_headed_local_insert", "comment_led_remote_insert",
+    "block_comment_catalog_insert", "backticked_remote_insert",
+    "show_tables_backticked", "show_tables_comment_led",
+    "comment_led_remote_ctas", "comment_led_explain",
+    "native_path_with_paren", "native_location_clause"])
+def test_parsed_dispatch_routes_every_spelling(fed, spark, tmp_path,
+                                               route_tables, monkeypatch,
+                                               case):
+    """Each spelling reaches the handler its parsed plan names: a
+    statement's kind and target come from Spark's parser, so leading
+    comments, a leading WITH, backticks and the catalog prefix change
+    nothing. Each case misrouted under the leading-keyword regexes."""
+    from clickhouse_datafusion_spark import sink
+
+    eng, remote = fed
+    inserts = {
+        "cte_headed_local_insert":
+            ("WITH c AS (SELECT 3 AS a) INSERT INTO lw SELECT a FROM c",
+             (0, 1)),
+        "comment_led_remote_insert":
+            ("-- note\nINSERT INTO remote.rw SELECT 1", (1, 0)),
+        "block_comment_catalog_insert":
+            ("/* n */ INSERT INTO clickhouse.remote.rw SELECT 1", (1, 0)),
+        "backticked_remote_insert":
+            ("INSERT INTO `remote`.`rw` SELECT 1", (1, 0)),
+    }
+    if case in inserts:
+        stmt, delta = inserts[case]
+        locks = []
+        real = sink._table_write_lock
+        monkeypatch.setattr(sink, "_table_write_lock",
+                            lambda *a: locks.append(a) or real(*a))
+        out = eng.sql(stmt)
+        assert out.columns == ["count"] and out.first()["count"] == 1
+        assert route_tables() == delta
+        # a local row lands under the table's write lock; a remote one
+        # through the remote write path
+        assert bool(locks) == (delta == (0, 1))
+        assert (eng.last_remote_insert is not None) == (delta == (1, 0))
+    elif case.startswith("show_tables"):
+        stmt = ("SHOW TABLES FROM `remote`" if case.endswith("backticked")
+                else "-- x\nSHOW TABLES FROM remote")
+        rows = {(r.namespace, r.tableName, r.engine)
+                for r in eng.sql(stmt).collect()}
+        assert ("remote", "rw", "REMOTE") in rows
+        assert {r[2] for r in rows} == {"REMOTE"}
+    elif case == "comment_led_remote_ctas":
+        eng.sql("-- x\nCREATE TABLE remote.rw2 AS SELECT 1 AS a")
+        assert remote.execute("SELECT a FROM rw2").column(0).to_pylist() \
+            == [1]
+    elif case == "comment_led_explain":
+        plan = eng.sql("-- x\nEXPLAIN SELECT count(*) FROM remote.orders"
+                       ).first()[0]
+        assert plan.startswith("== Remote Federation ==\nRemoteEngineExec")
+    else:
+        path = _native_dir(tmp_path)
+        if case == "native_location_clause":
+            # Spark's parser keeps LOCATION '…' and rejects the reserved
+            # OPTIONS (location …) spelling with its own error
+            from pyspark.errors import ParseException
+
+            with pytest.raises(ParseException, match="LOCATION clause"):
+                eng.sql("CREATE TABLE main.nt USING clickhouse_native "
+                        f"OPTIONS (location '{path}')")
+            where = f"LOCATION '{path}'"
+        else:
+            where = f"OPTIONS (path '{path}')"
+        eng.sql(f"CREATE TABLE main.nt USING clickhouse_native {where}")
+        try:
+            assert eng.sql("SELECT count(*) FROM main.nt").first()[0] == \
+                spark.read.parquet(path).count()
+        finally:
+            eng.sql("DROP TABLE main.nt")
+
+
+def test_multi_insert_into_remote_db_raises_before_any_row(
+        fed, spark, route_tables, tmp_path):
+    """A multi-table INSERT parses to a ``Union`` of INSERTs, which the
+    dispatch does not route: when one of them targets the remote db the
+    statement raises before any row lands — neither remotely nor in a
+    same-named local table, which its qualifier-stripped local run
+    would write. EXPLAIN of a remote INSERT raises the same way."""
+    eng, _ = fed
+    spark.sql(f"CREATE TABLE rw (a BIGINT) USING parquet "
+              f"LOCATION '{tmp_path / 'rw_twin'}'")
+    try:
+        for stmt in (
+                "FROM nation INSERT INTO remote.rw SELECT n_regionkey "
+                "INSERT INTO remote.rw SELECT n_nationkey",
+                "FROM nation INSERT INTO lw SELECT n_regionkey "
+                "INSERT INTO clickhouse.remote.rw SELECT n_nationkey",
+                "EXPLAIN INSERT INTO remote.rw SELECT 1"):
+            with pytest.raises(ValueError, match="must be its own statement"):
+                eng.sql(stmt)
+            assert route_tables() == (0, 0), stmt
+            assert spark.sql("SELECT count(*) FROM rw").first()[0] == 0
+    finally:
+        spark.sql("DROP TABLE IF EXISTS rw")
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(remote_target=st.booleans(), with_first=st.booleans(),
+       comment=st.sampled_from(["", "-- c\n", "/* c */ "]),
+       ticks=st.booleans(),
+       case=st.sampled_from([str.lower, str.upper, str.title]),
+       v=st.integers(0, 10 ** 6))
+def test_insert_route_invariant_under_spelling(fed, spark, route_tables,
+                                               remote_target, with_first,
+                                               comment, ticks, case, v):
+    """Comments, backticks, keyword case and the WITH's place around the
+    INSERT head change neither an INSERT's route nor the row it lands."""
+    eng, remote = fed
+    table = ("`remote`.`rw`" if ticks else "remote.rw") if remote_target \
+        else ("`lw`" if ticks else "lw")
+    cte = f"WITH c AS (SELECT {v} AS a)"
+    stmt = (f"{cte} INSERT INTO {table} SELECT a FROM c" if with_first
+            else f"INSERT INTO {table} {cte} SELECT a FROM c")
+    before = route_tables()
+    out = eng.sql(comment + case(stmt)).first()["count"]
+    after = route_tables()
+    assert out == 1
+    assert (after[0] - before[0], after[1] - before[1]) == (
+        (1, 0) if remote_target else (0, 1))
+    assert (eng.last_remote_insert is not None) == remote_target
+    got = (remote.execute(f"SELECT count(*) FROM rw WHERE a = {v}")
+           .column(0)[0].as_py() if remote_target
+           else spark.sql(f"SELECT count(*) FROM lw WHERE a = {v}").first()[0])
+    assert got >= 1
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(comment=st.sampled_from(["", "-- c\n", "/* c */ "]),
+       ticks=st.booleans(),
+       case=st.sampled_from([str.lower, str.upper, str.title]))
+def test_command_route_invariant_under_spelling(fed, route_tables, comment,
+                                                ticks, case):
+    """The same spellings leave SHOW TABLES and EXPLAIN aimed at the
+    remote db on their remote handlers. (The EXPLAINed read itself stays
+    local when backticked: the gate refuses a backquote.)"""
+    eng, _ = fed
+    db = "`remote`" if ticks else "remote"
+    shown = {r[1] for r in eng.sql(
+        comment + case(f"SHOW TABLES FROM {db}")).collect()}
+    assert {"orders", "rw"} <= shown
+    plan = eng.sql(comment + case(
+        f"EXPLAIN SELECT count(*) FROM {db}.orders")).first()[0]
+    assert plan.startswith("== Remote Federation ==\n")
+    assert ("RemoteEngineExec" in plan) == (not ticks)
+
+
+def test_one_parse_per_statement(fed, route_tables, monkeypatch):
+    """The front door parses each statement once, through
+    ``remote_engine.parse_plan``: a shipped read, a refused read with a
+    WITH and a remote qualifier (its local form reads the same plan), a
+    local INSERT and a whole-ship and a spool remote INSERT (their
+    sources are subtrees of the INSERT's plan). EXPLAIN ANALYZE rewrites
+    its statement once."""
+    from clickhouse_datafusion_spark.sources import remote_engine
+
+    eng, _ = fed
+    parses = []
+    monkeypatch.setattr(remote_engine, "parse_plan",
+                        lambda *a: parses.append(a) or parse_plan(*a))
+    for stmt, shipped in (
+            ("SELECT CAST(count(*) AS BIGINT) AS n FROM remote.orders",
+             True),
+            ("WITH x AS (SELECT o_totalprice FROM remote.orders) "
+             "SELECT log(max(o_totalprice)) AS l FROM x", False),
+            ("INSERT INTO lw SELECT o_orderkey FROM orders", None),
+            ("INSERT INTO remote.rw SELECT o_orderkey FROM remote.orders",
+             True),
+            ("INSERT INTO remote.rw SELECT CAST(log(o_orderkey) AS BIGINT) "
+             "FROM remote.orders", False)):
+        parses.clear()
+        eng.sql(stmt).collect()
+        assert len(parses) <= 1, stmt
+        if shipped is not None:
+            assert (eng.last_remote_sql is not None) == shipped, stmt
+    rewrites = []
+    real = eng.rewrite
+    monkeypatch.setattr(eng, "rewrite",
+                        lambda q: rewrites.append(q) or real(q))
+    eng.sql("EXPLAIN ANALYZE INSERT INTO lw SELECT 1")
+    assert len(rewrites) == 1
+
+
+def test_limit_by_over_remote_qualified_name_runs_on_twin(fed, spark):
+    """LIMIT BY lowers to Spark SQL before the parse, so a remote-
+    qualified LIMIT BY passes the gate (refused: the lowering's
+    ``* EXCEPT`` is not proven shared) and runs on the local twin."""
+    eng, _ = fed
+    got = eng.sql("SELECT n_regionkey AS a, n_name "
+                  "FROM clickhouse.remote.nation "
+                  "ORDER BY a, n_name LIMIT 1 BY a").collect()
+    assert eng.last_remote_sql is None
+    assert "allowlist" in eng.last_remote_refusal
+    want = spark.sql(
+        "SELECT n_regionkey AS a, min(n_name) AS n_name FROM nation "
+        "GROUP BY n_regionkey ORDER BY a").collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert len(got) == 5
+
+
+def test_limit_by_sourced_remote_insert_lands_one_row_per_group(
+        fed, route_tables):
+    """A remote INSERT whose source has a LIMIT BY lands one row per
+    group, through the local source path."""
+    eng, _ = fed
+    out = eng.sql("INSERT INTO remote.rw SELECT n_regionkey AS a "
+                  "FROM nation ORDER BY a LIMIT 1 BY a")
+    assert out.first()["count"] == 5
+    assert route_tables() == (5, 0)
