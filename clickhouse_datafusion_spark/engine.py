@@ -16,8 +16,8 @@
 3. parses the statement ONCE with Spark's parser and dispatches on the
    plan's root, as the reference plans each statement from one parse
    (src/context.rs:258-304): INSERTs go to the remote write path or the
-   local sink (an INSERT into the remote db that is not the root, as in a
-   multi-table INSERT, raises), the remote db's DDL runs remotely, a query
+   local sink (an INSERT that is not the root, as in a multi-table INSERT,
+   raises), the remote db's DDL runs remotely, a query
    passes the federation gate and either ships whole to the attached
    remote engine or runs through ``spark.sql`` — Catalyst provides
    analyze/optimize (predicate pushdown, column pruning, limit pushdown,
@@ -40,7 +40,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from clickhouse_datafusion_spark.catalog import ClickHouseCatalog, DEFAULT_CATALOG
 from clickhouse_datafusion_spark.fragments import sql_ident
-from clickhouse_datafusion_spark.functions.rewrite import rewrite_sql
+from clickhouse_datafusion_spark.functions.rewrite import (
+    BTICK, NUM, PUNCT, QIDENT, WORD, next_sig, prev_sig, rewrite_name_chains,
+    rewrite_sql, tokenize, word_at)
 from clickhouse_datafusion_spark.sink import arrow_frame
 
 
@@ -254,9 +256,16 @@ class ClickHouseSparkEngine:
         """Gate-only dry run: would ``query`` ship to the attached
         remote engine, and if not, why not — the reference analyzer's
         federation diagnostics surfaced as an API (``EXPLAIN`` prepends
-        the same verdict to the plan text). Never executes anything."""
-        reasons: list = []
-        shipped, _ = self._remote_gate(self.rewrite(query), reasons=reasons)
+        the same verdict to the plan text). Never executes anything.
+        It applies :meth:`sql`'s query lowerings first, so both read the
+        same text; a lowering that raises in :meth:`sql` is the reason
+        here."""
+        stmt, reasons = self.rewrite(query), []
+        try:
+            stmt = self._lower_query(stmt)
+        except SqlFrontDoorError as e:
+            return {"ships": False, "remote_sql": None, "reason": str(e)}
+        shipped, _ = self._remote_gate(stmt, reasons=reasons)
         return {"ships": shipped is not None,
                 "remote_sql": shipped,
                 "reason": "; ".join(reasons) or None}
@@ -352,17 +361,19 @@ class ClickHouseSparkEngine:
         precondition for the driver-only schema analysis (avoids a
         spurious JVM TABLE_OR_VIEW_NOT_FOUND error log when no twin
         views were registered)."""
+        tables = self._remote.tables()
         try:
-            return all(
-                self.spark.catalog.tableExists(self._local_form(r, ()))
+            return all(self.spark.catalog.tableExists(
+                b if (b := self._remote_bare(r)) in tables else r)
                 for r in refs)
         except Exception:  # pragma: no cover - defensive
             return False
 
     def _local_form(self, stmt: str, nodes) -> str:
         """The statement as the LOCAL fallback would run it: remote db
-        qualifiers stripped (literal-safe) so twin views resolve — the
-        exact rewrite :meth:`sql` applies when the gate refuses. Raises
+        qualifiers stripped (:func:`remote_engine.strip_remote_qualifiers`,
+        the shipped form's rule) so twin views resolve — the exact
+        rewrite :meth:`sql` applies when the gate refuses. Raises
         ValueError where a stripped name would bind to one of the
         statement's CTEs instead of its twin (``WITH customer AS (…)
         … FROM remote.customer``); inside that CTE's own body the name
@@ -370,14 +381,10 @@ class ClickHouseSparkEngine:
         plan (:func:`remote_engine.plan_nodes`)."""
         from clickhouse_datafusion_spark.sources import remote_engine as rx
 
-        local = rx.sub_outside_literals(
-            rf"\b{re.escape(self._remote_db)}\.(\w+)\b",
-            lambda m: m.group(1)
-            if m.group(1).lower() in self._remote.tables()
-            else m.group(0),
-            stmt)
+        tables = self._remote.tables()
+        local = rx.strip_remote_qualifiers(
+            stmt, next(iter(self._catalog_names)), self._remote_db, tables)
         if local != stmt:
-            tables = self._remote.tables()
             for cte, ref in rx.cte_captures(nodes, self._remote_db):
                 if cte.lower() in tables:
                     raise ValueError(
@@ -1260,18 +1267,8 @@ class ClickHouseSparkEngine:
         The row-count form ``SAMPLE n`` is rejected toward
         sampling.uniform_sample_k — exact-k needs a global rank, not a
         per-row filter."""
-        from clickhouse_datafusion_spark.functions.rewrite import (
-            BTICK, NUM, PUNCT, QIDENT, WORD, tokenize)
-
         toks = tokenize(sql)
-
-        def sig_prev(i):
-            j = i - 1
-            while j >= 0 and toks[j].kind == "WS":
-                j -= 1
-            return j
-
-        sig_next = partial(_next_sig_at, toks)
+        sig_prev, sig_next = partial(prev_sig, toks), partial(next_sig, toks)
 
         def dotted_start(end):
             # walk `db . t` / backticked segments leftward from `end`
@@ -1371,9 +1368,9 @@ class ClickHouseSparkEngine:
     def _run(self, query: str) -> tuple[bool, DataFrame]:
         """Run one front-door statement; returns ``(is_insert, result)``.
         The ClickHouse-only statement forms Spark's parser rejects are
-        matched first, then the text lowerings (dialect, SAMPLE, system
-        tables, LIMIT BY) apply, and everything else is parsed once and
-        dispatched from its plan (:meth:`_run_parsed`)."""
+        matched first, then the text lowerings (:meth:`_lower_query`,
+        and the ``system.*`` tables) apply, and everything else is parsed
+        once and dispatched from its plan (:meth:`_run_parsed`)."""
         # federation observability resets for EVERY statement kind, so a
         # probe after an INSERT/DDL never reads a stale prior answer
         self.last_remote_sql = None
@@ -1405,10 +1402,7 @@ class ClickHouseSparkEngine:
                      or self.spark.catalog.tableExists(key))
             return False, arrow_frame(self.spark, [(1 if found else 0,)],
                                       "result int")
-        if _DIALECT_RE.search(stmt):
-            stmt = _dialect_transforms(stmt)
-        if _SAMPLE_RE.search(stmt):
-            stmt = self._lower_sample(stmt)
+        stmt = self._lower_query(stmt)
         mv = _CREATE_MV_RE.match(stmt)
         if mv:
             return False, self._create_mat_view(
@@ -1427,9 +1421,17 @@ class ClickHouseSparkEngine:
             created = self._try_remote_create(stmt)
             if created is not None:
                 return False, created
-        if _SYSTEM_TABLE_RE.search(stmt):
-            stmt = self._route_system_tables(stmt)
-        return self._run_parsed(_lower_limit_by(stmt))
+        return self._run_parsed(self._route_system_tables(stmt))
+
+    def _lower_query(self, stmt: str) -> str:
+        """The query lowerings, which :meth:`sql` and the dry run
+        (:meth:`remote_decision`) both apply to the rewritten text: the
+        ClickHouse dialect clauses, SAMPLE and LIMIT BY."""
+        if _DIALECT_RE.search(stmt):
+            stmt = _dialect_transforms(stmt)
+        if _SAMPLE_RE.search(stmt):
+            stmt = self._lower_sample(stmt)
+        return _lower_limit_by(stmt)
 
     def _run_parsed(self, stmt: str) -> tuple[bool, DataFrame]:
         """Parse ``stmt`` ONCE and dispatch on its plan's root, looking
@@ -1460,9 +1462,10 @@ class ClickHouseSparkEngine:
             df = self._run_command(kind, stmt, root, nodes)
             if df is not None:
                 return False, df
-        if self._remote is not None:
+        if self._remote is not None or kind == "Union":
             nodes = nodes or rx.plan_nodes(plan)
-            self._refuse_nested_remote_insert(nodes)
+            self._refuse_nested_insert(kind, nodes)
+        if self._remote is not None:
             df = self._try_remote_exec(stmt, nodes)
             if df is not None:
                 return False, df
@@ -1471,23 +1474,28 @@ class ClickHouseSparkEngine:
         # TableProvider scan when the analyzer cannot push the subtree)
         return False, self._run_local(stmt, nodes)
 
-    def _refuse_nested_remote_insert(self, nodes: list) -> None:
-        """Raise for an INSERT into the remote db that is not the
-        statement's root (a multi-table ``FROM s INSERT INTO … INSERT
-        INTO …`` parses to a ``Union`` of them; EXPLAIN holds one too):
-        only a root INSERT reaches the remote write path, and the local
-        run would strip the qualifier and write, or explain, a
+    def _refuse_nested_insert(self, kind: str, nodes: list) -> None:
+        """Raise, before any row lands, for an INSERT in ``nodes`` under
+        a root of class ``kind``: a multi-table ``FROM s INSERT INTO …
+        INSERT INTO …`` parses to a ``Union`` of them, which would run
+        as a query outside the sink's table lock and return no count.
+        Only an EXPLAIN may hold an INSERT, and not one into the remote
+        db: the local run would strip the qualifier and explain a
         same-named local table."""
         from clickhouse_datafusion_spark.sources import remote_engine as rx
 
         for n in nodes:
-            t = n["table"] if n["cls"] == "InsertIntoStatement" else {}
-            if (t.get("cls") == "UnresolvedRelation"
-                    and self._remote_bare(rx.node_name(t)) is not None):
+            if n["cls"] != "InsertIntoStatement":
+                continue
+            t = n["table"]
+            name = rx.node_name(t) if t["cls"] == "UnresolvedRelation" \
+                else t["cls"]
+            if kind != "ExplainCommand" or (
+                    self._remote is not None
+                    and self._remote_bare(name) is not None):
                 raise ValueError(
-                    f"an INSERT into remote table {rx.node_name(t)} must "
-                    "be its own statement: write one INSERT … SELECT … "
-                    "per target")
+                    f"an INSERT into {name} must be its own statement: "
+                    "write one INSERT … SELECT … per target")
 
     def _run_command(self, kind: str, stmt: str, root, nodes: list):
         """The parsed commands the engine answers itself (``root`` is
@@ -1580,26 +1588,32 @@ class ClickHouseSparkEngine:
         ``system.databases`` (name), and ``system.one`` (the 1-row dual
         with ``dummy = 0`` that CH clients probe). The information_schema
         surface (O11) remains the ANSI route; this is the spelling pasted
-        CH queries use."""
+        CH queries use. Only the name chains ``system.<t>`` are routed
+        (:func:`rewrite.rewrite_name_chains`), so a literal or comment
+        spelling one stays as written."""
+        if "system" not in sql.lower():
+            return sql
         spark = self.spark
-        if _SYS_ONE_RE.search(sql):
-            sql = _SYS_ONE_RE.sub(" (SELECT 0 AS dummy) ", sql)
-        if _SYS_TABLES_RE.search(sql):
-            rows = []
-            for db in spark.catalog.listDatabases():
-                for tbl in spark.catalog.listTables(db.name):
-                    rows.append((tbl.namespace[0] if tbl.namespace else "",
-                                 tbl.name, tbl.tableType or "VIEW"))
-            arrow_frame(spark, rows,
-                        "database string, name string, engine string"
-                        ).createOrReplaceTempView("_ch_system_tables")
-            sql = _SYS_TABLES_RE.sub(" _ch_system_tables ", sql)
-        if _SYS_DATABASES_RE.search(sql):
-            rows = [(db.name,) for db in spark.catalog.listDatabases()]
-            arrow_frame(spark, rows, "name string"
-                        ).createOrReplaceTempView("_ch_system_databases")
-            sql = _SYS_DATABASES_RE.sub(" _ch_system_databases ", sql)
-        return sql
+
+        def route(parts, _kw):
+            if parts == ["system", "one"]:
+                return 2, "(SELECT 0 AS dummy)"
+            if parts == ["system", "tables"]:
+                rows = [(tbl.namespace[0] if tbl.namespace else "",
+                         tbl.name, tbl.tableType or "VIEW")
+                        for db in spark.catalog.listDatabases()
+                        for tbl in spark.catalog.listTables(db.name)]
+                schema = "database string, name string, engine string"
+            elif parts == ["system", "databases"]:
+                rows = [(db.name,) for db in spark.catalog.listDatabases()]
+                schema = "name string"
+            else:
+                return None
+            view = f"_ch_system_{parts[1]}"
+            arrow_frame(spark, rows, schema).createOrReplaceTempView(view)
+            return 2, view
+
+        return rewrite_name_chains(sql, route)
 
     def table(self, name: str) -> DataFrame:
         """Accepts ``db.table`` or ``clickhouse.db.table`` (prefix stripped)."""
@@ -1667,29 +1681,25 @@ class ClickHouseSparkEngine:
         """Rewrite *table references* to native-DDL tables into their
         connector views.
 
-        The substitution fires only (a) outside single-quoted string
-        literals and (b) in table-reference position — immediately after
-        FROM / JOIN / TABLE — so columns, aliases, and string contents that
-        happen to share the table's (bare) name are left untouched. Comma
-        FROM-lists are intentionally not rewritten; use explicit JOINs with
-        native tables.
+        Only a name chain (:func:`rewrite.rewrite_name_chains`) right
+        after FROM / JOIN / TABLE is a table reference, and it routes
+        when its parts, backticked or not, spell a native table's
+        ``db.t`` or bare name. String literals (``''`` and ``\\'``
+        escapes alike), double-quoted spans, comments, columns and
+        aliases that share the name are left untouched. Comma FROM-lists
+        are intentionally not rewritten; use explicit JOINs with native
+        tables.
         """
         if not self._native_tables:
             return q
-        # split on single-quoted literals ('' is the embedded-quote escape);
-        # literals land at odd indices and are passed through verbatim
-        segments = _STRING_LITERAL_SPLIT.split(q)
-        for key, view in self._native_tables.items():
-            name_pat = r"`?" + r"`?\s*\.\s*`?".join(
-                re.escape(p) for p in key.split(".")) + r"`?"
-            pat = (r"\b(?P<kw>from|join|table)(?P<ws>\s+)(?P<name>"
-                   + name_pat + r")(?![\w.`$])")
-            segments = [
-                re.sub(pat, lambda m: m.group("kw") + m.group("ws") + view,
-                       s, flags=re.IGNORECASE)
-                if i % 2 == 0 else s
-                for i, s in enumerate(segments)]
-        return "".join(segments)
+
+        def route(parts, kw):
+            view = self._native_tables.get(".".join(parts))
+            if view is None or kw not in ("from", "join", "table"):
+                return None
+            return len(parts), view
+
+        return rewrite_name_chains(q, route)
 
     def _route_insert_source(self, q: str, ins) -> str:
         """Route native-table references everywhere in an INSERT except
@@ -1776,8 +1786,6 @@ def _skip_keywords(sql: str, at: int, words) -> tuple[int, list[str]]:
     """Skip whitespace, comments and the keywords ``words`` from offset
     ``at`` of ``sql``: the offset of the next other token, and the
     keywords skipped (upper-cased)."""
-    from clickhouse_datafusion_spark.functions.rewrite import WORD, tokenize
-
     skipped = []
     for t in tokenize(sql[at:]):
         if t.kind == WORD and t.text.upper() in words:
@@ -1830,21 +1838,10 @@ _SHOW_MV_RE = re.compile(
     r"^\s*SHOW\s+MATERIALIZED\s+VIEWS\s*;?\s*$", re.IGNORECASE)
 
 # text lowerings: the ClickHouse dialect clauses (PREWHERE, WITH TOTALS,
-# FORMAT, GLOBAL, FINAL), SAMPLE and the system.* tables
+# FORMAT, GLOBAL, FINAL) and SAMPLE
 _DIALECT_RE = re.compile(r"\b(prewhere|totals|format|global|final)\b",
                          re.IGNORECASE)
 _SAMPLE_RE = re.compile(r"\bSAMPLE\b", re.IGNORECASE)
-
-_SYSTEM_TABLE_RE = re.compile(r"\bsystem\s*\.\s*(tables|databases|one)\b",
-                              re.IGNORECASE)
-_SYS_TABLES_RE = re.compile(r"\bsystem\s*\.\s*tables\b", re.IGNORECASE)
-_SYS_DATABASES_RE = re.compile(r"\bsystem\s*\.\s*databases\b",
-                               re.IGNORECASE)
-_SYS_ONE_RE = re.compile(r"\bsystem\s*\.\s*one\b", re.IGNORECASE)
-
-# single-quoted SQL string literals ('' = embedded quote); used to mask
-# literals from the native-table routing substitution
-_STRING_LITERAL_SPLIT = re.compile(r"('(?:[^']|'')*')")
 
 
 def _parse_mutation_tail(kind: str, tail: str):
@@ -1855,9 +1852,6 @@ def _parse_mutation_tail(kind: str, tail: str):
     DELETE: ``WHERE p``. WHERE is mandatory for both, exactly as in
     ClickHouse (mutate-everything is spelled ``WHERE 1``, never implied).
     """
-    from clickhouse_datafusion_spark.functions.rewrite import (
-        PUNCT, WORD, tokenize)
-
     toks = tokenize(tail.rstrip().rstrip(";"))
     depth = 0
     where_at = None
@@ -1922,9 +1916,7 @@ def _prev_is_table_name(toks, i: int) -> bool:
     position (a non-keyword WORD, backticked, or quoted name) — the
     shape of ``FROM t FINAL`` / ``JOIN db.t FINAL``. Keeps a column or
     literal merely NAMED 'final' from tripping the FINAL rejection."""
-    j = i - 1
-    while j >= 0 and toks[j].kind == "WS":
-        j -= 1
+    j = prev_sig(toks, i)
     if j < 0:
         return False
     t = toks[j]
@@ -1936,27 +1928,12 @@ def _prev_is_table_name(toks, i: int) -> bool:
 def _leveled_tokens(sql: str) -> tuple[list, list[int]]:
     """``sql``'s tokens and each token's paren depth (an opening paren
     counts inside its parens, a closing one outside)."""
-    from clickhouse_datafusion_spark.functions.rewrite import tokenize
-
     toks, level, depth = tokenize(sql), [], 0
     for t in toks:
         if t.kind == "PUNCT" and t.text in ("(", ")"):
             depth += 1 if t.text == "(" else -1
         level.append(depth)
     return toks, level
-
-
-def _word_at(toks: list, i: int):
-    """The upper-cased word at ``toks[i]``, else False."""
-    return i < len(toks) and toks[i].kind == "WORD" and toks[i].text.upper()
-
-
-def _next_sig_at(toks: list, i: int) -> int:
-    """The index of the first non-whitespace token after ``toks[i]``."""
-    j = i + 1
-    while j < len(toks) and toks[j].kind == "WS":
-        j += 1
-    return j
 
 
 def _lower_limit_by(sql: str) -> str:
@@ -1981,10 +1958,8 @@ def _lower_limit_by(sql: str) -> str:
     Token-level scan with paren-depth tracking, so ORDER BY / LIMIT
     inside subqueries or string literals never confuse the parse.
     """
-    from clickhouse_datafusion_spark.functions.rewrite import NUM
-
     toks, level = _leveled_tokens(sql)
-    _word, _next_sig = partial(_word_at, toks), partial(_next_sig_at, toks)
+    _word, _next_sig = partial(word_at, toks), partial(next_sig, toks)
 
     # LIMIT n BY cols  |  LIMIT offset, n BY cols (CH offset form)
     lb = None  # (limit_tok_idx, by_idx, offset, n)
@@ -2083,7 +2058,7 @@ def _dialect_transforms(sql: str) -> str:
       FINAL would return duplicates the user asked to collapse.
     """
     toks, level = _leveled_tokens(sql)
-    w, nxt = partial(_word_at, toks), partial(_next_sig_at, toks)
+    w, nxt = partial(word_at, toks), partial(next_sig, toks)
 
     # FORMAT <name> at the tail
     for i in range(len(toks)):

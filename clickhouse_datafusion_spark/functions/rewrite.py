@@ -137,10 +137,78 @@ def tokenize(sql: str) -> list[Tok]:
     return toks
 
 
+def is_comment(tok: Tok) -> bool:
+    """A ``--`` or ``/* */`` comment (the tokenizer emits both as WS)."""
+    return tok.kind == WS and tok.text.startswith(("--", "/*"))
+
+
+def rewrite_name_chains(sql: str, fn) -> str:
+    """Rewrite the dotted name chains of ``sql``: ``WORD``/``BTICK`` parts
+    joined by ``.``. String literals, double-quoted spans and comments
+    are never parts, so they pass through byte-identical.
+
+    ``fn(parts, kw)`` sees a chain's unquoted, lower-cased parts and the
+    lower-cased one-word chain just before it (``kw``, e.g. ``"from"``;
+    None when something else precedes it). It returns None to keep the
+    chain, or ``(k, text)`` to replace the chain's first ``k`` parts, and
+    the dot after them, with ``text``; comments between those parts
+    stay."""
+    toks = tokenize(sql)
+    out: list[str] = []
+    i, kw = 0, None
+    while i < len(toks):
+        if toks[i].kind not in (WORD, BTICK):
+            out.append(toks[i].text)
+            if toks[i].kind != WS:
+                kw = None
+            i += 1
+            continue
+        at = [i]
+        j = _skip_ws(toks, i + 1)
+        while j < len(toks) and toks[j].kind == PUNCT and toks[j].text == ".":
+            k = _skip_ws(toks, j + 1)
+            if k == len(toks) or toks[k].kind not in (WORD, BTICK):
+                break
+            at.append(k)
+            j = _skip_ws(toks, k + 1)
+        end = at[-1] + 1
+        parts = [toks[p].text.strip("`").lower() for p in at]
+        hit = fn(parts, kw)
+        if hit is not None:
+            k, text = hit
+            cut = at[k] if k < len(at) else end
+            out.append(text)
+            out += [t.text for t in toks[i:cut] if is_comment(t)]
+            i = cut
+        out += [t.text for t in toks[i:end]]
+        kw = parts[0] if len(at) == 1 and toks[at[0]].kind == WORD else None
+        i = end
+    return "".join(out)
+
+
 def _skip_ws(toks: list[Tok], i: int) -> int:
     while i < len(toks) and toks[i].kind == WS:
         i += 1
     return i
+
+
+def next_sig(toks: list[Tok], i: int) -> int:
+    """The index of the first non-whitespace token after ``toks[i]``."""
+    return _skip_ws(toks, i + 1)
+
+
+def prev_sig(toks: list[Tok], i: int) -> int:
+    """The index of the last non-whitespace token before ``toks[i]``, or
+    -1."""
+    i -= 1
+    while i >= 0 and toks[i].kind == WS:
+        i -= 1
+    return i
+
+
+def word_at(toks: list[Tok], i: int):
+    """The upper-cased word at ``toks[i]``, else False."""
+    return i < len(toks) and toks[i].kind == WORD and toks[i].text.upper()
 
 
 def _parse_call_args(toks: list[Tok], i: int) -> tuple[list[list[Tok]], int]:
@@ -197,8 +265,7 @@ class _ChResult:
 # Rewriter
 # --------------------------------------------------------------------------
 
-def _emit_tokens(toks: list[Tok], catalog_names: set[str],
-                 cast: str) -> str:
+def _emit_tokens(toks: list[Tok], cast: str) -> str:
     """Rewrite a token run in *normal SQL* context."""
     out: list[str] = []
     i = 0
@@ -226,17 +293,6 @@ def _emit_tokens(toks: list[Tok], catalog_names: set[str],
                 out.append(_finish_ch(res, None, cast))
                 i = j
                 continue
-            if low in catalog_names and not starts_call:
-                # strip `clickhouse` from 3-part names: clickhouse.db.t → db.t
-                j1 = _skip_ws(toks, i + 1)
-                if (j1 < len(toks) and toks[j1].kind == PUNCT and toks[j1].text == "."):
-                    j2 = _skip_ws(toks, j1 + 1)
-                    if j2 < len(toks) and toks[j2].kind in (WORD, BTICK, QIDENT):
-                        j3 = _skip_ws(toks, j2 + 1)
-                        if (j3 < len(toks) and toks[j3].kind == PUNCT
-                                and toks[j3].text == "."):
-                            i = j1 + 1  # drop catalog name + first dot
-                            continue
             out.append(t.text)
             i += 1
         else:
@@ -424,7 +480,8 @@ def rewrite_sql(sql: str, catalog_names: set[str] | None = None,
 
     - lowers ``clickhouse()/ch()/clickhouse_eval()/apply()/lambda()`` calls
       into native Spark expressions with explicit ``CAST`` to declared types;
-    - strips virtual catalog prefixes from 3-part table names;
+    - strips virtual catalog prefixes from 3-part names (one pass over
+      the name chains, :func:`rewrite_name_chains`);
     - ``coercion=True`` emits ``TRY_CAST`` instead of ``CAST`` for declared
       types: mismatched values become NULL instead of erroring — the analog
       of the reference's opt-in per-batch schema coercion
@@ -432,5 +489,9 @@ def rewrite_sql(sql: str, catalog_names: set[str] | None = None,
       src/builders.rs:128-135).
     """
     names = {n.lower() for n in (catalog_names or {"clickhouse"})}
-    return _emit_tokens(tokenize(sql), names,
-                        "TRY_CAST" if coercion else "CAST")
+
+    def strip_catalog(parts, _kw):
+        return (1, "") if len(parts) > 2 and parts[0] in names else None
+
+    sql = rewrite_name_chains(sql, strip_catalog)
+    return _emit_tokens(tokenize(sql), "TRY_CAST" if coercion else "CAST")

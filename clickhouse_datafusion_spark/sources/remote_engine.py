@@ -64,6 +64,10 @@ import queue
 import re
 import threading
 
+from clickhouse_datafusion_spark.functions.rewrite import (
+    BTICK, WS, SqlRewriteError, is_comment, next_sig, rewrite_name_chains,
+    tokenize, word_at)
+
 # Functions the remote dialect accepts inside OVER(...) clauses and as
 # aggregates — the W6 validation set. Names outside this set keep the
 # statement local (never a remote error). Deliberately conservative:
@@ -317,9 +321,6 @@ GUARDED_REMOTE_FUNCS = {
     "rtrim": _trim_guard,
 }
 
-_SQL_STRING_RE = re.compile(r"'(?:[^']|'')*'")
-
-
 def lexical_refusal(sql: str) -> str | None:
     """Why ``sql`` must stay local for a reason its parsed plan cannot
     show, or None (probed r10b, both engines, same input):
@@ -330,19 +331,22 @@ def lexical_refusal(sql: str) -> str | None:
     - double quote — a STRING LITERAL locally ("c" = 'c') but an
       IDENTIFIER remotely ("c" = column c): both valid, different values;
     - backquote — an identifier locally, a syntax error remotely;
-    - a ``--`` or ``/*`` comment outside string literals — the shipped
-      text is rewritten (qualifier stripping, explicit null ordering) by
-      passes that cannot see comments."""
+    - a ``--`` or ``/*`` comment outside string literals — the remote
+      dialect's comment rules are not probed against Spark's (which
+      nests ``/* */``), so a commented statement stays local."""
     if "\\" in sql:
         return "backslash: escape sequence locally, literal remotely"
     if '"' in sql:
         return 'double quote: string literal locally, identifier remotely'
-    scan = _SQL_STRING_RE.sub("''", sql)
-    if "`" in scan:
+    try:
+        toks = tokenize(sql)
+    except SqlRewriteError as e:
+        return f"does not lex: {e}"
+    if any(t.kind == BTICK for t in toks):
         return "backquote: identifier locally, syntax error remotely"
-    if "--" in scan or "/*" in scan:
-        return ("comment: the shipped-text rewrites cannot see SQL "
-                "comments")
+    if any(is_comment(t) for t in toks):
+        return ("comment: SQL comments are not probed across the two "
+                "dialects")
     return None
 
 
@@ -1162,12 +1166,22 @@ def assert_read_only_sql(sql: str) -> None:
             "collide with these names)")
 
 
-_ORDER_BY_RE = re.compile(r"(?i)\border\s+by\b")
-_ORDER_END_RE = re.compile(
-    r"(?i)^(limit|offset|rows|range|groups|union|intersect|except|fetch"
-    r"|window)\b")
-_NULLS_EXPLICIT_RE = re.compile(r"(?i)\bnulls\s+(first|last)\s*$")
-_DESC_TAIL_RE = re.compile(r"(?i)\bdesc\s*$")
+# the words that end an ORDER BY item list at its own paren depth
+_ORDER_END = frozenset((
+    "LIMIT", "OFFSET", "ROWS", "RANGE", "GROUPS", "UNION", "INTERSECT",
+    "EXCEPT", "FETCH", "WINDOW"))
+
+
+def _explicit_nulls(item: list) -> str:
+    """One ORDER BY item (its tokens) with the null ordering spelled
+    out after its last code token, unless it already has one."""
+    code = [k for k, t in enumerate(item) if t.kind != WS]
+    tail = [word_at(item, k) for k in code[-2:]]
+    text = [t.text for t in item]
+    if code and tail not in (["NULLS", "FIRST"], ["NULLS", "LAST"]):
+        text[code[-1]] += (" NULLS LAST" if tail[-1] == "DESC"
+                           else " NULLS FIRST")
+    return "".join(text)
 
 
 def make_nulls_explicit(sql: str) -> str:
@@ -1180,80 +1194,54 @@ def make_nulls_explicit(sql: str) -> str:
     column would otherwise silently diverge. Explicit qualifiers are
     valid in both dialects, so the rewrite is semantics-preserving by
     construction. Handles both windowed (inside OVER(...)) and
-    top-level ORDER BY; string literals are skipped."""
-    lit_spans = [m.span() for m in _SQL_STRING_RE.finditer(sql)]
-
-    def in_literal(p: int) -> bool:
-        return any(a <= p < b for a, b in lit_spans)
-
+    top-level ORDER BY; it walks :func:`tokenize`'s tokens, so string
+    literals and comments are never read as SQL."""
+    toks = tokenize(sql)
     out, i = [], 0
-    while True:
-        m = _ORDER_BY_RE.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            break
-        if in_literal(m.start()):
-            out.append(sql[i:m.end()])
-            i = m.end()
+    while i < len(toks):
+        by = next_sig(toks, i)
+        if word_at(toks, i) != "ORDER" or word_at(toks, by) != "BY":
+            out.append(toks[i].text)
+            i += 1
             continue
-        out.append(sql[i:m.end()])
-        j, depth, item_start = m.end(), 0, m.end()
-        spans: list[tuple[int, int]] = []
-        while j < len(sql):
-            ch = sql[j]
-            if ch == "'":
-                k = j + 1
-                while k < len(sql):
-                    if sql[k] == "'":
-                        if sql[k + 1:k + 2] == "'":
-                            k += 2
-                            continue
-                        break
-                    k += 1
-                j = k
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    break                       # end of the OVER clause
-                depth -= 1
-            elif ch == "," and depth == 0:
-                spans.append((item_start, j))
-                item_start = j + 1
-            elif (depth == 0 and ch.isalpha()
-                  and not (sql[j - 1].isalnum() or sql[j - 1] == "_")
-                  and _ORDER_END_RE.match(sql[j:])):
-                break
-            j += 1
-        spans.append((item_start, j))
-        rebuilt = []
-        for a, b in spans:
-            item = sql[a:b]
-            core = item.rstrip()
-            if not core or _NULLS_EXPLICIT_RE.search(core):
-                rebuilt.append(item)
-            elif _DESC_TAIL_RE.search(core):
-                rebuilt.append(core + " NULLS LAST" + item[len(core):])
+        out += [t.text for t in toks[i:by + 1]]
+        item, depth, i = [], 0, by + 1
+        while i < len(toks):
+            t = toks[i]
+            if not depth and (t.text == ")"
+                              or word_at(toks, i) in _ORDER_END):
+                break           # the OVER clause's ")" or a clause word
+            if not depth and t.text == ",":
+                out.append(_explicit_nulls(item) + ",")
+                item = []
             else:
-                rebuilt.append(core + " NULLS FIRST" + item[len(core):])
-        out.append(",".join(rebuilt))
-        i = j
+                depth += (t.text == "(") - (t.text == ")")
+                item.append(t)
+            i += 1
+        out.append(_explicit_nulls(item))
     return "".join(out)
 
 
-def sub_outside_literals(pattern: str, repl, sql: str) -> str:
-    """Apply ``re.sub`` only to the non-literal segments of ``sql`` —
-    string literals are DATA and must never be rewritten (the r9
-    self-review catch, factored here so the unparser and the engine's
-    local-fallback qualifier rewrite share one literal-safe seam)."""
-    parts = _SQL_STRING_RE.split(sql)
-    lits = _SQL_STRING_RE.findall(sql)
-    parts = [re.sub(pattern, repl, seg, flags=re.IGNORECASE)
-             for seg in parts]
-    out = parts[0]
-    for lit, seg in zip(lits, parts[1:]):
-        out += lit + seg
-    return out
+def strip_remote_qualifiers(sql: str, catalog: str, db: str,
+                            remote_tables) -> str:
+    """``sql`` with ``[catalog.]db.`` dropped from every name chain whose
+    next part is a remote table (``remote.orders.o_orderkey`` →
+    ``orders.o_orderkey``) — one rule for the shipped form and the local
+    twin form alike, the analog of the reference stripping the catalog
+    before it unparses (src/analyzer/function_pushdown.rs:460-473).
+    Literals, double-quoted spans and comments pass through as they
+    are; backticked parts are names like any other."""
+    quals = ([catalog.lower(), db.lower()], [db.lower()])
+
+    def strip(parts, _kw):
+        for q in quals:
+            k = len(q)
+            if parts[:k] == q and len(parts) > k and \
+                    parts[k] in remote_tables:
+                return k, ""
+        return None
+
+    return rewrite_name_chains(sql, strip)
 
 
 def unparse_for_remote(sql: str, nodes: list[dict], catalog: str, db: str,
@@ -1279,9 +1267,10 @@ def unparse_for_remote(sql: str, nodes: list[dict], catalog: str, db: str,
     :data:`SUPPORTED_WINDOW_FUNCS` (W6), every function passes the
     allowlist and its guard, every ``/`` and ``%`` has a nonzero numeric
     literal divisor, and a division or avg sees no decimal value. The
-    translation itself is qualifier stripping outside string literals
-    plus explicit null ordering — the shared surface is ANSI SQL;
-    divergent constructs are excluded by the gate.
+    translation itself is qualifier stripping
+    (:func:`strip_remote_qualifiers`) plus explicit null ordering — the
+    shared surface is ANSI SQL; divergent constructs are excluded by the
+    gate.
     """
     def refuse(why: str):
         """Record WHY the gate kept the statement local — the analog of
@@ -1353,13 +1342,12 @@ def unparse_for_remote(sql: str, nodes: list[dict], catalog: str, db: str,
         return refuse("division/modulo/avg with possible decimal "
                       "involvement (exact decimal locally, binary "
                       "double remotely)")
-    # Qualifier stripping OUTSIDE string literals only: a literal like
+    # Qualifier stripping reads names, never literals: a literal like
     # 'remote.orders' is DATA and must cross the seam untouched (the
     # r9 self-review catch; pinned by
     # tests/test_remote_engine.py::test_unparser_preserves_literals).
-    out = sql.strip().rstrip(";")
-    for p in (f"{catalog}.{db}.", f"{db}."):
-        out = sub_outside_literals(re.escape(p), "", out)
+    out = strip_remote_qualifiers(sql.strip().rstrip(";"), catalog, db,
+                                  remote_tables)
     # dialect defaults diverge on null ordering (Spark ASC = NULLS
     # FIRST, remote = NULLS LAST) — translate by making the local
     # defaults explicit, which both dialects accept

@@ -204,3 +204,18 @@ def test_insert_into_native_ddl_table(spark, src, engine):
         assert after == before + 5
     finally:
         engine.sql("DROP TABLE IF EXISTS main.nddl")
+
+
+def test_routing_skips_escaped_quotes(spark, src, engine):
+    """A ``\\'``-escaped quote does not end a literal: the literal's text
+    survives native routing, and the backticked reference routes."""
+    engine.sql("DROP TABLE IF EXISTS main.nddl")
+    engine.sql(f"CREATE TABLE main.nddl USING clickhouse_native "
+               f"OPTIONS (path '{src}')")
+    try:
+        row = engine.sql("SELECT 'it\\'s from nddl' AS s, count(*) AS n "
+                         "FROM `main`.`nddl`").first()
+        assert row.s == "it's from nddl"
+        assert row.n == spark.read.parquet(src).count()
+    finally:
+        engine.sql("DROP TABLE IF EXISTS main.nddl")

@@ -63,12 +63,16 @@ _KEPT_ENGINE_REGEXES = {
     "_DIALECT_RE": "text lowering: Spark's parser rejects PREWHERE, "
                    "WITH TOTALS, FORMAT, GLOBAL and FINAL",
     "_SAMPLE_RE": "text lowering: Spark's parser rejects FROM t SAMPLE f",
-    "_SYSTEM_TABLE_RE": "text lowering of the system.* tables",
-    "_SYS_TABLES_RE": "text lowering of system.tables",
-    "_SYS_DATABASES_RE": "text lowering of system.databases",
-    "_SYS_ONE_RE": "text lowering of system.one",
-    "_STRING_LITERAL_SPLIT": "masks string literals from the native-table "
-                             "routing substitution",
+}
+
+# The regexes remote_engine.py keeps, each with why it is not a lexer of
+# Spark SQL text: those rewrites walk functions/rewrite.tokenize.
+_KEPT_REMOTE_REGEXES = {
+    "_IDENT_TOKEN_RE": "the read-only gate's own lexer reads the REMOTE "
+                       "dialect, in which a backslash is not an escape, "
+                       "after it has stripped literals and comments",
+    "_SQL_IDENT_RE": "validates one caller-supplied table or log name, "
+                     "not SQL text",
 }
 
 # one statement per kept statement form, each rejected by Spark's parser
@@ -87,6 +91,23 @@ _REJECTED_FORMS = {
 }
 
 
+def _compiled(tree) -> list:
+    """The ``name = re.compile(...)`` assignments of a module's AST."""
+    import ast
+
+    return [n for n in ast.walk(tree) if isinstance(n, ast.Assign)
+            and isinstance(n.value, ast.Call)
+            and isinstance(n.value.func, ast.Attribute)
+            and n.value.func.attr == "compile"]
+
+
+def _compiled_names(named) -> set:
+    import ast
+
+    return {t.id for n in named for t in n.targets
+            if isinstance(t, ast.Name)}
+
+
 def test_engine_regexes_are_the_kept_set():
     """``engine.py`` compiles exactly the kept regexes and spells no
     other pattern inline: no statement kind Spark's parser accepts goes
@@ -94,13 +115,8 @@ def test_engine_regexes_are_the_kept_set():
     import ast
 
     tree = ast.parse((PKG / "engine.py").read_text())
-    named = [n for n in ast.walk(tree) if isinstance(n, ast.Assign)
-             and isinstance(n.value, ast.Call)
-             and isinstance(n.value.func, ast.Attribute)
-             and n.value.func.attr == "compile"]
-    compiled = {t.id for n in named for t in n.targets
-                if isinstance(t, ast.Name)}
-    assert compiled == set(_KEPT_ENGINE_REGEXES)
+    named = _compiled(tree)
+    assert _compiled_names(named) == set(_KEPT_ENGINE_REGEXES)
     assert all(_KEPT_ENGINE_REGEXES.values())
     # nor inline: no ``re.*`` call spells its pattern in place, and no
     # call at all takes a pattern anchored at the statement's start
@@ -137,3 +153,29 @@ def test_kept_statement_forms_are_rejected_by_spark(spark):
         except Exception:
             continue
         raise AssertionError(f"{name}: Spark parses {stmt!r}")
+
+
+def test_remote_engine_regexes_are_the_kept_set():
+    """``sources/remote_engine.py`` compiles exactly the kept regexes:
+    its Spark-SQL rewrites (qualifier stripping, explicit null ordering,
+    the lexical refusals) read ``rewrite.tokenize``'s tokens."""
+    import ast
+
+    tree = ast.parse((PKG / "sources" / "remote_engine.py").read_text())
+    assert _compiled_names(_compiled(tree)) == set(_KEPT_REMOTE_REGEXES)
+    assert all(_KEPT_REMOTE_REGEXES.values())
+
+
+def test_no_regex_lexes_sql_string_literals():
+    """No pattern in the package matches a single-quoted SQL string
+    (``'(?:[^']…``): such a regex misreads ``\\'`` escapes, double-quoted
+    spans and comments; ``functions/rewrite.tokenize`` is the one lexer
+    of Spark SQL text."""
+    import ast
+
+    offenders = [f"{p.relative_to(PKG)}:{n.lineno}"
+                 for p in sorted(PKG.rglob("*.py"))
+                 for n in ast.walk(ast.parse(p.read_text()))
+                 if isinstance(n, ast.Constant) and isinstance(n.value, str)
+                 and "'(?:[^']" in n.value]
+    assert offenders == []

@@ -316,3 +316,11 @@ def test_exists_and_show_create(spark, views, tmp_path):
     assert stmt.startswith("CREATE MATERIALIZED VIEW sc_mv AS")
     assert "SELECT 1 AS one" in stmt
     eng.sql("DROP MATERIALIZED VIEW sc_mv")
+
+
+def test_system_tables_route_names_not_literals(engine, views):
+    """Only the name ``system.one`` routes: a literal or a comment that
+    spells it keeps its text."""
+    r = engine.sql("SELECT 'system.one' AS s, dummy -- system.one\n"
+                   "FROM `system`.one").collect()
+    assert [(x.s, x.dummy) for x in r] == [("system.one", 0)]

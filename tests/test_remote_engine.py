@@ -2206,3 +2206,127 @@ def test_limit_by_sourced_remote_insert_lands_one_row_per_group(
                   "FROM nation ORDER BY a LIMIT 1 BY a")
     assert out.first()["count"] == 5
     assert route_tables() == (5, 0)
+
+
+def test_quoted_spellings_of_a_remote_name_read_right(fed):
+    """The local form strips qualifiers from names only: Spark reads
+    ``"remote.nation"`` as a string literal, which keeps its text, and a
+    backticked ``remote`` qualifier reaches the twin like a bare one."""
+    eng, _ = fed
+    row = eng.sql('SELECT "remote.nation" AS s, count(*) AS n '
+                  "FROM remote.nation").first()
+    assert eng.last_remote_sql is None
+    assert (row.s, row.n) == ("remote.nation", 25)
+    for ref in ("`remote`.nation", "`remote`.`nation`", "remote.`nation`"):
+        assert len(eng.sql(f"SELECT * FROM {ref}").collect()) == 25, ref
+        assert "backquote" in eng.last_remote_refusal
+
+
+def test_local_multi_insert_raises_before_any_row(spark, tmp_path):
+    """A multi-table INSERT parses to a ``Union`` of INSERTs, which the
+    sink does not take (no table lock, no count row): it raises before
+    any row lands, with no remote attached too."""
+    from clickhouse_datafusion_spark.engine import ClickHouseSparkEngine
+
+    eng = ClickHouseSparkEngine(spark)
+    spark.sql(f"CREATE TABLE lw (a BIGINT) USING parquet "
+              f"LOCATION '{tmp_path / 'lw'}'")
+    try:
+        with pytest.raises(ValueError, match="must be its own statement"):
+            eng.sql("FROM (SELECT 1 AS a) s INSERT INTO lw SELECT a "
+                    "INSERT INTO lw SELECT a")
+        assert spark.sql("SELECT count(*) FROM lw").first()[0] == 0
+        # one INSERT and an EXPLAIN of one still run
+        assert eng.sql("FROM (SELECT 1 AS a) s INSERT INTO lw SELECT a"
+                       ).first()["count"] == 1
+        assert "InsertIntoStatement" in eng.sql(
+            "EXPLAIN EXTENDED INSERT INTO lw SELECT 2").first()[0]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS lw")
+
+
+def test_dry_run_reads_the_lowered_statement(fed):
+    """``remote_decision`` applies the same query lowerings as ``sql``:
+    a PREWHERE read dry-runs as the shipped statement ``sql`` sends, and
+    a LIMIT BY or SAMPLE read dry-runs with the refusal ``sql`` records."""
+    eng, _ = fed
+    q = "SELECT count(*) AS n FROM remote.orders PREWHERE o_orderkey > 3"
+    d = eng.remote_decision(q)
+    eng.sql(q).collect()
+    assert d["ships"] and d["remote_sql"] == eng.last_remote_sql
+    eng.set_sample_key("orders", "o_orderkey")
+    try:
+        for q in ("SELECT o_orderstatus, o_orderkey FROM remote.orders "
+                  "ORDER BY o_orderkey LIMIT 1 BY o_orderstatus",
+                  "SELECT count(*) AS n FROM remote.orders SAMPLE 0.5"):
+            d = eng.remote_decision(q)
+            eng.sql(q).collect()
+            assert not d["ships"] and eng.last_remote_sql is None, q
+            assert d["reason"] == eng.last_remote_refusal, q
+    finally:
+        eng._sample_keys.pop("orders")
+    assert "sample key" in eng.remote_decision(
+        "SELECT * FROM remote.orders SAMPLE 0.5")["reason"]
+
+
+# Adversarial spans for the identifier-hygiene property: each kind's
+# body is drawn from text that spells the routed names and the other
+# kinds' delimiters.
+_NAMES = ["remote.nation", "`remote`.nation", "system.one", "from nddl",
+          "JOIN main.nddl", "table nddl", " ", "x"]
+_SPANS = {
+    "single": ("'", "'", _NAMES + ["''", "\\'", "\\\\", '"', "`", "--",
+                                   "/*", "*/"]),
+    "double": ('"', '"', _NAMES + ["'", "\\'", "`", "--", "/*", "*/"]),
+    "line": ("--", "\n", _NAMES + ["'", '"', "`", "/*", "*/", "--"]),
+    "block": ("/*", "*/", _NAMES + ["'", '"', "`", "--", "\n"]),
+    "tick": ("`", "`", [n for n in _NAMES if "`" not in n]
+             + ["'", '"', "--", "/*", "*/"]),
+}
+_span = st.sampled_from(sorted(_SPANS)).flatmap(
+    lambda k: st.lists(st.sampled_from(_SPANS[k][2]), max_size=5).map(
+        lambda body, k=k: _SPANS[k][0] + "".join(body) + _SPANS[k][1]))
+# code references and what each pass rewrites them to
+_REMOTE_REFS = {"remote.nation": "nation", "`remote`.nation": "nation",
+                "`remote`.`nation`": "`nation`", "REMOTE . Nation": "Nation",
+                "clickhouse.remote.nation": "nation"}
+_SYSTEM_REFS = ["system.one", "`system`.`one`", "SYSTEM.ONE",
+                "system . one"]
+_NATIVE_REFS = ["nddl", "`nddl`", "main.nddl", "`main`.`nddl`", "NDDL"]
+
+
+@pytest.fixture(scope="module")
+def lexer_eng(fed, spark):
+    """An engine over ``fed``'s remote (``nation`` is remote) with a
+    native table ``main.nddl`` routed to ``__v``."""
+    from clickhouse_datafusion_spark.engine import ClickHouseSparkEngine
+
+    eng = ClickHouseSparkEngine(spark)
+    eng.attach_remote(fed[1], db="remote")
+    eng._native_tables.update({"main.nddl": "__v", "nddl": "__v"})
+    return eng
+
+
+@settings(max_examples=80, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(spans=st.lists(_span, min_size=5, max_size=5),
+       r=st.sampled_from(sorted(_REMOTE_REFS)),
+       s=st.sampled_from(_SYSTEM_REFS), n=st.sampled_from(_NATIVE_REFS))
+def test_text_rewrites_touch_names_only(lexer_eng, spans, r, s, n):
+    """Literals (with ``''`` and ``\\'``), double-quoted spans, ``--``
+    and ``/* */`` comments and backticked identifiers come out of the
+    local form, the ``system.*`` routing and the native-table routing
+    byte-identical, wherever they sit around the references; every
+    reference, backticked or not, is rewritten."""
+    def stmt(r, s, n, col):
+        a, b, c, d, e = spans
+        return (f"SELECT {a} AS c0, {col}.n_name, {b} FROM {r} {c} "
+                f"JOIN {n} ON {d} = 1 CROSS JOIN {s} {e} "
+                f"WHERE 1 IN (SELECT 1 FROM {n})")
+
+    q = stmt(r, s, n, f"{r}")
+    local = _REMOTE_REFS[r]
+    assert lexer_eng._local_form(q, ()) == stmt(local, s, n, local)
+    assert lexer_eng._route_system_tables(q) == stmt(
+        r, "(SELECT 0 AS dummy)", n, r)
+    assert lexer_eng._route_native_tables(q) == stmt(r, s, "__v", r)

@@ -389,17 +389,22 @@ def test_materialized_view_lifecycle(spark, views, tmp_path):
 
 
 def test_materialized_view_ch_functions(spark, views, tmp_path):
-    """MV definitions pass through the ClickHouse-function rewrite."""
+    """MV definitions pass through the ClickHouse-function rewrite and
+    the query lowerings (a LIMIT BY body keeps one row per group)."""
     from clickhouse_datafusion_spark.engine import ClickHouseSparkEngine
 
     eng = ClickHouseSparkEngine(spark, mat_view_dir=str(tmp_path / "mv"))
     eng.sql("CREATE MATERIALIZED VIEW mv_ch AS "
             "SELECT clickhouse(`toUInt32`(o_orderkey), 'UInt32') AS k "
             "FROM orders WHERE o_orderkey <= 5")
+    eng.sql("CREATE MATERIALIZED VIEW mv_lb AS SELECT n_regionkey AS a, "
+            "n_name FROM nation ORDER BY a, n_name LIMIT 1 BY a")
     try:
         assert eng.sql("SELECT count(*) AS n FROM mv_ch").collect()[0].n > 0
+        assert eng.sql("SELECT count(*) AS n FROM mv_lb").first().n == 5
     finally:
         eng.sql("DROP MATERIALIZED VIEW IF EXISTS mv_ch")
+        eng.sql("DROP MATERIALIZED VIEW IF EXISTS mv_lb")
 
 
 def test_optimize_materialized_view(spark, views, tmp_path):
