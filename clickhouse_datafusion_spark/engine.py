@@ -43,6 +43,7 @@ from clickhouse_datafusion_spark.fragments import sql_ident
 from clickhouse_datafusion_spark.functions.rewrite import (
     BTICK, NUM, PUNCT, QIDENT, WORD, next_sig, prev_sig, rewrite_name_chains,
     rewrite_sql, tokenize, word_at)
+from clickhouse_datafusion_spark.plans.explain import write_width
 from clickhouse_datafusion_spark.sink import arrow_frame
 
 
@@ -257,12 +258,13 @@ class ClickHouseSparkEngine:
         remote engine, and if not, why not — the reference analyzer's
         federation diagnostics surfaced as an API (``EXPLAIN`` prepends
         the same verdict to the plan text). Never executes anything.
-        It applies :meth:`sql`'s query lowerings first, so both read the
-        same text; a lowering that raises in :meth:`sql` is the reason
-        here."""
+        It applies :meth:`sql`'s query lowerings and ``system.*``
+        routing first (building no view), so both gate the same text; a
+        lowering that raises in :meth:`sql` is the reason here."""
         stmt, reasons = self.rewrite(query), []
         try:
-            stmt = self._lower_query(stmt)
+            stmt = self._route_system_tables(self._lower_query(stmt),
+                                             register=False)
         except SqlFrontDoorError as e:
             return {"ships": False, "remote_sql": None, "reason": str(e)}
         shipped, _ = self._remote_gate(stmt, reasons=reasons)
@@ -570,7 +572,8 @@ class ClickHouseSparkEngine:
                                         cols: str = "",
                                         commits: str | None = None,
                                         sink: str | None = None,
-                                        batch_id: int | None = None
+                                        batch_id: int | None = None,
+                                        width: int | None = None
                                         ) -> int:
         """The executor_direct write plane (r14): the executor-parallel
         twin of the driver-funnel 'direct' plane — each source partition
@@ -580,10 +583,12 @@ class ClickHouseSparkEngine:
         re-streams atomically instead of duplicating a partial prefix).
         The count is the sum of server acks. Micro-batch cost cuts:
 
-        * partitions coalesce to ``write_concurrency`` (wire
-          parallelism is cursor-pool-bound anyway, so 32 source
-          partitions as 32 tasks/connections for a 200k-row
-          micro-batch is pure per-task fixed cost — a narrow
+        * partitions coalesce to ``width``, by default
+          ``plans.explain.write_width``: an in-memory source's
+          optimizer size estimate sets it, and ``write_concurrency``
+          only caps it (each partition is a Python task with 180-300
+          ms of fixed worker cost, so a 20k-row ``spark.range``
+          micro-batch writes from one task, not four — a narrow
           dependency, no shuffle);
         * per-partition counts return via a bare ``collect()`` (an
           ``agg(sum)`` final stage adds an exchange + AQE round per
@@ -604,7 +609,8 @@ class ClickHouseSparkEngine:
         which are executor-side, not driver-side). Replay idempotence
         at partition grain assumes the replayed micro-batch
         recomputes deterministically (Spark's own foreachBatch replay
-        contract for replayable sources)."""
+        contract for replayable sources) and is split at the same
+        ``width`` (:meth:`_batch_width` passes the recorded one)."""
         host, port = self._remote.ingest_address
         token = self._remote.ingest_token
         # fail fast driver-side before launching a distributed job
@@ -615,12 +621,13 @@ class ClickHouseSparkEngine:
         # (e.g. a bare TIMESTAMP '...58.123456' literal) breaks it
         src_df = src_df.toDF(*[f"_c{i}"
                                for i in range(len(src_df.columns))])
-        src_df = src_df.coalesce(max(1, int(self.write_concurrency)))
+        src_df = src_df.coalesce(
+            width or write_width(src_df, self.write_concurrency))
         batch_rows = self.write_batch_rows
         marker_base = (None if commits is None
                        else {"commits": commits,
                              "sink": f"{sink}#b{int(batch_id)}"})
-        # test-only fault injection (tests/test_property_r14.py): the
+        # test-only fault injection (tests/test_executor_write.py): the
         # named partitions raise before connecting, simulating a task
         # crash mid-job — the exactly-once property under partial
         # partition commits is the thing under test
@@ -702,8 +709,7 @@ class ClickHouseSparkEngine:
                 [pa.array([n], type=pa.int64())], names=["n"])
 
         counts = src_df.mapInArrow(write_partition, schema="n bigint")
-        # ≤ write_concurrency one-int rows: a driver-side sum, not an
-        # agg exchange
+        # ≤ width one-int rows: a driver-side sum, not an agg exchange
         return int(sum(r["n"] for r in counts.collect()))
 
     def append_remote(self, table: str, df, cols: str = "",
@@ -728,8 +734,11 @@ class ClickHouseSparkEngine:
           maxOffsetsPerTrigger by construction).
         * 'executor_direct': every partition streams its Arrow batches
           straight to the remote's ingest server inside its own
-          server-side transaction; throughput scales with partitions
-          and driver memory stays flat at any batch size.
+          server-side transaction; the source's size sets how many
+          partitions write (``write_concurrency`` caps them, see
+          ``plans.explain.write_width``), so a small micro-batch pays
+          for one Python task, and driver memory stays flat at any
+          batch size.
 
         One rule picks the plane (:meth:`_write_plane`):
         ``allow_direct=False`` (what the SQL front door passes — its
@@ -781,7 +790,10 @@ class ClickHouseSparkEngine:
         not themselves end in ``#b<digits>`` (the partition-marker
         namespace). Returns the appended row count (0 for a skipped
         replay; on a partial-crash replay, only the missing
-        partitions' rows are counted)."""
+        partitions' rows are counted). The batch's partition width is
+        logged as well, so a replay splits it as the crashed attempt
+        did (:meth:`_batch_width`); ``sink_id`` must not end in
+        ``#w<digits>`` either."""
         bare = table.lower().rsplit(".", 1)[-1]
         if self._remote is None or bare not in self._remote.tables():
             raise ValueError(f"no remote table {table!r}")
@@ -812,7 +824,8 @@ class ClickHouseSparkEngine:
         if plane == "executor_direct":
             n = self._stream_insert_executors_direct(
                 bare, df, cols, commits=commits, sink=sink,
-                batch_id=bid)
+                batch_id=bid,
+                width=self._batch_width(df, commits, sink, bid))
             try:
                 self._remote.execute(marker)
             except Exception:
@@ -834,6 +847,38 @@ class ClickHouseSparkEngine:
                 bare, batches, cols, pre_commit_sql=marker)
         self.last_remote_insert = "exactly-once-txn"
         return n
+
+    def _batch_width(self, df, commits: str, sink: str, bid: int) -> int:
+        """Partition width of exactly-once batch ``bid`` on the
+        executor_direct plane. The first attempt logs it as the row
+        ``(sink#w<bid>, width)`` before any partition writes, and a
+        replay reuses that row, so the replay's partitions are the
+        crashed attempt's and its ``(sink#b<bid>, partition)`` markers
+        fence the same rows even when the size rule, its inputs or
+        ``write_concurrency`` changed in between. A batch with
+        partition markers but no width row was started before widths
+        were logged, when every batch was written at
+        ``write_concurrency``."""
+        remote, profile = self._remote, self._remote.profile
+        key = f"{sink}#w{bid}"
+
+        def logged(k):
+            return remote.execute(
+                profile.commits_ids(commits, k)).column(0).to_pylist()
+
+        if rec := logged(key):
+            return rec[0]
+        if logged(f"{sink}#b{bid}"):
+            return max(1, int(self.write_concurrency))
+        width = write_width(df, self.write_concurrency)
+        try:
+            remote.execute(profile.commits_marker(commits, key, width))
+        except Exception:
+            # a zombie twin logged it first (commit-log PRIMARY KEY)
+            if not (rec := logged(key)):
+                raise
+            return rec[0]
+        return width
 
     def _try_remote_insert(self, stmt: str, ins, nodes: list):
         """Federated INSERT (the write half of S7/S20): a statement
@@ -1581,7 +1626,7 @@ class ClickHouseSparkEngine:
         return sink.run_insert_sql(
             self.spark, self._route_insert_source(stmt, ins), ins)
 
-    def _route_system_tables(self, sql: str) -> str:
+    def _route_system_tables(self, sql: str, register: bool = True) -> str:
         """ClickHouse ``system.*`` introspection tables, rebuilt from the
         live Spark catalog on every reference (introspection must never
         be stale): ``system.tables`` (database, name, engine),
@@ -1590,28 +1635,42 @@ class ClickHouseSparkEngine:
         surface (O11) remains the ANSI route; this is the spelling pasted
         CH queries use. Only the name chains ``system.<t>`` are routed
         (:func:`rewrite.rewrite_name_chains`), so a literal or comment
-        spelling one stays as written."""
+        spelling one stays as written. A routed relation is aliased with
+        its table name unless the statement aliases it, and a column
+        chain ``system.<t>.<c>`` loses its ``system.``, so ``one.dummy``
+        and ``system.one.dummy`` resolve as in ClickHouse. With
+        ``register=False`` (the dry run) the text is the same, but the
+        ``system.tables``/``system.databases`` views are not built."""
         if "system" not in sql.lower():
             return sql
         spark = self.spark
 
-        def route(parts, _kw):
-            if parts == ["system", "one"]:
-                return 2, "(SELECT 0 AS dummy)"
-            if parts == ["system", "tables"]:
-                rows = [(tbl.namespace[0] if tbl.namespace else "",
-                         tbl.name, tbl.tableType or "VIEW")
-                        for db in spark.catalog.listDatabases()
-                        for tbl in spark.catalog.listTables(db.name)]
-                schema = "database string, name string, engine string"
-            elif parts == ["system", "databases"]:
-                rows = [(db.name,) for db in spark.catalog.listDatabases()]
-                schema = "name string"
-            else:
+        def route(parts, _kw, nxt):
+            name = (parts[1] if parts[0] == "system" and len(parts) in (2, 3)
+                    else None)
+            if name != "one" and name not in _SYSTEM_VIEWS:
                 return None
-            view = f"_ch_system_{parts[1]}"
-            arrow_frame(spark, rows, schema).createOrReplaceTempView(view)
-            return 2, view
+            if len(parts) == 3:      # a column chain system.<t>.<c>
+                return 1, ""
+            if name == "one":
+                rel = "(SELECT 0 AS dummy)"
+            else:
+                rel = f"_ch_system_{name}"
+                if register:
+                    cat = spark.catalog
+                    dbs = cat.listDatabases()
+                    rows = ([(db.name,) for db in dbs] if name == "databases"
+                            else [(tbl.namespace[0] if tbl.namespace else "",
+                                   tbl.name, tbl.tableType or "VIEW")
+                                  for db in dbs
+                                  for tbl in cat.listTables(db.name)])
+                    arrow_frame(spark, rows, _SYSTEM_VIEWS[name]
+                                ).createOrReplaceTempView(rel)
+            aliased = nxt is not None and (
+                nxt.kind == BTICK or nxt.kind == WORD
+                and (nxt.text.upper() == "AS"
+                     or nxt.text.upper() not in _SQL_KEYWORDS))
+            return 2, rel if aliased else f"{rel} AS {name}"
 
         return rewrite_name_chains(sql, route)
 
@@ -1693,7 +1752,7 @@ class ClickHouseSparkEngine:
         if not self._native_tables:
             return q
 
-        def route(parts, kw):
+        def route(parts, kw, _nxt):
             view = self._native_tables.get(".".join(parts))
             if view is None or kw not in ("from", "join", "table"):
                 return None
@@ -1903,11 +1962,21 @@ def _parse_mutation_tail(kind: str, tail: str):
     return assigns, where_sql
 
 
+# the system.* tables routed to temp views of the Spark catalog, and
+# their schemas (system.one is an inline one-row relation)
+_SYSTEM_VIEWS = {"tables": "database string, name string, engine string",
+                 "databases": "name string"}
+
+# the words that are not a table name or alias where one may stand: a
+# relation followed by any other word (or by AS) is aliased
 _SQL_KEYWORDS = {
     "SELECT", "FROM", "WHERE", "GROUP", "BY", "ORDER", "HAVING", "LIMIT",
     "JOIN", "ON", "AS", "AND", "OR", "NOT", "IN", "UNION", "ALL", "WITH",
     "DISTINCT", "CASE", "WHEN", "THEN", "ELSE", "END", "INNER", "LEFT",
     "RIGHT", "FULL", "CROSS", "USING", "TOTALS", "PREWHERE", "FORMAT",
+    "OFFSET", "WINDOW", "NATURAL", "SEMI", "ANTI", "LATERAL", "EXCEPT",
+    "INTERSECT", "MINUS", "SORT", "CLUSTER", "DISTRIBUTE", "PIVOT",
+    "UNPIVOT", "TABLESAMPLE",
 }
 
 

@@ -147,12 +147,13 @@ def rewrite_name_chains(sql: str, fn) -> str:
     joined by ``.``. String literals, double-quoted spans and comments
     are never parts, so they pass through byte-identical.
 
-    ``fn(parts, kw)`` sees a chain's unquoted, lower-cased parts and the
-    lower-cased one-word chain just before it (``kw``, e.g. ``"from"``;
-    None when something else precedes it). It returns None to keep the
-    chain, or ``(k, text)`` to replace the chain's first ``k`` parts, and
-    the dot after them, with ``text``; comments between those parts
-    stay."""
+    ``fn(parts, kw, nxt)`` sees a chain's unquoted, lower-cased parts,
+    the lower-cased one-word chain just before it (``kw``, e.g.
+    ``"from"``; None when something else precedes it) and the first
+    token after it that is not whitespace or a comment (``nxt``; None at
+    the end). It returns None to keep the chain, or ``(k, text)`` to
+    replace the chain's first ``k`` parts, and the dot after them, with
+    ``text``; comments between those parts stay."""
     toks = tokenize(sql)
     out: list[str] = []
     i, kw = 0, None
@@ -173,7 +174,8 @@ def rewrite_name_chains(sql: str, fn) -> str:
             j = _skip_ws(toks, k + 1)
         end = at[-1] + 1
         parts = [toks[p].text.strip("`").lower() for p in at]
-        hit = fn(parts, kw)
+        nxt = toks[j] if j < len(toks) else None
+        hit = fn(parts, kw, nxt)
         if hit is not None:
             k, text = hit
             cut = at[k] if k < len(at) else end
@@ -490,7 +492,7 @@ def rewrite_sql(sql: str, catalog_names: set[str] | None = None,
     """
     names = {n.lower() for n in (catalog_names or {"clickhouse"})}
 
-    def strip_catalog(parts, _kw):
+    def strip_catalog(parts, _kw, _nxt):
         return (1, "") if len(parts) > 2 and parts[0] in names else None
 
     sql = rewrite_name_chains(sql, strip_catalog)

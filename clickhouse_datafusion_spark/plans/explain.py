@@ -118,7 +118,63 @@ def width(df: DataFrame, bytes_per_task: int, cap: int,
         sizes = _scan_file_sizes(df)
     if sizes is None:
         return cap
-    return min(cap, max(2, -(-sum(sizes) // bytes_per_task)))
+    return _clamp(sum(sizes), bytes_per_task, 2, cap)
+
+
+def _clamp(nbytes: int, bytes_per_task: int, lo: int, cap: int) -> int:
+    """``ceil(nbytes / bytes_per_task)`` clamped to ``[lo, cap]``."""
+    return min(cap, max(lo, -(-nbytes // bytes_per_task)))
+
+
+# Optimizer-estimated source bytes one executor_direct write task takes
+# on. A Python task costs 180-300 ms of worker CPU before the user
+# function runs; on a 4-core box one task writes a 24 MB source as fast
+# as four, and a second task first pays for itself near 42 MB
+# (BASELINE.md, "executor_direct width by source").
+WRITE_BYTES_PER_TASK = 32 << 20
+
+# The logical nodes whose size estimate bounds the bytes a write of
+# them ships, in the unit WRITE_BYTES_PER_TASK was measured in. The
+# leaves are in-memory relations Spark sizes as rows times the default
+# width of each column; each inner node's estimate is at least what it
+# emits. Other leaves are not in that unit: a file scan reports its
+# compressed on-disk bytes (a parquet source reads several times
+# smaller than its rows), a Python or streaming source Spark's
+# defaultSizeInBytes. Generate and the Python map nodes can emit more
+# rows than their estimate says.
+_SIZED_NODES = frozenset({
+    "Range", "LocalRelation", "OneRowRelation",
+    "Project", "Filter", "Aggregate", "Join", "Union", "Sort", "Window",
+    "Expand", "GlobalLimit", "LocalLimit", "Repartition",
+    "RepartitionByExpression"})
+
+
+def write_width(df: DataFrame, cap: int) -> int:
+    """Partition width of an executor_direct remote write of ``df``:
+    ``ceil(est / WRITE_BYTES_PER_TASK)`` clamped to ``[1, cap]``, where
+    ``est`` is Spark's optimizer size estimate of ``df`` (no job).
+    ``cap`` is the engine's ``write_concurrency``, a cap on concurrent
+    writers as in the reference sink, not a quota: a micro-batch too
+    small to pay for a second Python task writes from one. A plan with
+    a node outside ``_SIZED_NODES`` (a file scan, a Python or streaming
+    source, a Generate) keeps ``cap``, as does a huge estimate.
+
+    The width is a function of the plan and the engine's settings, so
+    a rebuilt micro-batch gets the same partitions. An exactly-once
+    batch does not rely on that: it records its width in the commit
+    log and a replay reuses it (``engine._batch_width``)."""
+    cap = max(1, int(cap))
+    plan = df._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        if node.nodeName() not in _SIZED_NODES:
+            return cap
+        kids = node.children()
+        nodes += [kids.apply(i) for i in range(kids.size())]
+    # a Scala BigInt: str() reads it whether or not py4j converted it
+    est = int(str(plan.stats().sizeInBytes()))
+    return _clamp(est, WRITE_BYTES_PER_TASK, 1, cap)
 
 
 def plan_report(df: DataFrame, execute: bool = False) -> dict[str, object]:

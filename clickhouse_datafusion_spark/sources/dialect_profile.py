@@ -17,7 +17,8 @@ dialect-specific SQL:
 3. **ingest transaction wrapper** (RemoteEngine.ingest_transaction) —
    BEGIN/COMMIT/ROLLBACK around a connection's batch appends;
 4. **exactly-once commit log** (engine.append_remote_exactly_once) —
-   the ``<table>__commits`` DDL, the seen-check, and the marker insert.
+   the ``<table>__commits`` DDL, the seen-check, the marker insert and
+   the read of one sink key's batch ids.
 
 The DuckDB profile is LIVE — the seam code renders its statements from
 it, so the golden transcripts in tests/test_dialect_transcripts.py pin
@@ -152,6 +153,12 @@ class DialectProfile:
 
     def commits_marker(self, commits: str, sink: str, bid: int) -> str:
         return f"INSERT INTO {commits} VALUES ('{sink}', {int(bid)})"
+
+    def commits_ids(self, commits: str, sink: str) -> str:
+        """The batch ids logged under one sink key (same SQL on both
+        dialects)."""
+        return (f"SELECT batch_id FROM {commits} "
+                f"WHERE sink_id = '{sink}' ORDER BY batch_id")
 
 
 @dataclass(frozen=True)
@@ -325,6 +332,8 @@ def conformance_scenario(profile: DialectProfile,
         ("txn_commit", p.txn_commit(), [], None),
         ("commits_seen_committed",
          p.commits_seen(commits, "pipe", 9), [], scalar_eq(1)),
+        ("commits_ids", p.commits_ids(commits, "pipe"), [],
+         rows_eq([(7,), (9,)])),
     ]
     return steps
 

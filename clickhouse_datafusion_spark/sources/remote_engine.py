@@ -1233,7 +1233,7 @@ def strip_remote_qualifiers(sql: str, catalog: str, db: str,
     are; backticked parts are names like any other."""
     quals = ([catalog.lower(), db.lower()], [db.lower()])
 
-    def strip(parts, _kw):
+    def strip(parts, _kw, _nxt):
         for q in quals:
             k = len(q)
             if parts[:k] == q and len(parts) > k and \

@@ -84,3 +84,6 @@ COMMIT
 
 -- commits_seen_committed  [-]  (checked)
 SELECT CAST(count(*) AS BIGINT) FROM conf_commits WHERE sink_id = 'pipe' AND batch_id = 9
+
+-- commits_ids  [-]  (checked)
+SELECT batch_id FROM conf_commits WHERE sink_id = 'pipe' ORDER BY batch_id

@@ -30,3 +30,4 @@ ROLLBACK
 CREATE TABLE IF NOT EXISTS events__commits (sink_id String, batch_id Int64) ENGINE = MergeTree ORDER BY (sink_id, batch_id)
 SELECT CAST(count(*) AS Int64) FROM events__commits WHERE sink_id = 'pipe' AND batch_id = 7
 INSERT INTO events__commits (sink_id, batch_id) VALUES ('pipe', 7)
+SELECT batch_id FROM events__commits WHERE sink_id = 'pipe' ORDER BY batch_id

@@ -30,3 +30,4 @@ ROLLBACK
 CREATE TABLE IF NOT EXISTS events__commits (sink_id VARCHAR, batch_id BIGINT, PRIMARY KEY (sink_id, batch_id))
 SELECT CAST(count(*) AS BIGINT) FROM events__commits WHERE sink_id = 'pipe' AND batch_id = 7
 INSERT INTO events__commits VALUES ('pipe', 7)
+SELECT batch_id FROM events__commits WHERE sink_id = 'pipe' ORDER BY batch_id

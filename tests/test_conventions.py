@@ -179,3 +179,41 @@ def test_no_regex_lexes_sql_string_literals():
                  if isinstance(n, ast.Constant) and isinstance(n.value, str)
                  and "'(?:[^']" in n.value]
     assert offenders == []
+
+
+def test_engine_write_width_comes_from_plans_explain():
+    """Every partition width ``engine.py`` sets on a DataFrame
+    (``.coalesce(n)``, ``.repartition(n)``) calls a ``plans.explain``
+    rule, and ``write_concurrency`` reaches it only as an argument of
+    that call, so the write width has one policy: ``write_concurrency``
+    is the cap the rule takes, never the width itself. ``F.coalesce``
+    (the column function) is not a width."""
+    import ast
+
+    tree = ast.parse((PKG / "engine.py").read_text())
+    rules = {a.asname or a.name for n in ast.walk(tree)
+             if isinstance(n, ast.ImportFrom)
+             and n.module == "clickhouse_datafusion_spark.plans.explain"
+             for a in n.names}
+    widths = [n for n in ast.walk(tree) if isinstance(n, ast.Call)
+              and isinstance(n.func, ast.Attribute)
+              and n.func.attr in ("coalesce", "repartition")
+              and not (isinstance(n.func.value, ast.Name)
+                       and n.func.value.id == "F")]
+
+    def is_rule(node):
+        return (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+                and node.func.id in rules)
+
+    def bare_wc(node):
+        """``write_concurrency`` read outside a rule call."""
+        if is_rule(node):
+            return False
+        if isinstance(node, ast.Attribute) and node.attr == "write_concurrency":
+            return True
+        return any(bare_wc(k) for k in ast.iter_child_nodes(node))
+
+    offenders = [f"engine.py:{n.lineno}" for n in widths
+                 if not (n.args and any(map(is_rule, ast.walk(n.args[0]))))
+                 or bare_wc(n.args[0])]
+    assert widths and offenders == []

@@ -120,6 +120,7 @@ def render_transcript(dialect: str) -> str:
         p.commits_create(COMMITS),
         p.commits_seen(COMMITS, SINK, BID),
         p.commits_marker(COMMITS, SINK, BID),
+        p.commits_ids(COMMITS, SINK),
         "",
     ]
     return "\n".join(lines)
@@ -190,6 +191,8 @@ def test_duckdb_profile_statements_actually_run():
         cur.execute(p.commits_marker(COMMITS, SINK, BID))
         assert cur.execute(
             p.commits_seen(COMMITS, SINK, BID)).fetchone()[0] == 1
+        assert cur.execute(
+            p.commits_ids(COMMITS, SINK)).fetchall() == [(BID,)]
         # transaction wrapper
         cur.execute(p.txn_begin())
         cur.execute("INSERT INTO events VALUES (make_timestamp(1), 1)")

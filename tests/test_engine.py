@@ -320,7 +320,20 @@ def test_exists_and_show_create(spark, views, tmp_path):
 
 def test_system_tables_route_names_not_literals(engine, views):
     """Only the name ``system.one`` routes: a literal or a comment that
-    spells it keeps its text."""
+    spells it keeps its text. The routed relation keeps its table name
+    as a qualifier (``one.dummy``, ``system.one.dummy``) unless the
+    statement aliases it."""
     r = engine.sql("SELECT 'system.one' AS s, dummy -- system.one\n"
                    "FROM `system`.one").collect()
     assert [(x.s, x.dummy) for x in r] == [("system.one", 0)]
+    for q in ("SELECT system.one.dummy FROM system.one",
+              "SELECT one.dummy FROM system.one",
+              "SELECT o.dummy FROM system.one o",
+              "SELECT o.dummy FROM `system`.`one` AS o"):
+        assert [tuple(x) for x in engine.sql(q).collect()] == [(0,)], q
+    # two routed views in one statement resolve by their table names
+    n = engine.sql("SELECT count(*) AS n FROM system.tables JOIN "
+                   "system.databases ON tables.database = databases.name"
+                   ).first().n
+    assert 0 <= n <= engine.sql(
+        "SELECT count(*) AS n FROM system.tables").first().n

@@ -2267,6 +2267,15 @@ def test_dry_run_reads_the_lowered_statement(fed):
         eng._sample_keys.pop("orders")
     assert "sample key" in eng.remote_decision(
         "SELECT * FROM remote.orders SAMPLE 0.5")["reason"]
+    # a system.* read dry-runs as the routed text sql() gates, and the
+    # dry run builds no system view
+    for q in ("SELECT dummy FROM system.one",
+              "SELECT name FROM system.databases"):
+        eng.spark.catalog.dropTempView("_ch_system_databases")
+        d = eng.remote_decision(q)
+        assert not eng.spark.catalog.tableExists("_ch_system_databases")
+        eng.sql(q).collect()
+        assert not d["ships"] and d["reason"] == eng.last_remote_refusal, q
 
 
 # Adversarial spans for the identifier-hygiene property: each kind's
@@ -2327,6 +2336,8 @@ def test_text_rewrites_touch_names_only(lexer_eng, spans, r, s, n):
     q = stmt(r, s, n, f"{r}")
     local = _REMOTE_REFS[r]
     assert lexer_eng._local_form(q, ()) == stmt(local, s, n, local)
-    assert lexer_eng._route_system_tables(q) == stmt(
-        r, "(SELECT 0 AS dummy)", n, r)
+    # the routed relation takes its table name as alias unless a
+    # backticked name after it already aliases it
+    one = "(SELECT 0 AS dummy)" + ("" if spans[4][0] == "`" else " AS one")
+    assert lexer_eng._route_system_tables(q) == stmt(r, one, n, r)
     assert lexer_eng._route_native_tables(q) == stmt(r, s, "__v", r)

@@ -485,3 +485,65 @@ def test_tail_keyword_named_columns_end_to_end(spark, remote, tmp_path):
     assert lag["latest_key"] == 900
     assert lag["backlog_rows"] == 0
     remote.drop_table("t_kw")
+
+
+def test_tail_lag_monotone_under_concurrent_appends(spark, remote,
+                                                    tmp_path):
+    """While a capped tail drains AND a writer keeps appending, every
+    tail_lag sample must show a non-decreasing watermark and a
+    non-negative backlog; once the writer stops and the tail drains,
+    backlog is exactly 0, the watermark equals the true max key, and
+    the sink holds every row exactly once."""
+    import threading
+    import time
+
+    from clickhouse_datafusion_spark.sources.clickhouse_tail import tail_lag
+    from clickhouse_datafusion_spark.streaming.events import (
+        drain_tail_until_stable)
+
+    remote.create_table("t_mono", "k BIGINT, v DOUBLE")
+    remote.insert_arrow("t_mono", pa.table({
+        "k": list(range(1, 2001)), "v": [0.5] * 2000}))
+    stop = threading.Event()
+    wrote = [2000]
+
+    def writer():
+        nxt = 2001
+        for _ in range(8):
+            remote.insert_arrow("t_mono", pa.table({
+                "k": list(range(nxt, nxt + 300)), "v": [1.5] * 300}))
+            nxt += 300
+            wrote[0] += 300
+            time.sleep(0.15)
+        stop.set()
+
+    stream = tail_remote_table(spark, remote, "t_mono", "k",
+                               max_rows_per_batch=500, tail_id="mono14")
+    q = (stream.writeStream.format("memory").queryName("t_mono_sink")
+         .option("checkpointLocation", str(tmp_path / "ck_mono"))
+         .outputMode("append").start())
+    t = threading.Thread(target=writer, daemon=True)
+    samples = []
+    try:
+        t.start()
+        while not stop.is_set():
+            q.processAllAvailable()
+            samples.append(tail_lag(remote, "t_mono", "k",
+                                    tail_id="mono14"))
+        t.join()
+        drain_tail_until_stable(q)
+        final = tail_lag(remote, "t_mono", "k", tail_id="mono14")
+        wms = [s["watermark"] for s in samples if s["watermark"]
+               is not None]
+        assert wms == sorted(wms), f"watermark regressed: {wms}"
+        assert all(s["backlog_rows"] >= 0 for s in samples)
+        assert final["backlog_rows"] == 0
+        assert final["latest_key"] == wrote[0] == 4400
+        assert final["watermark"] == wrote[0]
+        assert spark.table("t_mono_sink").count() == wrote[0]
+        assert (spark.table("t_mono_sink").select("k").distinct().count()
+                == wrote[0])
+    finally:
+        stop.set()
+        q.stop()
+        remote.drop_table("t_mono")
