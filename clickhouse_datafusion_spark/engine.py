@@ -311,8 +311,11 @@ class ClickHouseSparkEngine:
         (``_spool_remote_stream``, the reference's RecordBatchStream
         hand-back, src/stream.rs:110-131). A result that fits under
         Spark's local-relation threshold comes back as an Arrow
-        LocalRelation; past it the stream spills to a parquet spool, so
-        no shipped result — an unaggregated
+        LocalRelation whose ``toPandas()`` / ``toArrow()`` serve the
+        Arrow already in this process, with no Spark job (so no
+        SQL-execution listener event fires for that collect); past the
+        threshold the stream spills to a parquet spool, so no shipped
+        result — an unaggregated
         ``SELECT * FROM remote.lineitem`` or a high-cardinality GROUP BY
         alike — holds more than the threshold in driver memory. Bare
         table names resolve LOCAL-first (nearest scope): a statement
@@ -447,7 +450,9 @@ class ClickHouseSparkEngine:
         stream that ends under it comes back through
         :meth:`_arrow_to_df` (one Arrow-side cast to the local analyzed
         schema, a LocalRelation — no spool file, no schema-inference
-        job). Past the threshold it spills to a parquet spool — the
+        job), as a ``sink.arrow_frame`` whose ``toPandas()`` and
+        ``toArrow()`` read the held Arrow and run no Spark job. Past
+        the threshold it spills to a parquet spool — the
         buffered batches, then the rest one at a time — and Spark scans
         the spool, so driver memory stays bounded by the threshold. A
         stream that fails mid-spill takes its partial spool with it."""
@@ -1805,11 +1810,6 @@ class ClickHouseSparkEngine:
             T.StructField("metric", T.StringType(), False),
             T.StructField("value", T.LongType(), False)])
         return arrow_frame(self.spark, rows, schema)
-
-    def explain_str(self, query: str, mode: str = "formatted") -> str:
-        df = self.sql(query)
-        return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), mode)
 
 # Spark functions whose value depends on the session timezone
 _TIME_FUNCS = frozenset(

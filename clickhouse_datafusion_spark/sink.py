@@ -30,6 +30,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 DEFAULT_WRITE_CONCURRENCY = 4
 
@@ -78,6 +79,35 @@ def _table_write_lock(spark: SparkSession, name_parts) -> threading.Lock:
         return _TABLE_WRITE_LOCKS.setdefault(key, threading.Lock())
 
 
+class _HeldArrowFrame(ClassicDataFrame):
+    """A frame whose data is exactly ``_held``, the Arrow table its JVM
+    ``LocalRelation`` was built from. ``toPandas()`` and ``toArrow()``
+    read their batches through ``_collect_as_arrow``, so serving the held
+    batches there collects with no Spark job. Everything else
+    (``collect()``, ``schema``, views, every transformation) goes through
+    the JVM frame; a derived frame is a plain ``DataFrame``."""
+
+    def _collect_as_arrow(self, split_batches: bool = False,
+                          empty_list_if_zero_records: bool = True):
+        import pyarrow as pa
+
+        held = self._held
+        if held.num_rows == 0:
+            if empty_list_if_zero_records:
+                return []
+            return [pa.RecordBatch.from_arrays(
+                [pa.array([], f.type) for f in held.schema],
+                schema=held.schema)]
+        batches = held.to_batches()
+        if split_batches:
+            # selfDestruct frees each column as it converts: give it its
+            # own copy, as PySpark's collect does, and keep ``_held``
+            batches = [pa.RecordBatch.from_arrays(
+                [pa.concat_arrays([a]) for a in b], schema=b.schema)
+                for b in batches]
+        return batches
+
+
 def arrow_frame(spark: SparkSession, data, schema=None) -> DataFrame:
     """The one way the engine builds a result frame it made itself.
 
@@ -88,19 +118,37 @@ def arrow_frame(spark: SparkSession, data, schema=None) -> DataFrame:
     localRelationThreshold`` — the reference hands results back as Arrow
     RecordBatches (src/stream.rs:110-131). A Python list would become a
     pickled RDD instead (``Scan ExistingRDD``), so collecting even one
-    count row would start Python workers."""
+    count row would start Python workers.
+
+    The frame also keeps the Arrow table exactly as it was sent to the
+    JVM (:class:`_HeldArrowFrame`), so ``toPandas()`` and ``toArrow()``
+    of it run no Spark job — and so no SQL-execution listener event
+    fires for that collect. The held table is built from the same input
+    the way ``createDataFrame`` builds what it sends (timestamps
+    localized in the session timezone, then cast to Spark's Arrow
+    schema), shares its buffers where the cast is a no-op, and lives
+    as long as the frame."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import (
+        _check_arrow_table_timestamps_localize, to_arrow_schema)
 
     if not isinstance(data, pa.Table):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         if isinstance(schema, str):
             schema = T.DataType.fromDDL(schema)
         arrow_schema = to_arrow_schema(schema)
         data = pa.Table.from_arrays(
             [pa.array([row[i] for row in data], type=f.type)
              for i, f in enumerate(arrow_schema)], schema=arrow_schema)
-    return spark.createDataFrame(data, schema)
+    conf = spark._jconf  # noqa: SLF001
+    tz, large = conf.sessionLocalTimeZone(), conf.arrowUseLargeVarTypes()
+    df = spark.createDataFrame(data, schema)
+    struct = df._schema  # noqa: SLF001 — the StructType it sent under
+    out = _HeldArrowFrame(df._jdf, spark)  # noqa: SLF001
+    out._held = _check_arrow_table_timestamps_localize(
+        data, struct, True, tz).cast(to_arrow_schema(
+            struct, error_on_duplicated_field_names_in_struct=True,
+            prefers_large_types=large))
+    return out
 
 
 _COUNT_SCHEMA = T.StructType([T.StructField("count", T.LongType(), False)])

@@ -25,20 +25,32 @@ def test_result_frames_built_from_arrow():
     LocalTableScan. ``createDataFrame`` over a Python list, tuple or
     ``.collect()`` result makes a pickled Python RDD instead, and
     collecting it starts Python workers — so in ``engine.py`` and
-    ``sink.py`` only the helper may call ``createDataFrame``."""
+    ``sink.py`` only the helper may call ``createDataFrame``.
+
+    The helper's frame serves ``toPandas()`` from the Arrow it sent the
+    JVM, so it must hold exactly that table: only ``arrow_frame`` may
+    construct the held-Arrow frame class, and only ``sink.py`` may
+    define the ``_collect_as_arrow`` hook."""
     import ast
 
     offenders = []
-    for name in ("engine.py", "sink.py"):
-        tree = ast.parse((PKG / name).read_text())
+    for path in sorted(PKG.rglob("*.py")):
+        name = str(path.relative_to(PKG))
+        tree = ast.parse(path.read_text())
         allowed = {n for f in ast.walk(tree)
                    if isinstance(f, ast.FunctionDef) and f.name == "arrow_frame"
+                   and name == "sink.py"
                    for n in ast.walk(f)}
         offenders += [f"{name}:{n.lineno}" for n in ast.walk(tree)
-                      if isinstance(n, ast.Call)
-                      and isinstance(n.func, ast.Attribute)
-                      and n.func.attr == "createDataFrame"
-                      and n not in allowed]
+                      if isinstance(n, ast.Call) and n not in allowed
+                      and ((isinstance(n.func, ast.Attribute)
+                            and n.func.attr == "createDataFrame"
+                            and name in ("engine.py", "sink.py"))
+                           or "_HeldArrowFrame" in ast.unparse(n.func))]
+        offenders += [f"{name}:{n.lineno}" for n in ast.walk(tree)
+                      if isinstance(n, ast.FunctionDef)
+                      and n.name == "_collect_as_arrow"
+                      and name != "sink.py"]
     assert not offenders, offenders
 
 

@@ -21,7 +21,9 @@ shape)."""
 from __future__ import annotations
 
 import json
+import random
 import socket
+import threading
 import time
 
 import pyarrow as pa
@@ -30,6 +32,10 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from clickhouse_datafusion_spark.plans import explain
+from clickhouse_datafusion_spark.sources.clickhouse_tail import (
+    _progress_op,
+    _wire_query,
+)
 from clickhouse_datafusion_spark.sources.remote_engine import RemoteEngine
 from tests.conftest import SF_SMOKE
 
@@ -982,3 +988,113 @@ def test_executor_direct_replay_keeps_the_crashed_width(
     finally:
         eng.write_mode = "spool"
         remote.drop_table("xpw")
+
+
+# -- the ingest server under concurrent mixed planes ------------------
+
+@pytest.fixture()
+def remote():
+    r = RemoteEngine(pool_size=3)   # small pool: force contention
+    yield r
+    r.stop_ingest_server()
+
+
+def _ingest_txn(host, port, table, batches, token=None):
+    """One wire ingest connection = one remote transaction."""
+    with socket.create_connection((host, port)) as s:
+        f = s.makefile("rwb")
+        req = {"table": table, "columns": ""}
+        if token is not None:
+            req["token"] = token
+        hdr = json.dumps(req).encode()
+        f.write(len(hdr).to_bytes(4, "big"))
+        f.write(hdr)
+        w = pa.ipc.new_stream(f, batches[0].schema)
+        for b in batches:
+            w.write_batch(b)
+        w.close()
+        f.flush()
+        status = f.read(1)
+        if status != b"\x00":
+            ln = int.from_bytes(f.read(4), "big")
+            raise RuntimeError(f.read(ln).decode())
+        return int.from_bytes(f.read(8), "big")
+
+
+def test_concurrent_mixed_planes_on_one_table(remote):
+    """2 writer threads (wire transactions of exactly 1000 rows), 2
+    reader threads (query-op scans), 1 progress thread (put/get
+    cycles) — all on one table over a 3-cursor pool. Properties:
+
+    * ATOMIC VISIBILITY: every concurrent count() observation is a
+      multiple of 1000 — a range pull can never see a transaction's
+      partial prefix;
+    * nothing errors, nothing deadlocks, the final count is exact;
+    * the progress row reads back MONOTONE under interleaved puts.
+    """
+    remote.create_table("mix_t", "k BIGINT, v DOUBLE")
+    host, port = remote.start_ingest_server()
+    TXNS, ROWS = 6, 1000
+    errors: list[str] = []
+    observed: list[int] = []
+    prog_reads: list[int] = []
+    stop = threading.Event()
+
+    def writer(wid: int):
+        try:
+            for t in range(TXNS):
+                base = (wid * TXNS + t) * ROWS
+                batches = [pa.record_batch({
+                    "k": list(range(base + i * 250, base + (i + 1) * 250)),
+                    "v": [0.5] * 250}) for i in range(ROWS // 250)]
+                n = _ingest_txn(host, port, "mix_t", batches)
+                assert n == ROWS
+        except Exception as e:  # surfaces in the main thread's assert
+            errors.append(f"writer{wid}: {type(e).__name__}: {e}")
+
+    def reader(rid: int):
+        try:
+            while not stop.is_set():
+                n = None
+                for b in _wire_query(
+                        host, port,
+                        "SELECT CAST(count(*) AS BIGINT) AS n FROM mix_t"):
+                    n = b.column(0)[0].as_py()
+                observed.append(int(n))
+        except Exception as e:
+            errors.append(f"reader{rid}: {type(e).__name__}: {e}")
+
+    def progress():
+        try:
+            wm = 0
+            while not stop.is_set():
+                wm += random.randint(1, 50)
+                _progress_op(host, port, "mix_t", "mix-tail", "put",
+                             watermark=wm)
+                got = _progress_op(host, port, "mix_t", "mix-tail", "get")
+                prog_reads.append(int(got))
+        except Exception as e:
+            errors.append(f"progress: {type(e).__name__}: {e}")
+
+    random.seed(13)
+    threads = ([threading.Thread(target=writer, args=(w,))
+                for w in range(2)]
+               + [threading.Thread(target=reader, args=(r,))
+                  for r in range(2)]
+               + [threading.Thread(target=progress)])
+    for t in threads:
+        t.start()
+    for t in threads[:2]:
+        t.join(timeout=120)
+    stop.set()
+    for t in threads[2:]:
+        t.join(timeout=30)
+    assert not errors, errors
+    assert all(n % ROWS == 0 for n in observed), (
+        "a reader saw a transaction's partial prefix: "
+        f"{[n for n in observed if n % ROWS][:5]}")
+    assert observed, "readers never got a row in"
+    assert prog_reads == sorted(prog_reads), "progress row went backwards"
+    final = remote.execute(
+        "SELECT CAST(count(*) AS BIGINT) FROM mix_t").column(0)[0].as_py()
+    assert final == 2 * TXNS * ROWS

@@ -15,6 +15,7 @@ import functools
 import threading
 import uuid
 
+import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -26,7 +27,7 @@ from clickhouse_datafusion_spark.sources.remote_engine import (
     plan_refs,
     unparse_for_remote,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_of
 
 
 @pytest.fixture(scope="module")
@@ -1302,6 +1303,59 @@ def test_engine_made_frames_plan_local_table_scan(fed, spark, frame):
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
+def _sorted_pdf(pdf):
+    return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+
+@pytest.mark.parametrize("frame", [
+    _local_insert,
+    functools.partial(_remote_insert, source="o_orderkey", plane="whole"),
+    _streamed_ship,
+], ids=["local_insert", "remote_insert_whole", "streamed_ship"])
+def test_engine_made_frames_collect_with_no_job(fed, spark, frame):
+    """An INSERT's count frame and a shipped read that fits collect
+    from the Arrow already in this process: ``toPandas()`` and
+    ``toArrow()`` start no Spark job. A frame derived from one, and its
+    ``collect()``, still go through Spark, to the same rows."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    eng, _ = fed
+    with frame(eng, spark) as df:
+        (pdf, tbl), jobs = jobs_of(spark, lambda: (df.toPandas(),
+                                                   df.toArrow()))
+        assert jobs == 0
+        jvm = DataFrame(df._jdf, spark)
+        pd.testing.assert_frame_equal(pdf, jvm.toPandas(), check_dtype=True)
+        assert tbl.equals(jvm.toArrow())
+        first = df.columns[0]
+        derived, jobs = jobs_of(spark, df.select(first).toPandas)
+        assert jobs >= 1
+        pd.testing.assert_frame_equal(derived, pdf[[first]])
+        assert df.collect() == jvm.collect()
+
+
+def test_shipped_read_collects_with_no_job(fed, spark, hand_back):
+    """``eng.sql(<shipped read>).toPandas()`` starts no Spark job when
+    the result fits; a spilled result collects through Spark's scan of
+    the spool. Both hand back the local rows."""
+    eng, remote = fed
+    q = ("SELECT o_orderkey, o_orderstatus FROM clickhouse.remote.orders "
+         "WHERE o_orderkey < 200")
+    pdf, jobs = jobs_of(spark, lambda: eng.sql(q).toPandas())
+    assert eng.last_remote_sql is not None
+    df = eng.sql(q)
+    _assert_hand_back(df, remote, hand_back)
+    tbl, arrow_jobs = jobs_of(spark, df.toArrow)
+    if hand_back == "fits":
+        assert (jobs, arrow_jobs) == (0, 0)
+    else:
+        assert jobs >= 1 and arrow_jobs >= 1
+    want = spark.sql(q.replace("clickhouse.remote.", "")).toPandas()
+    pd.testing.assert_frame_equal(_sorted_pdf(pdf), _sorted_pdf(want))
+    pd.testing.assert_frame_equal(_sorted_pdf(tbl.to_pandas()),
+                                  _sorted_pdf(want))
+
+
 # -- r11: streamed federated WRITE path (verdict task 1) ---------------
 
 def test_federated_insert_streams_not_materializes(fed, spark):
@@ -1472,6 +1526,110 @@ def test_insert_arrow_batches_bounded_inflight_and_concurrent():
         assert n == 400
     finally:
         remote.drop_table("iab_t")
+
+
+# -- the spool write path under a non-UTC session and at batch-row
+#    extremes ----------------------------------------------------------
+
+def test_write_spool_timestamp_semantics_non_utc(fed, spark):
+    """The spool preserves the SEMANTIC of each timestamp flavor under
+    a non-UTC session (the r11 tz gate covers reads; writes carry
+    instants too — r11 verdict task 7):
+
+    - TIMESTAMP (LTZ) columns carry INSTANTS. The remote stores the
+      UTC rendering regardless of session tz (parquet normalizes to
+      UTC), so a written instant reads back as the same instant — the
+      naive remote value must equal the UTC rendering, NOT the session
+      rendering.
+    - TIMESTAMP_NTZ columns carry WALL-CLOCK fields. The remote must
+      store the literal fields unshifted — identical under any
+      session tz."""
+    eng, remote = fed
+    remote.create_table("tzw_t", "k BIGINT, ev TIMESTAMP, evn TIMESTAMP")
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        # TIMESTAMP '...' parses in the session tz: 12:00 EST = 17:00 UTC
+        src = spark.sql(
+            "SELECT CAST(id AS BIGINT) AS k, "
+            "TIMESTAMP '2001-01-15 12:00:00.123456' AS ev, "
+            "TIMESTAMP_NTZ '2001-01-15 12:00:00.123456' AS evn, "
+            "log(id + 1) AS junk FROM range(2)")
+        src.createOrReplaceTempView("tzw_src")
+        eng.sql("INSERT INTO clickhouse.remote.tzw_t "
+                "SELECT k, ev, evn FROM tzw_src WHERE log(k + 1) >= 0")
+        assert eng.last_remote_insert == "arrow-stream"
+        rows = remote.execute(
+            "SELECT ev, evn FROM tzw_t ORDER BY ev LIMIT 1")
+        ev, evn = (str(rows.column(0)[0]), str(rows.column(1)[0]))
+        assert ev == "2001-01-15 17:00:00.123456"     # instant, UTC form
+        assert evn == "2001-01-15 12:00:00.123456"    # wall-clock, as-is
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+        remote.drop_table("tzw_t")
+        spark.catalog.dropTempView("tzw_src")
+
+
+def test_write_then_read_roundtrip_is_instant_faithful(fed, spark):
+    """Round trip under non-UTC: INSERT an instant, read it back
+    through the seam (or its local fallback) — the value the user
+    sees equals the value they wrote, independent of the remote's
+    naive storage rendering."""
+    from pyspark.sql import functions as F
+
+    eng, remote = fed
+    remote.create_table("tzr_t", "k BIGINT, ev TIMESTAMP")
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        src = spark.sql(
+            "SELECT CAST(1 AS BIGINT) AS k, "
+            "TIMESTAMP '2001-01-15 12:00:00' AS ev, log(2) AS junk")
+        src.createOrReplaceTempView("tzr_src")
+        eng.sql("INSERT INTO clickhouse.remote.tzr_t "
+                "SELECT k, ev FROM tzr_src WHERE log(k + 1) >= 0")
+        # read the instant back seam-level (Arrow, tz-naive = UTC form)
+        micros = remote.execute(
+            "SELECT epoch_us(ev) AS us FROM tzr_t").column(0)[0].as_py()
+        want = src.select(
+            F.unix_micros("ev").alias("us")).first()["us"]
+        assert micros == want
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+        remote.drop_table("tzr_t")
+        spark.catalog.dropTempView("tzr_src")
+
+
+@given(batch_rows=st.sampled_from([1, 7, 100_000_000]),
+       wc=st.sampled_from([1, 8]))
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_write_batch_rows_boundaries(fed, spark, batch_rows, wc):
+    """The federated streamed INSERT is exact at the batch-size
+    extremes: 1-row batches (hundreds of pool round-trips), a tiny
+    odd size, and one giant batch larger than the source (single
+    append), crossed with 1 and 8 workers over the pool of 4 (over-
+    subscribed: pool waits, no deadlock, no timeout)."""
+    eng, remote = fed
+    prev_b, prev_w = eng.write_batch_rows, eng.write_concurrency
+    remote.create_table("bb_t", "k BIGINT")
+    try:
+        eng.write_batch_rows, eng.write_concurrency = batch_rows, wc
+        eng.sql("INSERT INTO clickhouse.remote.bb_t "
+                "SELECT CAST(o_orderkey AS BIGINT) FROM "
+                "clickhouse.remote.orders WHERE log(o_orderkey + 1) >= 0 "
+                "AND o_orderkey < 700")
+        got = remote.execute(
+            "SELECT CAST(count(*) AS BIGINT) AS n, "
+            "CAST(count(DISTINCT k) AS BIGINT) AS d FROM bb_t")
+        n, d = got.column(0)[0].as_py(), got.column(1)[0].as_py()
+        want = spark.read.parquet(f"{SF_SMOKE}/orders.parquet") \
+            .filter("o_orderkey < 700").count()
+        assert n == d == want
+    finally:
+        eng.write_batch_rows, eng.write_concurrency = prev_b, prev_w
+        remote.drop_table("bb_t")
+
 
 
 # -- r11: advice items — gate widening, scoping, observability ---------

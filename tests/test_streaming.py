@@ -9,17 +9,22 @@ import os
 import shutil
 import uuid
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_datafusion_spark.catalog import resolve_parquet_path
+from clickhouse_datafusion_spark.sources.remote_engine import RemoteEngine
 from clickhouse_datafusion_spark.streaming import (
     read_events_stream,
     run_to_memory_sink,
     session_windows,
     sliding_value_sums,
+    tail_remote_table,
     tumbling_counts,
 )
+from clickhouse_datafusion_spark.streaming.events import (
+    drain_tail_until_stable)
 from tests.conftest import SF_SMOKE
 
 
@@ -779,3 +784,62 @@ def test_stream_to_remote_table_exactly_once_executor_direct(
         remote.stop_ingest_server()
         for t in ("ev_xd", "ev_xd__commits", "ev_sp", "ev_sp__commits"):
             remote.drop_table(t, if_exists=True)
+
+
+@pytest.fixture()
+def remote():
+    r = RemoteEngine(pool_size=3)   # small pool: force contention
+    yield r
+    r.stop_ingest_server()
+
+
+def test_self_referential_cdc_loop_converges(spark, remote, tmp_path):
+    """Tail table T and exactly-once-append the transform BACK INTO T
+    (sink == source — the feedback cycle). Each written generation
+    re-enters the tail; with the transform forwarding only gen < 3,
+    the loop must CONVERGE to exactly one row per (origin, generation)
+    for generations 0..3 — exactly-once on every lap of the cycle.
+    Keys are re-minted above the current high-water mark per lap, so
+    the append-only-in-key contract holds around the loop."""
+    from pyspark.sql import functions as F
+
+    from clickhouse_datafusion_spark.engine import ClickHouseSparkEngine
+
+    eng = ClickHouseSparkEngine(spark)
+    eng.attach_remote(remote, db="remote")
+    N, GENS = 200, 3
+    remote.create_table("t_loop", "k BIGINT, origin BIGINT, gen BIGINT")
+    remote.insert_arrow("t_loop", pa.table({
+        "k": list(range(1, N + 1)),
+        "origin": list(range(1, N + 1)),
+        "gen": [0] * N}))
+
+    stream = tail_remote_table(spark, remote, "t_loop", "k")
+
+    def lap(batch, bid):
+        fwd = (batch.filter(F.col("gen") < GENS)
+               .select((F.col("k") + 1_000_000).alias("k"), "origin",
+                       (F.col("gen") + 1).alias("gen")))
+        if not fwd.isEmpty():
+            eng.append_remote_exactly_once("t_loop", fwd, bid,
+                                           sink_id="loop")
+
+    q = (stream.writeStream.outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "loop_ckpt"))
+         .foreachBatch(lap).start())
+    try:
+        drain_tail_until_stable(q, stable_rounds=3)
+    finally:
+        q.stop()
+    tbl = remote.execute(
+        "SELECT CAST(gen AS BIGINT) AS gen, "
+        "CAST(count(*) AS BIGINT) AS n, "
+        "CAST(count(DISTINCT origin) AS BIGINT) AS d "
+        "FROM t_loop GROUP BY gen ORDER BY gen").to_pydict()
+    assert tbl["gen"] == [0, 1, 2, 3]
+    assert tbl["n"] == [N] * 4, f"a lap doubled or dropped rows: {tbl}"
+    assert tbl["d"] == [N] * 4
+    total = remote.execute(
+        "SELECT CAST(count(*) AS BIGINT) FROM t_loop"
+    ).column(0)[0].as_py()
+    assert total == (GENS + 1) * N

@@ -14,10 +14,14 @@ count/sum/distinct verification that no rows were lost or duplicated.
 from __future__ import annotations
 
 import uuid
+import threading
 from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+
+from clickhouse_datafusion_spark.sources.remote_engine import RemoteEngine
 
 N_WRITERS = 16
 ROWS_PER_WRITER = 6_250  # 16 × 6,250 = 100k rows, the reference's volume
@@ -98,3 +102,85 @@ def test_concurrent_connector_writers(spark, tmp_path):
     assert agg["n"] == total
     assert agg["d"] == total
     assert agg["s"] == total * (total - 1) // 2
+
+
+# -- concurrent insert_arrow_batches callers sharing ONE remote pool --
+
+def _batches(lo: int, n_batches: int, rows_per: int):
+    for i in range(n_batches):
+        base = lo + i * rows_per
+        yield pa.record_batch(
+            [pa.array(range(base, base + rows_per), type=pa.int64())],
+            names=["k"])
+
+
+def test_concurrent_batch_writers_two_tables_one_pool():
+    """Two threads stream interleaved batch appends into TWO tables
+    through ONE shared pool (pool_size=2, each caller asking for 4
+    workers = 8 writers over 2 cursors): no deadlock, no lost or
+    cross-wired rows, exact disjoint key sets per table — the
+    reference's multi-client stress analog (e2e_stress.rs:241-250)."""
+    remote = RemoteEngine(pool_size=2)
+    remote.create_table("cc_a", "k BIGINT")
+    remote.create_table("cc_b", "k BIGINT")
+    errs: list[Exception] = []
+    counts = {}
+
+    def writer(table, lo):
+        try:
+            counts[table] = remote.insert_arrow_batches(
+                table, _batches(lo, 40, 25), write_concurrency=4)
+        except Exception as e:  # pragma: no cover - fails the assert
+            errs.append(e)
+
+    try:
+        ts = [threading.Thread(target=writer, args=("cc_a", 0)),
+              threading.Thread(target=writer, args=("cc_b", 1_000_000))]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=120)
+        assert not errs, errs
+        assert counts == {"cc_a": 1000, "cc_b": 1000}
+        for table, lo in (("cc_a", 0), ("cc_b", 1_000_000)):
+            got = remote.execute(
+                f"SELECT CAST(count(*) AS BIGINT) AS n, "
+                f"CAST(min(k) AS BIGINT) AS mn, "
+                f"CAST(max(k) AS BIGINT) AS mx, "
+                f"CAST(count(DISTINCT k) AS BIGINT) AS d FROM {table}")
+            n, mn, mx, d = (got.column(i)[0].as_py() for i in range(4))
+            assert (n, mn, mx, d) == (1000, lo, lo + 999, 1000)
+    finally:
+        remote.drop_table("cc_a")
+        remote.drop_table("cc_b")
+
+
+def test_concurrent_writers_same_table_exact_union():
+    """Both callers target the SAME table: the union of both key
+    ranges lands exactly once each (append-only, no lost update)."""
+    remote = RemoteEngine(pool_size=2)
+    remote.create_table("cc_s", "k BIGINT")
+    errs: list[Exception] = []
+
+    def writer(lo):
+        try:
+            remote.insert_arrow_batches(
+                "cc_s", _batches(lo, 20, 50), write_concurrency=3)
+        except Exception as e:  # pragma: no cover
+            errs.append(e)
+
+    try:
+        ts = [threading.Thread(target=writer, args=(lo,))
+              for lo in (0, 500_000)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=120)
+        assert not errs, errs
+        got = remote.execute(
+            "SELECT CAST(count(*) AS BIGINT) AS n, "
+            "CAST(count(DISTINCT k) AS BIGINT) AS d FROM cc_s")
+        assert (got.column(0)[0].as_py(),
+                got.column(1)[0].as_py()) == (2000, 2000)
+    finally:
+        remote.drop_table("cc_s")

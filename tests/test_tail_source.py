@@ -6,6 +6,9 @@ distributed N-ways and made restartable via checkpointed offsets)."""
 
 from __future__ import annotations
 
+import datetime as dt
+import random
+
 import pyarrow as pa
 import pytest
 
@@ -15,6 +18,8 @@ from clickhouse_datafusion_spark.sources.clickhouse_tail import (
 )
 from clickhouse_datafusion_spark.sources.remote_engine import RemoteEngine
 from clickhouse_datafusion_spark.streaming import tail_remote_table
+from clickhouse_datafusion_spark.streaming.events import (
+    drain_tail_until_stable)
 
 
 @pytest.fixture()
@@ -547,3 +552,43 @@ def test_tail_lag_monotone_under_concurrent_appends(spark, remote,
         stop.set()
         q.stop()
         remote.drop_table("t_mono")
+
+
+def test_duplicate_timestamp_keys_at_partition_boundaries(spark, remote):
+    """Heavy key duplication makes quantile boundaries LAND on
+    duplicated values (few distinct keys, many rows each, random per
+    seed) — the half-open range split must still deliver every row
+    exactly once, across two insert phases and a capped catch-up."""
+    rng = random.Random(131)
+    base = dt.datetime(2026, 1, 1, 12, 0, 0)
+
+    def phase(n_rows, lo_s, hi_s, id0):
+        # ~8 distinct timestamps covering the second-range — guarantees
+        # every quantile boundary is a duplicated key
+        ticks = sorted(rng.sample(range(lo_s, hi_s), 8))
+        ts = [base + dt.timedelta(seconds=rng.choice(ticks))
+              for _ in range(n_rows)]
+        ids = list(range(id0, id0 + n_rows))
+        return pa.table({
+            "ts": pa.array(sorted(ts), type=pa.timestamp("us")),
+            "id": ids})
+
+    remote.create_table("t_dupk", "ts TIMESTAMP, id BIGINT")
+    remote.insert_arrow("t_dupk", phase(1200, 0, 1000, 0))
+    stream = tail_remote_table(spark, remote, "t_dupk", "ts",
+                               key_type="timestamp", num_partitions=4,
+                               max_rows_per_batch=300)
+    q = (stream.writeStream.format("memory").queryName("t_dupk_sink")
+         .outputMode("append").start())
+    try:
+        drain_tail_until_stable(q)
+        # phase 2: strictly above the committed watermark (the
+        # append-only-in-key contract), same duplication shape
+        remote.insert_arrow("t_dupk", phase(800, 2000, 3000, 1200))
+        drain_tail_until_stable(q)
+        got = spark.table("t_dupk_sink").toPandas()
+    finally:
+        q.stop()
+    assert len(got) == 2000
+    assert sorted(got["id"].tolist()) == list(range(2000)), \
+        "duplicate-key ranges lost or doubled rows"

@@ -17,6 +17,7 @@ from clickhouse_datafusion_spark.sink import (
     insert_into,
     run_insert_sql,
 )
+from tests.conftest import jobs_of
 
 
 @pytest.fixture()
@@ -179,19 +180,6 @@ def test_insert_into_single_pass(spark, tbl):
     assert acc.value == 100
 
 
-def _jobs_of(spark, fn):
-    """Run ``fn`` under a fresh job group; return (its result, the
-    number of Spark jobs it started)."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_run_insert_sql_single_pass(spark, tbl):
     # Every INSERT shape runs as Spark's own command and counts from the
     # write's numOutputRows: one write job, no before/after table counts.
@@ -200,7 +188,7 @@ def test_run_insert_sql_single_pass(spark, tbl):
         spark, f"INSERT INTO {tbl} SELECT id, 'n', 2.0 FROM range(10)")
     assert res.collect()[0]["count"] == 10
     assert spark.table(tbl).count() == 11
-    res, jobs = _jobs_of(spark, lambda: run_insert_sql(
+    res, jobs = jobs_of(spark, lambda: run_insert_sql(
         spark, f"INSERT INTO {tbl} (val, id) SELECT 1.0, id FROM range(7)"))
     assert (res.collect()[0]["count"], jobs) == (7, 1)
     # a source with an exchange runs adaptively; its count is as exact
@@ -212,11 +200,11 @@ def test_run_insert_sql_single_pass(spark, tbl):
     spark.sql(f"CREATE TABLE {part} (id BIGINT, p INT) USING parquet "
               "PARTITIONED BY (p)")
     try:
-        res, jobs = _jobs_of(spark, lambda: run_insert_sql(
+        res, jobs = jobs_of(spark, lambda: run_insert_sql(
             spark, f"INSERT INTO {part} PARTITION (p = 1) "
                    "SELECT id FROM range(5)"))
         assert (res.collect()[0]["count"], jobs) == (5, 1)
-        res, jobs = _jobs_of(spark, lambda: run_insert_sql(
+        res, jobs = jobs_of(spark, lambda: run_insert_sql(
             spark, f"INSERT INTO {part} PARTITION (p) "
                    "SELECT id, CAST(id % 3 AS INT) FROM range(9)"))
         assert (res.collect()[0]["count"], jobs) == (9, 1)
