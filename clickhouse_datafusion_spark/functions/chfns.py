@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-from clickhouse_datafusion_spark.dialect import ch_type_to_spark_ddl
 from clickhouse_datafusion_spark.functions.rewrite import rewrite_sql
 
 
@@ -41,8 +40,3 @@ def ch_array_filter(body: str, col: str, type_str: str = "List(Utf8)") -> Column
 
 def ch_array_exists(body: str, col: str) -> Column:
     return ch(f"`arrayExists`($x, {body}, {col})", "Boolean")
-
-
-def spark_type_of(type_str: str) -> str:
-    """Expose the ClickHouse→Spark DDL type mapping."""
-    return ch_type_to_spark_ddl(type_str)

@@ -736,17 +736,3 @@ HOF_NAMES = set(HOF_TRANSLATORS)
 GENERATOR_TRANSLATORS = {
     "arrayjoin": "explode",
 }
-
-
-def translate_scalar(name: str, args: list[str]) -> str:
-    """Translate one non-HOF ClickHouse call; raise if unknown."""
-    key = name.lower()
-    fn = SCALAR_TRANSLATORS.get(key)
-    if fn is None:
-        raise UnknownClickHouseFunction(name)
-    return fn(args)
-
-
-def is_known(name: str) -> bool:
-    key = name.lower()
-    return key in SCALAR_TRANSLATORS or key in HOF_TRANSLATORS or key in GENERATOR_TRANSLATORS

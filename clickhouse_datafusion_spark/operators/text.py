@@ -90,11 +90,6 @@ def quality_cols(text_col: str = "text") -> list[Column]:
     ]
 
 
-def lang_score(text_col: str, lang: str) -> Column:
-    profile = LANG_PROFILES[lang]
-    return F.size(F.filter(words(text_col), lambda w: w.isin(*profile)))
-
-
 def _lang_scores_arr(text_col: str) -> Column:
     """Per-language function-word hit counts as ONE bound array (element
     order = ``sorted(LANG_PROFILES)``). The text is split once and each

@@ -47,9 +47,6 @@ production shape, are unaffected: the next trigger re-polls).
 
 from __future__ import annotations
 
-import json
-import re
-import socket
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -59,16 +56,17 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-TAIL_FORMAT_NAME = "clickhouse_tail"
+from clickhouse_datafusion_spark.sources import wire
+from clickhouse_datafusion_spark.sources.remote_engine import _SQL_IDENT_RE
 
-# the identifier grammar the engine's front door resolves bare table
-# names against — stream options arriving via readStream.option(...)
-# are caller-controlled SQL fragments otherwise (r12 ADVICE)
-_IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9]*\Z")
+TAIL_FORMAT_NAME = "clickhouse_tail"
 
 
 def _checked_ident(value: str, what: str) -> str:
-    if not _IDENT_RE.fullmatch(value or ""):
+    # the identifier grammar the wire's server validates table names
+    # against — stream options arriving via readStream.option(...) are
+    # caller-controlled SQL fragments otherwise (r12 ADVICE)
+    if not _SQL_IDENT_RE.fullmatch(value or ""):
         raise ValueError(
             f"clickhouse_tail: option {what}={value!r} is not a bare "
             "SQL identifier ([A-Za-z_][A-Za-z_0-9]*)")
@@ -87,44 +85,13 @@ def _checked_projection(cols: str) -> str:
     return ", ".join(items)
 
 
-def _read_status(f, what: str) -> bytes:
-    """Read the 1-byte wire status; an abrupt server close (empty read
-    on FIN, ECONNRESET on RST) becomes one clean error instead of an
-    empty 'failed: ' message or a raw socket exception (r12 ADVICE)."""
-    try:
-        status = f.read(1)
-    except (ConnectionResetError, BrokenPipeError) as e:
-        raise RuntimeError(
-            f"{what} failed: connection closed by server") from e
-    if not status:
-        raise RuntimeError(f"{what} failed: connection closed by server")
-    return status
-
-
 def _wire_query(host: str, port: int, sql: str, batch_rows: int = 65536,
                 token: str | None = None):
     """Run ``sql`` against the remote's Arrow endpoint; yield
     RecordBatches. Used by the driver (scalar polls) and by executors
     (range scans) alike — the source's only data plane."""
-    import pyarrow as pa
-
-    with socket.create_connection((host, port)) as s:
-        f = s.makefile("rwb")
-        req = {"op": "query", "sql": sql, "batch_rows": batch_rows}
-        if token is not None:
-            req["token"] = token
-        hdr = json.dumps(req).encode()
-        f.write(len(hdr).to_bytes(4, "big"))
-        f.write(hdr)
-        f.flush()
-        status = _read_status(f, "remote query")
-        if status != b"\x00":
-            ln = int.from_bytes(f.read(4), "big")
-            raise RuntimeError("remote query failed: "
-                               + f.read(ln).decode())
-        reader = pa.ipc.open_stream(f)
-        for batch in reader:
-            yield batch
+    with wire.query(host, port, sql, batch_rows, token) as reader:
+        yield from reader
 
 
 def _scalar(host: str, port: int, sql: str, token: str | None = None):
@@ -147,33 +114,15 @@ def _progress_op(host: str, port: int, table: str, tail_id: str,
     pair the clamp logic needs (r14); other actions return None.
     ``put`` records ``incarnation`` alongside the watermark (the
     greatest watermark's writer wins, both dialects)."""
-    req = {"op": "progress", "table": table, "tail_id": tail_id,
-           "action": action}
-    if watermark is not None:
-        req["watermark"] = int(watermark)
-    if incarnation is not None:
-        req["incarnation"] = incarnation
-    if token is not None:
-        req["token"] = token
-    with socket.create_connection((host, port)) as s:
-        f = s.makefile("rwb")
-        hdr = json.dumps(req).encode()
-        f.write(len(hdr).to_bytes(4, "big"))
-        f.write(hdr)
-        f.flush()
-        status = _read_status(f, "tail progress op")
-        if status != b"\x00":
-            ln = int.from_bytes(f.read(4), "big")
-            raise RuntimeError("tail progress op failed: "
-                               + f.read(ln).decode())
-        present = f.read(1)
-        val = int.from_bytes(f.read(8), "big", signed=True)
-        inc = f.read(int.from_bytes(f.read(2), "big")).decode()
-        if action == "get":
-            if present != b"\x01":
-                return None
-            return (val, inc) if full else val
+    with wire.request(
+            host, port, op="progress", table=table, tail_id=tail_id,
+            action=action,
+            watermark=None if watermark is None else int(watermark),
+            incarnation=incarnation, token=token) as f:
+        row = wire.read_progress(f, "tail progress op")
+    if action != "get" or row is None:
         return None
+    return row if full else row[0]
 
 
 def tail_lag(remote, table: str, key_col: str,
@@ -507,8 +456,6 @@ class ClickHouseTailDataSource(DataSource):
     def schema(self) -> StructType:
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        import pyarrow as pa
-
         from clickhouse_datafusion_spark.sources.dialect_profile import (
             get_profile)
 
@@ -524,25 +471,10 @@ class ClickHouseTailDataSource(DataSource):
             # read-only gate)
             cols = ", ".join(profile.quote_ident(c.strip())
                              for c in cols.split(","))
-        token = self.options.get("token")
-        with socket.create_connection((host, port)) as s:
-            f = s.makefile("rwb")
-            req = {"op": "query",
-                   "sql": f"SELECT {cols} FROM {table} LIMIT 0"}
-            if token is not None:
-                req["token"] = token
-            hdr = json.dumps(req).encode()
-            f.write(len(hdr).to_bytes(4, "big"))
-            f.write(hdr)
-            f.flush()
-            status = f.read(1)
-            if status != b"\x00":
-                ln = int.from_bytes(f.read(4), "big") if status else 0
-                msg = (f.read(ln).decode() if ln
-                       else "connection closed by server")
-                raise RuntimeError(
-                    "clickhouse_tail schema probe failed: " + msg)
-            arrow_schema = pa.ipc.open_stream(f).schema
+        with wire.query(host, port, f"SELECT {cols} FROM {table} LIMIT 0",
+                        token=self.options.get("token"),
+                        what="clickhouse_tail schema probe") as reader:
+            arrow_schema = reader.schema
         return from_arrow_schema(arrow_schema, prefer_timestamp_ntz=True)
 
     def streamReader(self, schema: StructType) -> ClickHouseTailStreamReader:

@@ -67,6 +67,7 @@ import threading
 from clickhouse_datafusion_spark.functions.rewrite import (
     BTICK, WS, SqlRewriteError, is_comment, next_sig, rewrite_name_chains,
     tokenize, word_at)
+from clickhouse_datafusion_spark.sources import wire
 
 # Functions the remote dialect accepts inside OVER(...) clauses and as
 # aggregates — the W6 validation set. Names outside this set keep the
@@ -781,47 +782,13 @@ class RemoteEngine:
 
 
 class ArrowIngestServer:
-    """Arrow-IPC-over-TCP ingest endpoint for a :class:`RemoteEngine`.
-
-    Wire protocol (one operation per connection). The header is a
-    4-byte BE length + UTF-8 JSON dict; ``op`` selects the operation
-    (default ``"ingest"`` for r12 back-compat):
-
-    * ingest — header ``{"table": ..., "columns": ...}`` then an Arrow
-      IPC stream of RecordBatches from the client; server replies
-      1 status byte (``0x00`` ok / ``0x01`` error), then 8-byte BE
-      appended-row count (ok) or 4-byte BE length + UTF-8 message
-      (error). With ``"marker": {"commits": t, "sink": s, "batch": n}``
-      in the header (r14, the executor_direct plane's exactly-once
-      handshake) the server FIRST replies one gate byte — ``0x10``
-      proceed / ``0x11`` marker already committed, skip and close —
-      before the client streams any data, and on proceed the marker
-      INSERT joins the partition's transaction (rows + marker land
-      atomically; see :meth:`_marker_gate`).
-    * query (r12b — the read direction; the executor-reachable twin of
-      :meth:`RemoteEngine.execute_stream`, src/stream.rs:110-131) —
-      header ``{"op": "query", "sql": ..., "batch_rows": ...}``; server
-      replies the status byte, then (ok) streams the result as an
-      Arrow IPC stream batch-by-batch and closes. A failure BEFORE the
-      first batch is a clean ``0x01`` error frame; a failure mid-stream
-      truncates the IPC stream (the client's reader raises). This is
-      what lets Spark EXECUTORS scan key ranges of a remote table
-      directly — the data plane of the ``clickhouse_tail`` streaming
-      source. READ-ONLY (r13): statements are gated by
-      :func:`assert_read_only_sql`; writes must come through the
-      ingest op (``_writable``-checked) or the driver-side engine API.
-    * progress (r13) — the capped tail's watermark row as a dedicated
-      parameterized op (see :meth:`_handle_progress`): header
-      ``{"op": "progress", "table": ..., "tail_id": ...,
-      "action": get|put|reset[, "watermark": N][, "incarnation": s]}``;
-      reply status byte + presence flag + 8-byte signed BE watermark +
-      2-byte BE length + incarnation bytes (r14: the incarnation marker
-      lets a NEW reader recovering the row distinguish its own writes
-      from a previous incarnation's and clamp its first poll).
+    """Arrow-IPC-over-TCP ingest endpoint for a :class:`RemoteEngine`:
+    one operation per connection — ingest, query or progress — in the
+    wire protocol :mod:`.wire` specifies and frames for both sides.
 
     When the server was started with a ``token``, every header must
-    carry it (``"token": ...``, constant-time compared) — the
-    multi-host deployment lock the loopback default doesn't need.
+    carry it (constant-time compared) — the multi-host deployment lock
+    the loopback default doesn't need.
 
     Each connection's batches append inside ONE transaction
     (:meth:`RemoteEngine.ingest_transaction`), so a Spark task retry
@@ -870,8 +837,6 @@ class ArrowIngestServer:
                              if x.is_alive()] + [t]
 
     def _handle(self, conn) -> None:
-        import json
-
         import pyarrow as pa
 
         with self._count_lock:
@@ -883,8 +848,7 @@ class ArrowIngestServer:
         f = conn.makefile("rwb")
         try:
             try:
-                hdr_len = int.from_bytes(f.read(4), "big")
-                hdr = json.loads(f.read(hdr_len))
+                hdr = wire.read_header(f)
                 if self.token is not None:
                     import hmac
 
@@ -917,25 +881,17 @@ class ArrowIngestServer:
                     # only one transaction COMMIT; the loser rolls
                     # back whole and reports an error frame).
                     pre_commit = self._marker_gate(f, hdr["marker"])
+                    f.write(wire.SKIP if pre_commit is None
+                            else wire.PROCEED)
+                    f.flush()
                     if pre_commit is None:
-                        f.write(b"\x11")
-                        f.flush()
                         return
-                    f.write(b"\x10")
-                    f.flush()
                 reader = pa.ipc.open_stream(f)
-                total = self._engine.ingest_transaction(
+                wire.write_count(f, self._engine.ingest_transaction(
                     hdr["table"], reader, hdr.get("columns", ""),
-                    pre_commit_sql=pre_commit)
-                f.write(b"\x00" + total.to_bytes(8, "big"))
-                f.flush()
+                    pre_commit_sql=pre_commit))
             except Exception as e:  # report to the client, stay up
-                msg = f"{type(e).__name__}: {e}".encode()[:65535]
-                try:
-                    f.write(b"\x01" + len(msg).to_bytes(4, "big") + msg)
-                    f.flush()
-                except OSError:  # pragma: no cover - client went away
-                    pass
+                wire.write_error(f, e)
         finally:
             try:
                 f.close()
@@ -998,8 +954,8 @@ class ArrowIngestServer:
         an injection surface). Actions: ``get`` (read the stored
         watermark), ``put`` (monotone greatest-wins upsert), ``reset``
         (delete the row — fresh queries clear stale incarnations).
-        Reply: status byte, 1-byte presence flag, 8-byte signed BE
-        watermark (zero unless a ``get`` found a row)."""
+        Reply: :func:`.wire.write_progress` (a watermark only when a
+        ``get`` found a row)."""
         from clickhouse_datafusion_spark.sources.dialect_profile import (
             get_profile)
 
@@ -1016,7 +972,7 @@ class ArrowIngestServer:
         cur = self._engine._pool.get()
         try:
             cur.execute(profile.progress_create(prog))
-            present, val, inc = 0, 0, b""
+            val, inc = None, ""
             if action == "put":
                 cur.execute(profile.progress_put(prog),
                             [tail_id, int(hdr["watermark"]),
@@ -1027,14 +983,10 @@ class ArrowIngestServer:
                 row = cur.execute(profile.progress_get(prog),
                                   [tail_id]).fetchone()
                 if row is not None:
-                    present, val = 1, int(row[0])
-                    inc = str(row[1] or "").encode()[:65535]
+                    val, inc = int(row[0]), str(row[1] or "")
             else:
                 raise ValueError(f"unknown progress action {action!r}")
-            f.write(b"\x00" + bytes([present])
-                    + val.to_bytes(8, "big", signed=True)
-                    + len(inc).to_bytes(2, "big") + inc)
-            f.flush()
+            wire.write_progress(f, val, inc)
         finally:
             self._engine._pool.put(cur)
 
@@ -1063,7 +1015,7 @@ class ArrowIngestServer:
         try:
             reader = cur.execute(hdr["sql"]).fetch_record_batch(
                 int(hdr.get("batch_rows", 65536)))
-            f.write(b"\x00")
+            f.write(wire.OK)
             try:
                 writer = pa.ipc.new_stream(f, reader.schema)
                 for batch in reader:

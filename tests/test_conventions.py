@@ -83,7 +83,8 @@ _KEPT_REMOTE_REGEXES = {
     "_IDENT_TOKEN_RE": "the read-only gate's own lexer reads the REMOTE "
                        "dialect, in which a backslash is not an escape, "
                        "after it has stripped literals and comments",
-    "_SQL_IDENT_RE": "validates one caller-supplied table or log name, "
+    "_SQL_IDENT_RE": "validates one caller-supplied identifier — a table "
+                     "or log name on the wire, a clickhouse_tail option — "
                      "not SQL text",
 }
 
@@ -229,3 +230,33 @@ def test_engine_write_width_comes_from_plans_explain():
                  if not (n.args and any(map(is_rule, ast.walk(n.args[0]))))
                  or bare_wc(n.args[0])]
     assert widths and offenders == []
+
+
+def test_one_client_for_the_wire():
+    """``sources/wire.py`` is the one module that frames the ingest
+    server's Arrow wire: every other module connects, frames a header
+    and reads a status byte through it. So no other module opens a
+    ``socket.create_connection``, encodes or decodes a frame integer
+    (``to_bytes``/``from_bytes``), or writes or compares a status or
+    gate byte literal (0x00, 0x01, 0x10, 0x11)."""
+    import ast
+
+    status = {b"\x00", b"\x01", b"\x10", b"\x11"}
+
+    def literals(node):
+        return [n for n in ast.walk(node) if isinstance(n, ast.Constant)
+                and n.value in status]
+
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        name = str(path.relative_to(PKG))
+        if name == "sources/wire.py":
+            continue
+        for n in ast.walk(ast.parse(path.read_text())):
+            call = (ast.unparse(n.func) if isinstance(n, ast.Call) else "")
+            if (call.endswith(("create_connection", ".to_bytes",
+                               ".from_bytes"))
+                    or (isinstance(n, ast.Compare) and literals(n))
+                    or (call.endswith(".write") and literals(n))):
+                offenders.append(f"{name}:{n.lineno}")
+    assert offenders == []

@@ -32,6 +32,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from clickhouse_datafusion_spark.plans import explain
+from clickhouse_datafusion_spark.sources import wire
 from clickhouse_datafusion_spark.sources.clickhouse_tail import (
     _progress_op,
     _wire_query,
@@ -241,38 +242,29 @@ def test_ingest_connection_is_transactional(fed):
     remote.create_table("ew_tx", "k BIGINT")
     host, port = remote.ingest_address
     try:
-        with socket.create_connection((host, port)) as s:
-            f = s.makefile("rwb")
-            hdr = json.dumps({"table": "ew_tx", "columns": ""}).encode()
-            f.write(len(hdr).to_bytes(4, "big"))
-            f.write(hdr)
+        with wire.request(host, port, table="ew_tx", columns="") as f:
             schema = pa.schema([("k", pa.int64()), ("extra", pa.int64())])
             w = pa.ipc.new_stream(f, schema)
             w.write_batch(pa.record_batch(
                 [pa.array([1, 2]), pa.array([1, 2])], schema=schema))
             w.close()
             f.flush()
-            assert f.read(1) == b"\x01"            # error reported
-            ln = int.from_bytes(f.read(4), "big")
-            assert len(f.read(ln)) == ln
+            # error reported: the whole frame, not a hang-up
+            with pytest.raises(RuntimeError, match="ingest failed: (?!conn)"):
+                wire.read_count(f, "ingest")
         n = remote.execute(
             "SELECT CAST(count(*) AS BIGINT) FROM ew_tx"
         ).column(0)[0].as_py()
         assert n == 0                              # nothing leaked
         # server still serves: a good connection right after succeeds
-        with socket.create_connection((host, port)) as s:
-            f = s.makefile("rwb")
-            hdr = json.dumps({"table": "ew_tx", "columns": ""}).encode()
-            f.write(len(hdr).to_bytes(4, "big"))
-            f.write(hdr)
+        with wire.request(host, port, table="ew_tx", columns="") as f:
             schema = pa.schema([("k", pa.int64())])
             w = pa.ipc.new_stream(f, schema)
             w.write_batch(pa.record_batch([pa.array([7, 8, 9])],
                                           schema=schema))
             w.close()
             f.flush()
-            assert f.read(1) == b"\x00"
-            assert int.from_bytes(f.read(8), "big") == 3
+            assert wire.read_count(f, "ingest") == 3
     finally:
         remote.drop_table("ew_tx")
 
@@ -459,11 +451,7 @@ def test_ingest_truncated_stream_rolls_back(fed):
         ).column(0)[0].as_py()
         assert n == 0                  # batch 1 rolled back with the cut
         # the server survives a dead client: a clean insert lands
-        with socket.create_connection((host, port)) as s:
-            f = s.makefile("rwb")
-            hdr = json.dumps({"table": "ew_cut", "columns": ""}).encode()
-            f.write(len(hdr).to_bytes(4, "big"))
-            f.write(hdr)
+        with wire.request(host, port, table="ew_cut", columns="") as f:
             w = pa.ipc.new_stream(f, schema)
             w.write_batch(pa.record_batch([pa.array([1, 2, 3])],
                                           schema=schema))
@@ -495,12 +483,8 @@ def test_ingest_garbage_header_stays_up(fed):
     # still serving
     remote.create_table("ew_after_junk", "k BIGINT")
     try:
-        with socket.create_connection((host, port)) as s:
-            f = s.makefile("rwb")
-            hdr = json.dumps({"table": "ew_after_junk",
-                              "columns": ""}).encode()
-            f.write(len(hdr).to_bytes(4, "big"))
-            f.write(hdr)
+        with wire.request(host, port, table="ew_after_junk",
+                          columns="") as f:
             schema = pa.schema([("k", pa.int64())])
             w = pa.ipc.new_stream(f, schema)
             w.write_batch(pa.record_batch([pa.array([42])], schema=schema))
@@ -799,33 +783,22 @@ def test_executor_direct_retried_partition_wire_level_no_double(fed_x1):
     """Wire-level twin of the partition retry: the SAME marker sent
     twice (a re-executed task attempt) appends once — the second
     attempt is gated off BEFORE it streams any data."""
-    import json
-    import socket
-
     eng, remote = fed_x1
     remote.create_table("xp2", "k BIGINT")
     host, port = remote.ingest_address
 
     def attempt(rows):
-        with socket.create_connection((host, port)) as s:
-            f = s.makefile("rwb")
-            hdr = json.dumps({
-                "table": "xp2", "columns": "",
-                "marker": {"commits": "xp2__commits",
-                           "sink": "w#b0", "batch": 1}}).encode()
-            f.write(len(hdr).to_bytes(4, "big"))
-            f.write(hdr)
-            f.flush()
-            gate = f.read(1)
-            if gate == b"\x11":
+        with wire.request(host, port, table="xp2", columns="", marker={
+                "commits": "xp2__commits", "sink": "w#b0",
+                "batch": 1}) as f:
+            gate = wire.read_status(f, "ingest", (wire.PROCEED, wire.SKIP))
+            if gate == wire.SKIP:
                 return "skipped"
-            assert gate == b"\x10"
             w = pa.ipc.new_stream(f, pa.schema([("k", pa.int64())]))
             w.write_batch(pa.record_batch([pa.array(rows)], names=["k"]))
             w.close()
             f.flush()
-            assert f.read(1) == b"\x00"
-            return int.from_bytes(f.read(8), "big")
+            return wire.read_count(f, "ingest")
 
     try:
         assert attempt([1, 2, 3]) == 3
@@ -1001,24 +974,14 @@ def remote():
 
 def _ingest_txn(host, port, table, batches, token=None):
     """One wire ingest connection = one remote transaction."""
-    with socket.create_connection((host, port)) as s:
-        f = s.makefile("rwb")
-        req = {"table": table, "columns": ""}
-        if token is not None:
-            req["token"] = token
-        hdr = json.dumps(req).encode()
-        f.write(len(hdr).to_bytes(4, "big"))
-        f.write(hdr)
+    with wire.request(host, port, table=table, columns="",
+                      token=token) as f:
         w = pa.ipc.new_stream(f, batches[0].schema)
         for b in batches:
             w.write_batch(b)
         w.close()
         f.flush()
-        status = f.read(1)
-        if status != b"\x00":
-            ln = int.from_bytes(f.read(4), "big")
-            raise RuntimeError(f.read(ln).decode())
-        return int.from_bytes(f.read(8), "big")
+        return wire.read_count(f, "ingest")
 
 
 def test_concurrent_mixed_planes_on_one_table(remote):

@@ -17,12 +17,15 @@
 
 from __future__ import annotations
 
+import contextlib
+import json
 import socket
 import threading
 
 import pyarrow as pa
 import pytest
 
+from clickhouse_datafusion_spark.sources import wire
 from clickhouse_datafusion_spark.sources.clickhouse_tail import (
     _progress_op,
     _wire_query,
@@ -106,25 +109,13 @@ def test_query_op_rejects_writes_on_the_wire(remote):
 # -- shared-secret token ----------------------------------------------------
 
 def _ingest_once(host, port, table, batch, token=None):
-    import json
-
-    with socket.create_connection((host, port)) as s:
-        f = s.makefile("rwb")
-        req = {"table": table, "columns": ""}
-        if token is not None:
-            req["token"] = token
-        hdr = json.dumps(req).encode()
-        f.write(len(hdr).to_bytes(4, "big"))
-        f.write(hdr)
+    with wire.request(host, port, table=table, columns="",
+                      token=token) as f:
         w = pa.ipc.new_stream(f, batch.schema)
         w.write_batch(batch)
         w.close()
         f.flush()
-        status = f.read(1)
-        if status != b"\x00":
-            ln = int.from_bytes(f.read(4), "big")
-            raise RuntimeError(f.read(ln).decode())
-        return int.from_bytes(f.read(8), "big")
+        return wire.read_count(f, "ingest")
 
 
 def test_token_gates_every_op(remote):
@@ -321,6 +312,108 @@ def test_wire_query_server_closed_is_clean_error():
         list(_wire_query(host, port, "SELECT 1"))
     t.join(timeout=2)
     srv.close()
+
+
+@contextlib.contextmanager
+def _hang_up_server(reply: bytes):
+    """A wire peer that reads each request — the header, and an ingest's
+    Arrow stream — then sends ``reply`` (nothing, or a reply cut short)
+    and hangs up. With an empty ``reply`` it hangs up on a marker-gated
+    ingest before the gate byte; otherwise it lets the ingest proceed.
+    The frames are spelled in raw bytes: they are what is under test."""
+    srv = socket.create_server(("127.0.0.1", 0))
+    srv.settimeout(0.2)
+    stop = threading.Event()
+
+    def serve():
+        while not stop.is_set():
+            try:
+                conn, _ = srv.accept()
+            except TimeoutError:
+                continue
+            conn.settimeout(None)
+            with conn, conn.makefile("rwb") as f:
+                hdr = json.loads(f.read(int.from_bytes(f.read(4), "big")))
+                if hdr.get("op", "ingest") == "ingest":
+                    if "marker" in hdr:
+                        if not reply:
+                            continue
+                        f.write(b"\x10")
+                        f.flush()
+                    for _ in pa.ipc.open_stream(f):
+                        pass
+                f.write(reply)
+                f.flush()
+
+    t = threading.Thread(target=serve, daemon=True)
+    t.start()
+    try:
+        yield srv.getsockname()
+    finally:
+        stop.set()
+        t.join(timeout=5)
+        srv.close()
+
+
+# an error frame whose length says 100 bytes, of which 4 arrive
+_SHORT_ERROR = b"\x01" + (100).to_bytes(4, "big") + b"Perm"
+_SHORT_REPLY = {
+    "ingest": b"\x00" + b"\x00\x00\x07",         # 3 of 8 count bytes
+    "ingest_marker": b"\x00" + b"\x00\x00\x07",
+    "query": _SHORT_ERROR,
+    "progress": b"\x00\x01" + b"\x00\x00\x07",   # 3 of 8 watermark bytes
+    "schema_probe": _SHORT_ERROR,
+}
+
+
+@pytest.fixture(scope="module")
+def wire_engine(spark):
+    from clickhouse_datafusion_spark.engine import ClickHouseSparkEngine
+
+    return ClickHouseSparkEngine(spark)
+
+
+@pytest.mark.parametrize("cut", ["before_status", "short_reply"])
+@pytest.mark.parametrize("op", list(_SHORT_REPLY))
+def test_dropped_connection_is_clean_error(spark, wire_engine, monkeypatch,
+                                           op, cut):
+    """Every client of the wire — the executor_direct writer (with and
+    without its exactly-once marker), the query op, the progress op and
+    the tail's schema probe — reports a server that hangs up before the
+    status byte, or cuts its reply short, as ``<what> failed: connection
+    closed by server``: never an empty message, a partial error text or
+    a count or watermark decoded from fewer than its 8 bytes."""
+    import types
+
+    from clickhouse_datafusion_spark.sources.clickhouse_tail import (
+        ClickHouseTailDataSource)
+
+    reply = b"" if cut == "before_status" else _SHORT_REPLY[op]
+    with _hang_up_server(reply) as (host, port):
+        monkeypatch.setattr(wire_engine, "_remote", types.SimpleNamespace(
+            ingest_address=(host, port), ingest_token=None,
+            assert_writable=lambda name: None))
+        calls = {
+            "ingest": ("remote ingest", lambda: (
+                wire_engine._stream_insert_executors_direct(
+                    "t", spark.range(10)))),
+            "ingest_marker": ("remote ingest", lambda: (
+                wire_engine._stream_insert_executors_direct(
+                    "t", spark.range(10), commits="t__commits", sink="s",
+                    batch_id=0))),
+            "query": ("remote query", lambda: list(
+                _wire_query(host, port, "SELECT 1"))),
+            "progress": ("tail progress op", lambda: _progress_op(
+                host, port, "t", "x", "get")),
+            "schema_probe": ("clickhouse_tail schema probe", lambda: (
+                ClickHouseTailDataSource(
+                    {"host": host, "port": str(port), "table": "t"})
+                .schema())),
+        }
+        what, call = calls[op]
+        with pytest.raises(Exception, match=(
+                f"{what} failed: connection closed by server")):
+            call()
 
 
 def test_midstream_failure_truncates_not_error_frame(remote):

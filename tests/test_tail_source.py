@@ -338,9 +338,9 @@ def test_stalled_query_client_cannot_pin_the_pool():
     slow-client denial of the whole pool (this test found it: the
     handler sat in socket.send forever). With the timeout, the cursor
     returns and BOTH planes keep working on a pool of ONE."""
-    import socket as _socket
-    import json as _json
     import time
+
+    from clickhouse_datafusion_spark.sources import wire
 
     remote = RemoteEngine(pool_size=1)
     remote.create_table("t_qd", "k BIGINT, s VARCHAR")
@@ -348,34 +348,26 @@ def test_stalled_query_client_cannot_pin_the_pool():
         "k": list(range(200_000)),
         "s": [f"pad_{i:032d}" for i in range(200_000)]}))
     host, port = remote.start_ingest_server(io_timeout=2.0)
-    s = _socket.create_connection((host, port))
-    f = s.makefile("rwb")
     try:
-        hdr = _json.dumps({"op": "query",
-                           "sql": "SELECT * FROM t_qd"}).encode()
-        f.write(len(hdr).to_bytes(4, "big"))
-        f.write(hdr)
-        f.flush()
-        assert f.read(1) == b"\x00"
-        f.read(1024)   # take a sip, then stall (socket stays OPEN)
-        # the handler must time out, roll back, and free the cursor
-        deadline = time.time() + 15
-        while True:
-            try:
-                n = remote.execute(
-                    "SELECT CAST(count(*) AS BIGINT) FROM t_qd",
-                    timeout=5).column(0)[0].as_py()
-                break
-            except Exception:
-                if time.time() > deadline:
-                    raise
-        assert n == 200_000
-        assert remote.ingest_transaction(
-            "t_qd", iter([pa.record_batch(
+        with wire.request(host, port, op="query",
+                          sql="SELECT * FROM t_qd") as f:
+            assert wire.read_status(f, "query") == wire.OK
+            f.read(1024)   # take a sip, then stall (socket stays OPEN)
+            # the handler must time out, roll back, and free the cursor
+            deadline = time.time() + 15
+            while True:
+                try:
+                    n = remote.execute(
+                        "SELECT CAST(count(*) AS BIGINT) FROM t_qd",
+                        timeout=5).column(0)[0].as_py()
+                    break
+                except Exception:
+                    if time.time() > deadline:
+                        raise
+            assert n == 200_000
+            assert remote.ingest_transaction("t_qd", iter([pa.record_batch(
                 [pa.array([1]), pa.array(["x"])], names=["k", "s"])])) == 1
     finally:
-        f.close()
-        s.close()
         remote.stop_ingest_server()
 
 
